@@ -84,7 +84,10 @@ def read_log_actions(
 
     Distributed JSON/parquet scans; the JSON version is parsed from
     each action's source file name, so ordering survives however many
-    input splits the scan plans.
+    input splits the scan plans.  Both branches hand the scan the
+    driver's sorted listing of commit files, never a glob: a glob
+    path makes Spark probe it for a streaming-sink log first, which
+    logs a FileNotFoundException stack trace on every read.
     """
     log_dir = os.path.join(table_dir, "_delta_log")
     lc = os.path.join(log_dir, "_last_checkpoint")
@@ -108,28 +111,38 @@ def read_log_actions(
         for leg in legs[1:]:
             ck = ck.unionByName(leg)
         ck = ck.withColumn("version", F.lit(ck_ver).cast("bigint"))
-        tail = sorted(
-            f
-            for f in os.listdir(log_dir)
-            if f.endswith(".json") and int(f.split(".")[0]) > ck_ver
-        )
+        tail = [v for v in _commit_versions(log_dir) if v > ck_ver]
         if not tail:
             return ck
-        js = (
-            spark.read.schema(LOG_SCHEMA)
-            .json([os.path.join(log_dir, f) for f in tail])
-            .withColumn(
-                "version",
-                F.regexp_extract(
-                    F.input_file_name(), r"(\d+)\.json$", 1
-                ).cast("bigint"),
-            )
-        )
-        return ck.unionByName(js)
-    log_glob = os.path.join(log_dir, "*.json")
+        return ck.unionByName(_read_commits(spark, log_dir, tail))
+    versions = _commit_versions(log_dir)
+    if not versions:
+        raise FileNotFoundError(f"no JSON commits under {log_dir}")
+    return _read_commits(spark, log_dir, versions)
+
+
+def _commit_versions(log_dir: str) -> list[int]:
+    """Versions of the JSON commits in ``log_dir``, ascending —
+    ``{v:020d}.json`` names only (checkpoint manifests and other
+    files are not commits).  Every listing of the module's commits
+    goes through here."""
+    if not os.path.isdir(log_dir):
+        return []
+    return sorted(
+        int(f[:20])
+        for f in os.listdir(log_dir)
+        if len(f) == 25 and f.endswith(".json") and f[:20].isdigit()
+    )
+
+
+def _read_commits(
+    spark: SparkSession, log_dir: str, versions: list[int]
+) -> DataFrame:
+    """Distributed scan of the JSON commits ``versions``, one row per
+    action, tagged with the version parsed from its file name."""
     return (
         spark.read.schema(LOG_SCHEMA)
-        .json(log_glob)
+        .json([os.path.join(log_dir, f"{v:020d}.json") for v in versions])
         .withColumn(
             "version",
             F.regexp_extract(
@@ -176,48 +189,67 @@ def live_files(actions: DataFrame) -> DataFrame:
     )
 
 
-#: the live-file frame's schema (what :func:`live_files` produces and
-#: :func:`_live_frame` materializes locally on the small-log path)
-_LIVE_SCHEMA = (
-    "path string, size bigint, "
-    "partitionValues map<string,string>, stats string, "
-    "deletionVector struct<storageType:string,pathOrInlineDv:string,"
-    "offset:int,sizeInBytes:bigint,cardinality:bigint>"
+#: fields of the deletionVector descriptor struct the live-file frame
+#: carries, with their Arrow types
+_DV_FIELDS = (
+    ("storageType", "string"),
+    ("pathOrInlineDv", "string"),
+    ("offset", "int32"),
+    ("sizeInBytes", "int64"),
+    ("cardinality", "int64"),
 )
 
 
-def _live_frame(spark: SparkSession, table_dir: str) -> DataFrame:
-    """The live-file frame — a LOCAL relation from the driver-side
-    small-log replay when the log fits the byte budget (downstream
-    probes/filters/payload collects then cost no file-scan jobs: the
-    round-13 cold-path trim for every DML statement), the distributed
-    replay otherwise.  Same columns either way, so all Column logic
-    (skipping filters, ``isin`` censuses, payload collects) is
-    route-agnostic."""
+def _live_frame(
+    spark: SparkSession, table_dir: str, *, pin: bool = False
+) -> DataFrame:
+    """The live-file frame (the columns :func:`live_files` produces)
+    — from the driver-side replay when the log fits the byte budget,
+    the distributed replay otherwise.  Same columns either way, so all
+    Column logic (skipping filters, ``isin`` censuses, payload
+    collects) is route-agnostic.
+
+    The driver route builds the frame from an Arrow table, which
+    Spark plans as a ``LocalRelation``: projections, filters, limits
+    and collects over it are folded on the driver and run NO Spark
+    job.  (A frame from a list of row tuples would be a ``LogicalRDD``
+    costing two jobs per collect.)  ``pin=True`` pins the distributed
+    replay with a local checkpoint, for callers that reuse the frame;
+    the local relation needs no pin."""
     state = _replay_log_driver(table_dir)
     if state is None:
-        return live_files(read_log_actions(spark, table_dir))
-    rows = []
-    for a in state["adds"]:
-        dv = a.get("deletionVector")
-        rows.append(
-            (
-                a["path"],
-                a.get("size"),
-                a.get("partitionValues"),
-                a.get("stats"),
-                (
-                    dv.get("storageType"),
-                    dv.get("pathOrInlineDv"),
-                    dv.get("offset"),
-                    dv.get("sizeInBytes"),
-                    dv.get("cardinality"),
-                )
-                if dv
-                else None,
-            )
-        )
-    return spark.createDataFrame(rows, _LIVE_SCHEMA)
+        lf = live_files(read_log_actions(spark, table_dir))
+        return lf.localCheckpoint(eager=True) if pin else lf
+    import pyarrow as pa
+
+    adds = state["adds"]
+    dv_type = pa.struct([(n, t) for n, t in _DV_FIELDS])
+    table = pa.table(
+        {
+            "path": pa.array([a["path"] for a in adds], pa.string()),
+            "size": pa.array([a.get("size") for a in adds], pa.int64()),
+            "partitionValues": pa.array(
+                [
+                    list(a["partitionValues"].items())
+                    if a.get("partitionValues") is not None
+                    else None
+                    for a in adds
+                ],
+                pa.map_(pa.string(), pa.string()),
+            ),
+            "stats": pa.array([a.get("stats") for a in adds], pa.string()),
+            "deletionVector": pa.array(
+                [
+                    {n: a["deletionVector"].get(n) for n, _t in _DV_FIELDS}
+                    if a.get("deletionVector")
+                    else None
+                    for a in adds
+                ],
+                dv_type,
+            ),
+        }
+    )
+    return spark.createDataFrame(table)
 
 
 def _live_file_names(spark: SparkSession, table_dir: str) -> list[str]:
@@ -553,12 +585,7 @@ def _iter_checkpoint_actions(log_dir: str, ver: int, columns=None):
 
 
 def _next_version(table_dir: str) -> int:
-    log_dir = os.path.join(table_dir, "_delta_log")
-    versions = [
-        int(f.split(".")[0])
-        for f in os.listdir(log_dir)
-        if f.endswith(".json")
-    ] if os.path.isdir(log_dir) else []
+    versions = _commit_versions(os.path.join(table_dir, "_delta_log"))
     # a checkpoint supersedes (and log cleanup may have deleted)
     # earlier JSON commits — the next version must clear it too
     ck = _checkpoint_version(table_dir)
@@ -711,14 +738,11 @@ def _assert_no_concurrent_metadata_change(
     log_dir = os.path.join(table_dir, "_delta_log")
     if not os.path.isdir(log_dir):
         return
-    for f in sorted(os.listdir(log_dir)):
-        if not (f.endswith(".json") and f.split(".")[0].isdigit()):
-            continue
-        v = int(f.split(".")[0])
+    for v in _commit_versions(log_dir):
         if v < since_v:
             continue
         try:
-            with open(os.path.join(log_dir, f)) as fh:
+            with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
                 for line in fh:
                     act = _json.loads(line)
                     if "metaData" in act or "protocol" in act:
@@ -742,13 +766,7 @@ def _prev_commit_ts(table_dir: str, v: int) -> int | None:
     import json as _json
 
     log_dir = os.path.join(table_dir, "_delta_log")
-    if not os.path.isdir(log_dir):
-        return None
-    below = [
-        int(f.split(".")[0])
-        for f in os.listdir(log_dir)
-        if f.endswith(".json") and int(f.split(".")[0]) < v
-    ]
+    below = [c for c in _commit_versions(log_dir) if c < v]
     if not below:
         return None
     prev = os.path.join(log_dir, f"{max(below):020d}.json")
@@ -878,10 +896,8 @@ def _current_schema_string(table_dir: str) -> str | None:
     log_dir = os.path.join(table_dir, "_delta_log")
     if not os.path.isdir(log_dir):
         return None
-    for f in sorted(os.listdir(log_dir), reverse=True):
-        if not f.endswith(".json"):
-            continue
-        with open(os.path.join(log_dir, f)) as fh:
+    for v in reversed(_commit_versions(log_dir)):
+        with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
             for line in fh:
                 act = _json.loads(line)
                 if "metaData" in act:
@@ -907,10 +923,8 @@ def _current_protocol(table_dir: str) -> dict:
     log_dir = os.path.join(table_dir, "_delta_log")
     if not os.path.isdir(log_dir):
         return {}
-    for f in sorted(os.listdir(log_dir), reverse=True):
-        if not f.endswith(".json"):
-            continue
-        with open(os.path.join(log_dir, f)) as fh:
+    for v in reversed(_commit_versions(log_dir)):
+        with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
             for line in fh:
                 act = _json.loads(line)
                 if "protocol" in act:
@@ -936,10 +950,8 @@ def _current_table_config(table_dir: str) -> dict:
     log_dir = os.path.join(table_dir, "_delta_log")
     if not os.path.isdir(log_dir):
         return {}
-    for f in sorted(os.listdir(log_dir), reverse=True):
-        if not f.endswith(".json"):
-            continue
-        with open(os.path.join(log_dir, f)) as fh:
+    for v in reversed(_commit_versions(log_dir)):
+        with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
             for line in fh:
                 act = _json.loads(line)
                 if "metaData" in act:
@@ -1078,6 +1090,28 @@ def _to_logical(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
     return df
 
 
+def _cast_declared(df: DataFrame, schema_string: str | None) -> DataFrame:
+    """Cast ``df``'s columns to the types ``schema_string`` declares for
+    them.  Scans read the data files with the declared schema
+    (:func:`_read_schema`), and parquet cannot read a file column in
+    another type (an INT64 column as ``int``), so every writer lands
+    its files in the declared types.  Columns the schema does not
+    declare (a schema-evolving append's new ones) pass unchanged, and
+    nullability is not compared."""
+    if not schema_string or schema_string == "{}":
+        return df
+    import json as _json
+
+    from pyspark.sql.types import StructType
+
+    declared = StructType.fromJson(_json.loads(schema_string))
+    have = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    for f in declared.fields:
+        if f.name in have and have[f.name] != f.dataType.simpleString():
+            df = df.withColumn(f.name, F.col(f.name).cast(f.dataType))
+    return df
+
+
 def _write_data_files(
     df: DataFrame,
     table_dir: str,
@@ -1101,12 +1135,15 @@ def _write_data_files(
     directory; only the bounded per-file rename runs driver-side —
     the same shape a real Delta writer's commit phase has.  When
     COLUMN MAPPING is enabled the frame arrives in logical names and
-    lands in PHYSICAL ones (the central logical->physical choke point
-    every writer flows through)."""
+    lands in PHYSICAL ones, and its columns land in the declared types
+    (:func:`_cast_declared`) — the central choke point every writer
+    flows through."""
     import shutil as _shutil
     import uuid as _uuid
 
-    mapping = _mapping_from(_current_schema_string(table_dir))
+    schema_string = _current_schema_string(table_dir)
+    df = _cast_declared(df, schema_string)
+    mapping = _mapping_from(schema_string)
     if mapping:
         df = _to_physical(df, mapping)
 
@@ -1201,11 +1238,14 @@ def _write_change_data(df: DataFrame, table_dir: str) -> dict | None:
     :func:`read_changes` prefers over deriving file-level churn from
     add/remove (a copy-on-write rewrite re-emits every unchanged row
     of a touched file; the cdc file records ONLY what changed).
-    Returns the action dict, or None when the frame is empty."""
+    Returns the action dict, or None when the frame is empty.  Like
+    :func:`_write_data_files`, it lands the declared types."""
     import shutil as _shutil
     import uuid as _uuid
 
-    mapping = _mapping_from(_current_schema_string(table_dir))
+    schema_string = _current_schema_string(table_dir)
+    df = _cast_declared(df, schema_string)
+    mapping = _mapping_from(schema_string)
     if mapping:
         df = _to_physical(df, mapping)
     cd_dir = os.path.join(table_dir, "_change_data")
@@ -1345,13 +1385,17 @@ def _merge_metrics(
     )
 
 
-def _latest_meta(spark: SparkSession, table_dir: str):
+def _latest_meta(
+    spark: SparkSession, table_dir: str, *, version_as_of: int | None = None
+):
     """Latest ``metaData`` action (id, schemaString,
     partitionColumns, configuration) — the declared table identity
     every state-reading writer threads through its rewrite
     (compact/overwrite/append_evolve must keep a partitioned table
     partitioned; ADVICE r9) and the constraint registry writers
-    enforce against (``delta.constraints.*`` keys).
+    enforce against (``delta.constraints.*`` keys).  With
+    ``version_as_of``, the metaData in force at that version (the
+    schema a change-feed read up to it declares).
 
     DRIVER-SIDE: a newest-first walk of the JSON tail with a
     checkpoint fallback — the same metadata-sized lookup
@@ -1365,11 +1409,11 @@ def _latest_meta(spark: SparkSession, table_dir: str):
     log_dir = os.path.join(table_dir, "_delta_log")
     if not os.path.isdir(log_dir):
         return None
-    for f in sorted(os.listdir(log_dir), reverse=True):
-        if not f.endswith(".json"):
+    for v in reversed(_commit_versions(log_dir)):
+        if version_as_of is not None and v > version_as_of:
             continue
         found = None
-        with open(os.path.join(log_dir, f)) as fh:
+        with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
             for line in fh:
                 act = _json.loads(line)
                 if "metaData" in act:
@@ -1382,7 +1426,7 @@ def _latest_meta(spark: SparkSession, table_dir: str):
                 "configuration": found.get("configuration"),
             }
     ck = _checkpoint_version(table_dir)
-    if ck is not None:
+    if ck is not None and (version_as_of is None or ck <= version_as_of):
         for r in _iter_checkpoint_actions(
             log_dir, ck, columns=["metaData"]
         ):
@@ -1871,8 +1915,8 @@ def append_evolve(
     is the UNION of the table's declared schema and the incoming
     frame's (existing columns keep their position and type; new
     columns append).  Readers reconstruct old files with nulls in the
-    new columns (:func:`read_snapshot` reads with mergeSchema and
-    aligns to the latest declared schema).
+    new columns (:func:`read_snapshot` reads every file in the
+    declared schema of the version it reads).
 
     The evolved ``metaData`` action CARRIES the table's declared
     ``partitionColumns`` forward and the new data files are written in
@@ -2224,6 +2268,35 @@ def _align_declared(
     return out.select(*[f.name for f in declared.fields], *extras)
 
 
+def _read_schema(schema_string: str | None, *extra):
+    """The schema a parquet scan of the table's data files reads with,
+    built from ``metaData.schemaString`` instead of inferred from the
+    file footers (inference is one Spark job per scan): the declared
+    fields under their PHYSICAL names (column mapping), all nullable,
+    plus the ``extra`` StructFields (the change-data files'
+    ``_change_type``).  Files written before a schema evolution
+    lack the newer columns and read them as nulls, the same null-fill
+    :func:`_align_declared` gives an inferred scan.  Partition columns
+    are part of the schema; Spark fills them from the Hive directory
+    names, parsed as their declared types.  ``None`` when the log
+    declares no schema (callers infer then)."""
+    if not schema_string or schema_string == "{}":
+        return None
+    import json as _json
+
+    from pyspark.sql.types import StructField, StructType
+
+    mapping = _mapping_from(schema_string)
+    declared = StructType.fromJson(_json.loads(schema_string))
+    return StructType(
+        [
+            StructField(mapping.get(f.name, f.name), f.dataType, True)
+            for f in declared.fields
+        ]
+        + list(extra)
+    )
+
+
 def _dv_feature_present(table_dir: str) -> bool:
     """Whether the table's CURRENT protocol carries the
     ``deletionVectors`` reader feature — the gate without which no
@@ -2343,15 +2416,19 @@ def _plan_native_scan(
     DV anti-join masking, provenance columns, and declared-schema
     alignment.  Shared by :func:`_scan_live` (items from the
     live-file frame probe) and the small-log driver replay
-    (:func:`_replay_log_driver`), which reaches here with ZERO Spark
-    metadata jobs."""
+    (:func:`_replay_log_driver`).  The scan reads with the declared
+    schema (:func:`_read_schema`), so planning it runs no Spark job;
+    only a log without a schema falls back to footer inference."""
     dv_files = [it for it in items if it[1] is not None]
     need_meta_cols = bool(dv_files) or with_row_idx
-    scan = (
-        spark.read.option("basePath", table_dir)
-        .option("mergeSchema", "true")
-        .parquet(*[os.path.join(table_dir, it[0]) for it in items])
+    reader = spark.read.option("basePath", table_dir)
+    schema = _read_schema(schema_string)
+    reader = (
+        reader.schema(schema)
+        if schema is not None
+        else reader.option("mergeSchema", "true")
     )
+    scan = reader.parquet(*[os.path.join(table_dir, it[0]) for it in items])
     keep: list[str] = []
     if need_meta_cols:
         # __src must derive from _metadata HERE: input_file_name
@@ -2801,9 +2878,7 @@ def _dv_rewrite_where(
             if meta and meta["partitionColumns"]
             else None
         )
-        lf_all = _live_frame(spark, table_dir).localCheckpoint(
-            eager=True
-        )
+        lf_all = _live_frame(spark, table_dir, pin=True)
         lf = lf_all
         if skipping:
             lf = lf.filter(
@@ -3949,18 +4024,15 @@ def last_txn_version(
     if not os.path.isdir(log_dir):
         return None
     jsons = [
-        f
-        for f in os.listdir(log_dir)
-        if f.endswith(".json") and f.split(".")[0].isdigit()
+        os.path.join(log_dir, f"{v:020d}.json")
+        for v in _commit_versions(log_dir)
     ]
     ck = _checkpoint_version(table_dir)
     ck_paths: list[str] = []
     if ck is not None:
         src = _checkpoint_sources(log_dir, ck)
         ck_paths = src["parquet"] + src["json"]
-    total = sum(os.path.getsize(p) for p in ck_paths) + sum(
-        os.path.getsize(os.path.join(log_dir, f)) for f in jsons
-    )
+    total = sum(os.path.getsize(p) for p in ck_paths + jsons)
     if total <= DRIVER_REPLAY_MAX_BYTES:
         best = None
         if ck is not None:
@@ -3972,7 +4044,7 @@ def last_txn_version(
                     v = int(t["version"])
                     best = v if best is None else max(best, v)
         for f in jsons:
-            with open(os.path.join(log_dir, f)) as fh:
+            with open(f) as fh:
                 for line in fh:
                     t = _json.loads(line).get("txn")
                     if t and t.get("appId") == app_id:
@@ -4230,13 +4302,9 @@ def cleanup_log_before_checkpoint(table_dir: str) -> int:
     log_dir = os.path.join(table_dir, "_delta_log")
     with open(os.path.join(log_dir, "_last_checkpoint")) as fh:
         ck_ver = int(_json.load(fh)["version"])
-    victims = [
-        f
-        for f in os.listdir(log_dir)
-        if f.endswith(".json") and int(f.split(".")[0]) <= ck_ver
-    ]
-    for f in victims:
-        os.remove(os.path.join(log_dir, f))
+    victims = [v for v in _commit_versions(log_dir) if v <= ck_ver]
+    for v in victims:
+        os.remove(os.path.join(log_dir, f"{v:020d}.json"))
     return len(victims)
 
 
@@ -4443,7 +4511,7 @@ def _json_commit_mtimes(table_dir: str) -> list[tuple[int, int]]:
     out = []
     with os.scandir(log_dir) as it:
         for e in it:
-            stem = e.name.split(".")[0]
+            stem = e.name[:-5]
             if e.name.endswith(".json") and stem.isdigit():
                 out.append((int(stem), int(e.stat().st_mtime * 1000)))
     return sorted(out)
@@ -4595,17 +4663,13 @@ def _replay_log_driver(
     log_dir = os.path.join(table_dir, "_delta_log")
     if not os.path.isdir(log_dir):
         return None
-    jsons = sorted(
-        f
-        for f in os.listdir(log_dir)
-        if f.endswith(".json") and f.split(".")[0].isdigit()
-    )
+    versions = _commit_versions(log_dir)
     ck = _checkpoint_version(table_dir)
     use_ck = ck is not None and (
         version_as_of is None or version_as_of >= ck
     )
     if ck is not None and not use_ck:
-        if f"{0:020d}.json" not in set(jsons):
+        if not versions or versions[0] != 0:
             raise ValueError(
                 f"version {version_as_of} of {table_dir} is no longer "
                 f"reconstructable: log cleanup removed the JSON commits "
@@ -4617,12 +4681,13 @@ def _replay_log_driver(
         src = _checkpoint_sources(log_dir, ck)
         ck_paths = src["parquet"] + src["json"]
         total += sum(os.path.getsize(p) for p in ck_paths)
-        tail = [f for f in jsons if int(f.split(".")[0]) > ck]
+        tail = [v for v in versions if v > ck]
     else:
-        tail = jsons
+        tail = versions
     if version_as_of is not None:
-        tail = [f for f in tail if int(f.split(".")[0]) <= version_as_of]
-    total += sum(os.path.getsize(os.path.join(log_dir, f)) for f in tail)
+        tail = [v for v in tail if v <= version_as_of]
+    tail_paths = [os.path.join(log_dir, f"{v:020d}.json") for v in tail]
+    total += sum(os.path.getsize(p) for p in tail_paths)
     if total > max_bytes:
         return None
     if not ck_paths and not tail:
@@ -4666,9 +4731,8 @@ def _replay_log_driver(
                     if isinstance(a.get(mk), list):
                         a[mk] = dict(a[mk])
             _apply(act, ck)
-    for f in tail:
-        v = int(f.split(".")[0])
-        with open(os.path.join(log_dir, f)) as fh:
+    for v, path in zip(tail, tail_paths):
+        with open(path) as fh:
             for line in fh:
                 if line.strip():
                     _apply(_json.loads(line), v)
@@ -4783,10 +4847,11 @@ def read_snapshot(
         version_as_of = resolve_timestamp(
             spark, table_dir, timestamp_as_of
         )
-    # SMALL-LOG FAST PATH: state reconstruction driver-side, zero
-    # Spark metadata jobs — the dominant cost of reading a small
-    # table is otherwise pure job scheduling (three metadata jobs at
-    # 0.3-0.7 s each on a vanilla session).  An explicit
+    # SMALL-LOG FAST PATH: state reconstruction driver-side and a scan
+    # in the declared schema, so planning the read runs no Spark job
+    # and a point lookup over it runs exactly one — the dominant cost
+    # of reading a small table is otherwise pure job scheduling
+    # (0.1-0.7 s per metadata job on a vanilla session).  An explicit
     # manifest_threshold override (tests exercising the manifest
     # route) bypasses it, as does any log past the byte budget.
     state = (
@@ -5176,8 +5241,14 @@ def read_changes(
     double-reported.
 
     One bounded metadata pass plans the per-(version, type) file
-    lists; the data reads are plain parquet scans unioned per commit
-    — plan legs bounded by the version range, never by data size."""
+    lists — the commits in the range read on the driver, or one
+    distributed log scan past :data:`DRIVER_REPLAY_MAX_BYTES`
+    (:func:`_span_actions`); the data reads are plain parquet scans
+    unioned per commit — plan legs bounded by the version range, never
+    by data size.  Every leg reads in the declared schema of the
+    ending version, so a range that crosses a schema evolution
+    null-fills the new columns in the older legs, and planning the
+    feed runs no Spark job below the byte budget."""
     first_needed = os.path.join(
         table_dir, "_delta_log", f"{starting_version + 1:020d}.json"
     )
@@ -5192,37 +5263,37 @@ def read_changes(
             f"are no longer reconstructable: log cleanup removed the "
             f"JSON commits before checkpoint {ck}"
         )
-    actions = read_log_actions(spark, table_dir, json_only=True)
     hi = ending_version
     if hi is None:
-        row = actions.agg(F.max("version").alias("v")).first()
-        hi = int(row["v"])
-    span = actions.filter(
-        (F.col("version") > starting_version) & (F.col("version") <= hi)
-    )
-    cdc_rows = (
-        span.select("version", F.col("cdc.path").alias("path"))
-        .filter(F.col("path").isNotNull())
-        .collect()
-    )
-    cdc_versions = {int(r.version) for r in cdc_rows}
-    adds_changed = (
-        span.select(
-            "version",
-            F.col("add.path").alias("path"),
-            F.col("add.deletionVector").alias("dv"),
-            F.col("add.stats").alias("stats"),
+        log_dir = os.path.join(table_dir, "_delta_log")
+        versions = _commit_versions(log_dir)
+        if not versions:
+            raise FileNotFoundError(f"no JSON commits under {log_dir}")
+        hi = versions[-1]
+    span = _span_actions(spark, table_dir, starting_version, hi)
+    cdc_rows = [
+        (v, a["cdc"]["path"])
+        for v, a in span
+        if a.get("cdc") and a["cdc"].get("path")
+    ]
+    cdc_versions = {v for v, _p in cdc_rows}
+    adds_changed = [
+        (
+            v,
+            a["add"]["path"],
+            a["add"].get("deletionVector"),
+            a["add"].get("stats"),
         )
-        .filter(F.col("path").isNotNull() & F.col("add.dataChange"))
-        .collect()
-    )
-    removes_changed = (
-        span.select(
-            "version", F.col("remove.path").alias("path")
-        )
-        .filter(F.col("path").isNotNull() & F.col("remove.dataChange"))
-        .collect()
-    )
+        for v, a in span
+        if a.get("add") and a["add"].get("path") and a["add"].get("dataChange")
+    ]
+    removes_changed = [
+        (v, a["remove"]["path"])
+        for v, a in span
+        if a.get("remove")
+        and a["remove"].get("path")
+        and a["remove"].get("dataChange")
+    ]
     if not adds_changed and not removes_changed and not cdc_rows:
         raise ValueError(
             f"no data-changing commits in ({starting_version}, {hi}] "
@@ -5239,45 +5310,53 @@ def read_changes(
     # protocol has ever allowed vectors and only over the removed
     # paths (bounded by the feed's own file census).
     rm_prior: dict[tuple[str, int], tuple] = {}
-    rm_versions = [
-        int(r.version)
-        for r in removes_changed
-        if int(r.version) not in cdc_versions
+    rm_file_level = [
+        (v, p) for v, p in removes_changed if v not in cdc_versions
     ]
-    if rm_versions and _dv_feature_present(table_dir):
-        rm_paths = sorted(
-            {
-                r.path
-                for r in removes_changed
-                if int(r.version) not in cdc_versions
-            }
+    if rm_file_level and _dv_feature_present(table_dir):
+        prior = _span_actions(
+            spark,
+            table_dir,
+            -1,
+            max(v for v, _p in rm_file_level) - 1,
+            add_paths=sorted({p for _v, p in rm_file_level}),
         )
-        prior = (
-            actions.filter(F.col("add.path").isin(rm_paths))
-            .select(
-                "version",
-                F.col("add.path").alias("path"),
-                F.col("add.deletionVector").alias("dv"),
-                F.col("add.stats").alias("stats"),
-            )
-            .collect()
-        )
-        by_path: dict[str, list] = {}
-        for p in prior:
-            by_path.setdefault(p.path, []).append(p)
-        for r in removes_changed:
-            v = int(r.version)
-            if v in cdc_versions:
-                continue
+        for v, path in rm_file_level:
             below = [
-                p for p in by_path.get(r.path, []) if int(p.version) < v
+                (pv, a["add"])
+                for pv, a in prior
+                if a["add"]["path"] == path and pv < v
             ]
             if below:
-                latest = max(below, key=lambda p: int(p.version))
-                rm_prior[(r.path, v)] = (latest.dv, latest.stats)
+                _pv, add = max(below, key=lambda t: t[0])
+                rm_prior[(path, v)] = (
+                    add.get("deletionVector"),
+                    add.get("stats"),
+                )
+
+    # every leg reads in the END version's declared schema: files
+    # written before a schema evolution null-fill the newer columns,
+    # so the legs union cleanly, and planning runs no inference job
+    from pyspark.sql.types import StringType, StructField
+
+    meta = _latest_meta(spark, table_dir, version_as_of=hi)
+    schema_string = meta["schemaString"] if meta else None
+    mapping = _mapping_from(schema_string)
+    data_schema = _read_schema(schema_string)
+    cdc_schema = _read_schema(
+        schema_string, StructField("_change_type", StringType(), True)
+    )
+
+    def _scan(path: str, schema, **options) -> DataFrame:
+        reader = spark.read.options(**options)
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(os.path.join(table_dir, path))
 
     def _file_leg(path: str, dv, stats) -> DataFrame:
-        scan = spark.read.parquet(os.path.join(table_dir, path))
+        # basePath: partition columns come from the file's Hive
+        # directories, as in a snapshot scan
+        scan = _scan(path, data_schema, basePath=table_dir)
         if dv is not None:
             scan = (
                 scan.withColumn(
@@ -5298,45 +5377,85 @@ def read_changes(
             )
         return scan
 
-    mapping = _mapping_from(_current_schema_string(table_dir))
-    legs = []
-    for r in cdc_rows:
-        # row-level feed: the change-data file already carries
-        # _change_type for exactly the mutated rows
-        legs.append(
-            _to_logical(
-                spark.read.parquet(os.path.join(table_dir, r.path)),
-                mapping,
-            ).withColumn(
-                "_commit_version", F.lit(int(r.version)).cast("bigint")
-            )
-        )
-    for r in adds_changed:
-        if int(r.version) in cdc_versions:
-            continue  # served row-level above
-        legs.append(
-            _to_logical(_file_leg(r.path, r.dv, r.stats), mapping)
-            .withColumn("_change_type", F.lit("insert"))
-            .withColumn(
-                "_commit_version", F.lit(int(r.version)).cast("bigint")
-            )
-        )
-    for r in removes_changed:
-        v = int(r.version)
-        if v in cdc_versions:
-            continue
-        dv, stats = rm_prior.get((r.path, v), (None, None))
-        legs.append(
-            _to_logical(_file_leg(r.path, dv, stats), mapping)
-            .withColumn("_change_type", F.lit("delete"))
-            .withColumn(
-                "_commit_version", F.lit(v).cast("bigint")
-            )
-        )
+    def _tag(leg: DataFrame, v: int, change_type: str | None = None):
+        leg = _to_logical(leg, mapping)
+        if change_type is not None:
+            leg = leg.withColumn("_change_type", F.lit(change_type))
+        return leg.withColumn("_commit_version", F.lit(v).cast("bigint"))
+
+    # row-level feed first: a change-data file already carries
+    # _change_type for exactly the mutated rows
+    legs = [_tag(_scan(path, cdc_schema), v) for v, path in cdc_rows]
+    for v, path, dv, stats in adds_changed:
+        if v not in cdc_versions:  # else served row-level above
+            legs.append(_tag(_file_leg(path, dv, stats), v, "insert"))
+    for v, path in rm_file_level:
+        dv, stats = rm_prior.get((path, v), (None, None))
+        legs.append(_tag(_file_leg(path, dv, stats), v, "delete"))
     out = legs[0]
     for leg in legs[1:]:
         out = out.unionByName(leg)
     return out
+
+
+def _span_actions(
+    spark: SparkSession,
+    table_dir: str,
+    lo: int,
+    hi: int,
+    *,
+    add_paths: list[str] | None = None,
+) -> list[tuple[int, dict]]:
+    """``(version, action)`` for the file actions (add / remove /
+    cdc) of the JSON commits in ``(lo, hi]`` — with ``add_paths``,
+    only the adds of those paths.  The change feed's metadata pass:
+    while the commits' total size stays within
+    :data:`DRIVER_REPLAY_MAX_BYTES` they are read on the driver with
+    no Spark job; past it one distributed scan collects the same
+    actions."""
+    import json as _json
+
+    log_dir = os.path.join(table_dir, "_delta_log")
+    versions = [v for v in _commit_versions(log_dir) if lo < v <= hi]
+    files = [os.path.join(log_dir, f"{v:020d}.json") for v in versions]
+    keep = set(add_paths) if add_paths is not None else None
+    if sum(os.path.getsize(f) for f in files) <= DRIVER_REPLAY_MAX_BYTES:
+        out = []
+        for v, f in zip(versions, files):
+            with open(f) as fh:
+                for line in fh:
+                    if not line.strip():
+                        continue
+                    act = _json.loads(line)
+                    if keep is not None:
+                        hit = (act.get("add") or {}).get("path") in keep
+                    else:
+                        hit = any(k in act for k in ("add", "remove", "cdc"))
+                    if hit:
+                        out.append((v, act))
+        return out
+    acts = read_log_actions(spark, table_dir, json_only=True).filter(
+        (F.col("version") > lo) & (F.col("version") <= hi)
+    )
+    if keep is not None:
+        acts = acts.filter(F.col("add.path").isin(sorted(keep)))
+    else:
+        acts = acts.filter(
+            F.col("add").isNotNull()
+            | F.col("remove").isNotNull()
+            | F.col("cdc").isNotNull()
+        )
+    return [
+        (
+            int(r.version),
+            {
+                k: r[k].asDict(recursive=True)
+                for k in ("add", "remove", "cdc")
+                if r[k] is not None
+            },
+        )
+        for r in acts.select("version", "add", "remove", "cdc").collect()
+    ]
 
 
 def table_history(spark: SparkSession, table_dir: str) -> DataFrame:
