@@ -7,8 +7,9 @@ scd2`) replaces that with set-based chaining; this module maps the
 same batch onto the canonical Delta Lake merge-builder recipe so that
 on a cluster with delta-spark the whole apply is one ACID statement:
 
-- intra-batch version chaining stays in :func:`chain_new_versions`
-  (a window — MERGE cannot chain N versions of one key in a batch);
+- intra-batch version chaining stays a window in the source, the
+  chaining of :func:`~cdc_pipe_line_spark.cdc.scd2.chain_new_versions`
+  (MERGE cannot chain N versions of one key in a batch);
 - the MERGE then (a) expires each touched key's current row and
   (b) inserts the batch's pre-chained versions, in one pass over the
   target — Delta's transaction closes the data/marker atomicity gap
@@ -49,13 +50,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from cdc_pipe_line_spark.cdc.scd2 import (
     SCD2_COLUMNS,
-    chain_new_versions,
     dedup_events,
     filter_applied_events,
-    first_event_ts,
 )
 from cdc_pipe_line_spark.functions import sanitize_name_py
 from cdc_pipe_line_spark.session import HAS_DELTA
@@ -79,29 +79,63 @@ def scd2_merge_source(
     apply_scd2`: within-batch :func:`dedup_events`, cross-batch
     anti-join on applied ``_event_id``.  Output columns:
     ``SCD2_COLUMNS + [__mergeKey, __action, __first_ts]``.
+
+    One window over ``key_value`` yields both kinds of row:
+    ``lead(ts)`` closes each insert/update version (the chaining of
+    :func:`chain_new_versions`) and ``row_number() = 1`` marks the
+    key's first event, which carries the expire row (the boundary of
+    :func:`first_event_ts`).  ``inline`` of a two-element array emits
+    both from the same pass, so the dedup, the replay anti-join and
+    everything upstream of ``events`` run once; a union of two
+    branches pruned to different columns ran them once per branch.
     """
     ev = filter_applied_events(dedup_events(events, order_cols=[ts_col]), history)
-    null_ts = F.lit(None).cast(ev.schema[ts_col].dataType)
-    inserts = chain_new_versions(ev, ts_col=ts_col, payload_col=payload_col).select(
-        *SCD2_COLUMNS,
-        F.lit(None).cast("string").alias("__mergeKey"),
-        F.lit("insert").alias("__action"),
-        null_ts.alias("__first_ts"),
-    )
-    null_map = F.lit(None).cast("map<string,string>")
-    expiries = first_event_ts(ev, ts_col=ts_col).select(
+    w = Window.partitionBy("key_value").orderBy(F.col(ts_col).asc())
+    whole_key = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    chained = ev.select(
         "key_value",
-        null_map.alias("data"),
-        null_ts.alias("valid_from"),
-        null_ts.alias("valid_to"),
+        F.col(payload_col).alias("__payload"),
+        F.col(ts_col).alias("__ts"),
+        "event_id",
+        "event_type",
+        F.lead(F.col(ts_col)).over(w).alias("__next_ts"),
+        (F.row_number().over(w) == 1).alias("__first"),
+        # min, not the first row's ts: the window sorts NULL first
+        F.min(F.col(ts_col)).over(whole_key).alias("__first_ts"),
+    )
+
+    def null(c: str):
+        return F.lit(None).cast(ev.schema[c].dataType)
+
+    version = F.struct(
+        F.col("key_value"),
+        F.col("__payload").alias("data"),
+        F.col("__ts").alias("valid_from"),
+        F.col("__next_ts").alias("valid_to"),
+        F.col("__next_ts").isNull().alias("is_current"),
+        F.col("event_id").alias("_event_id"),
+        F.col("event_type").alias("_event_type"),
+        null("key_value").alias("__mergeKey"),
+        F.lit("insert").alias("__action"),
+        null(ts_col).alias("__first_ts"),
+    )
+    expiry = F.struct(
+        F.col("key_value"),
+        null(payload_col).alias("data"),
+        null(ts_col).alias("valid_from"),
+        null(ts_col).alias("valid_to"),
         F.lit(False).alias("is_current"),
-        F.lit(None).cast("string").alias("_event_id"),
-        F.lit(None).cast("string").alias("_event_type"),
+        null("event_id").alias("_event_id"),
+        null("event_type").alias("_event_type"),
         F.col("key_value").alias("__mergeKey"),
         F.lit("expire").alias("__action"),
-        "__first_ts",
+        F.col("__first_ts"),
     )
-    return inserts.unionByName(expiries)
+    opens = F.col("event_type").isin("insert", "update")
+    # a row that is neither inlines as all-NULL and is filtered out
+    return chained.select(
+        F.inline(F.array(F.when(opens, version), F.when(F.col("__first"), expiry)))
+    ).filter(F.col("__action").isNotNull())
 
 
 def build_scd2_merge(table, source: DataFrame):

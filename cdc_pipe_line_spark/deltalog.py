@@ -3376,25 +3376,30 @@ def merge_into(
     (``deltaprocessing.py:96-116``), implemented with the same
     copy-on-write shape real Delta uses:
 
-    1. LOCATE: join the (stats-prunable) candidate files' rows
-       against ``source`` on the ``on`` condition (aliases ``t`` =
-       target, ``s`` = source) — files with zero matches are NEVER
-       rewritten.
-    2. CARDINALITY: if any when-matched clause exists and one target
-       row matches MULTIPLE source rows, raise — the protocol's own
-       "multiple source rows matched" error (silently applying an
-       arbitrary one would be a wrong answer).
-    3. REWRITE: touched files re-emit with matched rows updated
-       (every SET expression — referencing ``s.`` and/or ``t.`` —
-       evaluates against the pre-merge row, one projection) or
-       deleted; unmatched target rows pass through byte-identical.
-    4. INSERT: source rows matching NO target row (any match lives
-       in a touched file by construction, so the anti-join is
-       against the touched rows only) land through the
+    1. LOCATE + CARDINALITY (one job, with a when-matched clause):
+       join the (stats-prunable) candidate files' rows against
+       ``source`` on the ``on`` condition (aliases ``t`` = target,
+       ``s`` = source), count the matches per target row and collect
+       each file's maximum — files with zero matches are NEVER
+       rewritten, and a target row matching MULTIPLE source rows
+       raises, the protocol's own "multiple source rows matched"
+       error (silently applying an arbitrary one would be a wrong
+       answer).
+    2. ONE JOIN: the touched files' rows full-outer-join the source
+       once (left-outer without an insert clause), projected once —
+       and pinned — into clause flags, post-images (every SET
+       expression, referencing ``s.`` and/or ``t.``, evaluates
+       against the pre-merge row), matched pre-images and the rows
+       to insert: source rows matching NO target row (any match
+       lives in a touched file by construction) through the
        ``when_not_matched_insert`` mapping (target column ->
        expression over ``s.``; missing columns default to NULL of
-       the declared type).
-    5. COMMIT: tombstones + rewrites + inserts, one atomic commit
+       the declared type).  The data write, the change-data write
+       and the deletion vectors all read that pin; unmatched target
+       rows pass through byte-identical.
+    3. An INSERT-ONLY merge rewrites no file: the source anti-joins
+       the (masked) table and only the inserts append.
+    4. COMMIT: tombstones + rewrites + inserts, one atomic commit
        (``dataChange=true`` throughout — a change-data reader sees
        the merge).
 
@@ -3473,87 +3478,28 @@ def merge_into(
                     _mapping_from(_current_schema_string(table_dir)),
                 )
             )
+        # the locate join also checks cardinality, so it groups the
+        # matches by target row: (__src, __ridx)
         scan, src_rel = _scan_live(
             spark,
             table_dir,
             lf,
             meta,
-            with_src=True,
+            with_src=has_matched_clause,
+            with_row_idx=has_matched_clause,
             manifest_threshold=manifest_threshold,
             dv_possible=dv_possible,
         )
-        tcols: list[str] = []
-        touched: list[str] = []
-        joined = None
-        if scan is not None:
-            tcols = [
-                c for c in scan.columns if c not in ("__src", "__ridx")
-            ]
-            hits = (
-                scan.alias(target_alias)
-                .join(src.alias(source_alias), on_cond, "inner")
-                .groupBy("__src")
-                .agg(F.count("*"))
-                .collect()
-            )
-            touched = sorted(
-                {
-                    r["__src"]
-                    if src_rel
-                    else _rel_path(r["__src"], table_dir)
-                    for r in hits
-                }
-            )
-        if touched:
-            if dv:
-                # merge-on-read: the touched scan is DV-masked and
-                # carries (__src, __ridx) so matched rows can land in
-                # sidecars instead of file rewrites
-                tscan, t_rel = _scan_live(
-                    spark,
-                    table_dir,
-                    lf.filter(F.col("path").isin(touched)),
-                    meta,
-                    with_src=True,
-                    with_row_idx=True,
-                    manifest_threshold=manifest_threshold,
-                    dv_possible=True,
-                )
-            else:
-                # masked for the same resurrection reason as the
-                # DML rewrite: a COW merge over DV'd files must not
-                # re-emit (or re-match) deleted rows
-                tscan, t_rel = _scan_live(
-                    spark,
-                    table_dir,
-                    lf.filter(F.col("path").isin(touched)),
-                    meta,
-                    dv_possible=dv_possible,
-                )
-            tscan = tscan.withColumn(
-                "__tid", F.monotonically_increasing_id()
-            ).localCheckpoint(eager=True)
-            t_types = {f.name: f.dataType for f in tscan.schema.fields}
-            joined = tscan.alias(target_alias).join(
-                src.withColumn("__s_hit", F.lit(True)).alias(source_alias),
-                on_cond,
-                "left_outer",
-            )
-            if has_matched_clause:
-                multi = (
-                    joined.filter(F.col("__s_hit").isNotNull())
-                    .groupBy("__tid")
-                    .agg(F.count("*").alias("c"))
-                    .filter(F.col("c") > 1)
-                    .limit(1)
-                    .count()
-                )
-                if multi:
-                    raise ValueError(
-                        "merge_into: a target row matches multiple "
-                        "source rows — the MERGE is ambiguous (the "
-                        "Delta protocol's cardinality violation)"
-                    )
+        t_types = (
+            {
+                f.name: f.dataType
+                for f in scan.schema.fields
+                if f.name not in ("__src", "__ridx")
+            }
+            if scan is not None
+            else {}
+        )
+        tcols = list(t_types)
         import json as _json
 
         from pyspark.sql.types import StructType
@@ -3593,11 +3539,90 @@ def merge_into(
                 .schema[0]
                 .dataType
             )
-        parts: list[DataFrame] = []
-        change_parts: list[DataFrame] = []
-        affected = None
-        if joined is not None:
-            matched = F.col("__s_hit").isNotNull()
+        names = (
+            tcols
+            or ([f.name for f in declared.fields] if declared else [])
+        ) + evolved
+        # the INSERT mapping per output column (missing columns are
+        # NULL of the declared type)
+        ins_exprs = {}
+        for c in names if when_not_matched_insert is not None else ():
+            if c in evolved_types:
+                dt = evolved_types[c]
+            elif declared and c in declared.fieldNames():
+                dt = declared[c].dataType
+            else:
+                dt = t_types.get(c)
+            if c in when_not_matched_insert:
+                e = F.expr(when_not_matched_insert[c])
+                ins_exprs[c] = e.cast(dt) if dt else e
+            else:
+                ins_exprs[c] = F.lit(None).cast(dt or "string")
+        ins_gate = _gate(when_not_matched_insert_condition)
+        touched: list[str] = []
+        if has_matched_clause and scan is not None:
+            per_file = (
+                scan.alias(target_alias)
+                .join(src.alias(source_alias), on_cond, "inner")
+                .select(
+                    F.col(f"{target_alias}.__src").alias("__src"),
+                    F.col(f"{target_alias}.__ridx").alias("__ridx"),
+                )
+                # clustered by file, the rows of a file are also
+                # clustered by row: one shuffle serves both groupings
+                .repartition("__src")
+                .groupBy("__src", "__ridx")
+                .count()
+                .groupBy("__src")
+                .agg(F.max("count").alias("m"))
+                .collect()
+            )
+            if any(r["m"] > 1 for r in per_file):
+                raise ValueError(
+                    "merge_into: a target row matches multiple "
+                    "source rows — the MERGE is ambiguous (the "
+                    "Delta protocol's cardinality violation)"
+                )
+            touched = sorted(
+                {
+                    r["__src"]
+                    if src_rel
+                    else _rel_path(r["__src"], table_dir)
+                    for r in per_file
+                }
+            )
+        if touched:
+            # ONE join of the touched rows with the source, projected
+            # once into flags, post-images (or, for a source row that
+            # matches nothing, the inserted row), matched pre-images
+            # and, merge-on-read, the DV coordinates; the data write,
+            # the change-data write and the DV sidecars all read this
+            # one pin.  Any match lives in a touched file by
+            # construction, so a source row unmatched here is
+            # unmatched in the table.  Masked on both modes: a COW
+            # merge over DV'd files must not re-emit or re-match
+            # deleted rows.
+            tscan, t_rel = _scan_live(
+                spark,
+                table_dir,
+                lf.filter(F.col("path").isin(touched)),
+                meta,
+                with_src=dv,
+                with_row_idx=dv,
+                manifest_threshold=manifest_threshold,
+                dv_possible=dv_possible,
+            )
+            fused = tscan.withColumn("__m_t", F.lit(True)).alias(
+                target_alias
+            ).join(
+                src.withColumn("__m_s", F.lit(True)).alias(source_alias),
+                on_cond,
+                "left_outer"
+                if when_not_matched_insert is None
+                else "full_outer",
+            )
+            is_t = F.col(f"{target_alias}.__m_t").isNotNull()
+            matched = is_t & F.col(f"{source_alias}.__m_s").isNotNull()
             keep = ~(
                 matched
                 & _gate(when_matched_delete_condition)
@@ -3608,122 +3633,108 @@ def merge_into(
                 & F.lit(bool(when_matched_update))
                 & _gate(when_matched_update_condition)
             )
-            cols = []
+            post = {}
             for c in tcols:
+                old = F.col(f"{target_alias}.{c}")
                 if when_matched_update and c in when_matched_update:
-                    cols.append(
-                        F.when(
-                            upd_gate,
-                            F.expr(when_matched_update[c]).cast(
-                                t_types[c]
-                            ),
-                        )
-                        .otherwise(F.col(f"{target_alias}.{c}"))
-                        .alias(c)
-                    )
-                else:
-                    cols.append(
-                        F.col(f"{target_alias}.{c}").alias(c)
-                    )
+                    old = F.when(
+                        upd_gate,
+                        F.expr(when_matched_update[c]).cast(t_types[c]),
+                    ).otherwise(old)
+                post[c] = old
             for c in evolved:
-                cols.append(
-                    F.lit(None).cast(evolved_types[c]).alias(c)
-                )
-            if dv:
-                # merge-on-read: unchanged rows stay IN PLACE behind
-                # the DV mask — only updated post-images re-emit
-                parts.append(
-                    joined.filter(keep & upd_gate).select(*cols)
-                )
-                affected = joined.filter((~keep) | upd_gate).select(
-                    F.col(f"{target_alias}.__src").alias("__src"),
-                    F.col(f"{target_alias}.__ridx").alias("__ridx"),
-                ).localCheckpoint(eager=True)
-            else:
-                parts.append(joined.filter(keep).select(*cols))
-            # row-level change feed (the spec's cdc action): deleted
-            # rows, and pre/post images of updated-and-kept rows —
-            # never the touched files' unchanged passthrough rows
-            t_plain = [
-                F.col(f"{target_alias}.{c}").alias(c) for c in tcols
-            ]
-            if when_matched_delete_condition is not None:
-                change_parts.append(
-                    joined.filter(~keep)
-                    .select(*t_plain)
-                    .withColumn("_change_type", F.lit("delete"))
-                )
-            if when_matched_update:
-                upd_rows = joined.filter(keep & upd_gate)
-                change_parts.append(
-                    upd_rows.select(*t_plain).withColumn(
-                        "_change_type", F.lit("update_preimage")
+                post[c] = F.lit(None).cast(evolved_types[c])
+            rows = fused.select(
+                *[
+                    (
+                        F.when(is_t, post[c]).otherwise(ins_exprs[c])
+                        if ins_exprs
+                        else post[c]
+                    ).alias(c)
+                    for c in names
+                ],
+                *[
+                    F.when(matched, F.col(f"{target_alias}.{c}")).alias(
+                        f"__m_pre{i}"
                     )
-                )
-                change_parts.append(
-                    upd_rows.select(*cols).withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
-                )
-        if when_not_matched_insert is not None:
-            if joined is not None:
-                # anti against the PRE-merge touched rows: any source
-                # row matching the table matches here — the MASKED
-                # tscan on both modes (a raw file read would
-                # resurrect DV-deleted rows and suppress their
-                # re-insert)
-                anti = src.alias(source_alias).join(
-                    tscan.drop("__src", "__ridx", "__tid").alias(
-                        target_alias
-                    ),
-                    on_cond,
-                    "left_anti",
-                )
-            else:
-                anti = src.alias(source_alias)
-            anti = anti.filter(
-                _gate(when_not_matched_insert_condition)
-            )
-            names = (
-                tcols
-                or ([f.name for f in declared.fields] if declared else [])
-            ) + evolved
-            ins_cols = []
-            for c in names:
-                if c in evolved_types:
-                    dt = evolved_types[c]
-                else:
-                    dt = (
-                        declared[c].dataType
-                        if declared and c in declared.fieldNames()
-                        else None
-                    )
-                if c in when_not_matched_insert:
-                    e = F.expr(when_not_matched_insert[c])
-                    ins_cols.append(
-                        (e.cast(dt) if dt else e).alias(c)
-                    )
-                else:
-                    ins_cols.append(
-                        F.lit(None).cast(dt or "string").alias(c)
-                    )
-            ins = anti.select(*ins_cols).localCheckpoint(eager=True)
-            parts.append(ins)
-            change_parts.append(
-                ins.withColumn("_change_type", F.lit("insert"))
-            )
-        if not parts:
+                    for i, c in enumerate(tcols)
+                ],
+                is_t.alias("__m_target"),
+                keep.alias("__m_keep"),
+                upd_gate.alias("__m_update"),
+                (~is_t & ins_gate).alias("__m_insert"),
+                *(
+                    [
+                        F.col(f"{target_alias}.__src").alias("__src"),
+                        F.col(f"{target_alias}.__ridx").alias("__ridx"),
+                    ]
+                    if dv
+                    else []
+                ),
+            ).localCheckpoint(eager=True)
+        elif when_not_matched_insert is not None:
+            # nothing to rewrite: the inserts are the source rows that
+            # match no (masked) target row — all of them when a
+            # matched clause located no file
+            anti = src.alias(source_alias)
+            if scan is not None and not has_matched_clause:
+                anti = anti.join(scan.alias(target_alias), on_cond, "left_anti")
+            rows = anti.select(
+                *[ins_exprs[c].alias(c) for c in names],
+                ins_gate.alias("__m_insert"),
+            ).localCheckpoint(eager=True)
+        else:
             return _next_version(table_dir) - 1
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
+        inserted = F.col("__m_insert")
+        target_row = F.col("__m_target")
+        kept = F.col("__m_keep")
+        updated = F.col("__m_update")
+        if touched:
+            # merge-on-read: unchanged rows stay IN PLACE behind the DV
+            # mask — only updated post-images re-emit
+            written = target_row & kept & (updated if dv else F.lit(True))
+            out = rows.filter(written | inserted).select(*names)
+        else:
+            out = rows.filter(inserted).select(*names)
+        # row-level change feed (the spec's cdc action): deleted rows,
+        # pre/post images of updated-and-kept rows and inserted rows —
+        # never the touched files' unchanged passthrough rows
+        pre = [F.col(f"__m_pre{i}").alias(c) for i, c in enumerate(tcols)]
+        change_parts: list[DataFrame] = []
+        affected = None
+        if touched and when_matched_delete_condition is not None:
+            change_parts.append(
+                rows.filter(target_row & ~kept)
+                .select(*pre)
+                .withColumn("_change_type", F.lit("delete"))
+            )
+        if touched and when_matched_update:
+            upd_rows = rows.filter(kept & updated)
+            change_parts.append(
+                upd_rows.select(*pre).withColumn(
+                    "_change_type", F.lit("update_preimage")
+                )
+            )
+            change_parts.append(
+                upd_rows.select(*names).withColumn(
+                    "_change_type", F.lit("update_postimage")
+                )
+            )
+        if when_not_matched_insert is not None:
+            change_parts.append(
+                rows.filter(inserted)
+                .select(*names)
+                .withColumn("_change_type", F.lit("insert"))
+            )
+        if touched and dv:
+            affected = rows.filter(target_row & (~kept | updated)).select(
+                "__src", "__ridx"
+            )
         out = _apply_generated(spark, table_dir, out)
         _enforce_constraints(spark, table_dir, out)
         adds = _write_data_files(
             out, table_dir, n_files=n_files, partition_by=partition_by
         )
-        import json as _json
-
         empty = [
             a
             for a in adds

@@ -10,6 +10,8 @@ entry point for the whole engine, tuned for analytic workloads:
   required for DuckDB-oracle comparison and for any multi-cluster run)
 - shuffle partitions sized by env (local test: ~cores; cluster: set
   spark.sql.shuffle.partitions explicitly or rely on AQE coalescing)
+- a codegen class cache that holds the engine's working set
+  (:data:`CODEGEN_CACHE_ENTRIES`)
 
 On a real cluster, pass ``master=None`` and let spark-submit configs
 win; every ``config()`` here uses ``setIfMissing`` semantics via the
@@ -33,6 +35,15 @@ except Exception:  # ModuleNotFoundError in the test image
     configure_spark_with_delta_pip = None
     HAS_DELTA = False
 
+#: ``spark.sql.codegen.cache.maxEntries``.  Spark's default keeps 100
+#: generated classes, but one steady SCD2 upload with its read round
+#: (diff, MERGE, point and as-of reads, change feed, anomaly refresh)
+#: uses 130-170, so each upload evicted and recompiled the classes the
+#: previous one built.  With 1000 a steady round compiles 30-70 (the
+#: plans whose shape grows with the log); one cached class costs a few
+#: KB of metaspace.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def get_spark(
     app_name: str = "cdc-pipe-line-spark",
@@ -51,6 +62,11 @@ def get_spark(
         Post-shuffle parallelism.  Locally defaults to the core count;
         at 100 TB scale set this to ~2-3x total executor cores (or rely
         on AQE coalescing from a high initial value).
+
+    The codegen class cache holds :data:`CODEGEN_CACHE_ENTRIES`
+    classes instead of Spark's 100, because one steady upload with its
+    reads uses 130-170: with the default each upload recompiled the
+    classes of the one before.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if master is None and "SPARK_MASTER" not in os.environ:
@@ -89,6 +105,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get(
             "SPARK_GRAFT_DRIVER_MEM", "8g"
         ))
+        # static conf, read once when the JVM's codegen cache is built:
+        # same launch-time CAVEAT as driver.memory
+        .config(
+            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES)
+        )
     )
     if master:
         builder = builder.master(master)
@@ -102,29 +123,42 @@ def get_spark(
         spark = configure_spark_with_delta_pip(builder).getOrCreate()
     else:
         spark = builder.getOrCreate()
-    _warn_if_driver_mem_ignored(spark)
+    _warn_if_launch_conf_ignored(spark)
     return spark
 
 
-def _warn_if_driver_mem_ignored(spark: SparkSession) -> None:
-    """driver.memory is a JVM-launch setting: it only applies when this
-    process started the gateway.  If a pre-existing context (spark-submit,
-    an earlier session) runs with a different heap than the one we asked
-    for, say so instead of letting the 8g sizing silently not happen."""
-    wanted = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+def _warn_if_launch_conf_ignored(spark: SparkSession) -> None:
+    """driver.memory and the codegen cache size are JVM-launch settings:
+    they only apply when this process started the gateway.  If a
+    pre-existing context (spark-submit, an earlier session) runs with
+    other values than the ones we asked for, say so instead of letting
+    the sizing silently not happen."""
+    wanted = {
+        "spark.driver.memory": (
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"), "1g"
+        ),
+        "spark.sql.codegen.cache.maxEntries": (
+            str(CODEGEN_CACHE_ENTRIES), "100"
+        ),
+    }
     try:
-        actual = spark.sparkContext.getConf().get("spark.driver.memory", "1g")
+        conf = spark.sparkContext.getConf()
+        actual = {k: conf.get(k, default) for k, (_, default) in wanted.items()}
     except Exception:  # pragma: no cover - defensive; conf read is cheap
         return
-    if actual != wanted:
+    ignored = [
+        f"{k} is {actual[k]!r}, not the requested {want!r}"
+        for k, (want, _) in wanted.items()
+        if actual[k] != want
+    ]
+    if ignored:
         import warnings
 
         warnings.warn(
-            f"spark.driver.memory is {actual!r}, not the requested "
-            f"{wanted!r}: the JVM was already running when get_spark() "
-            "was called (spark-submit or a prior session), so builder "
-            "memory settings were ignored.  Set --driver-memory at "
-            "launch instead.",
+            "; ".join(ignored) + ": the JVM was already running when "
+            "get_spark() was called (spark-submit or a prior session), "
+            "so builder launch settings were ignored.  Set them at "
+            "launch instead (--driver-memory, --conf).",
             RuntimeWarning,
             stacklevel=3,
         )

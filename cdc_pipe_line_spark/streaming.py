@@ -545,7 +545,6 @@ def run_scd2_stream(
                 # per-partition commits in foreachBatch).
                 batch_df.count()
                 return
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # Materialize the micro-batch once: it feeds TWO actions (the
         # bucket census and the main dedup/chain/append pipeline), and
         # without this each action re-parses the batch's source files
@@ -566,8 +565,9 @@ def run_scd2_stream(
             batch_df.unpersist()
 
     def _apply_materialized(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.count()
-        touched = [r[0] for r in batch_df.select("__bucket").distinct().collect()]
+        # one census job: it drains the stateful dedup upstream and
+        # fills the persisted batch while it lists the touched buckets
+        touched = [r[0] for r in batch_df.groupBy("__bucket").count().collect()]
         if not touched:
             return
         resolved = None
@@ -653,7 +653,11 @@ def run_scd2_stream(
             # directory being compacted (same recovery argument as the
             # append above: staged output is invisible to a recompute)
             out.count()
-            out.write.mode("overwrite").partitionBy("__bucket").parquet(data_dir)
+            # a write option, not the session conf: the caller's own
+            # overwrites keep their partitionOverwriteMode
+            out.write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("__bucket").parquet(data_dir)
         finally:
             out.unpersist()
 

@@ -475,6 +475,71 @@ def test_scd2_append_log_compaction_bounds_segments(spark, tmp_path):
     assert a == b
 
 
+def test_scd2_stream_keeps_the_callers_overwrite_mode(spark, tmp_path):
+    """The sink's compaction asks for dynamic partition overwrite on
+    its own write; the caller's session keeps its overwrite mode, so a
+    later static overwrite still replaces every partition."""
+    import json
+    import os
+
+    from cdc_pipe_line_spark import streaming as st
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "STATIC")
+    try:
+        src = tmp_path / "src"
+        src.mkdir()
+        # one file per micro-batch (in mtime order), every batch over
+        # the same keys: the buckets gain a second segment in batch 1
+        # and compact
+        for b in range(3):
+            path = src / f"b{b}.json"
+            with open(path, "w") as fh:
+                for i in range(4):
+                    fh.write(json.dumps({
+                        "event_id": f"e{b}-{i}",
+                        "event_type": "insert" if b == 0 else "update",
+                        "timestamp": f"2024-01-01 0{b}:0{i}:00",
+                        "key_value": f"k{i}",
+                        "new_values": {"v": str(b)},
+                    }) + "\n")
+            os.utime(path, (1_700_000_000 + b, 1_700_000_000 + b))
+        stream = (
+            spark.readStream.schema(st.EVENT_SCHEMA)
+            .option("maxFilesPerTrigger", "1")
+            .json(str(src))
+        )
+        hist = str(tmp_path / "history")
+        st.run_scd2_stream(
+            stream, hist, checkpoint_dir=str(tmp_path / "ckpt"),
+            n_buckets=2, max_segments=1,
+        ).awaitTermination()
+        assert spark.conf.get(key) == "STATIC"
+        data_dir = os.path.join(hist, "data")
+        for b in os.listdir(data_dir):
+            if b.startswith("__bucket="):
+                segs = [f for f in os.listdir(os.path.join(data_dir, b))
+                        if f.endswith(".parquet")]
+                assert len(segs) <= 2, (b, segs)
+        h = st.read_scd2_history(spark, hist)
+        assert h.count() == 12
+        assert sorted(
+            (r.key_value, r.data["v"]) for r in h.filter("is_current").collect()
+        ) == [(f"k{i}", "2") for i in range(4)]
+
+        out = str(tmp_path / "out")
+        spark.createDataFrame([(1, "a"), (2, "b")], "v int, p string").write.partitionBy(
+            "p"
+        ).parquet(out)
+        spark.createDataFrame([(3, "a")], "v int, p string").write.mode(
+            "overwrite"
+        ).partitionBy("p").parquet(out)
+        assert [tuple(r) for r in spark.read.parquet(out).collect()] == [(3, "a")]
+    finally:
+        spark.conf.set(key, before)
+
+
 @pytest.mark.slow
 def test_stream_crash_between_append_and_marker(spark, tmp_path, monkeypatch):
     """The NASTIER replay window (VERDICT r6 item 5): crash after the

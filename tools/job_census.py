@@ -1,4 +1,4 @@
-"""Spark jobs and wall time per native-Delta call site, one sync round.
+"""Spark jobs, codegen compiles and wall time per native-Delta call site.
 
     python tools/job_census.py [--seed 1]
 
@@ -18,9 +18,13 @@ engine.  Each wrapped call runs under its own job group; its jobs and
 seconds are charged to the innermost ``deltalog.py`` or
 ``delta_merge.py`` frame on the Python stack (other frames of the
 package when neither is on it).  Jobs a phase launched outside every
-wrapped call are listed as ``(unattributed)``.  The engine itself is not
-modified; the scratch table lives in a temporary directory that is
-removed at exit.
+wrapped call are listed as ``(unattributed)``.  Next to jobs, every phase
+and call site shows its codegen compiles: the classes Spark's code
+generator compiled meanwhile (the count of ``CodegenMetrics``'
+compilation-time histogram), which shows whether the codegen cache
+(``spark.sql.codegen.cache.maxEntries``) holds the round's classes or
+recompiles them.  The engine itself is not modified; the scratch table
+lives in a temporary directory that is removed at exit.
 """
 
 from __future__ import annotations
@@ -47,7 +51,7 @@ FOCUS = ("deltalog.py", "delta_merge.py")
 
 
 class Census:
-    """Per-phase, per-call-site job and time totals."""
+    """Per-phase, per-call-site job, compile and time totals."""
 
     def __init__(self, spark):
         self.sc = spark.sparkContext
@@ -56,9 +60,18 @@ class Census:
         self.group: str | None = None
         self.n = 0
         self.depth = 0
-        # phase -> site -> [calls, jobs, seconds]
-        self.sites: dict = defaultdict(lambda: defaultdict(lambda: [0, 0, 0.0]))
+        # phase -> site -> [calls, jobs, compiles, seconds]
+        self.sites: dict = defaultdict(lambda: defaultdict(lambda: [0, 0, 0, 0.0]))
         self.phase_s: dict[str, float] = {}
+        self.phase_c: dict[str, int] = {}
+        # local mode: the executors compile in the driver JVM too
+        self._codegen = (
+            spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME()
+        )
+
+    def compiles(self) -> int:
+        return self._codegen.getCount()
 
     def _new_group(self) -> str:
         self.n += 1
@@ -70,15 +83,21 @@ class Census:
     def run_phase(self, name: str, fn):
         self.phase, self.group = name, self._new_group()
         self.sc.setJobGroup(self.group, name)
-        t0 = time.perf_counter()
+        t0, c0 = time.perf_counter(), self.compiles()
         try:
             return fn()
         finally:
             self.phase_s[name] = time.perf_counter() - t0
+            self.phase_c[name] = self.compiles() - c0
             self.sc._jsc.clearJobGroup()
             stray = self._jobs(self.group)
-            if stray:
-                self.sites[name]["(unattributed)"][1] += stray
+            stray_c = self.phase_c[name] - sum(
+                r[2] for r in self.sites[name].values()
+            )
+            if stray or stray_c:
+                rec = self.sites[name]["(unattributed)"]
+                rec[1] += stray
+                rec[2] += stray_c
             self.phase = self.group = None
 
     @staticmethod
@@ -109,7 +128,7 @@ class Census:
             group = self._new_group()
             self.depth += 1
             self.sc.setJobGroup(group, site)
-            t0 = time.perf_counter()
+            t0, c0 = time.perf_counter(), self.compiles()
             try:
                 return orig(*args, **kwargs)
             finally:
@@ -119,7 +138,8 @@ class Census:
                 rec = self.sites[self.phase][f"{name:<16} {site}"]
                 rec[0] += 1
                 rec[1] += self._jobs(group)
-                rec[2] += elapsed
+                rec[2] += self.compiles() - c0
+                rec[3] += elapsed
 
         setattr(owner, name, wrapper)
 
@@ -141,14 +161,18 @@ class Census:
         for phase, sites in self.sites.items():
             jobs = sum(r[1] for r in sites.values())
             total_jobs += jobs
-            print(f"\n== {phase}: {jobs} jobs, {self.phase_s[phase]:.3f} s")
-            print(f"{'calls':>5} {'jobs':>5} {'seconds':>8}  call")
-            for site, (calls, j, s) in sorted(
-                sites.items(), key=lambda kv: (-kv[1][1], -kv[1][2])
+            print(
+                f"\n== {phase}: {jobs} jobs, {self.phase_c[phase]} compiles, "
+                f"{self.phase_s[phase]:.3f} s"
+            )
+            print(f"{'calls':>5} {'jobs':>5} {'compiles':>8} {'seconds':>8}  call")
+            for site, (calls, j, c, s) in sorted(
+                sites.items(), key=lambda kv: (-kv[1][1], -kv[1][3])
             ):
-                print(f"{calls:>5} {j:>5} {s:>8.3f}  {site}")
+                print(f"{calls:>5} {j:>5} {c:>8} {s:>8.3f}  {site}")
         wall = sum(self.phase_s.values())
-        print(f"\ntotal: {total_jobs} jobs, {wall:.3f} s")
+        compiles = sum(self.phase_c.values())
+        print(f"\ntotal: {total_jobs} jobs, {compiles} compiles, {wall:.3f} s")
 
 
 def main(argv=None) -> int:
