@@ -15,20 +15,16 @@ on a cluster with delta-spark the whole apply is one ACID statement:
   target — Delta's transaction closes the data/marker atomicity gap
   the parquet append-log documents (streaming.py).
 
-delta-spark is NOT installed in this image (verified each round), so
-the recipe is written against the delta-spark **builder protocol**
+The recipe is written against the delta-spark **builder protocol**
 (``alias / merge / whenMatchedUpdate / whenNotMatchedInsert /
 execute`` — the public ``delta.tables.DeltaTable`` API) and
-:func:`build_scd2_merge` accepts ANY object implementing it.  Tests
-execute the recipe through a semantics-faithful fake
-(tests/test_delta_merge.py) and prove it equal to the tested batch
-path; on a real cluster pass ``DeltaTable.forPath(spark, path)``.
-As of round 11 the recipe ALSO runs as a real statement in this
-container: ``deltalog.NativeDeltaTable.forPath`` implements the same
+:func:`build_scd2_merge` accepts ANY object implementing it: on a
+cluster with delta-spark pass ``DeltaTable.forPath(spark, path)``;
+without it, ``deltalog.NativeDeltaTable.forPath`` implements the same
 protocol over the native log, executing through
-``deltalog.merge_into`` (copy-on-write MERGE — tests/
-test_round11_merge.py proves it row-identical to the batch path on
-an actual Delta table).
+``deltalog.merge_into``.  Tests run the recipe on native Delta tables
+(tests/test_delta_merge.py, tests/test_round11_merge.py) and prove it
+row-identical to the tested batch path.
 
 MERGE construction (all expressions are plain Spark SQL strings, the
 form the delta-spark builder accepts):
@@ -178,9 +174,8 @@ def apply_scd2_delta(
     the package is installed, else
     :class:`cdc_pipe_line_spark.deltalog.NativeDeltaTable` — the
     same merge-builder protocol over the native log, so this call
-    runs END-TO-END in this container (previously it failed fast;
-    the recipe was only exercised through the test fake).  The
-    statement executed is byte-identical either way
+    runs end-to-end without the package.  The statement executed is
+    byte-identical either way
     (:func:`build_scd2_merge`).
     """
     table_cls, read_hist, init_write = _delta_backend(spark, target_path)
@@ -310,7 +305,7 @@ def build_scd2_merge_wide(table, source: DataFrame, wide_cols: list[str]):
     ``withSchemaEvolution()``: INSERT binds the batch's wide columns,
     and any column the target lacks is added by the merge itself
     (existing rows null-fill) — Delta's documented evolution
-    semantics, reproduced by the protocol fake in tests.
+    semantics, which ``deltalog.merge_into`` implements natively.
     """
     return (
         table.alias("t")

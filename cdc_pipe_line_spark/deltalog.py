@@ -200,9 +200,7 @@ _DV_FIELDS = (
 )
 
 
-def _live_frame(
-    spark: SparkSession, table_dir: str, *, pin: bool = False
-) -> DataFrame:
+def _live_frame(spark: SparkSession, table_dir: str) -> DataFrame:
     """The live-file frame (the columns :func:`live_files` produces)
     — from the driver-side replay when the log fits the byte budget,
     the distributed replay otherwise.  Same columns either way, so all
@@ -213,13 +211,10 @@ def _live_frame(
     Spark plans as a ``LocalRelation``: projections, filters, limits
     and collects over it are folded on the driver and run NO Spark
     job.  (A frame from a list of row tuples would be a ``LogicalRDD``
-    costing two jobs per collect.)  ``pin=True`` pins the distributed
-    replay with a local checkpoint, for callers that reuse the frame;
-    the local relation needs no pin."""
+    costing two jobs per collect.)"""
     state = _replay_log_driver(table_dir)
     if state is None:
-        lf = live_files(read_log_actions(spark, table_dir))
-        return lf.localCheckpoint(eager=True) if pin else lf
+        return live_files(read_log_actions(spark, table_dir))
     import pyarrow as pa
 
     adds = state["adds"]
@@ -595,14 +590,15 @@ def _next_version(table_dir: str) -> int:
 
 
 def _remove_staged(table_dir: str, adds: list[dict]) -> None:
-    """Best-effort removal of data files staged for a commit that was
-    LOST (version race or any other commit error): without this the
-    orphaned parquet files would trip the table's no-untracked-files
-    invariant audit (``qa_delta_invariants``).  Now-empty Hive
-    partition directories the staging created are pruned too, so a
-    lost race leaves the table tree byte-identical."""
+    """Best-effort removal of the data (``add``) and change-data
+    (``cdc``) files staged for a commit that was LOST (version race
+    or any other commit error): without this the orphaned parquet
+    files would trip the table's no-untracked-files invariant audit
+    (``qa_delta_invariants``).  Now-empty Hive partition directories
+    the staging created are pruned too, so a lost race leaves the
+    table tree byte-identical."""
     for a in adds:
-        p = a.get("add", {}).get("path")
+        p = (a.get("add") or a.get("cdc") or {}).get("path")
         if not p:
             continue
         try:
@@ -1347,42 +1343,6 @@ def _change_counts(table_dir: str, cdc_actions: list[dict]) -> dict[str, int]:
         for e in _pc.value_counts(col).to_pylist():
             counts[e["values"]] = counts.get(e["values"], 0) + e["counts"]
     return counts
-
-
-def _merge_metrics(
-    table_dir: str,
-    adds: list[dict],
-    removes: list[dict],
-    cdc_actions: list[dict],
-    started: float,
-) -> dict[str, str]:
-    """MERGE's operationMetrics: target-row splits from the change
-    file's ``_change_type`` census (the rows that really changed),
-    file counts from the commit's own actions."""
-    import json as _json
-
-    ch = _change_counts(table_dir, cdc_actions)
-    out_rows = sum(
-        int(_json.loads(a["add"]["stats"])["numRecords"])
-        for a in adds
-        if a["add"].get("stats")
-    )
-    ins = ch.get("insert", 0)
-    upd = ch.get("update_postimage", 0)
-    dele = ch.get("delete", 0)
-    return _op_metrics(
-        adds,
-        removes,
-        started=started,
-        extra={
-            "numTargetFilesAdded": len(adds),
-            "numTargetFilesRemoved": len(removes),
-            "numTargetRowsInserted": ins,
-            "numTargetRowsUpdated": upd,
-            "numTargetRowsDeleted": dele,
-            "numTargetRowsCopied": max(0, out_rows - ins - upd),
-        },
-    )
 
 
 def _latest_meta(
@@ -2720,12 +2680,14 @@ def _write_dv_sidecars(
     touched: list[str],
     existing_dv: dict[str, dict],
 ) -> dict[str, dict]:
-    """Write ONE merged deletion vector per touched file in the
-    SPEC's storage format (:mod:`cdc_pipe_line_spark.dvbitmap` —
-    RoaringBitmapArray payload, z85-UUID ``deletion_vector_*.bin``
-    framing, inline descriptors for tiny vectors): the newly-affected
-    row coordinates (``affected``: ``__src`` — URI or relative — and
-    ``__ridx``) unioned with each file's EXISTING vector rows
+    """Write ONE merged deletion vector per file holding affected
+    rows, in the SPEC's storage format
+    (:mod:`cdc_pipe_line_spark.dvbitmap` — RoaringBitmapArray payload,
+    z85-UUID ``deletion_vector_*.bin`` framing, inline descriptors for
+    tiny vectors): the newly-affected row coordinates (``affected``:
+    ``__src`` — URI or relative — and ``__ridx``; ``touched`` lists
+    the relative paths of the files they may lie in) unioned with
+    each file's EXISTING vector rows
     (``existing_dv``: data-file relative path → current descriptor;
     vectors are immutable, every mutation writes a NEW merged one, so
     historical versions keep reading their old descriptors — the
@@ -2739,7 +2701,7 @@ def _write_dv_sidecars(
     bounded per-file results into the table root, so a speculative
     or retried task's duplicate lands in staging and is swept, never
     committed.  Returns ``{data-file relative path: deletionVector
-    descriptor}``."""
+    descriptor}`` for the files that gained rows."""
     import json as _json
     import shutil as _shutil
     import uuid as _uuid
@@ -2836,267 +2798,274 @@ def _remove_dv_staged(table_dir: str, descriptors: dict[str, dict]) -> None:
             pass
 
 
-@_releases_manifests
-def _dv_rewrite_where(
+def _retry_lost_race(attempt):
+    """Run one row-level statement ``attempt`` (locate, write, commit),
+    re-entering from fresh table state when its commit loses the
+    version race: stale tombstones must never be re-committed (the
+    compact/overwrite re-entry discipline).  Five attempts; any other
+    failure propagates at once."""
+    for _ in range(4):
+        try:
+            return attempt()
+        except FileExistsError:
+            pass
+    return attempt()
+
+
+def _commit_dml(
     spark: SparkSession,
     table_dir: str,
-    condition: str,
-    operation: str,
-    set_exprs: dict[str, str] | None = None,
+    rows: DataFrame,
+    meta,
+    lf: DataFrame,
     *,
-    skipping: list[tuple] | None = None,
-    n_files: int = 1,
-    manifest_threshold: int | None = None,
+    names: list[str],
+    tcols: list[str],
+    touched: list[str],
+    clauses: set[str],
+    dv: bool,
+    operation: str,
+    parameters: dict,
+    started: float,
+    n_files: int,
+    meta_actions: list[dict] | None = None,
 ) -> int:
-    """MERGE-ON-READ core shared by :func:`delete_where` and
-    :func:`update_where` when the table has deletion vectors enabled:
+    """The write half of DELETE, UPDATE and MERGE: one core for the
+    three row-level statements in both write modes.
 
-    1. PRUNE + LOCATE exactly as the copy-on-write path, over the
-       DV-MASKED scan (already-deleted rows can never re-match).
-    2. Instead of rewriting the touched files, write one merged DV
-       sidecar per file covering the matched rows' positions and
-       re-commit each file's ``add`` with the descriptor (remove +
-       add of the same path, one atomic commit).  UPDATE additionally
-       appends the post-image rows as NEW files.
-    3. The spec's ``cdc`` change file carries the row-level feed, so
-       CDF stays exact.
+    ``rows`` holds the statement's located rows, projected once into
+    the output columns ``names`` (a target row's post-image, or the
+    row to insert), the matched pre-images ``__m_pre<i>`` of
+    ``tcols``, and the clause flags ``__m_target``, ``__m_keep``
+    (false: the row is deleted), ``__m_update`` and ``__m_insert``,
+    plus the row coordinates ``__src``/``__ridx`` under merge-on-read.
+    ``touched`` lists the files the rows were located in (relative
+    paths); with none, ``rows`` carries only inserts (``names`` and
+    ``__m_insert``).  ``clauses`` names what the statement can do:
+    ``delete``, ``update``, ``insert``.
 
-    Touched BYTES are DV-rows + post-image rows — never the touched
-    files' full content; the copy-on-write amplification (a 1-row
-    mutation rewriting a whole file) is gone."""
+    Copy-on-write (``dv`` false) rewrites the touched files' kept rows
+    and tombstones the originals.  Merge-on-read leaves the files in
+    place: one merged deletion vector per file masks the deleted and
+    updated rows, each file is re-added with its descriptor, and only
+    post-images and inserts are written.  Both modes write the
+    row-level change feed (the spec's ``cdc`` action: deleted rows,
+    update pre/post-images, inserts; never passthrough rows) and land
+    everything in ONE commit carrying the statement's ``commitInfo``.
+    Any failure, a refused commit included, removes the data,
+    change-data and vector files this call staged.  A statement that
+    changes nothing commits nothing and returns the current version."""
+    import functools
     import json as _json
-    import time as _time
 
-    started = _time.time()
-    cond = F.coalesce(F.expr(condition), F.lit(False))
-    if skipping:
-        cond = cond & _skipping_row_cond(skipping)
-    for attempt in range(5):
-        meta = _latest_meta(spark, table_dir)
-        partition_by = (
-            list(meta["partitionColumns"])
-            if meta and meta["partitionColumns"]
-            else None
-        )
-        lf_all = _live_frame(spark, table_dir, pin=True)
-        lf = lf_all
-        if skipping:
-            lf = lf.filter(
-                _skipping_keep(
-                    skipping,
-                    _mapping_from(_current_schema_string(table_dir)),
-                )
+    partition_by = (
+        list(meta["partitionColumns"])
+        if meta and meta["partitionColumns"]
+        else None
+    )
+    inserted = F.col("__m_insert") if "insert" in clauses else F.lit(False)
+    target, kept, updated = (
+        F.col(c) for c in ("__m_target", "__m_keep", "__m_update")
+    )
+    written = inserted
+    if touched:
+        # merge-on-read: unchanged rows stay IN PLACE behind the
+        # vector, so only updated post-images re-emit
+        written = (
+            target & kept & (updated if dv else F.lit(True))
+        ) | inserted
+    adds: list[dict] = []
+    cdc_actions: list[dict] = []
+    descriptors: dict[str, dict] = {}
+    try:
+        if not dv or clauses & {"update", "insert"}:
+            out = _apply_generated(
+                spark, table_dir, rows.filter(written).select(*names)
             )
-        scan, src_rel = _scan_live(
-            spark,
-            table_dir,
-            lf,
-            meta,
-            with_src=True,
-            with_row_idx=True,
-            manifest_threshold=manifest_threshold,
-            dv_possible=True,  # by construction: the DV write path
-        )
-        if scan is None:
-            return _next_version(table_dir) - 1
-        matched = scan.filter(cond).localCheckpoint(eager=True)
-        srcs = [
-            r["__src"]
-            for r in matched.select("__src").distinct().collect()
+            _enforce_constraints(spark, table_dir, out)
+            adds = _write_data_files(
+                out, table_dir, n_files=n_files, partition_by=partition_by
+            )
+        # a rewrite that kept no row leaves an empty file: drop it (a
+        # pure tombstone) instead of adding a zero-row data file
+        empty = [
+            a
+            for a in adds
+            if a["add"].get("stats")
+            and _json.loads(a["add"]["stats"])["numRecords"] == 0
         ]
-        touched = sorted(
-            s if src_rel else _rel_path(s, table_dir) for s in srcs
-        )
-        if not touched:
-            return _next_version(table_dir) - 1
-        payloads = {
-            r.path: r
-            for r in lf_all.filter(
-                F.col("path").isin(touched)
-            ).collect()
-        }
-        existing_dv = {
-            p: r.deletionVector.asDict()
-            for p, r in payloads.items()
-            if r.deletionVector is not None
-        }
-        descriptors = _write_dv_sidecars(
-            spark,
-            table_dir,
-            matched.select("__src", "__ridx"),
-            touched,
-            existing_dv,
-        )
-        removes = [
-            {"remove": {"path": p, "dataChange": True}} for p in touched
-        ]
-        dv_adds = []
-        for p in touched:
-            r = payloads[p]
-            add = {"path": p, "size": r.size, "dataChange": True}
-            if r.partitionValues:
-                add["partitionValues"] = dict(r.partitionValues)
-            if r.stats:
-                add["stats"] = r.stats
-            add["deletionVector"] = descriptors[p]
-            dv_adds.append({"add": add})
-        tcols = [c for c in matched.columns if c not in ("__src", "__ridx")]
-        body = matched.select(*tcols)
-        data_adds: list[dict] = []
-        if operation == "UPDATE":
-            t_types = {
-                f.name: f.dataType for f in body.schema.fields
+        if empty:
+            _remove_staged(table_dir, empty)
+            adds = [a for a in adds if a not in empty]
+        rewritten = touched
+        dv_adds: list[dict] = []
+        n_prev = 0
+        if dv and touched:
+            payloads = {
+                r.path: r
+                for r in lf.filter(F.col("path").isin(touched)).collect()
             }
-            unknown = set(set_exprs or {}) - set(tcols)
-            if unknown:
-                raise ValueError(
-                    f"UPDATE SET on unknown columns: {unknown}"
-                )
-            post = body.select(
-                *[
-                    F.expr(set_exprs[c]).cast(t_types[c]).alias(c)
-                    if c in (set_exprs or {})
-                    else F.col(c)
-                    for c in tcols
-                ]
-            )
-            post = _apply_generated(spark, table_dir, post)
-            _enforce_constraints(spark, table_dir, post)
-            data_adds = _write_data_files(
-                post,
+            existing = {
+                p: r.deletionVector.asDict()
+                for p, r in payloads.items()
+                if r.deletionVector is not None
+            }
+            descriptors = _write_dv_sidecars(
+                spark,
                 table_dir,
-                n_files=n_files,
-                partition_by=partition_by,
+                rows.filter(target & (~kept | updated)),
+                touched,
+                existing,
             )
-            ch = body.withColumn(
-                "_change_type", F.lit("update_preimage")
-            ).unionByName(
-                post.withColumn(
+            # only the files that gained vector rows are re-added
+            rewritten = sorted(descriptors)
+            n_prev = len(existing.keys() & descriptors.keys())
+            for p in rewritten:
+                r = payloads[p]
+                add = {"path": p, "size": r.size, "dataChange": True}
+                if r.partitionValues:
+                    add["partitionValues"] = dict(r.partitionValues)
+                if r.stats:
+                    add["stats"] = r.stats
+                add["deletionVector"] = descriptors[p]
+                dv_adds.append({"add": add})
+        removes = [
+            {"remove": {"path": p, "dataChange": True}} for p in rewritten
+        ]
+        if not removes and not adds:
+            return _next_version(table_dir) - 1
+        pre = [F.col(f"__m_pre{i}").alias(c) for i, c in enumerate(tcols)]
+        legs: list[DataFrame] = []
+        if touched and "delete" in clauses:
+            legs.append(
+                rows.filter(target & ~kept)
+                .select(*pre)
+                .withColumn("_change_type", F.lit("delete"))
+            )
+        if touched and "update" in clauses:
+            upd_rows = rows.filter(kept & updated)
+            legs.append(
+                upd_rows.select(*pre).withColumn(
+                    "_change_type", F.lit("update_preimage")
+                )
+            )
+            legs.append(
+                upd_rows.select(*names).withColumn(
                     "_change_type", F.lit("update_postimage")
                 )
             )
-        else:
-            ch = body.withColumn("_change_type", F.lit("delete"))
-        cdc_actions = []
-        act = _write_change_data(ch, table_dir)
-        if act:
-            cdc_actions.append(act)
-        ch_counts = _change_counts(table_dir, cdc_actions)
-        extra: dict = {
-            "numDeletionVectorsAdded": len(descriptors),
-            "numDeletionVectorsUpdated": len(existing_dv),
-        }
-        if operation == "DELETE":
-            extra["numDeletedRows"] = ch_counts.get("delete", 0)
-        else:
-            extra["numUpdatedRows"] = ch_counts.get(
-                "update_postimage", 0
+        if "insert" in clauses:
+            legs.append(
+                rows.filter(inserted)
+                .select(*names)
+                .withColumn("_change_type", F.lit("insert"))
             )
-        try:
-            return commit(
+        if legs:
+            # evolution: post-image/insert legs may carry new columns
+            # the pre-image legs lack, which null-fill
+            act = _write_change_data(
+                functools.reduce(
+                    lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                    legs,
+                ),
                 table_dir,
-                [
-                    *removes,
-                    *dv_adds,
-                    *data_adds,
-                    *cdc_actions,
-                    {
-                        "commitInfo": {
-                            "operation": operation,
-                            "operationParameters": {
-                                "predicate": condition
-                            },
-                            "operationMetrics": _op_metrics(
-                                data_adds,
-                                removes,
-                                started=started,
-                                extra=extra,
-                            ),
-                        }
-                    },
-                ],
             )
-        except FileExistsError:
-            _remove_dv_staged(table_dir, descriptors)
-            _remove_staged(table_dir, data_adds)
-            for a in cdc_actions:
-                try:
-                    os.remove(
-                        os.path.join(table_dir, a["cdc"]["path"])
-                    )
-                except OSError:
-                    pass
-            if attempt == 4:
-                raise
-    raise AssertionError("unreachable")
+            if act:
+                cdc_actions.append(act)
+        ch = _change_counts(table_dir, cdc_actions)
+        ins, upd, dele = (
+            ch.get(k, 0) for k in ("insert", "update_postimage", "delete")
+        )
+        out_rows = sum(
+            int(_json.loads(a["add"]["stats"])["numRecords"])
+            for a in adds
+            if a["add"].get("stats")
+        )
+        if operation == "MERGE":
+            extra: dict = {
+                "numTargetFilesAdded": len(adds),
+                "numTargetFilesRemoved": len(removes),
+                "numTargetRowsInserted": ins,
+                "numTargetRowsUpdated": upd,
+                "numTargetRowsDeleted": dele,
+                "numTargetRowsCopied": max(0, out_rows - ins - upd),
+            }
+        else:
+            extra = (
+                {"numDeletedRows": dele}
+                if operation == "DELETE"
+                else {"numUpdatedRows": upd}
+            )
+            if not dv:
+                extra["numCopiedRows"] = max(0, out_rows - upd)
+        if dv:
+            extra["numDeletionVectorsAdded"] = len(descriptors)
+            if operation != "MERGE":
+                extra["numDeletionVectorsUpdated"] = n_prev
+        return commit(
+            table_dir,
+            [
+                *(meta_actions or []),
+                *removes,
+                *dv_adds,
+                *adds,
+                *cdc_actions,
+                {
+                    "commitInfo": {
+                        "operation": operation,
+                        "operationParameters": parameters,
+                        "operationMetrics": _op_metrics(
+                            adds, removes, started=started, extra=extra
+                        ),
+                    }
+                },
+            ],
+        )
+    except BaseException:
+        _remove_staged(table_dir, adds + cdc_actions)
+        _remove_dv_staged(table_dir, descriptors)
+        raise
 
 
 @_releases_manifests
-def _rewrite_where(
+def _dml_where(
     spark: SparkSession,
     table_dir: str,
     condition: str,
-    rewrite,
-    operation: str,
+    set_exprs: dict[str, str] | None,
     *,
-    change_rows=None,
-    skipping: list[tuple] | None = None,
-    n_files: int = 1,
-    manifest_threshold: int | None = None,
+    skipping: list[tuple] | None,
+    n_files: int,
+    manifest_threshold: int | None,
 ) -> int:
-    """Copy-on-write core shared by :func:`delete_where` and
-    :func:`update_where` — the real Delta writer's row-level
-    mutation shape, which is what makes it survive 100 TB:
-
-    1. PRUNE: stats/partition metadata cuts the live set to
-       candidate files (``skipping`` conjuncts; files without stats
-       always stay candidates).
-    2. LOCATE: one scan of the candidates only, counting predicate
-       hits per source file — files with zero matching rows are
-       never rewritten (their bytes are never touched again).
-    3. REWRITE: only the touched files are re-read and rewritten
-       without/with the mutation; a file whose every row matched a
-       DELETE simply tombstones (the rewrite produced zero rows, so
-       no replacement add at all).
-    4. COMMIT: tombstones + replacement adds in ONE atomic commit
-       (dataChange=true — a change-data reader sees the mutation),
-       plus the spec's ``cdc`` action when ``change_rows`` supplies
-       the row-level change frame: :func:`read_changes` then reports
-       ONLY the mutated rows instead of the touched files' full
-       churn.
-
-    ``skipping`` conjuncts are PART OF the statement's predicate:
-    the effective condition is ``condition AND <conjuncts>``, applied
-    identically at file-pruning level and at row level — so a conjunct
-    NOT implied by ``condition`` narrows the statement exactly (the
-    partition-scoped-DML shape), never silently (ADVICE r11 medium:
-    the old contract pruned files by the conjuncts but mutated rows by
-    ``condition`` alone, so rows in pruned files escaped while
-    identical rows in touched files did not).
-
-    A lost version race restarts the whole attempt from fresh state
-    (the compact/overwrite re-entry discipline: stale tombstones
-    must never be re-committed).  Returns the committed version; a
-    predicate matching no rows is a NO-OP that commits nothing and
-    returns the current version."""
-    import json as _json
+    """Locate half of :func:`delete_where` (``set_exprs`` None) and
+    :func:`update_where`: prune the live files by ``skipping``, scan
+    the candidates (DV-masked, so already-deleted rows never re-match),
+    collect the files holding ``condition`` rows, and hand
+    :func:`_commit_dml` one flag projection of the located rows — no
+    join.  Copy-on-write projects the touched files' every row;
+    merge-on-read only the matched rows, pinned, since vectors mask
+    them in place."""
     import time as _time
 
     started = _time.time()
-    cond = F.coalesce(F.expr(condition), F.lit(False))
+    operation = "DELETE" if set_exprs is None else "UPDATE"
+    set_exprs = set_exprs or {}
+    cond = F.expr(condition)
     if skipping:
         cond = cond & _skipping_row_cond(skipping)
-    # one protocol read per STATEMENT: without the deletionVectors
-    # feature no file can carry a descriptor, so every scan below
-    # takes the fast path (no DV probe, no _metadata columns)
-    dv_possible = _dv_feature_present(table_dir)
-    for attempt in range(5):
+    # SQL WHERE semantics: a NULL predicate does not match, and the
+    # flags derived from it must never be NULL either
+    cond = F.coalesce(cond, F.lit(False))
+    dv = _dv_enabled(table_dir)
+    # masking is a PROTOCOL question, independent of the write mode: a
+    # copy-on-write statement over files that carry vectors must still
+    # mask, or its rewrite would resurrect the deleted rows; a never-DV
+    # table skips all mask scaffolding
+    dv_possible = dv or _dv_feature_present(table_dir)
+
+    def _attempt() -> int:
         meta = _latest_meta(spark, table_dir)
-        partition_by = (
-            list(meta["partitionColumns"])
-            if meta and meta["partitionColumns"]
-            else None
-        )
         lf = _live_frame(spark, table_dir)
         if skipping:
             lf = lf.filter(
@@ -3111,118 +3080,74 @@ def _rewrite_where(
             lf,
             meta,
             with_src=True,
+            with_row_idx=dv,
             manifest_threshold=manifest_threshold,
             dv_possible=dv_possible,
         )
         if scan is None:
             return _next_version(table_dir) - 1
-        hits = (
-            scan.filter(cond)
-            .groupBy("__src")
-            .agg(F.count("*"))
-            .collect()
-        )
-        # bounded by files that really contain matches — the set the
-        # statement rewrites anyway
+        matched = scan.filter(cond)
+        if dv:
+            matched = matched.localCheckpoint(eager=True)
         touched = sorted(
             {
                 r["__src"] if src_rel else _rel_path(r["__src"], table_dir)
-                for r in hits
+                for r in matched.select("__src").distinct().collect()
             }
         )
         if not touched:
             return _next_version(table_dir) - 1
-        # the rewrite re-read is DV-MASKED too (a table can carry
-        # deletion vectors while a statement runs copy-on-write —
-        # use_dv=False): a raw file read would RESURRECT the DV'd
-        # rows into the replacement files.  The rewrite therefore
-        # also absorbs any DV the touched files carried.
-        src, _src_rel = _scan_live(
+        base = matched
+        if not dv:
+            base, _ = _scan_live(
+                spark,
+                table_dir,
+                lf.filter(F.col("path").isin(touched)),
+                meta,
+                dv_possible=dv_possible,
+            )
+        tcols = [c for c in base.columns if c not in ("__src", "__ridx")]
+        unknown = set(set_exprs) - set(tcols)
+        if unknown:
+            raise ValueError(f"UPDATE SET on unknown columns: {unknown}")
+        t_types = {f.name: f.dataType for f in base.schema.fields}
+        rows = base.select(
+            *[
+                F.when(cond, F.expr(set_exprs[c]).cast(t_types[c]))
+                .otherwise(F.col(c))
+                .alias(c)
+                if c in set_exprs
+                else F.col(c)
+                for c in tcols
+            ],
+            *[F.col(c).alias(f"__m_pre{i}") for i, c in enumerate(tcols)],
+            F.lit(True).alias("__m_target"),
+            (~cond if operation == "DELETE" else F.lit(True)).alias(
+                "__m_keep"
+            ),
+            (cond if operation == "UPDATE" else F.lit(False)).alias(
+                "__m_update"
+            ),
+            *(["__src", "__ridx"] if dv else []),
+        )
+        return _commit_dml(
             spark,
             table_dir,
-            lf.filter(F.col("path").isin(touched)),
+            rows,
             meta,
-            dv_possible=dv_possible,
+            lf,
+            names=tcols,
+            tcols=tcols,
+            touched=touched,
+            clauses={operation.lower()},
+            dv=dv,
+            operation=operation,
+            parameters={"predicate": condition},
+            started=started,
+            n_files=n_files,
         )
-        out = rewrite(src, cond)
-        out = _apply_generated(spark, table_dir, out)
-        _enforce_constraints(spark, table_dir, out)
-        adds = _write_data_files(
-            out, table_dir, n_files=n_files, partition_by=partition_by
-        )
-        # an all-rows-deleted rewrite leaves an empty file: drop it
-        # (pure tombstone) instead of adding a zero-row data file
-        empty = [
-            a
-            for a in adds
-            if a["add"].get("stats")
-            and _json.loads(a["add"]["stats"])["numRecords"] == 0
-        ]
-        if empty:
-            _remove_staged(table_dir, empty)
-            adds = [a for a in adds if a not in empty]
-        removes = [
-            {"remove": {"path": p, "dataChange": True}} for p in touched
-        ]
-        cdc_actions = []
-        if change_rows is not None:
-            ch = change_rows(src, cond)
-            act = _write_change_data(ch, table_dir)
-            if act:
-                cdc_actions.append(act)
-        ch_counts = _change_counts(table_dir, cdc_actions)
-        out_rows = sum(
-            int(_json.loads(a["add"]["stats"])["numRecords"])
-            for a in adds
-            if a["add"].get("stats")
-        )
-        extra: dict = {}
-        if operation == "DELETE":
-            extra = {
-                "numDeletedRows": ch_counts.get("delete", 0),
-                "numCopiedRows": out_rows,
-            }
-        elif operation == "UPDATE":
-            upd = ch_counts.get("update_postimage", 0)
-            extra = {
-                "numUpdatedRows": upd,
-                "numCopiedRows": max(0, out_rows - upd),
-            }
-        try:
-            return commit(
-                table_dir,
-                [
-                    *removes,
-                    *adds,
-                    *cdc_actions,
-                    {
-                        "commitInfo": {
-                            "operation": operation,
-                            "operationParameters": {
-                                "predicate": condition
-                            },
-                            "operationMetrics": _op_metrics(
-                                adds,
-                                removes,
-                                started=started,
-                                extra=extra,
-                            ),
-                        }
-                    },
-                ],
-            )
-        except FileExistsError:
-            _remove_staged(table_dir, adds)
-            for a in cdc_actions:
-                try:
-                    os.remove(
-                        os.path.join(table_dir, a["cdc"]["path"])
-                    )
-                except OSError:
-                    pass
-            if attempt == 4:
-                raise
-    raise AssertionError("unreachable")
+
+    return _retry_lost_race(_attempt)
 
 
 def delete_where(
@@ -3233,40 +3158,33 @@ def delete_where(
     skipping: list[tuple] | None = None,
     n_files: int = 1,
     manifest_threshold: int | None = None,
-    use_dv: bool | None = None,
 ) -> int:
     """DELETE FROM table WHERE ``condition`` (a SQL boolean
-    expression) — copy-on-write row-level delete on the native log
-    (reference parity: the Delta DELETE the reference issues through
+    expression) — row-level delete on the native log (reference
+    parity: the Delta DELETE the reference issues through
     delta-spark, ``deltaprocessing.py:96-101``).  Rows where the
     condition is NULL do not match (SQL's WHERE semantics) and are
     kept.  ``skipping`` conjuncts are PART OF the delete predicate
     (``condition AND conjuncts``), applied at file level for pruning
-    and at row level for exactness.
+    and at row level for exactness, so a conjunct not implied by
+    ``condition`` narrows the statement exactly, never silently.
 
-    With deletion vectors enabled on the table (``use_dv`` overrides)
-    the delete is MERGE-ON-READ: matched row positions land in a DV
-    sidecar and no data file is rewritten —
-    :func:`_dv_rewrite_where`."""
-    if use_dv if use_dv is not None else _dv_enabled(table_dir):
-        return _dv_rewrite_where(
-            spark,
-            table_dir,
-            condition,
-            "DELETE",
-            skipping=skipping,
-            n_files=n_files,
-            manifest_threshold=manifest_threshold,
-        )
-    return _rewrite_where(
+    It runs through the same DML core as :func:`update_where` and
+    :func:`merge_into`; only the files holding matching rows are
+    touched.  The table property ``delta.enableDeletionVectors``
+    alone chooses the write mode: copy-on-write rewrites the touched
+    files without the matched rows (a file whose every row matched
+    simply tombstones), merge-on-read lands the matched positions in
+    deletion vectors and rewrites no data file.  The change feed
+    records exactly the deleted rows.  A lost version race restarts
+    from fresh state.  Returns the committed version; a predicate
+    matching no rows commits nothing and returns the current
+    version."""
+    return _dml_where(
         spark,
         table_dir,
         condition,
-        lambda df, c: df.filter(~c),
-        "DELETE",
-        change_rows=lambda df, c: df.filter(c).withColumn(
-            "_change_type", F.lit("delete")
-        ),
+        None,
         skipping=skipping,
         n_files=n_files,
         manifest_threshold=manifest_threshold,
@@ -3282,69 +3200,28 @@ def update_where(
     skipping: list[tuple] | None = None,
     n_files: int = 1,
     manifest_threshold: int | None = None,
-    use_dv: bool | None = None,
 ) -> int:
     """UPDATE table SET col = expr, ... WHERE ``condition`` —
-    copy-on-write row-level update on the native log (the single-row
-    SCD2 UPDATE the reference runs per change,
-    ``deltaprocessing.py:116``).  Every SET expression evaluates
-    against the OLD row (one projection builds all new values — SQL
-    UPDATE semantics, no left-to-right chaining), is cast back to
-    the column's declared type, and non-matching rows pass through
-    byte-identical.
+    row-level update on the native log (the single-row SCD2 UPDATE the
+    reference runs per change, ``deltaprocessing.py:116``).  Every SET
+    expression evaluates against the OLD row (one projection builds
+    all new values — SQL UPDATE semantics, no left-to-right chaining)
+    and is cast back to the column's declared type; an unknown SET
+    column raises.  ``condition`` and ``skipping`` match rows exactly
+    as in :func:`delete_where`.
 
-    With deletion vectors enabled the update is MERGE-ON-READ:
-    matched rows DV-delete in place and their post-images append as
-    new files — non-matching rows are never touched at all."""
-    if use_dv if use_dv is not None else _dv_enabled(table_dir):
-        return _dv_rewrite_where(
-            spark,
-            table_dir,
-            condition,
-            "UPDATE",
-            set_exprs,
-            skipping=skipping,
-            n_files=n_files,
-            manifest_threshold=manifest_threshold,
-        )
-
-    def _apply(df: DataFrame, c):
-        cols = []
-        for name in df.columns:
-            if name in set_exprs:
-                cols.append(
-                    F.when(
-                        c,
-                        F.expr(set_exprs[name]).cast(
-                            df.schema[name].dataType
-                        ),
-                    )
-                    .otherwise(F.col(name))
-                    .alias(name)
-                )
-            else:
-                cols.append(F.col(name))
-        unknown = set(set_exprs) - set(df.columns)
-        if unknown:
-            raise ValueError(f"UPDATE SET on unknown columns: {unknown}")
-        return df.select(*cols)
-
-    def _changes(df: DataFrame, c):
-        pre = df.filter(c).withColumn(
-            "_change_type", F.lit("update_preimage")
-        )
-        post = _apply(df.filter(c), F.lit(True)).withColumn(
-            "_change_type", F.lit("update_postimage")
-        )
-        return pre.unionByName(post)
-
-    return _rewrite_where(
+    It runs through the same DML core as :func:`delete_where` and
+    :func:`merge_into`, in the write mode the table property
+    ``delta.enableDeletionVectors`` alone chooses: copy-on-write
+    rewrites the touched files with non-matching rows byte-identical,
+    merge-on-read masks the matched rows in deletion vectors and
+    appends only their post-images as new files.  The change feed
+    records each updated row's pre- and post-image."""
+    return _dml_where(
         spark,
         table_dir,
         condition,
-        _apply,
-        "UPDATE",
-        change_rows=_changes,
+        dict(set_exprs),
         skipping=skipping,
         n_files=n_files,
         manifest_threshold=manifest_threshold,
@@ -3369,12 +3246,10 @@ def merge_into(
     source_alias: str = "s",
     schema_evolution: bool = False,
     manifest_threshold: int | None = None,
-    use_dv: bool | None = None,
 ) -> int:
     """MERGE INTO the native Delta table — the statement the
     reference runs through delta-spark for SCD2
-    (``deltaprocessing.py:96-116``), implemented with the same
-    copy-on-write shape real Delta uses:
+    (``deltaprocessing.py:96-116``), in the shape real Delta uses:
 
     1. LOCATE + CARDINALITY (one job, with a when-matched clause):
        join the (stats-prunable) candidate files' rows against
@@ -3394,14 +3269,19 @@ def merge_into(
        lives in a touched file by construction) through the
        ``when_not_matched_insert`` mapping (target column ->
        expression over ``s.``; missing columns default to NULL of
-       the declared type).  The data write, the change-data write
-       and the deletion vectors all read that pin; unmatched target
-       rows pass through byte-identical.
+       the declared type).
     3. An INSERT-ONLY merge rewrites no file: the source anti-joins
        the (masked) table and only the inserts append.
-    4. COMMIT: tombstones + rewrites + inserts, one atomic commit
+    4. WRITE + COMMIT through the DML core :func:`_commit_dml`, the
+       one that also serves :func:`delete_where` and
+       :func:`update_where`: it reads the pin for the data, change-data
+       and deletion-vector writes and lands them in one atomic commit
        (``dataChange=true`` throughout — a change-data reader sees
-       the merge).
+       the merge).  The table property ``delta.enableDeletionVectors``
+       alone chooses the write mode: copy-on-write rewrites the
+       touched files (unmatched target rows pass through
+       byte-identical), merge-on-read masks deleted and updated rows
+       in deletion vectors and writes only post-images and inserts.
 
     Clause conditions (``when_matched_update_condition`` etc.) gate
     their clause exactly as the delta-spark builder's ``condition=``
@@ -3409,7 +3289,8 @@ def merge_into(
     clause (three-valued semantics).  ``skipping`` conjuncts AND into
     the ON condition target-side, so file pruning and row-level match
     semantics agree exactly (a target row outside the slice is NOT
-    MATCHED — the partition-scoped merge, stated, never silent).  ``schema_evolution=True`` (the builder's
+    MATCHED — the partition-scoped merge, stated, never silent).
+    ``schema_evolution=True`` (the builder's
     ``withSchemaEvolution()``) lets the INSERT mapping bind columns
     the target lacks: the merge commit carries a replacement
     metaData whose schema appends them (types analyzed from the
@@ -3441,10 +3322,10 @@ def merge_into(
     import time as _time
 
     started = _time.time()
-    dv = use_dv if use_dv is not None else _dv_enabled(table_dir)
+    dv = _dv_enabled(table_dir)
     # masking possibility is a PROTOCOL question, independent of the
-    # chosen write mode: a COW merge over files that carry vectors
-    # must still mask; a never-DV table skips all mask scaffolding
+    # write mode: a COW merge over files that carry vectors must
+    # still mask; a never-DV table skips all mask scaffolding
     dv_possible = dv or _dv_feature_present(table_dir)
     has_matched_clause = bool(
         when_matched_update or when_matched_delete_condition
@@ -3463,13 +3344,18 @@ def merge_into(
             skipping, qualifier=target_alias
         )
     src = source.localCheckpoint(eager=True)
-    for attempt in range(5):
-        meta = _latest_meta(spark, table_dir)
-        partition_by = (
-            list(meta["partitionColumns"])
-            if meta and meta["partitionColumns"]
-            else None
+    clauses = {
+        kind
+        for kind, given in (
+            ("delete", when_matched_delete_condition is not None),
+            ("update", bool(when_matched_update)),
+            ("insert", when_not_matched_insert is not None),
         )
+        if given
+    }
+
+    def _attempt() -> int:
+        meta = _latest_meta(spark, table_dir)
         lf = _live_frame(spark, table_dir)
         if skipping:
             lf = lf.filter(
@@ -3595,14 +3481,13 @@ def merge_into(
             # ONE join of the touched rows with the source, projected
             # once into flags, post-images (or, for a source row that
             # matches nothing, the inserted row), matched pre-images
-            # and, merge-on-read, the DV coordinates; the data write,
-            # the change-data write and the DV sidecars all read this
-            # one pin.  Any match lives in a touched file by
-            # construction, so a source row unmatched here is
-            # unmatched in the table.  Masked on both modes: a COW
-            # merge over DV'd files must not re-emit or re-match
-            # deleted rows.
-            tscan, t_rel = _scan_live(
+            # and, merge-on-read, the DV coordinates; the DML core's
+            # data, change-data and vector writes all read this one
+            # pin.  Any match lives in a touched file by construction,
+            # so a source row unmatched here is unmatched in the
+            # table.  Masked on both modes: a COW merge over DV'd
+            # files must not re-emit or re-match deleted rows.
+            tscan, _ = _scan_live(
                 spark,
                 table_dir,
                 lf.filter(F.col("path").isin(touched)),
@@ -3685,118 +3570,6 @@ def merge_into(
             ).localCheckpoint(eager=True)
         else:
             return _next_version(table_dir) - 1
-        inserted = F.col("__m_insert")
-        target_row = F.col("__m_target")
-        kept = F.col("__m_keep")
-        updated = F.col("__m_update")
-        if touched:
-            # merge-on-read: unchanged rows stay IN PLACE behind the DV
-            # mask — only updated post-images re-emit
-            written = target_row & kept & (updated if dv else F.lit(True))
-            out = rows.filter(written | inserted).select(*names)
-        else:
-            out = rows.filter(inserted).select(*names)
-        # row-level change feed (the spec's cdc action): deleted rows,
-        # pre/post images of updated-and-kept rows and inserted rows —
-        # never the touched files' unchanged passthrough rows
-        pre = [F.col(f"__m_pre{i}").alias(c) for i, c in enumerate(tcols)]
-        change_parts: list[DataFrame] = []
-        affected = None
-        if touched and when_matched_delete_condition is not None:
-            change_parts.append(
-                rows.filter(target_row & ~kept)
-                .select(*pre)
-                .withColumn("_change_type", F.lit("delete"))
-            )
-        if touched and when_matched_update:
-            upd_rows = rows.filter(kept & updated)
-            change_parts.append(
-                upd_rows.select(*pre).withColumn(
-                    "_change_type", F.lit("update_preimage")
-                )
-            )
-            change_parts.append(
-                upd_rows.select(*names).withColumn(
-                    "_change_type", F.lit("update_postimage")
-                )
-            )
-        if when_not_matched_insert is not None:
-            change_parts.append(
-                rows.filter(inserted)
-                .select(*names)
-                .withColumn("_change_type", F.lit("insert"))
-            )
-        if touched and dv:
-            affected = rows.filter(target_row & (~kept | updated)).select(
-                "__src", "__ridx"
-            )
-        out = _apply_generated(spark, table_dir, out)
-        _enforce_constraints(spark, table_dir, out)
-        adds = _write_data_files(
-            out, table_dir, n_files=n_files, partition_by=partition_by
-        )
-        empty = [
-            a
-            for a in adds
-            if a["add"].get("stats")
-            and _json.loads(a["add"]["stats"])["numRecords"] == 0
-        ]
-        if empty:
-            _remove_staged(table_dir, empty)
-            adds = [a for a in adds if a not in empty]
-        dv_adds: list[dict] = []
-        dv_descriptors: dict = {}
-        if dv:
-            # merge-on-read commit shape: tombstone + re-add ONLY the
-            # files that gained DV rows; untouched-by-clause files
-            # keep their live add
-            dv_touched: list[str] = []
-            if affected is not None:
-                srcs2 = [
-                    r["__src"]
-                    for r in affected.select("__src").distinct().collect()
-                ]
-                dv_touched = sorted(
-                    s2 if t_rel else _rel_path(s2, table_dir)
-                    for s2 in srcs2
-                )
-            if not dv_touched and not adds:
-                return _next_version(table_dir) - 1
-            payloads = {
-                r.path: r
-                for r in lf.filter(
-                    F.col("path").isin(dv_touched)
-                ).collect()
-            }
-            existing_dv = {
-                p: r.deletionVector.asDict()
-                for p, r in payloads.items()
-                if r.deletionVector is not None
-            }
-            if dv_touched:
-                dv_descriptors = _write_dv_sidecars(
-                    spark, table_dir, affected, dv_touched, existing_dv
-                )
-            removes = [
-                {"remove": {"path": p, "dataChange": True}}
-                for p in dv_touched
-            ]
-            for p in dv_touched:
-                r = payloads[p]
-                add = {"path": p, "size": r.size, "dataChange": True}
-                if r.partitionValues:
-                    add["partitionValues"] = dict(r.partitionValues)
-                if r.stats:
-                    add["stats"] = r.stats
-                add["deletionVector"] = dv_descriptors[p]
-                dv_adds.append({"add": add})
-        else:
-            if not touched and not adds:
-                return _next_version(table_dir) - 1
-            removes = [
-                {"remove": {"path": p, "dataChange": True}}
-                for p in touched
-            ]
         meta_actions = []
         if evolved and meta:
             # the merge commit itself evolves the declared schema:
@@ -3827,76 +3600,30 @@ def merge_into(
             act = _meta_action_from(meta, cfg)
             act["metaData"]["schemaString"] = _json.dumps(schema_json)
             meta_actions.append(act)
-        cdc_actions = []
-        if change_parts:
-            ch = change_parts[0]
-            for p in change_parts[1:]:
-                # evolution: post-image/insert legs may carry the new
-                # columns the pre-image legs lack — null-fill
-                ch = ch.unionByName(p, allowMissingColumns=True)
-            act = _write_change_data(ch, table_dir)
-            if act:
-                cdc_actions.append(act)
-        try:
-            return commit(
-                table_dir,
-                [
-                    *meta_actions,
-                    *removes,
-                    *dv_adds,
-                    *adds,
-                    *cdc_actions,
-                    {
-                        "commitInfo": {
-                            "operation": "MERGE",
-                            "operationParameters": {
-                                "condition": on,
-                                "matchedUpdate": str(
-                                    bool(when_matched_update)
-                                ).lower(),
-                                "matchedDelete": str(
-                                    when_matched_delete_condition
-                                    is not None
-                                ).lower(),
-                                "notMatchedInsert": str(
-                                    when_not_matched_insert is not None
-                                ).lower(),
-                            },
-                            "operationMetrics": {
-                                **_merge_metrics(
-                                    table_dir,
-                                    adds,
-                                    removes,
-                                    cdc_actions,
-                                    started,
-                                ),
-                                **(
-                                    {
-                                        "numDeletionVectorsAdded": str(
-                                            len(dv_descriptors)
-                                        )
-                                    }
-                                    if dv
-                                    else {}
-                                ),
-                            },
-                        }
-                    },
-                ],
-            )
-        except FileExistsError:
-            _remove_staged(table_dir, adds)
-            _remove_dv_staged(table_dir, dv_descriptors)
-            for a in cdc_actions:
-                try:
-                    os.remove(
-                        os.path.join(table_dir, a["cdc"]["path"])
-                    )
-                except OSError:
-                    pass
-            if attempt == 4:
-                raise
-    raise AssertionError("unreachable")
+        return _commit_dml(
+            spark,
+            table_dir,
+            rows,
+            meta,
+            lf,
+            names=names,
+            tcols=tcols,
+            touched=touched,
+            clauses=clauses,
+            dv=dv,
+            operation="MERGE",
+            parameters={
+                "condition": on,
+                "matchedUpdate": str("update" in clauses).lower(),
+                "matchedDelete": str("delete" in clauses).lower(),
+                "notMatchedInsert": str("insert" in clauses).lower(),
+            },
+            started=started,
+            n_files=n_files,
+            meta_actions=meta_actions,
+        )
+
+    return _retry_lost_race(_attempt)
 
 
 def optimize_zorder(
@@ -5648,8 +5375,7 @@ class NativeDeltaTable:
     whenMatchedUpdate / whenMatchedDelete / whenNotMatchedInsert /
     execute``) plus ``toDF``, executed by this module's writers —
     which makes :func:`cdc_pipe_line_spark.delta_merge.build_scd2_merge`
-    (previously runnable only against delta-spark or the test fake)
-    a REAL statement in this container.  The source frame may arrive
+    a real statement without delta-spark.  The source frame may arrive
     pre-aliased (the recipes call ``source.alias('s')``); the builder
     re-derives the alias from the merge condition's ``<alias>.``
     prefixes, so pass the same names in ``alias()`` and the

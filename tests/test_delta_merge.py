@@ -1,13 +1,12 @@
-"""Execute the Delta SCD2 MERGE recipe (delta_merge.py) through a
-semantics-faithful fake of the delta-spark builder protocol and prove
-it row-identical to the tested batch path (cdc.scd2.apply_scd2).
+"""Execute the Delta SCD2 MERGE recipe (delta_merge.py) as a real
+statement on the native Delta log (deltalog.NativeDeltaTable, the
+delta-spark builder protocol over deltalog.merge_into) and prove it
+row-identical to the tested batch path (cdc.scd2.apply_scd2).
 
-delta-spark ships no fake; this one implements the documented MERGE
-semantics directly with DataFrame ops: matched rows updated when the
-match+update conditions hold, unmatched source rows inserted when the
-insert condition holds, everything else untouched, and the real
-engine's multiple-matches error reproduced.  The recipe the fake
-executes is byte-for-byte the one a real DeltaTable would run.
+Each test lands its target history as a table under ``tmp_path``,
+drives the recipe through the builder exactly as a real DeltaTable
+would be driven, and reads the merged table back; the MERGE's own
+multiple-matches error keeps the recipe's 1:1 guarantee load-bearing.
 """
 
 from __future__ import annotations
@@ -15,109 +14,16 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from cdc_pipe_line_spark.cdc.scd2 import SCD2_COLUMNS, apply_scd2
+from cdc_pipe_line_spark import deltalog
+from cdc_pipe_line_spark.cdc.scd2 import apply_scd2
 from cdc_pipe_line_spark.delta_merge import build_scd2_merge, scd2_merge_source
 
 
-class FakeDeltaTable:
-    """Minimal delta-spark ``DeltaTable`` protocol double.
-
-    Applies ``merge / whenMatchedUpdate / whenNotMatchedInsert /
-    execute`` to a plain DataFrame with the semantics the Delta docs
-    specify; the merged result lands in ``.result``.
-    """
-
-    def __init__(self, df):
-        self._df = df
-        self._ta = None
-        self._evolve = False
-        self.result = None
-
-    def alias(self, name):
-        self._ta = name
-        return self
-
-    def merge(self, source, condition):
-        self._src = source
-        self._cond = condition
-        return self
-
-    def withSchemaEvolution(self):
-        self._evolve = True
-        return self
-
-    def whenMatchedUpdate(self, *, condition=None, set=None):
-        self._m_cond, self._m_set = condition, set
-        return self
-
-    def whenNotMatchedInsert(self, *, condition=None, values=None):
-        self._i_cond, self._i_vals = condition, values
-        return self
-
-    def execute(self):
-        t = self._df
-        s = self._src
-        if self._evolve:
-            # Delta schema evolution: INSERT/UPDATE actions may bind
-            # source columns the target lacks; the merge adds them and
-            # existing target rows null-fill (delta.io docs, "automatic
-            # schema evolution").  The fake evolves the target frame
-            # up-front so the rest of the semantics are unchanged.
-            src_plain = s.toDF(*[c.split(".")[-1] for c in s.columns])
-            for c in getattr(self, "_i_vals", {}) or {}:
-                if c not in t.columns:
-                    dt = src_plain.schema[c].dataType
-                    t = t.withColumn(c, F.lit(None).cast(dt))
-        t = t.alias(self._ta)
-        cond = F.expr(self._cond)
-        tcols = t.columns
-
-        matched = t.join(s, cond, "inner")
-        # Delta raises when one target row matches several source rows
-        if matched.count() != t.join(s, cond, "left_semi").count():
-            raise ValueError(
-                "MERGE: multiple source rows matched one target row"
-            )
-        m_cond = F.coalesce(
-            F.expr(self._m_cond) if self._m_cond else F.lit(True), F.lit(False)
-        )
-        updated = matched.filter(m_cond).select(
-            *[
-                F.expr(self._m_set[c]).alias(c)
-                if c in self._m_set
-                else F.col(f"{self._ta}.{c}").alias(c)
-                for c in tcols
-            ]
-        )
-        kept_matched = matched.filter(~m_cond).select(
-            *[F.col(f"{self._ta}.{c}").alias(c) for c in tcols]
-        )
-        untouched = t.join(s, cond, "left_anti").select(
-            *[F.col(f"{self._ta}.{c}").alias(c) for c in tcols]
-        )
-        i_cond = F.coalesce(
-            F.expr(self._i_cond) if self._i_cond else F.lit(True), F.lit(False)
-        )
-        # columns the INSERT action does not name are null (Delta docs)
-        tschema = {f.name: f.dataType for f in t.schema.fields}
-        inserted = (
-            s.join(t, cond, "left_anti")
-            .filter(i_cond)
-            .select(
-                *[
-                    F.expr(self._i_vals[c]).alias(c)
-                    if c in self._i_vals
-                    else F.lit(None).cast(tschema[c]).alias(c)
-                    for c in tcols
-                ]
-            )
-        )
-        self.result = (
-            untouched.unionByName(kept_matched)
-            .unionByName(updated)
-            .unionByName(inserted)
-        )
-        return None
+def native_table(spark, df, path):
+    """``df`` landed as a native Delta table at ``path``, behind the
+    merge-builder protocol; ``.toDF()`` reads the merged result."""
+    deltalog.create_table(spark, df, str(path))
+    return deltalog.NativeDeltaTable.forPath(spark, str(path))
 
 
 def _events(spark, rows):
@@ -158,56 +64,56 @@ def _rows(df):
     )
 
 
-def test_merge_recipe_equals_batch_path(spark):
+def test_merge_recipe_equals_batch_path(spark, tmp_path):
     h1 = apply_scd2(None, _events(spark, BATCH1)).localCheckpoint()
 
     ref = apply_scd2(h1, _events(spark, BATCH2))
 
-    fake = FakeDeltaTable(h1)
-    build_scd2_merge(fake, scd2_merge_source(h1, _events(spark, BATCH2)))
+    table = native_table(spark, h1, tmp_path / "t")
+    build_scd2_merge(table, scd2_merge_source(h1, _events(spark, BATCH2)))
 
-    assert _rows(fake.result) == _rows(ref)
+    assert _rows(table.toDF()) == _rows(ref)
     # invariants on the merged result itself
-    cur = fake.result.filter("is_current")
+    cur = table.toDF().filter("is_current")
     assert cur.groupBy("key_value").count().filter("count > 1").count() == 0
     assert {r.key_value for r in cur.collect()} == {"k1", "k3", "k4"}  # k2 deleted
 
 
-def test_merge_replay_is_noop(spark):
+def test_merge_replay_is_noop(spark, tmp_path):
     """Re-running an already-applied batch through the MERGE leaves
     the table byte-identical (the cross-batch event-id anti-join
     empties the source)."""
     h1 = apply_scd2(None, _events(spark, BATCH1)).localCheckpoint()
     h2 = apply_scd2(h1, _events(spark, BATCH2)).localCheckpoint()
 
-    fake = FakeDeltaTable(h2)
-    build_scd2_merge(fake, scd2_merge_source(h2, _events(spark, BATCH2)))
-    assert _rows(fake.result) == _rows(h2)
+    table = native_table(spark, h2, tmp_path / "t")
+    build_scd2_merge(table, scd2_merge_source(h2, _events(spark, BATCH2)))
+    assert _rows(table.toDF()) == _rows(h2)
 
 
-def test_merge_first_batch_from_empty(spark):
+def test_merge_first_batch_from_empty(spark, tmp_path):
     """MERGE against an empty target = pure inserts = the batch path's
     first load."""
     empty = apply_scd2(None, _events(spark, BATCH1)).filter("1=0")
-    fake = FakeDeltaTable(empty)
-    build_scd2_merge(fake, scd2_merge_source(None, _events(spark, BATCH1)))
-    assert _rows(fake.result) == _rows(apply_scd2(None, _events(spark, BATCH1)))
+    table = native_table(spark, empty, tmp_path / "t")
+    build_scd2_merge(table, scd2_merge_source(None, _events(spark, BATCH1)))
+    assert _rows(table.toDF()) == _rows(apply_scd2(None, _events(spark, BATCH1)))
 
 
-def test_fake_rejects_multiple_matches(spark):
-    """The double reproduces Delta's multiple-matches error, so the
-    recipe's 1:1 guarantee (one expiry row per key, is_current target
-    filter) is actually load-bearing in tests."""
+def test_merge_rejects_multiple_matches(spark, tmp_path):
+    """The MERGE raises Delta's multiple-matches error, so the recipe's
+    1:1 guarantee (one expiry row per key, is_current target filter)
+    is actually load-bearing in tests."""
     t = spark.createDataFrame([("k1", True)], "key_value string, is_current boolean")
     s = spark.createDataFrame(
         [("k1", "expire"), ("k1", "expire")], "__mergeKey string, __action string"
     )
-    fake = FakeDeltaTable(t)
-    fake.alias("t").merge(s.alias("s"), "t.key_value = s.__mergeKey")
-    fake.whenMatchedUpdate(condition="s.__action = 'expire'", set={"is_current": "false"})
-    fake.whenNotMatchedInsert(condition="s.__action = 'insert'", values={"key_value": "s.__mergeKey", "is_current": "true"})
+    table = native_table(spark, t, tmp_path / "t")
+    builder = table.alias("t").merge(s.alias("s"), "t.key_value = s.__mergeKey")
+    builder.whenMatchedUpdate(condition="s.__action = 'expire'", set={"is_current": "false"})
+    builder.whenNotMatchedInsert(condition="s.__action = 'insert'", values={"key_value": "s.__mergeKey", "is_current": "true"})
     with pytest.raises(ValueError, match="multiple source rows"):
-        fake.execute()
+        builder.execute()
 
 
 # ---------------------------------------------------------------------------
@@ -236,7 +142,7 @@ def _rows_all(df):
     return sorted(map(tuple, df.select(*cols).collect()))
 
 
-def test_merge_wide_schema_drift(spark):
+def test_merge_wide_schema_drift(spark, tmp_path):
     """A batch whose payload carries a never-seen key evolves the wide
     target through the MERGE itself: the new column appears, every
     pre-existing row null-fills it, and the rows are identical to the
@@ -249,19 +155,20 @@ def test_merge_wide_schema_drift(spark):
     src, cols = scd2_merge_source_wide(h1, _events(spark, BATCH2_WIDE))
     assert "w" in cols
 
-    fake = FakeDeltaTable(target)
-    build_scd2_merge_wide(fake, src, cols)
+    table = native_table(spark, target, tmp_path / "t")
+    build_scd2_merge_wide(table, src, cols)
 
-    assert set(fake.result.columns) == set(WIDE_BASE_COLUMNS) | {"v", "w"}
+    result = table.toDF()
+    assert set(result.columns) == set(WIDE_BASE_COLUMNS) | {"v", "w"}
     ref = widen_scd2(
         apply_scd2(h1, _events(spark, BATCH2_WIDE)), [("v", "v"), ("w", "w")]
     )
-    assert _rows_all(fake.result) == _rows_all(ref)
+    assert _rows_all(result) == _rows_all(ref)
     # null-fill: a batch-1 row untouched by batch 2 has the new column null
-    e3 = fake.result.filter("_event_id = 'e3'").collect()[0]
+    e3 = result.filter("_event_id = 'e3'").collect()[0]
     assert e3.w is None and e3.v == "3"
     # and the drifted rows carry it
-    e7 = fake.result.filter("_event_id = 'e7'").collect()[0]
+    e7 = result.filter("_event_id = 'e7'").collect()[0]
     assert e7.w == "4" and e7.is_current
 
 
@@ -291,14 +198,14 @@ def test_payload_columns_sanitizes_and_rejects_collisions(spark):
         payload_columns(bad)
 
 
-def test_merge_wide_no_drift_is_plain_merge(spark):
+def test_merge_wide_no_drift_is_plain_merge(spark, tmp_path):
     """When the batch introduces no new keys the evolved merge equals
     the map-path projection with the original schema (evolution no-op)."""
     h1 = apply_scd2(None, _events(spark, BATCH1)).localCheckpoint()
     target = widen_scd2(h1, [("v", "v")]).localCheckpoint()
     src, cols = scd2_merge_source_wide(h1, _events(spark, BATCH2))
     assert cols == ["v"]
-    fake = FakeDeltaTable(target)
-    build_scd2_merge_wide(fake, src, cols)
+    table = native_table(spark, target, tmp_path / "t")
+    build_scd2_merge_wide(table, src, cols)
     ref = widen_scd2(apply_scd2(h1, _events(spark, BATCH2)), [("v", "v")])
-    assert _rows_all(fake.result) == _rows_all(ref)
+    assert _rows_all(table.toDF()) == _rows_all(ref)

@@ -247,7 +247,7 @@ def test_declared_scan_deletion_vectors(spark, tmp_path, monkeypatch):
     path = str(tmp_path / "t")
     _table(spark, path)
     deltalog.enable_deletion_vectors(spark, path)
-    deltalog.delete_where(spark, path, "k = 2", use_dv=True)
+    deltalog.delete_where(spark, path, "k = 2")
     live = deltalog._replay_log_driver(path)["adds"]
     assert any(a.get("deletionVector") for a in live)
     assert rows(deltalog.read_snapshot(spark, path).select("k")) == [(1,), (3,)]
@@ -297,7 +297,7 @@ def test_change_feed_routes_agree(spark, tmp_path, monkeypatch):
     path = str(tmp_path / "t")
     _table(spark, path)
     deltalog.enable_deletion_vectors(spark, path)
-    deltalog.delete_where(spark, path, "k = 2", use_dv=True)
+    deltalog.delete_where(spark, path, "k = 2")
     deltalog.overwrite(
         spark, spark.createDataFrame([(9, "z", 9.0)], "k int, s string, v double"), path
     )
@@ -463,21 +463,17 @@ def test_insert_only_merge_appends_without_rewriting(spark, tmp_path):
 
 
 def test_dv_merge_matches_copy_on_write(spark, tmp_path):
-    """A merge-on-read MERGE (deletion vectors) lands the same rows and
-    the same change feed as the copy-on-write MERGE of the same
-    statement: update, delete and insert clauses read one pinned join."""
+    """Each row-level statement lands the same rows, the same change
+    feed and the same row metrics merge-on-read (deletion vectors) as
+    copy-on-write: MERGE's update, delete and insert clauses read one
+    pinned join, DELETE and UPDATE one flag projection."""
     data = [(k, f"v{k}", float(k)) for k in range(1, 9)]
     src = spark.createDataFrame(
         [(2, "up", 1.5), (3, "DEL", 0.0), (5, "up", 2.5), (6, "skip", 0.0), (11, "new", 9.0)],
         "k int, s string, v double",
     )
-    got = {}
-    for mode in ("cow", "dv"):
-        path = str(tmp_path / mode)
-        _table(spark, path, data)
-        if mode == "dv":
-            deltalog.enable_deletion_vectors(spark, path)
-        v = deltalog.merge_into(
+    statements = {
+        "merge": lambda path: deltalog.merge_into(
             spark,
             path,
             src,
@@ -486,21 +482,44 @@ def test_dv_merge_matches_copy_on_write(spark, tmp_path):
             when_matched_update_condition="s.s = 'up'",
             when_matched_delete_condition="s.s = 'DEL'",
             when_not_matched_insert={"k": "s.k", "s": "s.s", "v": "s.v"},
-            use_dv=mode == "dv",
-        )
-        feed = deltalog.read_changes(spark, path, starting_version=v - 1)
-        got[mode] = (
-            rows(deltalog.read_snapshot(spark, path)),
-            rows(feed.select("k", "s", "v", "_change_type")),
-        )
-        adds = [
-            json.loads(line)["add"]
-            for line in open(os.path.join(path, "_delta_log", f"{v:020d}.json"))
-            if '"add"' in line
-        ]
-        assert any("deletionVector" in a for a in adds) == (mode == "dv")
-    assert got["dv"] == got["cow"]
-    snapshot, feed = got["cow"]
+        ),
+        "delete": lambda path: deltalog.delete_where(spark, path, "k % 3 = 0"),
+        "update": lambda path: deltalog.update_where(
+            spark, path, "k > 5", {"s": "'up'", "v": "v * 2"}
+        ),
+    }
+    row_metrics = (
+        "numDeletedRows",
+        "numUpdatedRows",
+        "numTargetRowsInserted",
+        "numTargetRowsUpdated",
+        "numTargetRowsDeleted",
+    )
+    got = {}
+    for statement, run in statements.items():
+        for mode in ("cow", "dv"):
+            path = str(tmp_path / f"{statement}_{mode}")
+            _table(spark, path, data)
+            if mode == "dv":
+                deltalog.enable_deletion_vectors(spark, path)
+            v = run(path)
+            feed = deltalog.read_changes(spark, path, starting_version=v - 1)
+            commit = [
+                json.loads(line)
+                for line in open(os.path.join(path, "_delta_log", f"{v:020d}.json"))
+            ]
+            adds = [a["add"] for a in commit if "add" in a]
+            assert any("deletionVector" in a for a in adds) == (mode == "dv")
+            metrics = next(a for a in commit if "commitInfo" in a)["commitInfo"][
+                "operationMetrics"
+            ]
+            got[statement, mode] = (
+                rows(deltalog.read_snapshot(spark, path)),
+                rows(feed.select("k", "s", "v", "_change_type")),
+                {k: metrics[k] for k in row_metrics if k in metrics},
+            )
+        assert got[statement, "dv"] == got[statement, "cow"], statement
+    snapshot, feed, metrics = got["merge", "cow"]
     assert (2, "up", 3.5) in snapshot and (11, "new", 9.0) in snapshot
     assert not [r for r in snapshot if r[0] == 3]
     assert feed == sorted(
@@ -514,3 +533,24 @@ def test_dv_merge_matches_copy_on_write(spark, tmp_path):
         ],
         key=repr,
     )
+    assert metrics == {
+        "numTargetRowsInserted": "1",
+        "numTargetRowsUpdated": "2",
+        "numTargetRowsDeleted": "1",
+    }
+    snapshot, feed, metrics = got["delete", "cow"]
+    assert [r[0] for r in snapshot] == [1, 2, 4, 5, 7, 8]
+    assert feed == [(3, "v3", 3.0, "delete"), (6, "v6", 6.0, "delete")]
+    assert metrics == {"numDeletedRows": "2"}
+    snapshot, feed, metrics = got["update", "cow"]
+    assert snapshot == sorted(
+        [(k, "up", 2.0 * k) if k > 5 else (k, f"v{k}", float(k)) for k in range(1, 9)],
+        key=repr,
+    )
+    assert len(feed) == 6
+    assert {r for r in feed if r[3] == "update_postimage"} == {
+        (6, "up", 12.0, "update_postimage"),
+        (7, "up", 14.0, "update_postimage"),
+        (8, "up", 16.0, "update_postimage"),
+    }
+    assert metrics == {"numUpdatedRows": "3"}

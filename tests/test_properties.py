@@ -6,6 +6,9 @@ disjoint key sets (SURVEY.md §5 golden semantics).
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 import pytest
 
 from hypothesis import HealthCheck, given, settings
@@ -160,11 +163,11 @@ def test_delta_merge_equals_batch_path_random(spark, evs, split):
     """For ANY event sequence split into two batches — multiple events
     per key, any insert/update/delete mix, out-of-order timestamps
     across batches, plus a deliberately replayed batch-1 event — the
-    Delta MERGE recipe (delta_merge.py, executed through the protocol
-    fake) produces a history row-identical to the tested batch path."""
+    Delta MERGE recipe (delta_merge.py, executed on a native Delta
+    table) produces a history row-identical to the tested batch path."""
     from cdc_pipe_line_spark.cdc.scd2 import apply_scd2
     from cdc_pipe_line_spark.delta_merge import build_scd2_merge, scd2_merge_source
-    from tests.test_delta_merge import FakeDeltaTable, _rows
+    from tests.test_delta_merge import _rows, native_table
 
     split = min(split, len(evs))
     b1, b2 = evs[:split], evs[split:]
@@ -193,9 +196,10 @@ def test_delta_merge_equals_batch_path_random(spark, evs, split):
 
     h1 = apply_scd2(None, ev1).localCheckpoint()
     ref = apply_scd2(h1, ev2)
-    fake = FakeDeltaTable(h1)
-    build_scd2_merge(fake, scd2_merge_source(h1, ev2))
-    assert _rows(fake.result) == _rows(ref)
+    with tempfile.TemporaryDirectory() as d:
+        table = native_table(spark, h1, os.path.join(d, "t"))
+        build_scd2_merge(table, scd2_merge_source(h1, ev2))
+        assert _rows(table.toDF()) == _rows(ref)
 
 
 @settings(
@@ -218,7 +222,7 @@ def test_delta_merge_wide_drift_random(spark, evs, split):
         scd2_merge_source_wide,
         widen_scd2,
     )
-    from tests.test_delta_merge import FakeDeltaTable, _rows_all
+    from tests.test_delta_merge import _rows_all, native_table
 
     split = min(split, len(evs))
     b1, b2 = evs[:split], evs[split:]
@@ -246,17 +250,18 @@ def test_delta_merge_wide_drift_random(spark, evs, split):
     target = widen_scd2(h1, keys1).localCheckpoint()
 
     src, cols = scd2_merge_source_wide(h1, ev2)
-    fake = FakeDeltaTable(target)
-    build_scd2_merge_wide(fake, src, cols)
-
     union_keys = sorted({*(s for _, s in keys1), *cols})
-    assert set(fake.result.columns) == {
-        *target.columns, *cols
-    }, "evolution must add exactly the batch's new columns"
     ref = widen_scd2(
         apply_scd2(h1, ev2), [(k, k) for k in union_keys]
     )
-    assert _rows_all(fake.result) == _rows_all(ref)
+    with tempfile.TemporaryDirectory() as d:
+        table = native_table(spark, target, os.path.join(d, "t"))
+        build_scd2_merge_wide(table, src, cols)
+        result = table.toDF()
+        assert set(result.columns) == {
+            *target.columns, *cols
+        }, "evolution must add exactly the batch's new columns"
+        assert _rows_all(result) == _rows_all(ref)
 
 
 def test_diff_self_is_empty(spark):

@@ -265,6 +265,50 @@ def test_remove_staged_prunes_empty_partition_dirs(spark, table_dir):
     assert not [d for d in os.listdir(table_dir) if "=" in d]
 
 
+def _file_tree(table_dir):
+    return sorted(
+        os.path.relpath(os.path.join(d, f), table_dir)
+        for d, _, files in os.walk(table_dir)
+        for f in files
+    )
+
+
+@pytest.mark.parametrize("dv", [False, True], ids=["cow", "dv"])
+def test_refused_dml_commit_removes_staged_files(spark, table_dir, dv):
+    """A DML commit the log refuses (here: an append-only table) takes
+    the data, change-data and deletion-vector files its statement
+    staged with it, so the table's file tree is unchanged.  A third
+    of 2000 rows makes each deletion vector a file, not inline."""
+    deltalog.create_table(spark, _mk(spark, 0, 2000), table_dir)
+    if dv:
+        deltalog.enable_deletion_vectors(spark, table_dir)
+    deltalog.set_table_properties(
+        spark, table_dir, {"delta.appendOnly": "true"}
+    )
+    before = _file_tree(table_dir)
+    # ids 0, 3, ..., 2007: 667 match a target row, 3 are new
+    src = spark.range(0, 2010, 3).select("id", F.lit(9).cast("bigint").alias("k"))
+    statements = {
+        "delete": lambda: deltalog.delete_where(spark, table_dir, "id % 3 = 0"),
+        "update": lambda: deltalog.update_where(
+            spark, table_dir, "id % 3 = 0", {"k": "k + 10"}
+        ),
+        "merge": lambda: deltalog.merge_into(
+            spark,
+            table_dir,
+            src,
+            "t.id = s.id",
+            when_matched_update={"k": "s.k"},
+            when_not_matched_insert={"id": "s.id", "k": "s.k"},
+        ),
+    }
+    for statement, run in statements.items():
+        with pytest.raises(ValueError, match="append-only"):
+            run()
+        assert _file_tree(table_dir) == before, statement
+    assert _ids(spark, table_dir) == list(range(2000))
+
+
 # ------------------------------------------------- checkpoint at 10^4 actions
 
 

@@ -146,6 +146,23 @@ def test_delete_skipping_not_implied_is_exact(spark):
     assert left == [1, 3, 5, 6, 7, 8]
 
 
+def test_delete_keeps_rows_whose_skipping_conjunct_is_null(spark):
+    """A row whose skipping conjunct is NULL does not match the DELETE,
+    so the rewrite of its file keeps it."""
+    path = _fresh("skip_null")
+    deltalog.create_table(
+        spark,
+        spark.createDataFrame(
+            [(1, 5), (2, None), (3, -1), (4, 7)], "k int, x int"
+        ),
+        path,
+    )
+    deltalog.delete_where(spark, path, "k >= 2", skipping=[("x", ">", 0)])
+    assert sorted(
+        tuple(r) for r in deltalog.read_snapshot(spark, path).collect()
+    ) == [(1, 5), (2, None), (3, -1)]
+
+
 def test_merge_skipping_scopes_the_on_clause(spark):
     """Skipping conjuncts scope the MERGE: target rows outside the
     slice are NOT MATCHED, so the source row inserts — deterministic

@@ -44,6 +44,14 @@ def _stage(spark, path, n=20, files=2):
     return df
 
 
+def _copy_on_write(spark, path):
+    """Switch the table's DML to copy-on-write; its files keep their
+    vectors and the protocol keeps the deletionVectors feature."""
+    deltalog.set_table_properties(
+        spark, path, {"delta.enableDeletionVectors": "false"}
+    )
+
+
 def test_enable_sets_feature_protocol(spark):
     path = _fresh("gate")
     _stage(spark, path)
@@ -265,16 +273,17 @@ def test_dv_update_partitioned_keeps_layout(spark):
         assert r.partitionValues and "part" in r.partitionValues
 
 
-@pytest.mark.slow
 def test_cow_statement_on_dv_table_does_not_resurrect(spark):
-    """A copy-on-write statement (use_dv=False) over files carrying
-    deletion vectors must NOT re-emit the masked rows into its
-    replacement files — the rewrite absorbs the DV instead."""
+    """A copy-on-write statement (deletion vectors switched off by the
+    table property) over files carrying deletion vectors must NOT
+    re-emit the masked rows into its replacement files — the rewrite
+    absorbs the DV instead."""
     path = _fresh("cow_no_resurrect")
     _stage(spark, path)
     deltalog.delete_where(spark, path, "k = 3")            # DV on file 0
-    # force the COW path for an overlapping mutation of file 0
-    deltalog.delete_where(spark, path, "k = 5", use_dv=False)
+    # copy-on-write for an overlapping mutation of file 0
+    _copy_on_write(spark, path)
+    deltalog.delete_where(spark, path, "k = 5")
     left = sorted(
         r.k for r in deltalog.read_snapshot(spark, path).collect()
     )
@@ -284,17 +293,16 @@ def test_cow_statement_on_dv_table_does_not_resurrect(spark):
     assert sum(1 for r in lf if r.deletionVector is not None) == 0
 
 
-@pytest.mark.slow
 def test_cow_merge_on_dv_table_does_not_resurrect(spark):
     path = _fresh("cow_merge_no_resurrect")
     _stage(spark, path)
     deltalog.delete_where(spark, path, "k = 2")            # DV on file 0
     src = spark.createDataFrame([(4, 40.0), (2, 20.0)], "k int, nv double")
+    _copy_on_write(spark, path)
     deltalog.merge_into(
         spark, path, src, "t.k = s.k",
         when_matched_update={"v": "s.nv"},
         when_not_matched_insert={"k": "s.k", "s": "'new'", "v": "s.nv"},
-        use_dv=False,
     )
     got = {(r.k, r.s): r.v for r in deltalog.read_snapshot(spark, path).collect()}
     assert got[(4, "x")] == 40.0
@@ -406,7 +414,6 @@ def test_writer_feature_gate_refuses_unknown_features(spark):
     assert deltalog.read_snapshot(spark, path).count() == 20
 
 
-@pytest.mark.slow
 def test_append_only_property_enforced(spark):
     path = _fresh("append_only")
     _stage(spark, path)

@@ -62,18 +62,16 @@ def main() -> None:
     sel = max(1, round(n * 0.001))
     cond = f"event_id % {n // sel} = 0"
     results = {}
-    for mode, use_dv in (("cow", False), ("dv", True)):
+    for mode in ("cow", "dv"):
         base = f"/tmp/cdc_r12_amp/{mode}"
         shutil.rmtree(base, ignore_errors=True)
         os.makedirs(base, exist_ok=True)
         deltalog.create_table(spark, ev, base, n_files=16)
-        if use_dv:
+        if mode == "dv":
             deltalog.enable_deletion_vectors(spark, base)
         before = _tree_bytes(base)
         t0 = time.time()
-        deltalog.update_where(
-            spark, base, cond, {"value": "value + 1.0"}, use_dv=use_dv
-        )
+        deltalog.update_where(spark, base, cond, {"value": "value + 1.0"})
         wall = time.time() - t0
         after = _tree_bytes(base)
         new_bytes = sum(
