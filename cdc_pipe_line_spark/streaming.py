@@ -19,19 +19,23 @@ write (consumer.py:209-220), and a Redis every-10th-event trigger
 
 Scale notes: state stores (dedup, windows, every-N) are per-key and
 partitioned by the shuffle, so they scale horizontally; watermarks
-bound their size.  The foreachBatch SCD2 apply does constant work per
-micro-batch (scd2.apply_scd2 — one window + one broadcast join), not
-per event like the reference's 1.4-19 s/row UPDATE loop.
+bound their size.  The foreachBatch SCD2 apply (``run_scd2_stream``)
+does work proportional to the micro-batch — one shuffle of the batch's
+events and its keys' history rows, then an append to a bucketed
+segment log — not per event like the reference's 1.4-19 s/row UPDATE
+loop.
 """
 
 from __future__ import annotations
 
 import json
 import uuid
+from collections import Counter
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
 import pandas as pd
+from py4j.protocol import Py4JJavaError
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -381,17 +385,52 @@ def _fs_write_text(spark: SparkSession, path: str, text: str) -> None:
         out.close()
 
 
-def _fs_count_suffix(spark: SparkSession, path: str, suffix: str) -> int:
-    """Number of direct children of ``path`` ending in ``suffix``
-    (0 if the directory does not exist)."""
-    fs, hpath = _hfs(spark, path)
-    if not fs.exists(hpath):
-        return 0
-    return sum(
-        1
-        for st in fs.listStatus(hpath)
-        if st.getPath().getName().endswith(suffix)
+def _fs_segment_counts(
+    spark: SparkSession, data_dir: str, buckets: list[int]
+) -> Counter:
+    """Parquet segment files per ``__bucket`` value, over the given
+    buckets only, from ONE ``globStatus`` call (``__bucket={b1,b2,..}``)
+    instead of one listing call per bucket.  Not a recursive
+    ``listFiles``: it lists every bucket, and its located statuses load
+    each file's owner and permissions, which without native Hadoop
+    libraries is a forked ``ls`` per file (about 4 ms each on a local
+    disk)."""
+    fs, hpath = _hfs(spark, data_dir)
+    jvm = spark._jvm
+    alternatives = ",".join(str(b) for b in buckets)
+    found = fs.globStatus(
+        jvm.org.apache.hadoop.fs.Path(hpath, f"__bucket={{{alternatives}}}/*.parquet")
     )
+    if found is None:  # what some file systems return for no match
+        return Counter()
+    # ".../__bucket=<b>/<file>.parquet" -> "<b>"
+    return Counter(
+        p.toString().rsplit("/", 2)[1].partition("=")[2]
+        for p in jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(found)
+    )
+
+
+#: Committed-batch marker of an SCD2 history dir (see run_scd2_stream).
+_MARKER = "_COMMITTED_BATCH"
+
+
+def _marker_schema(raw: str | None) -> StructType | None:
+    """The segment schema a committed-batch marker records, or None
+    when the marker is absent, truncated or from a format without one
+    — the reader then infers the schema from the files instead."""
+    try:
+        return StructType.fromJson(json.loads(raw)["schema"])
+    except (AttributeError, KeyError, TypeError, ValueError):
+        return None
+
+
+def _read_segments(
+    spark: SparkSession, data_dir: str, schema: StructType | None
+) -> DataFrame:
+    """The raw segment log; a known schema skips the footer-inference
+    job that ``spark.read.parquet`` launches."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(data_dir)
 
 
 def run_scd2_stream(
@@ -415,31 +454,51 @@ def run_scd2_stream(
 
     - history is partitioned by ``__bucket = pmod(xxhash64(key_value),
       n_buckets)``; a micro-batch reads ONLY the buckets containing
-      its keys (partition pruning).
+      its keys (partition pruning), and within them only its keys'
+      rows (a broadcast semi-join on ``key_value``).
     - each batch APPENDS just its changed rows — the new versions it
       opens plus re-emitted copies of the rows it expires (same
       ``_event_id``, updated ``valid_to``/``is_current``) — stamped
-      with a monotonically increasing ``__seq``.  Write amplification
-      is O(batch), not O(touched-bucket history): the wholesale
-      bucket rewrite this replaces re-wrote a key-uniform batch's
-      ENTIRE history every trigger.
-    - readers resolve latest-wins per version: ``row_number() over
-      (partition by _event_id order by __seq desc)`` — one window
-      over the pruned slice (:func:`read_scd2_history`).
+      with ``__seq``: the batch id, and for a re-emit at least one more
+      than the row it replaces, because batch ids restart with a new
+      checkpoint.  Write amplification is O(batch), not
+      O(touched-bucket history).
+    - ONE shuffle per micro-batch: the batch's events and its keys'
+      history rows are unioned in one row shape tagged ``__src`` and
+      repartitioned by ``__bucket`` (one write task per touched
+      bucket).  Every window's keys include ``__bucket`` and
+      ``key_value``, so that one exchange satisfies all of them:
+      ``row_number`` over (bucket, key, ``_event_id``) keeps the
+      latest row of each version and drops an event whose id the key's
+      history already holds (the replay guard); ``min(ts)`` over
+      (bucket, key) is the expiry boundary; ``lead(ts)`` chains the
+      batch's new versions.
+    - readers resolve latest-wins per version with the same
+      (bucket, key, ``_event_id``) window (:func:`read_scd2_history`),
+      so a key filter pushes into the parquet scan.
     - a bucket whose segment-file count exceeds ``max_segments`` is
       COMPACTED: its resolved rows are rewritten as one segment via
       dynamic partition overwrite, bounding read-side merge fan-in.
 
-    Because resolution dedups on ``_event_id``, a crash between the
-    data append and the marker write is harmless: the re-delivered
-    batch appends identical rows and the reader picks one — the
-    marker only saves re-work, correctness no longer depends on it.
+    A crash between the data append and the marker write is harmless:
+    the re-delivered batch finds its insert/update events in the
+    history by id, and its deletes are older than the versions the
+    first attempt left current, so it appends nothing — the marker
+    only saves re-work, correctness does not depend on it.  A delete
+    older than its key's current version is always ignored: applied,
+    it would close that version before the version began.
     At 100 TB, ``n_buckets`` scales with the key space (e.g. 16k) and
-    the same pruning + compaction math holds.  Driver-side cost of the
-    per-batch bucket census (``select(__bucket).distinct().collect()``)
-    and the compaction segment count is O(``n_buckets``) smallints —
-    negligible to ~1M buckets, far beyond the useful range (buckets
-    should stay >= ~100 MB each, so even 100 TB wants ~1M at most).
+    the same pruning + compaction math holds.  Driver-side cost per
+    batch is one census job (``groupBy(__bucket).count()``, which also
+    drains the stateful dedup) and one ``globStatus`` over the touched
+    buckets for the compaction check — O(touched buckets) smallints.
+    The query runs without Spark's empty (no-data) micro-batches: the
+    sink has nothing to apply in one, and the dedup evicts expired
+    state with the next data batch instead.
+
+    The marker also records the segment schema, so the batch's history
+    read, the compaction read and :func:`read_scd2_history` skip
+    parquet footer inference (a marker without one falls back to it).
 
     Returns the StreamingQuery; read back with
     :func:`read_scd2_history`.
@@ -457,18 +516,16 @@ def run_scd2_stream(
     identity fails fast instead — replaying a fresh stream onto an
     existing history would duplicate versions.  (The data-write/
     marker-write pair is not atomic — Delta's transaction closes that
-    residual window.)
+    residual window.)  Without the marker's protection (checkpoint-less
+    runs, a torn write) the replay guard absorbs re-applied events; it
+    checks the event's own key, which is enough because an
+    ``event_id`` names one event of one key.
     """
-    from cdc_pipe_line_spark.cdc.scd2 import (
-        chain_new_versions,
-        dedup_events,
-        filter_applied_events,
-        first_event_ts,
-    )
+    from pyspark.sql.window import Window
 
     spark = events_stream.sparkSession
     data_dir = _child(history_base_dir, "data")
-    committed = _child(history_base_dir, "_COMMITTED_BATCH")
+    committed = _child(history_base_dir, _MARKER)
     _fs_mkdirs(spark, history_base_dir)
     bucket_of = F.pmod(F.xxhash64(F.col("key_value")), F.lit(n_buckets))
 
@@ -488,10 +545,7 @@ def run_scd2_stream(
         except (OSError, ValueError):
             return None
 
-    def _read_marker() -> tuple[str | None, int] | None:
-        raw = _fs_read_text(spark, committed)
-        if raw is None:
-            return None
+    def _parse_marker(raw: str) -> tuple[str | None, int]:
         raw = raw.strip()
         corrupt = ValueError(
             f"corrupt _COMMITTED_BATCH marker at {committed!r}: {raw!r}. "
@@ -515,10 +569,10 @@ def run_scd2_stream(
             raise corrupt from None
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        marker = _read_marker()
-        if marker is not None:
-            marker_qid, marker_batch = marker
-            qid = _query_identity()
+        raw = _fs_read_text(spark, committed)
+        qid = _query_identity()
+        if raw is not None:
+            marker_qid, marker_batch = _parse_marker(raw)
             if marker_qid is not None and qid is not None and marker_qid != qid:
                 raise ValueError(
                     f"history at {history_base_dir!r} was committed by "
@@ -533,9 +587,9 @@ def run_scd2_stream(
             # Skip only under a PROVEN identity match: with no
             # checkpoint both ids are None and a bare == would silently
             # drop the first marker_batch+1 micro-batches of a fresh
-            # run.  Without identity, fall through — the event-id
-            # anti-join (filter_applied_events) makes re-application a
-            # no-op anyway; the marker only saves re-work.
+            # run.  Without identity, fall through — the replay guard
+            # makes re-application a no-op anyway; the marker only
+            # saves re-work.
             if marker_qid is not None and marker_qid == qid and (
                 batch_id <= marker_batch
             ):
@@ -545,113 +599,150 @@ def run_scd2_stream(
                 # per-partition commits in foreachBatch).
                 batch_df.count()
                 return
-        # Materialize the micro-batch once: it feeds TWO actions (the
-        # bucket census and the main dedup/chain/append pipeline), and
-        # without this each action re-parses the batch's source files
-        # — at 250k-row batches that is a full extra decode per
-        # trigger.  persist(MEMORY_AND_DISK)+count rather than an eager
-        # localCheckpoint: lineage is retained, so on a real cluster an
-        # executor loss recomputes the lost blocks transparently (a
-        # localCheckpoint stores unreplicated blocks with NO lineage —
-        # the micro-batch would fail and force a stream restart), and
-        # the blocks are freed deterministically in the finally below
-        # instead of pinning executor storage until driver-side GC.
+        # Materialize the micro-batch once: it feeds the bucket census,
+        # the key broadcast and the apply, and without this each re-parses
+        # the batch's source files.  persist(MEMORY_AND_DISK) rather
+        # than an eager localCheckpoint: lineage is retained, so on a
+        # real cluster an executor loss recomputes the lost blocks
+        # transparently (a localCheckpoint stores unreplicated blocks
+        # with NO lineage — the micro-batch would fail and force a
+        # stream restart), and the blocks are freed deterministically
+        # in the finally below instead of pinning executor storage
+        # until driver-side GC.
         batch_df = batch_df.withColumn("__bucket", bucket_of).persist(
             StorageLevel.MEMORY_AND_DISK
         )
         try:
-            _apply_materialized(batch_df, batch_id)
+            _apply_materialized(batch_df, batch_id, _marker_schema(raw), qid)
         finally:
             batch_df.unpersist()
 
-    def _apply_materialized(batch_df: DataFrame, batch_id: int) -> None:
+    def _apply_materialized(
+        batch_df: DataFrame,
+        batch_id: int,
+        schema: StructType | None,
+        qid: str | None,
+    ) -> None:
         # one census job: it drains the stateful dedup upstream and
         # fills the persisted batch while it lists the touched buckets
         touched = [r[0] for r in batch_df.groupBy("__bucket").count().collect()]
         if not touched:
             return
-        resolved = None
+        ts_type = batch_df.schema[ts_col].dataType
+        rows = batch_df.select(
+            "key_value",
+            F.col("new_values").alias("data"),
+            F.col(ts_col).alias("valid_from"),
+            F.lit(None).cast(ts_type).alias("valid_to"),
+            F.lit(True).alias("is_current"),
+            F.col("event_id").alias("_event_id"),
+            F.col("event_type").alias("_event_type"),
+            F.lit(batch_id).cast("bigint").alias("__seq"),
+            "__bucket",
+            F.lit(1).alias("__src"),
+        )
         if _fs_exists(spark, _child(data_dir, "_SUCCESS")):
-            # NOT materialized, deliberately: resolved feeds both the
-            # replay anti-join and the expiry re-emit, but the history
-            # slice is wide (map payloads) and measured twice — an
-            # eager localCheckpoint here costs MORE than the second
-            # scan+window (uniform-key 1M-event soak: 18.3 -> 20.2 s).
-            resolved = resolve_scd2_segments(
-                spark.read.parquet(data_dir).filter(F.col("__bucket").isin(touched))
-            ).drop("__bucket")
-        ev = filter_applied_events(
-            dedup_events(batch_df.drop("__bucket"), order_cols=[ts_col]), resolved
-        )
-        new_versions = chain_new_versions(ev, ts_col=ts_col)
-        if resolved is not None:
-            # re-emit expired rows: same _event_id, closed valid_to —
-            # latest __seq wins at read time
-            expired = (
-                resolved.filter(F.col("is_current"))
-                .join(F.broadcast(first_event_ts(ev, ts_col=ts_col)), "key_value")
-                .withColumn("valid_to", F.col("__first_ts"))
-                .withColumn("is_current", F.lit(False))
-                .drop("__first_ts")
+            history = (
+                _read_segments(spark, data_dir, schema)
+                .filter(F.col("__bucket").isin(touched))
+                .join(F.broadcast(batch_df.select("key_value")), "key_value", "left_semi")
+                .withColumn("__src", F.lit(0))
             )
-            delta = expired.unionByName(new_versions)
-        else:
-            delta = new_versions
-        # co-locate each bucket in one task before partitionBy, else
-        # every shuffle partition writes a sliver of every bucket
-        # (num_tasks x num_buckets small files — the reference's
-        # file-per-event anti-pattern reborn).  persist+count decouples
-        # the append from the scan of the directory it extends: every
-        # partition is materialized before the write starts, and a
-        # recompute after block loss re-reads only COMMITTED files
-        # (in-flight task output lives under _temporary, which the
-        # file index excludes) so lineage-based recovery stays correct.
-        out = (
-            delta.withColumn("__bucket", bucket_of)
-            .withColumn("__seq", F.lit(batch_id).cast("bigint"))
-            .repartition(len(touched), "__bucket")
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            rows = history.unionByName(rows)
+        # the one exchange: each bucket lands in one task (one write
+        # task per bucket, not num_tasks x num_buckets small files),
+        # and every window below has __bucket among its keys
+        rows = rows.repartition(len(touched), "__bucket")
+        # latest row per version; an event whose id its key's history
+        # holds sorts after that history row and drops out.  Only the
+        # key's current row goes on (events carry is_current too).  The id leads the keys because the sort
+        # compares a prefix of the first one: a bucket number ties.
+        version = Window.partitionBy("_event_id", "key_value", "__bucket").orderBy(
+            "__src", F.col("__seq").desc(), F.col("valid_from").asc_nulls_last()
         )
-        try:
-            out.count()
-            out.write.mode("append").partitionBy("__bucket").parquet(data_dir)
-        finally:
-            out.unpersist()
-        _compact_if_needed(touched, batch_id)
+        rows = rows.withColumn("__rn", F.row_number().over(version)).filter(
+            (F.col("__rn") == 1) & F.col("is_current")
+        )
+        # history sorts before events, so lead() of an event row is the
+        # key's next event
+        event = F.col("__src") == 1
+        key = Window.partitionBy("__bucket", "key_value").orderBy("__src", "valid_from")
+        whole_key = key.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        # a delete opens no version, so the id guard cannot see it
+        # replayed; one older than its key's current version is stale
+        # (re-applied, it would close that version before it began)
+        current_from = F.max(F.when(~event, F.col("valid_from")))
+        stale = event & (F.col("_event_type") == "delete") & F.coalesce(
+            F.col("valid_from") < F.col("__current_from"), F.lit(False)
+        )
+        rows = rows.withColumn("__current_from", current_from.over(whole_key)).filter(~stale)
+        rows = rows.select(
+            "*",
+            F.lead("valid_from").over(key).alias("__next_ts"),
+            F.max("__src").over(whole_key).alias("__touched"),
+            F.min(F.when(event, F.col("valid_from"))).over(whole_key).alias("__first_ts"),
+        )
+        opens = event & F.col("_event_type").isin("insert", "update")
+        expires = ~event & (F.col("__touched") == 1)
+        out = rows.filter(opens | expires).select(
+            "key_value",
+            "data",
+            "valid_from",
+            F.when(opens, F.col("__next_ts")).otherwise(F.col("__first_ts")).alias("valid_to"),
+            (opens & F.col("__next_ts").isNull()).alias("is_current"),
+            "_event_id",
+            "_event_type",
+            # a re-emit must outrank the row it expires even when batch
+            # ids restarted (a new checkpoint, a checkpoint-less run)
+            F.when(opens, F.col("__seq"))
+            .otherwise(F.greatest(F.col("__seq") + 1, F.lit(batch_id).cast("bigint")))
+            .alias("__seq"),
+            "__bucket",
+        )
+        # No persist before the append: the history's file list is fixed
+        # when the read is planned and in-flight output lives under
+        # _temporary, so a recompute after block loss re-reads only the
+        # files this batch started from.
+        out.write.mode("append").partitionBy("__bucket").parquet(data_dir)
+        _compact_if_needed(touched, batch_id, out.schema)
         _fs_write_text(
             spark,
             committed,
-            json.dumps({"query_id": _query_identity(), "batch_id": batch_id}),
+            json.dumps({
+                "query_id": qid,
+                "batch_id": batch_id,
+                "schema": out.schema.jsonValue(),
+            }),
         )
         if on_batch is not None:
             on_batch(batch_df, batch_id)
 
-    def _compact_if_needed(touched: list[int], batch_id: int) -> None:
+    def _compact_if_needed(
+        touched: list[int], batch_id: int, schema: StructType
+    ) -> None:
         """Rewrite any touched bucket whose segment-file count exceeds
         ``max_segments`` down to one resolved segment (dynamic
         partition overwrite replaces only those bucket partitions).
         Amortized cost: each row is rewritten O(1) times per
         ``max_segments`` appends."""
-        heavy = []
-        for b in touched:
-            bdir = _child(data_dir, f"__bucket={b}")
-            nseg = _fs_count_suffix(spark, bdir, ".parquet")
-            if nseg > max_segments:
-                heavy.append(b)
+        counts = _fs_segment_counts(spark, data_dir, touched)
+        heavy = [b for b in touched if counts[str(b)] > max_segments]
         if not heavy:
             return
-        compacted = resolve_scd2_segments(
-            spark.read.parquet(data_dir).filter(F.col("__bucket").isin(heavy))
+        segments = (
+            _read_segments(spark, data_dir, schema)
+            .filter(F.col("__bucket").isin(heavy))
+            .repartition(len(heavy), "__bucket")
         )
         out = (
-            compacted.withColumn("__seq", F.lit(batch_id).cast("bigint"))
-            .repartition(len(heavy), "__bucket")
+            resolve_scd2_segments(segments)
+            .withColumn("__seq", F.lit(batch_id).cast("bigint"))
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         try:
             # materialize fully BEFORE the overwrite touches the
-            # directory being compacted (same recovery argument as the
-            # append above: staged output is invisible to a recompute)
+            # directory being compacted: staged output is invisible
+            # to a recompute, but the replaced partitions are not
             out.count()
             # a write option, not the session conf: the caller's own
             # overwrites keep their partitionOverwriteMode
@@ -671,18 +762,28 @@ def run_scd2_stream(
     )
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    # No empty micro-batch after each data batch: the sink has nothing
+    # to apply in one (it only lets the dedup evict expired state, which
+    # the next data batch does too), yet it cost a census job and a
+    # planning round per trigger.
+    with _session_conf(spark, "spark.sql.streaming.noDataMicroBatches.enabled", "false"):
+        return writer.start()
 
 
 def resolve_scd2_segments(df: DataFrame) -> DataFrame:
     """Latest-wins resolution over the append-only SCD2 segment log:
-    one row per ``_event_id`` (the version identity — a version's
+    one row per version (the ``_event_id`` — a version's
     ``valid_from`` never changes; only expiry re-emits it), picking
-    the highest ``__seq``.  One window over the (pruned) slice; the
-    partition column ``__bucket`` is preserved when present."""
+    the highest ``__seq``.  One window keyed on ``__bucket`` (when
+    present), ``key_value`` and ``_event_id``: an exchange by bucket
+    already satisfies it, and a filter on the key pushes below it into
+    the scan.  The partition column ``__bucket`` is preserved."""
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy("_event_id").orderBy(F.col("__seq").desc())
+    bucket = ["__bucket"] if "__bucket" in df.columns else []
+    w = Window.partitionBy("_event_id", "key_value", *bucket).orderBy(
+        F.col("__seq").desc()
+    )
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -693,8 +794,14 @@ def resolve_scd2_segments(df: DataFrame) -> DataFrame:
 def read_scd2_history(spark: SparkSession, history_base_dir: str) -> DataFrame:
     """Read the bucket-partitioned history written by
     :func:`run_scd2_stream`, resolving the append-only segment log to
-    the latest version rows."""
-    df = spark.read.parquet(_child(history_base_dir, "data"))
+    the latest version rows.  Reads in the schema the committed-batch
+    marker records (inference when it has none); a filter on
+    ``key_value`` prunes the scan."""
+    try:
+        raw = _fs_read_text(spark, _child(history_base_dir, _MARKER))
+    except Py4JJavaError:  # unreadable, e.g. torn under a stale checksum
+        raw = None
+    df = _read_segments(spark, _child(history_base_dir, "data"), _marker_schema(raw))
     if "__seq" in df.columns:
         df = resolve_scd2_segments(df)
     return df.drop("__bucket")
@@ -781,6 +888,23 @@ ROCKSDB_PROVIDER = (
 
 
 @contextmanager
+def _session_conf(spark: SparkSession, key: str, value: str):
+    """Set a session conf for the block, then restore the caller's
+    value (or unset it).  A streaming query snapshots the session's
+    confs at ``start()``, so wrapping only the start scopes the setting
+    to that one query."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+
+
+@contextmanager
 def rocksdb_state_store(spark: SparkSession):
     """Scope the RocksDB state-store provider to one query start.
 
@@ -796,16 +920,10 @@ def rocksdb_state_store(spark: SparkSession):
     if not _tws_available():
         yield
         return
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
+    with _session_conf(
+        spark, "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
+    ):
         yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def every_n_trigger(

@@ -94,7 +94,6 @@ def test_apply_scd2_replayed_batch_is_noop(spark):
 
 
 # ------------------------------------------------------- stream marker scope
-@pytest.mark.slow
 def test_stream_marker_scoped_to_checkpoint_identity(spark, tmp_path):
     """A fresh/cleared checkpoint restarts batch ids at 0; the committed
     marker must not silently skip those batches — it fails fast when the
@@ -197,7 +196,6 @@ def test_interval_overlap_preserves_duplicate_multiplicity(spark):
 
 
 # --------------------------------------------- round-2 ADVICE regressions
-@pytest.mark.slow
 def test_checkpointless_rerun_applies_new_batches(spark, tmp_path):
     """Checkpoint-less runs have no durable identity, so the committed
     marker must NOT be honored (marker_qid None == qid None would

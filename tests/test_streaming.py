@@ -413,7 +413,6 @@ def test_kafka_wiring_raises_clear_error_without_connector(spark, tmp_path):
         )
 
 
-@pytest.mark.slow
 def test_scd2_append_log_compaction_bounds_segments(spark, tmp_path):
     """The SCD2 sink appends O(batch) rows per trigger and compacts a
     bucket once its segment count exceeds max_segments — segment files
@@ -538,6 +537,216 @@ def test_scd2_stream_keeps_the_callers_overwrite_mode(spark, tmp_path):
         assert [tuple(r) for r in spark.read.parquet(out).collect()] == [(3, "a")]
     finally:
         spark.conf.set(key, before)
+
+
+def _write_event_file(path, events, mtime):
+    """One JSON-lines source file of CDC events, stamped ``mtime`` so
+    the file source streams files in that order."""
+    import json
+    import os
+
+    with open(path, "w") as fh:
+        for eid, etype, key, ts, v in events:
+            row = {"event_id": eid, "event_type": etype, "key_value": key,
+                   "timestamp": ts}
+            if v is not None:
+                row["new_values"] = {"v": v}
+            fh.write(json.dumps(row) + "\n")
+    os.utime(path, (mtime, mtime))
+
+
+def test_scd2_stream_batch_job_budget_and_key_pushdown(spark, tmp_path):
+    """A steady, plain micro-batch (history present, no compaction)
+    runs its apply as one shuffle: at most 8 jobs inside foreachBatch
+    (census, key broadcast, the shuffle, the append), and no empty
+    micro-batch follows it.  A key lookup through read_scd2_history
+    reads in the marker's schema (no inference job) and pushes the key
+    into the parquet scan, so it takes at most 2 jobs; a truncated
+    marker still reads, by inference."""
+    import re
+
+    from cdc_pipe_line_spark import streaming as st
+
+    src, hist = tmp_path / "src", str(tmp_path / "history")
+    src.mkdir()
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+    callers = spark.conf.get(no_data)
+    jobs, batches = [], []
+    for b in range(4):
+        _write_event_file(
+            src / f"b{b}.json",
+            [(f"e{b}-{i}", "insert" if b == 0 else "update", f"k{i}",
+              f"2024-01-01 0{b}:{i:02d}:00", f"{b}.{i}") for i in range(40)],
+            1_700_000_000 + b,
+        )
+        q = st.run_scd2_stream(
+            spark.readStream.schema(st.EVENT_SCHEMA).json(str(src)),
+            hist, checkpoint_dir=str(tmp_path / "ckpt"),
+            n_buckets=4, max_segments=100,
+        )
+        q.awaitTermination()
+        jobs.append(len(spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))))
+        batches.append(len(q.recentProgress))
+    assert max(jobs[1:]) <= 8, jobs
+    assert batches == [1, 1, 1, 1]
+    assert spark.conf.get(no_data) == callers
+
+    def lookup():
+        return (
+            st.read_scd2_history(spark, hist)
+            .filter((F.col("key_value") == "k7") & F.col("is_current"))
+            .select("_event_id", F.col("data")["v"].alias("v"))
+        )
+
+    sc = spark.sparkContext
+    sc.setJobGroup("scd2-point-read", "point read")
+    try:
+        got = [tuple(r) for r in lookup().collect()]
+    finally:
+        sc._jsc.clearJobGroup()
+    assert got == [("e3-7", "3.7")]
+    assert len(sc.statusTracker().getJobIdsForGroup("scd2-point-read")) <= 2
+    plan = lookup()._jdf.queryExecution().executedPlan().toString()
+    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
+    assert any("key_value" in p for p in pushed), plan
+
+    marker = tmp_path / "history" / "_COMMITTED_BATCH"
+    text = marker.read_text()
+    assert '"schema"' in text
+    marker.write_text(text[: len(text) // 2])
+    assert [tuple(r) for r in lookup().collect()] == [("e3-7", "3.7")]
+
+
+def test_scd2_stream_matches_batch_apply(spark, tmp_path):
+    """Differential check: the streamed history equals
+    ``cdc.scd2.apply_scd2`` folded over the same time-ordered batches
+    — same-key chains within a batch, deletes, timestamps shuffled
+    within a batch, duplicate deliveries inside a batch, a
+    checkpoint-less rerun that replays the first batches before
+    applying a new one, and a run over a new source whose batch ids
+    restart at 0, below the ``__seq`` of the rows it expires."""
+    import random
+
+    from cdc_pipe_line_spark import streaming as st
+    from cdc_pipe_line_spark.cdc.scd2 import apply_scd2
+
+    rng = random.Random(7)
+    batches = [
+        # inserts; k0 chains three versions in one batch
+        [("a0", "insert", "k0", "00:00"), ("a1", "update", "k0", "00:05"),
+         ("a2", "update", "k0", "00:09"), ("a3", "insert", "k1", "00:01"),
+         ("a4", "insert", "k2", "00:02"), ("a5", "insert", "k3", "00:03")],
+        # updates, a delete, a chain on a key with history
+        [("b0", "update", "k1", "01:00"), ("b1", "delete", "k2", "01:01"),
+         ("b2", "update", "k0", "01:02"), ("b3", "insert", "k4", "01:04"),
+         ("b4", "update", "k0", "01:06")],
+        # chains on keys with history, a key deleted for good
+        [("c0", "update", "k1", "02:00"), ("c1", "update", "k1", "02:04"),
+         ("c2", "delete", "k4", "02:01"), ("c3", "update", "k3", "02:02"),
+         ("c4", "update", "k0", "02:03")],
+        # after the rerun: re-insert a deleted key, a delete then
+        # re-insert chain
+        [("d0", "insert", "k2", "03:00"), ("d1", "update", "k0", "03:01"),
+         ("d2", "delete", "k1", "03:02"), ("d3", "update", "k3", "03:03"),
+         ("d4", "delete", "k3", "03:04"), ("d5", "insert", "k3", "03:06")],
+        # a new source: expires rows written under batch id 3
+        [("f0", "update", "k0", "04:00"), ("f1", "update", "k2", "04:01"),
+         ("f2", "delete", "k3", "04:02"), ("f3", "insert", "k5", "04:03")],
+    ]
+    events = []
+    for batch in batches:
+        rows = [(eid, t, k, f"2024-01-01 {hm}:00", None if t == "delete" else eid)
+                for eid, t, k, hm in batch]
+        rows += [rows[0], rows[2]]  # duplicate deliveries
+        rng.shuffle(rows)
+        events.append(rows)
+
+    src, src2, hist = tmp_path / "src", tmp_path / "src2", str(tmp_path / "history")
+    src.mkdir()
+    src2.mkdir()
+    files = [str(src / f"b{b}.json") for b in range(4)] + [str(src2 / "b4.json")]
+
+    def run(source):
+        stream = (
+            spark.readStream.schema(st.EVENT_SCHEMA)
+            .option("maxFilesPerTrigger", "1")
+            .json(str(source))
+        )
+        st.run_scd2_stream(stream, hist, n_buckets=2, max_segments=2).awaitTermination()
+
+    for b in range(3):
+        _write_event_file(files[b], events[b], 1_700_000_000 + b)
+    run(src)
+    _write_event_file(files[3], events[3], 1_700_000_003)
+    run(src)  # checkpoint-less: replays batches 0-2, then applies batch 3
+    _write_event_file(files[4], events[4], 1_700_000_004)
+    run(src2)  # batch id 0 again
+
+    expected = None
+    for b in [0, 1, 2, 0, 1, 2, 3, 4]:
+        batch = spark.read.schema(st.EVENT_SCHEMA).json(files[b])
+        expected = apply_scd2(expected, batch).localCheckpoint()
+
+    cols = ["key_value", "valid_from", "valid_to", "is_current", "_event_id", "_event_type"]
+
+    def rows(df):
+        return sorted(
+            [(*r[:-1], None if r[-1] is None else sorted(r[-1].items()))
+             for r in df.select(*cols, "data").collect()],
+            key=repr,
+        )
+
+    got = rows(st.read_scd2_history(spark, hist))
+    assert got == rows(expected)
+    assert len(got) == 21  # one row per insert/update event
+
+
+def test_scd2_stream_replayed_delete_keeps_later_versions(spark, tmp_path):
+    """A delete opens no version, so the event-id guard cannot see it
+    replayed.  Replayed after the versions that followed it (a
+    checkpoint-less rerun here; a crash between the append and the
+    marker re-delivers the same way), it must not close the key's
+    current version at a time before that version began."""
+    import datetime as dt
+
+    from cdc_pipe_line_spark import streaming as st
+
+    src, hist = tmp_path / "src", str(tmp_path / "history")
+    src.mkdir()
+    _write_event_file(src / "b0.json", [
+        ("e1", "insert", "k1", "2024-01-01 00:00:00", "1"),
+    ], 1_700_000_000)
+    _write_event_file(src / "b1.json", [
+        ("e2", "insert", "k1", "2024-01-01 02:00:00", "2"),
+        ("d1", "delete", "k1", "2024-01-01 01:00:00", None),
+        ("d2", "delete", "k2", "2024-01-01 01:30:00", None),
+        ("e3", "insert", "k2", "2024-01-01 01:45:00", "3"),
+    ], 1_700_000_001)
+
+    def run():
+        stream = (
+            spark.readStream.schema(st.EVENT_SCHEMA)
+            .option("maxFilesPerTrigger", "1")
+            .json(str(src))
+        )
+        st.run_scd2_stream(stream, hist, n_buckets=2).awaitTermination()
+
+    def rows():
+        return sorted(
+            tuple(r) for r in st.read_scd2_history(spark, hist)
+            .select("_event_id", "valid_from", "valid_to", "is_current").collect()
+        )
+
+    run()
+    first = rows()
+    jan1, hour = dt.datetime(2024, 1, 1), dt.timedelta(hours=1)
+    assert first == [
+        ("e1", jan1, jan1 + hour, False),
+        ("e2", jan1 + 2 * hour, None, True),
+        ("e3", jan1 + 1.75 * hour, None, True),
+    ]
+    run()  # replays both batches
+    assert rows() == first
 
 
 @pytest.mark.slow
