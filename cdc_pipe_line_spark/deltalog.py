@@ -23,9 +23,16 @@ Semantics implemented (the core of the spec's state reconstruction):
 actions replay in version order, the LAST action per file path wins
 (``remove`` tombstones a file, a later ``add`` of the same path
 resurrects it), and the live snapshot is the parquet union of the
-surviving ``add`` paths.  Log listing here is one bounded directory
-scan (a production log is kept shallow by checkpointing, so the
-bounded-actions assumption is the spec's own).
+surviving ``add`` paths.  Table state comes out of the log in ONE
+place, :func:`snapshot`: one driver-side replay of the checkpoint plus
+the JSON tail yields the version, metaData, protocol, ``txn`` marks,
+the newest commit's timestamp and (below
+:data:`DRIVER_REPLAY_MAX_BYTES`) the live ``add`` actions.  A small
+per-process cache keeps each table's current snapshot; a lookup lists
+``_delta_log`` once and parses only the commits written since.  Past
+the byte budget the live-file census is the distributed replay
+(:func:`read_log_actions` + :func:`live_files`), which keeps driver
+memory bounded.
 
 Data skipping (round 11): every data file the writer emits carries
 the protocol's per-file column statistics on its ``add`` action
@@ -39,7 +46,11 @@ into a few-file scan when the layout clusters the filter column
 
 from __future__ import annotations
 
+import collections
+import dataclasses
+import json
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -121,16 +132,18 @@ def read_log_actions(
     return _read_commits(spark, log_dir, versions)
 
 
-def _commit_versions(log_dir: str) -> list[int]:
-    """Versions of the JSON commits in ``log_dir``, ascending —
-    ``{v:020d}.json`` names only (checkpoint manifests and other
-    files are not commits).  Every listing of the module's commits
-    goes through here."""
-    if not os.path.isdir(log_dir):
-        return []
+def _commit_versions(log_dir: str, names: list[str] | None = None) -> list[int]:
+    """Versions of the JSON commits in ``log_dir`` (or among its
+    already-listed ``names``), ascending — ``{v:020d}.json`` names only
+    (checkpoint manifests and other files are not commits).  Every
+    listing of the module's commits goes through here."""
+    if names is None:
+        if not os.path.isdir(log_dir):
+            return []
+        names = os.listdir(log_dir)
     return sorted(
         int(f[:20])
-        for f in os.listdir(log_dir)
+        for f in names
         if len(f) == 25 and f.endswith(".json") and f[:20].isdigit()
     )
 
@@ -200,24 +213,25 @@ _DV_FIELDS = (
 )
 
 
-def _live_frame(spark: SparkSession, table_dir: str) -> DataFrame:
+def _live_frame(
+    spark: SparkSession, table_dir: str, snap: "Snapshot"
+) -> DataFrame:
     """The live-file frame (the columns :func:`live_files` produces)
-    — from the driver-side replay when the log fits the byte budget,
-    the distributed replay otherwise.  Same columns either way, so all
-    Column logic (skipping filters, ``isin`` censuses, payload
-    collects) is route-agnostic.
+    of ``snap`` — from its ``add`` actions when the log fits the byte
+    budget, the distributed replay otherwise.  Same columns either
+    way, so all Column logic (skipping filters, ``isin`` censuses,
+    payload collects) is route-agnostic.
 
     The driver route builds the frame from an Arrow table, which
     Spark plans as a ``LocalRelation``: projections, filters, limits
     and collects over it are folded on the driver and run NO Spark
     job.  (A frame from a list of row tuples would be a ``LogicalRDD``
     costing two jobs per collect.)"""
-    state = _replay_log_driver(table_dir)
-    if state is None:
+    if snap.adds is None:
         return live_files(read_log_actions(spark, table_dir))
     import pyarrow as pa
 
-    adds = state["adds"]
+    adds = snap.adds
     dv_type = pa.struct([(n, t) for n, t in _DV_FIELDS])
     table = pa.table(
         {
@@ -247,26 +261,10 @@ def _live_frame(spark: SparkSession, table_dir: str) -> DataFrame:
     return spark.createDataFrame(table)
 
 
-def _live_file_names(spark: SparkSession, table_dir: str) -> list[str]:
-    state = _replay_log_driver(table_dir)
-    if state is not None:
-        return [a["path"] for a in state["adds"]]
-    return [
-        r.path
-        for r in live_files(read_log_actions(spark, table_dir)).collect()
-    ]
-
-
 def _checkpoint_version(table_dir: str) -> int | None:
     """Version of the last checkpoint, or None when the table has
     none (no ``_last_checkpoint`` pointer)."""
-    lc = os.path.join(table_dir, "_delta_log", "_last_checkpoint")
-    if not os.path.exists(lc):
-        return None
-    import json as _json
-
-    with open(lc) as fh:
-        return int(_json.load(fh)["version"])
+    return snapshot(table_dir).checkpoint_version
 
 
 def _checkpoint_parts(log_dir: str, ver: int) -> list[str]:
@@ -398,11 +396,10 @@ def _parse_v2_manifest(
 def _checkpoint_sources(log_dir: str, ver: int) -> dict[str, list[str]]:
     """Every file holding the checkpoint state at ``ver``, as
     ``{"parquet": [...], "json": [...]}`` with any V2 manifest FIRST
-    in its list (metadata walks short-circuit on the first hit, and
-    non-file actions live in the manifest).  Classic single/multi-part
-    checkpoints are preferred when both forms exist at the same
-    version (writers may produce both for compatibility); otherwise
-    the V2 manifest + its sidecars.  The manifest's embedded
+    in its list (the non-file actions live in the manifest).  Classic
+    single/multi-part checkpoints are preferred when both forms exist
+    at the same version (writers may produce both for compatibility);
+    otherwise the V2 manifest + its sidecars.  The manifest's embedded
     ``checkpointMetadata.version`` must match — a mismatched manifest
     is corruption, not a fallback."""
     try:
@@ -556,8 +553,9 @@ def _iter_checkpoint_actions(log_dir: str, ver: int, columns=None):
     classic, multi-part, or V2 manifest + sidecars — optionally
     pruned to ``columns`` (files lacking every requested column are
     skipped entirely: sidecars carry only file actions, manifests
-    only non-file actions).  Yields rows manifest-first so
-    latest-wins metadata walks can short-circuit."""
+    only non-file actions).  Yields rows manifest-first; the
+    :func:`snapshot` replay turns them into actions
+    (:func:`_from_checkpoint`)."""
     import json as _json
 
     import pyarrow.parquet as _pq
@@ -579,14 +577,285 @@ def _iter_checkpoint_actions(log_dir: str, ver: int, columns=None):
         yield from _pq.read_table(p, columns=cols).to_pylist()
 
 
-def _next_version(table_dir: str) -> int:
-    versions = _commit_versions(os.path.join(table_dir, "_delta_log"))
-    # a checkpoint supersedes (and log cleanup may have deleted)
-    # earlier JSON commits — the next version must clear it too
-    ck = _checkpoint_version(table_dir)
+#: total log bytes (checkpoint parts + JSON tail) up to which a
+#: snapshot holds the live ``add`` actions on the driver; past it the
+#: live-file census is the distributed replay
+DRIVER_REPLAY_MAX_BYTES = 8 << 20
+
+#: tables whose current snapshot one process keeps (least recently
+#: used first out)
+SNAPSHOT_CACHE_TABLES = 16
+
+
+@dataclasses.dataclass(frozen=True)
+class Snapshot:
+    """A table's state at one version, from one log replay.
+
+    ``metaData`` holds ``id``, ``schemaString``, ``partitionColumns``
+    and ``configuration`` (a dict), or is ``None`` before the first
+    metaData action; ``protocol`` is the latest protocol action
+    (``{}`` when there is none); ``txn`` maps each appId to its highest
+    SetTransaction version; ``commit_ts`` is the newest commit's
+    in-commit timestamp, else its ``commitInfo.timestamp``.  ``adds``
+    holds the live ``add`` actions while the checkpoint plus the JSON
+    tail fit in :data:`DRIVER_REPLAY_MAX_BYTES`, and is ``None`` past
+    it (and for a path with no log).  ``tip`` and ``marks`` identify
+    the newest commit file and the checkpoint files the replay read,
+    so a later lookup can tell whether the state still holds.  Shared
+    through the cache: callers read it and never mutate it."""
+
+    version: int
+    checkpoint_version: int | None
+    metaData: dict | None
+    protocol: dict
+    txn: dict
+    commit_ts: int | None
+    adds: tuple | None
+    log_bytes: int = 0
+    tip: tuple | None = None
+    marks: tuple = ()
+
+    @property
+    def schema_string(self) -> str | None:
+        return self.metaData["schemaString"] if self.metaData else None
+
+    @property
+    def configuration(self) -> dict:
+        return self.metaData["configuration"] if self.metaData else {}
+
+    @property
+    def partition_columns(self) -> list[str]:
+        return self.metaData["partitionColumns"] if self.metaData else []
+
+    @property
+    def dv_enabled(self) -> bool:
+        """The table property choosing merge-on-read DML."""
+        return self.configuration.get("delta.enableDeletionVectors") == "true"
+
+    @property
+    def dv_feature(self) -> bool:
+        """Whether the protocol carries the ``deletionVectors`` reader
+        feature, without which no live file can carry a vector: scans
+        of tables without it plan no masking at all.  A table can have
+        the feature with the property off; its files may still carry
+        vectors from earlier DML, so scans keep masking."""
+        return "deletionVectors" in (self.protocol.get("readerFeatures") or [])
+
+
+_NO_TABLE = Snapshot(-1, None, None, {}, {}, None, None)
+_snapshots: collections.OrderedDict = collections.OrderedDict()
+_snapshots_lock = threading.Lock()
+
+
+def _file_key(path: str) -> tuple | None:
+    """Identity of a log file for cache validation: inode, size and
+    modification time in nanoseconds; ``None`` when it is gone."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (st.st_ino, st.st_size, st.st_mtime_ns)
+
+
+def _commit_path(log_dir: str, v: int) -> str:
+    return os.path.join(log_dir, f"{v:020d}.json")
+
+
+def _from_checkpoint(row: dict) -> dict:
+    """A checkpoint row as the action a JSON commit holds: the null
+    action columns dropped, and the parquet MAPs pyarrow renders as
+    ``[(key, value), ...]`` lists turned back into dicts."""
+    act = {k: v for k, v in row.items() if v is not None}
+    for name, field in (("add", "partitionValues"), ("metaData", "configuration")):
+        inner = act.get(name)
+        if inner is not None and isinstance(inner.get(field), list):
+            act[name] = {**inner, field: dict(inner[field])}
+    return act
+
+
+class _Replay:
+    """Mutable replay state: commits apply in version order with the
+    spec's last-action-wins rule per file path (within one commit an
+    ``add`` beats a ``remove`` of the same path), latest metaData and
+    protocol, and the highest ``txn`` version per app."""
+
+    def __init__(self, base: Snapshot | None, keep_adds: bool):
+        self.version = base.version if base else -1
+        self.meta = base.metaData if base else None
+        self.protocol = base.protocol if base else {}
+        self.txn = dict(base.txn) if base else {}
+        self.commit_ts = base.commit_ts if base else None
+        self.files: dict | None = None
+        if keep_adds:
+            self.files = {a["path"]: a for a in (base.adds or ())} if base else {}
+
+    def apply(self, v: int, actions) -> None:
+        added = []
+        ts = None
+        for act in actions:
+            if "add" in act:
+                if self.files is not None:
+                    added.append(act["add"])
+            elif "remove" in act:
+                if self.files is not None:
+                    self.files.pop(act["remove"]["path"], None)
+            elif "metaData" in act:
+                md = act["metaData"]
+                self.meta = {
+                    "id": md.get("id"),
+                    "schemaString": md.get("schemaString"),
+                    "partitionColumns": list(md.get("partitionColumns") or []),
+                    "configuration": dict(md.get("configuration") or {}),
+                }
+            elif "protocol" in act:
+                self.protocol = {
+                    k: x for k, x in act["protocol"].items() if x is not None
+                }
+            elif "txn" in act:
+                app, tv = act["txn"]["appId"], int(act["txn"]["version"])
+                self.txn[app] = max(tv, self.txn.get(app, tv))
+            elif "commitInfo" in act:
+                ci = act["commitInfo"]
+                stamp = ci.get("inCommitTimestamp", ci.get("timestamp"))
+                ts = None if stamp is None else int(stamp)
+        for a in added:
+            self.files[a["path"]] = a
+        self.commit_ts = ts
+        self.version = max(self.version, v)
+
+    def apply_commits(self, log_dir: str, versions: list[int]) -> None:
+        for v in versions:
+            with open(_commit_path(log_dir, v)) as fh:
+                self.apply(v, [json.loads(line) for line in fh if line.strip()])
+
+    def freeze(self, ck, log_bytes: int, tip, marks) -> Snapshot:
+        adds = None if self.files is None else tuple(self.files.values())
+        return Snapshot(
+            self.version, ck, self.meta, self.protocol, self.txn,
+            self.commit_ts, adds, log_bytes, tip, marks,
+        )
+
+
+def _replay(
+    log_dir: str, versions: list[int], marks: tuple, upto: int | None = None
+) -> Snapshot:
+    """Replay from scratch: the checkpoint ``_last_checkpoint`` names
+    plus the JSON commits from its version on (from version 0 without
+    one), stopping at ``upto`` when given.  A version below the
+    checkpoint needs the raw JSON from version 0; once log cleanup
+    removed it, that raises."""
+    table_dir = os.path.dirname(log_dir)
+    ck = None
+    if any(name == "_last_checkpoint" for name, _key in marks):
+        with open(os.path.join(log_dir, "_last_checkpoint")) as fh:
+            ck = int(json.load(fh)["version"])
+    if ck is not None and upto is not None and upto < ck:
+        if not versions or versions[0] != 0:
+            raise ValueError(
+                f"version {upto} of {table_dir} is no longer "
+                f"reconstructable: log cleanup removed the JSON commits "
+                f"before checkpoint {ck}"
+            )
+        ck = None
+    # the commit AT the checkpoint re-applies idempotently onto its
+    # state and gives the snapshot its commit timestamp and its tip
+    tail = [
+        v
+        for v in versions
+        if (ck is None or v >= ck) and (upto is None or v <= upto)
+    ]
+    if ck is None and not tail:
+        return _NO_TABLE
+    ck_files = []
     if ck is not None:
-        versions.append(ck)
-    return max(versions) + 1 if versions else 0
+        src = _checkpoint_sources(log_dir, ck)
+        ck_files = src["parquet"] + src["json"]
+    keys = [_file_key(_commit_path(log_dir, v)) for v in tail]
+    log_bytes = sum(os.path.getsize(p) for p in ck_files) + sum(
+        k[1] for k in keys if k
+    )
+    state = _Replay(None, log_bytes <= DRIVER_REPLAY_MAX_BYTES)
+    if ck is not None:
+        # past the budget the file actions (and V2 sidecars) stay unread
+        columns = ["metaData", "protocol", "txn"] if state.files is None else None
+        rows = _iter_checkpoint_actions(log_dir, ck, columns)
+        state.apply(ck, map(_from_checkpoint, rows))
+    state.apply_commits(log_dir, tail)
+    return state.freeze(ck, log_bytes, (tail[-1], keys[-1]) if tail else None, marks)
+
+
+def _advance(base: Snapshot, log_dir: str, newer: list[int]) -> Snapshot | None:
+    """``base`` moved forward by the JSON commits ``newer``, or
+    ``None`` when only a replay from scratch can serve (a commit
+    vanished, or the log fits the byte budget again but ``base``
+    dropped its adds)."""
+    keys = [_file_key(_commit_path(log_dir, v)) for v in newer]
+    if None in keys:
+        return None
+    log_bytes = base.log_bytes + sum(k[1] for k in keys)
+    keep_adds = log_bytes <= DRIVER_REPLAY_MAX_BYTES
+    if keep_adds and base.adds is None:
+        return None
+    if not newer and (keep_adds or base.adds is None):
+        return base
+    state = _Replay(base, keep_adds)
+    state.apply_commits(log_dir, newer)
+    tip = (newer[-1], keys[-1]) if newer else base.tip
+    return state.freeze(base.checkpoint_version, log_bytes, tip, base.marks)
+
+
+def snapshot(table_dir: str, version_as_of: int | None = None) -> Snapshot:
+    """The table's :class:`Snapshot` — current, or as of
+    ``version_as_of`` (time travel; a version past the newest reads
+    the newest).  No Spark job and no session.
+
+    Each lookup lists ``_delta_log`` once.  The current snapshot is
+    cached per table path (:data:`SNAPSHOT_CACHE_TABLES` tables per
+    process): when the cached newest commit is still listed with the
+    same inode, size and modification time, and no checkpoint file
+    changed, only the commits after it are parsed — none when it is
+    still the newest.  Anything else (a new checkpoint, log cleanup
+    of the newest commit, a table deleted and re-created at the same
+    path) replays from scratch.  A stale cache can never commit
+    wrongly: put-if-absent decides every race.  Time travel replays
+    from scratch and is not cached."""
+    log_dir = os.path.join(table_dir, "_delta_log")
+    key = os.path.abspath(table_dir)
+    try:
+        names = os.listdir(log_dir)
+    except OSError:
+        with _snapshots_lock:
+            _snapshots.pop(key, None)
+        return _NO_TABLE
+    versions = _commit_versions(log_dir, names)
+    marks = tuple(
+        (n, _file_key(os.path.join(log_dir, n)))
+        for n in sorted(names)
+        if n == "_last_checkpoint" or ".checkpoint." in n
+    )
+    with _snapshots_lock:
+        cached = _snapshots.get(key)
+    snap = None
+    if cached is not None and cached.marks == marks and cached.tip is not None:
+        tip_v, tip_key = cached.tip
+        if _file_key(_commit_path(log_dir, tip_v)) == tip_key:
+            snap = _advance(cached, log_dir, [v for v in versions if v > tip_v])
+    if snap is None:
+        snap = _replay(log_dir, versions, marks)
+    with _snapshots_lock:
+        _snapshots[key] = snap
+        _snapshots.move_to_end(key)
+        while len(_snapshots) > SNAPSHOT_CACHE_TABLES:
+            _snapshots.popitem(last=False)
+    if version_as_of is None or version_as_of >= snap.version:
+        return snap
+    return _replay(log_dir, versions, marks, upto=version_as_of)
+
+
+def _next_version(table_dir: str) -> int:
+    # a checkpoint supersedes (and log cleanup may have deleted)
+    # earlier JSON commits — the snapshot's version counts it too
+    return snapshot(table_dir).version + 1
 
 
 def _remove_staged(table_dir: str, adds: list[dict]) -> None:
@@ -630,8 +899,10 @@ def commit(
     module's reader with no Delta dependency at all).
 
     Version allocation is optimistic-concurrency shaped: the commit
-    file is opened with ``'x'`` (exclusive create), so a concurrent
-    writer racing to the same version LOSES the put-if-absent.
+    is written to a private file and hard-linked to its version's
+    name, which fails when that name exists, so a concurrent writer
+    racing to the same version LOSES the put-if-absent, and readers
+    never see a commit half written.
     ``retries`` defaults to 0 — losing the race surfaces as
     ``FileExistsError`` and the CALLER decides how to re-enter,
     because every operation that reads table state before committing
@@ -649,6 +920,7 @@ def commit(
     semantics hold here."""
     import json as _json
     import time as _time
+    import uuid as _uuid
 
     _assert_writer_supported(table_dir, actions)
     os.makedirs(os.path.join(table_dir, "_delta_log"), exist_ok=True)
@@ -672,7 +944,7 @@ def commit(
         # max(version where ts <= X) pick a version whose predecessor
         # is stamped later (VERDICT r11 wrong-item 1).
         now_ms = int(_time.time() * 1000)
-        prev = _prev_commit_ts(table_dir, v)
+        prev = snapshot(table_dir).commit_ts
         if prev is not None:
             now_ms = max(prev + 1, now_ms)
         stamped = []
@@ -702,10 +974,15 @@ def commit(
                 ]
             stamped = infos + [a for a in stamped if "commitInfo" not in a]
         name = os.path.join(table_dir, "_delta_log", f"{v:020d}.json")
+        # the commit lands whole: written to a private file, then
+        # hard-linked into place, so a reader listing the log never
+        # parses a commit that is still being written
+        staged = f"{name}.{_uuid.uuid4().hex}.tmp"
+        with open(staged, "x") as fh:
+            for a in stamped:
+                fh.write(_json.dumps(a) + "\n")
         try:
-            with open(name, "x") as fh:  # put-if-absent
-                for a in stamped:
-                    fh.write(_json.dumps(a) + "\n")
+            os.link(staged, name)  # put-if-absent
             return v
         except FileExistsError:
             if attempt == attempts - 1:
@@ -719,6 +996,8 @@ def commit(
             # staged actions stale), so that race RAISES instead of
             # blindly re-applying (VERDICT r13 next-item 3)
             _assert_no_concurrent_metadata_change(table_dir, first_v)
+        finally:
+            os.remove(staged)
     raise AssertionError("unreachable")
 
 
@@ -752,32 +1031,6 @@ def _assert_no_concurrent_metadata_change(
             continue
 
 
-def _prev_commit_ts(table_dir: str, v: int) -> int | None:
-    """In-commit timestamp of the latest JSON commit BELOW ``v`` —
-    the clamp floor for :func:`commit`'s monotonic stamping.  One
-    bounded directory listing plus one small file read; ``None`` when
-    no earlier stamped commit survives (fresh table, or log cleanup
-    removed the tail — best-effort then, single-writer wall clocks
-    resume)."""
-    import json as _json
-
-    log_dir = os.path.join(table_dir, "_delta_log")
-    below = [c for c in _commit_versions(log_dir) if c < v]
-    if not below:
-        return None
-    prev = os.path.join(log_dir, f"{max(below):020d}.json")
-    try:
-        with open(prev) as fh:
-            for line in fh:
-                ci = _json.loads(line).get("commitInfo", {})
-                ts = ci.get("inCommitTimestamp", ci.get("timestamp"))
-                if ts is not None:
-                    return int(ts)
-    except OSError:
-        return None
-    return None
-
-
 def _ict_enabled_for_commit(table_dir: str, actions: list[dict]) -> bool:
     """Whether THIS commit must carry the spec's
     ``commitInfo.inCommitTimestamp``: the commit's own metaData wins
@@ -794,9 +1047,7 @@ def _ict_enabled_for_commit(table_dir: str, actions: list[dict]) -> bool:
                 == "true"
             )
     return (
-        _current_table_config(table_dir).get(
-            "delta.enableInCommitTimestamps"
-        )
+        snapshot(table_dir).configuration.get("delta.enableInCommitTimestamps")
         == "true"
     )
 
@@ -882,96 +1133,6 @@ def _stats_json(full_path: str) -> str | None:
     return _json.dumps(stats, sort_keys=True)
 
 
-def _current_schema_string(table_dir: str) -> str | None:
-    """Latest ``metaData.schemaString`` read DRIVER-SIDE from the
-    log tail (newest JSON commit first, checkpoint fallback) — the
-    metadata-sized lookup the write path uses to map logical column
-    names to physical ones without a Spark job."""
-    import json as _json
-
-    log_dir = os.path.join(table_dir, "_delta_log")
-    if not os.path.isdir(log_dir):
-        return None
-    for v in reversed(_commit_versions(log_dir)):
-        with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
-            for line in fh:
-                act = _json.loads(line)
-                if "metaData" in act:
-                    return act["metaData"].get("schemaString")
-    ck = _checkpoint_version(table_dir)
-    if ck is not None:
-        for r in _iter_checkpoint_actions(
-            log_dir, ck, columns=["metaData"]
-        ):
-            md = r.get("metaData")
-            if md and md.get("schemaString"):
-                return md["schemaString"]
-    return None
-
-
-def _current_protocol(table_dir: str) -> dict:
-    """Latest ``protocol`` action, read DRIVER-SIDE from the log tail
-    (newest JSON commit first, checkpoint fallback) — the same
-    metadata-sized lookup :func:`_current_schema_string` does.
-    Returns ``{}`` when the table has no log yet."""
-    import json as _json
-
-    log_dir = os.path.join(table_dir, "_delta_log")
-    if not os.path.isdir(log_dir):
-        return {}
-    for v in reversed(_commit_versions(log_dir)):
-        with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
-            for line in fh:
-                act = _json.loads(line)
-                if "protocol" in act:
-                    return dict(act["protocol"])
-    ck = _checkpoint_version(table_dir)
-    if ck is not None:
-        for r in _iter_checkpoint_actions(
-            log_dir, ck, columns=["protocol"]
-        ):
-            p = r.get("protocol")
-            if p and p.get("minReaderVersion") is not None:
-                return {k: v for k, v in p.items() if v is not None}
-    return {}
-
-
-def _current_table_config(table_dir: str) -> dict:
-    """Latest ``metaData.configuration``, read DRIVER-SIDE from the
-    log tail (newest JSON commit first, checkpoint fallback) — the
-    metadata-sized lookup writers use to pick a DML strategy without
-    a Spark job."""
-    import json as _json
-
-    log_dir = os.path.join(table_dir, "_delta_log")
-    if not os.path.isdir(log_dir):
-        return {}
-    for v in reversed(_commit_versions(log_dir)):
-        with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
-            for line in fh:
-                act = _json.loads(line)
-                if "metaData" in act:
-                    return dict(act["metaData"].get("configuration") or {})
-    ck = _checkpoint_version(table_dir)
-    if ck is not None:
-        for r in _iter_checkpoint_actions(
-            log_dir, ck, columns=["metaData"]
-        ):
-            md = r.get("metaData")
-            if md and md.get("schemaString"):
-                return dict(md.get("configuration") or {})
-    return {}
-
-
-def _dv_enabled(table_dir: str) -> bool:
-    return (
-        _current_table_config(table_dir).get(
-            "delta.enableDeletionVectors"
-        )
-        == "true"
-    )
-
-
 #: legacy protocol versions → the table features they imply (the
 #: spec's table-features upgrade rule): a reader/writer at versions
 #: 3/7 consults ONLY readerFeatures/writerFeatures, so crossing into
@@ -1018,7 +1179,7 @@ def _protocol_upgrade(
     table crossing to (3,7) for deletion vectors lists columnMapping in
     both sets, and ADD CONSTRAINT on an already-(3,7) table appends
     checkConstraints (ADVICE r12 medium)."""
-    cur = _current_protocol(table_dir)
+    cur = snapshot(table_dir).protocol
     cur_r = int(cur.get("minReaderVersion") or 1)
     cur_w = int(cur.get("minWriterVersion") or 1)
     out_r = max(min_reader, cur_r)
@@ -1137,7 +1298,7 @@ def _write_data_files(
     import shutil as _shutil
     import uuid as _uuid
 
-    schema_string = _current_schema_string(table_dir)
+    schema_string = snapshot(table_dir).schema_string
     df = _cast_declared(df, schema_string)
     mapping = _mapping_from(schema_string)
     if mapping:
@@ -1239,7 +1400,7 @@ def _write_change_data(df: DataFrame, table_dir: str) -> dict | None:
     import shutil as _shutil
     import uuid as _uuid
 
-    schema_string = _current_schema_string(table_dir)
+    schema_string = snapshot(table_dir).schema_string
     df = _cast_declared(df, schema_string)
     mapping = _mapping_from(schema_string)
     if mapping:
@@ -1345,65 +1506,6 @@ def _change_counts(table_dir: str, cdc_actions: list[dict]) -> dict[str, int]:
     return counts
 
 
-def _latest_meta(
-    spark: SparkSession, table_dir: str, *, version_as_of: int | None = None
-):
-    """Latest ``metaData`` action (id, schemaString,
-    partitionColumns, configuration) — the declared table identity
-    every state-reading writer threads through its rewrite
-    (compact/overwrite/append_evolve must keep a partitioned table
-    partitioned; ADVICE r9) and the constraint registry writers
-    enforce against (``delta.constraints.*`` keys).  With
-    ``version_as_of``, the metaData in force at that version (the
-    schema a change-feed read up to it declares).
-
-    DRIVER-SIDE: a newest-first walk of the JSON tail with a
-    checkpoint fallback — the same metadata-sized lookup
-    :func:`_current_schema_string` does.  This used to be a Spark
-    job, and writers call it (directly and via the constraint /
-    generated-column registries) several times per statement; on a
-    vanilla session each job costs 0.3-0.7 s of pure scheduling
-    (round-13 cold-path trim)."""
-    import json as _json
-
-    log_dir = os.path.join(table_dir, "_delta_log")
-    if not os.path.isdir(log_dir):
-        return None
-    for v in reversed(_commit_versions(log_dir)):
-        if version_as_of is not None and v > version_as_of:
-            continue
-        found = None
-        with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
-            for line in fh:
-                act = _json.loads(line)
-                if "metaData" in act:
-                    found = act["metaData"]
-        if found is not None:
-            return {
-                "id": found.get("id"),
-                "schemaString": found.get("schemaString"),
-                "partitionColumns": found.get("partitionColumns"),
-                "configuration": found.get("configuration"),
-            }
-    ck = _checkpoint_version(table_dir)
-    if ck is not None and (version_as_of is None or ck <= version_as_of):
-        for r in _iter_checkpoint_actions(
-            log_dir, ck, columns=["metaData"]
-        ):
-            md = r.get("metaData")
-            if md and md.get("schemaString"):
-                cfg = md.get("configuration")
-                if isinstance(cfg, list):
-                    cfg = dict(cfg)  # pyarrow MAP → [(k, v), ...]
-                return {
-                    "id": md.get("id"),
-                    "schemaString": md.get("schemaString"),
-                    "partitionColumns": md.get("partitionColumns"),
-                    "configuration": cfg,
-                }
-    return None
-
-
 #: configuration-key prefix the protocol uses for CHECK constraints
 _CONSTRAINT_PREFIX = "delta.constraints."
 
@@ -1412,7 +1514,7 @@ def table_constraints(spark: SparkSession, table_dir: str) -> dict:
     """The table's CHECK constraints: name -> SQL expression, from
     the latest metaData's ``delta.constraints.*`` configuration keys
     (the protocol's constraint registry)."""
-    meta = _latest_meta(spark, table_dir)
+    meta = snapshot(table_dir).metaData
     cfg = (meta["configuration"] or {}) if meta else {}
     return {
         k[len(_CONSTRAINT_PREFIX):]: v
@@ -1482,7 +1584,7 @@ def enable_column_mapping(spark: SparkSession, table_dir: str) -> int:
     directory names are out of this implementation's scope)."""
     import json as _json
 
-    meta = _latest_meta(spark, table_dir)
+    meta = snapshot(table_dir).metaData
     if meta is None:
         raise ValueError(f"no delta table at {table_dir}")
     if meta["partitionColumns"]:
@@ -1536,7 +1638,7 @@ def rename_column(
     the same way)."""
     import json as _json
 
-    meta = _latest_meta(spark, table_dir)
+    meta = snapshot(table_dir).metaData
     if meta is None:
         raise ValueError(f"no delta table at {table_dir}")
     cfg = dict(meta["configuration"] or {})
@@ -1597,7 +1699,7 @@ def add_constraint(
     minWriterVersion to 3 (the spec's writer-feature gate for CHECK
     constraints).  Every subsequent data-adding commit enforces it
     via :func:`_enforce_constraints`."""
-    meta = _latest_meta(spark, table_dir)
+    meta = snapshot(table_dir).metaData
     if meta is None:
         raise ValueError(f"no delta table at {table_dir}")
     cfg = dict(meta["configuration"] or {})
@@ -1633,7 +1735,7 @@ def drop_constraint(
     spark: SparkSession, table_dir: str, name: str
 ) -> int:
     """ALTER TABLE ... DROP CONSTRAINT name."""
-    meta = _latest_meta(spark, table_dir)
+    meta = snapshot(table_dir).metaData
     if meta is None:
         raise ValueError(f"no delta table at {table_dir}")
     cfg = dict(meta["configuration"] or {})
@@ -1656,7 +1758,7 @@ def generation_expressions(spark: SparkSession, table_dir: str) -> dict:
     protocol's generated-columns feature)."""
     import json as _json
 
-    meta = _latest_meta(spark, table_dir)
+    meta = snapshot(table_dir).metaData
     if not meta or not meta["schemaString"]:
         return {}
     out = {}
@@ -1831,7 +1933,7 @@ def append(
     ):
         # bootstrap append (no log yet) skips the lookup — there is no
         # metaData to read and the JSON glob would raise (ADVICE r10)
-        meta = _latest_meta(spark, table_dir)
+        meta = snapshot(table_dir).metaData
         if meta and meta["partitionColumns"]:
             partition_by = list(meta["partitionColumns"])
     if os.path.isdir(os.path.join(table_dir, "_delta_log")):
@@ -1891,7 +1993,7 @@ def append_evolve(
 
     started = _time.time()
     for attempt in range(5):
-        meta = _latest_meta(spark, table_dir)
+        meta = snapshot(table_dir).metaData
         partition_by = (
             list(meta["partitionColumns"])
             if meta["partitionColumns"]
@@ -1973,7 +2075,7 @@ def overwrite(
     import time as _time
 
     started = _time.time()
-    meta = _latest_meta(spark, table_dir)
+    meta = snapshot(table_dir).metaData
     partition_by = (
         list(meta["partitionColumns"]) if meta and meta["partitionColumns"]
         else None
@@ -1984,9 +2086,10 @@ def overwrite(
         df, table_dir, n_files=n_files, partition_by=partition_by
     )
     for attempt in range(5):
+        live = _live_frame(spark, table_dir, snapshot(table_dir))
         removes = [
-            {"remove": {"path": p, "dataChange": True}}
-            for p in _live_file_names(spark, table_dir)
+            {"remove": {"path": r.path, "dataChange": True}}
+            for r in live.select("path").collect()
         ]
         try:
             return commit(
@@ -2079,15 +2182,11 @@ def compact(
     import time as _time
 
     started = _time.time()
-    dv_possible = _dv_feature_present(table_dir)
     for attempt in range(5):
-        meta = _latest_meta(spark, table_dir)
-        partition_by = (
-            list(meta["partitionColumns"])
-            if meta and meta["partitionColumns"]
-            else None
-        )
-        lf = _live_frame(spark, table_dir)
+        table = snapshot(table_dir)
+        meta = table.metaData
+        partition_by = table.partition_columns or None
+        lf = _live_frame(spark, table_dir, table)
         if partition_filter:
             for k, v in partition_filter.items():
                 lf = lf.filter(
@@ -2107,7 +2206,7 @@ def compact(
             # nothing to bin-pack: zero or one qualifying CLEAN file
             # is already optimal — no commit (a lone DV'd file still
             # compacts: the rewrite ABSORBS its deletion vector)
-            return _next_version(table_dir) - 1
+            return table.version
         sel_paths = [r.path for r in selected]
         n_files = 1
         partition_bins = None
@@ -2138,10 +2237,10 @@ def compact(
         # DV'd files writes their SURVIVING rows clean — OPTIMIZE is
         # how merge-on-read debt is eventually absorbed
         snap, _rel = _scan_live(
-            spark, table_dir, lf, meta, dv_possible=dv_possible
+            spark, table_dir, lf, meta, dv_possible=table.dv_feature
         )
         if snap is None:
-            return _next_version(table_dir) - 1
+            return table.version
         removes = [
             {"remove": {"path": p, "dataChange": False}}
             for p in sel_paths
@@ -2257,22 +2356,6 @@ def _read_schema(schema_string: str | None, *extra):
     )
 
 
-def _dv_feature_present(table_dir: str) -> bool:
-    """Whether the table's CURRENT protocol carries the
-    ``deletionVectors`` reader feature — the gate without which no
-    live file can legally carry a DV descriptor.  This is the scan
-    fast-path switch (VERDICT r12 what's-wrong 1): on the vast
-    majority of tables (no DV feature) every ``_scan_live`` skips the
-    descriptor probe, the ``_metadata`` row-index materialization,
-    and the anti-join scaffolding entirely.  Distinct from
-    :func:`_dv_enabled` (the TABLE PROPERTY choosing the write
-    strategy): a table can have the feature with the property off —
-    its files may still carry vectors from earlier DML, so scans must
-    keep masking."""
-    proto = _current_protocol(table_dir)
-    return "deletionVectors" in (proto.get("readerFeatures") or [])
-
-
 def _scan_live(
     spark: SparkSession,
     table_dir: str,
@@ -2282,7 +2365,7 @@ def _scan_live(
     with_src: bool = False,
     with_row_idx: bool = False,
     manifest_threshold: int | None = None,
-    dv_possible: bool | None = None,
+    dv_possible: bool,
 ):
     """Scan the files of a live-file frame, choosing the census
     strategy by size: up to the manifest threshold, a driver path
@@ -2303,11 +2386,11 @@ def _scan_live(
     in-batch; the native path anti-joins the sidecar rows against
     parquet's ``_metadata.row_index`` — file NAMES are uuid-unique,
     so the join key needs no URI normalization).  ``dv_possible``
-    (default: derived from the protocol's reader features) gates ALL
-    of that: on a table whose protocol never had the deletionVectors
-    feature, no descriptor can exist, so the probe carries no DV
-    column and the scan plans no mask scaffolding at all — the non-DV
-    fast path (VERDICT r12 what's-wrong 1)."""
+    (the snapshot's :attr:`Snapshot.dv_feature`) gates ALL of that:
+    on a table whose protocol never had the deletionVectors feature,
+    no descriptor can exist, so the probe carries no DV column and
+    the scan plans no mask scaffolding at all — the non-DV fast path
+    (VERDICT r12 what's-wrong 1)."""
     from cdc_pipe_line_spark import manifest_scan as _ms
 
     threshold = (
@@ -2315,8 +2398,6 @@ def _scan_live(
         if manifest_threshold is not None
         else _ms.DEFAULT_THRESHOLD
     )
-    if dv_possible is None:
-        dv_possible = _dv_feature_present(table_dir)
     schema_string = meta["schemaString"] if meta else None
     probe_cols = (
         ["path", F.col("deletionVector").alias("dv"), "stats"]
@@ -2375,8 +2456,8 @@ def _plan_native_scan(
     deletionVector descriptor or None, add-stats JSON or None) — with
     DV anti-join masking, provenance columns, and declared-schema
     alignment.  Shared by :func:`_scan_live` (items from the
-    live-file frame probe) and the small-log driver replay
-    (:func:`_replay_log_driver`).  The scan reads with the declared
+    live-file frame probe) and :func:`read_snapshot` (items from the
+    snapshot's ``add`` actions).  The scan reads with the declared
     schema (:func:`_read_schema`), so planning it runs no Spark job;
     only a log without a schema falls back to footer inference."""
     dv_files = [it for it in items if it[1] is not None]
@@ -2544,7 +2625,7 @@ def set_table_properties(
     retention knobs, or any custom key.  Feature-gating properties
     with protocol requirements have dedicated upgrades
     (:func:`enable_deletion_vectors`, :func:`enable_column_mapping`)."""
-    meta = _latest_meta(spark, table_dir)
+    meta = snapshot(table_dir).metaData
     if meta is None:
         raise ValueError(f"no delta table at {table_dir}")
     cfg = dict(meta["configuration"] or {})
@@ -2589,7 +2670,7 @@ def enable_deletion_vectors(spark: SparkSession, table_dir: str) -> int:
     (storageType ``i``) — :mod:`cdc_pipe_line_spark.dvbitmap`.
     Vectors this engine wrote before round 13 (parquet sidecars under
     ``_deletion_vectors/``) remain readable."""
-    meta = _latest_meta(spark, table_dir)
+    meta = snapshot(table_dir).metaData
     if meta is None:
         raise ValueError(f"no delta table at {table_dir}")
     cfg = dict(meta["configuration"] or {})
@@ -2632,7 +2713,8 @@ def enable_in_commit_timestamps(
     reader agrees with on both sides of the boundary."""
     import time as _time
 
-    meta = _latest_meta(spark, table_dir)
+    table = snapshot(table_dir)
+    meta = table.metaData
     if meta is None:
         raise ValueError(f"no delta table at {table_dir}")
     cfg = dict(meta["configuration"] or {})
@@ -2642,11 +2724,10 @@ def enable_in_commit_timestamps(
     # metaData, so both are computed up front and the version is
     # pinned — losing a concurrent race surfaces to the caller
     # rather than committing properties that name the wrong version
-    v = _next_version(table_dir)
+    v = table.version + 1
     ict = int(_time.time() * 1000)
-    prev = _prev_commit_ts(table_dir, v)
-    if prev is not None:
-        ict = max(prev + 1, ict)
+    if table.commit_ts is not None:
+        ict = max(table.commit_ts + 1, ict)
     cfg["delta.enableInCommitTimestamps"] = "true"
     if v > 0:
         cfg["delta.inCommitTimestampEnablementVersion"] = str(v)
@@ -3057,22 +3138,19 @@ def _dml_where(
     # SQL WHERE semantics: a NULL predicate does not match, and the
     # flags derived from it must never be NULL either
     cond = F.coalesce(cond, F.lit(False))
-    dv = _dv_enabled(table_dir)
-    # masking is a PROTOCOL question, independent of the write mode: a
-    # copy-on-write statement over files that carry vectors must still
-    # mask, or its rewrite would resurrect the deleted rows; a never-DV
-    # table skips all mask scaffolding
-    dv_possible = dv or _dv_feature_present(table_dir)
 
     def _attempt() -> int:
-        meta = _latest_meta(spark, table_dir)
-        lf = _live_frame(spark, table_dir)
+        table = snapshot(table_dir)
+        meta, dv = table.metaData, table.dv_enabled
+        # masking is a PROTOCOL question, independent of the write
+        # mode: a copy-on-write statement over files that carry vectors
+        # must still mask, or its rewrite would resurrect the deleted
+        # rows; a never-DV table skips all mask scaffolding
+        dv_possible = dv or table.dv_feature
+        lf = _live_frame(spark, table_dir, table)
         if skipping:
             lf = lf.filter(
-                _skipping_keep(
-                    skipping,
-                    _mapping_from(_current_schema_string(table_dir)),
-                )
+                _skipping_keep(skipping, _mapping_from(table.schema_string))
             )
         scan, src_rel = _scan_live(
             spark,
@@ -3085,7 +3163,7 @@ def _dml_where(
             dv_possible=dv_possible,
         )
         if scan is None:
-            return _next_version(table_dir) - 1
+            return table.version
         matched = scan.filter(cond)
         if dv:
             matched = matched.localCheckpoint(eager=True)
@@ -3096,7 +3174,7 @@ def _dml_where(
             }
         )
         if not touched:
-            return _next_version(table_dir) - 1
+            return table.version
         base = matched
         if not dv:
             base, _ = _scan_live(
@@ -3322,11 +3400,6 @@ def merge_into(
     import time as _time
 
     started = _time.time()
-    dv = _dv_enabled(table_dir)
-    # masking possibility is a PROTOCOL question, independent of the
-    # write mode: a COW merge over files that carry vectors must
-    # still mask; a never-DV table skips all mask scaffolding
-    dv_possible = dv or _dv_feature_present(table_dir)
     has_matched_clause = bool(
         when_matched_update or when_matched_delete_condition
     )
@@ -3355,14 +3428,16 @@ def merge_into(
     }
 
     def _attempt() -> int:
-        meta = _latest_meta(spark, table_dir)
-        lf = _live_frame(spark, table_dir)
+        table = snapshot(table_dir)
+        meta, dv = table.metaData, table.dv_enabled
+        # masking possibility is a PROTOCOL question, independent of
+        # the write mode: a COW merge over files that carry vectors
+        # must still mask; a never-DV table skips all mask scaffolding
+        dv_possible = dv or table.dv_feature
+        lf = _live_frame(spark, table_dir, table)
         if skipping:
             lf = lf.filter(
-                _skipping_keep(
-                    skipping,
-                    _mapping_from(_current_schema_string(table_dir)),
-                )
+                _skipping_keep(skipping, _mapping_from(table.schema_string))
             )
         # the locate join also checks cardinality, so it groups the
         # matches by target row: (__src, __ridx)
@@ -3569,7 +3644,7 @@ def merge_into(
                 ins_gate.alias("__m_insert"),
             ).localCheckpoint(eager=True)
         else:
-            return _next_version(table_dir) - 1
+            return table.version
         meta_actions = []
         if evolved and meta:
             # the merge commit itself evolves the declared schema:
@@ -3655,7 +3730,7 @@ def optimize_zorder(
         raise ValueError("optimize_zorder needs at least one column")
     started = _time.time()
     for attempt in range(5):
-        meta = _latest_meta(spark, table_dir)
+        meta = snapshot(table_dir).metaData
         if meta and meta["partitionColumns"]:
             raise ValueError(
                 "optimize_zorder: table is Hive-partitioned on "
@@ -3715,9 +3790,10 @@ def optimize_zorder(
             .sortWithinPartitions("__z")
             .drop("__z")
         )
+        live = _live_frame(spark, table_dir, snapshot(table_dir))
         removes = [
-            {"remove": {"path": p, "dataChange": False}}
-            for p in _live_file_names(spark, table_dir)
+            {"remove": {"path": r.path, "dataChange": False}}
+            for r in live.select("path").collect()
         ]
         adds = _write_data_files(clustered, table_dir, n_files=n_files)
         for a in adds:
@@ -3752,50 +3828,10 @@ def last_txn_version(
 ) -> int | None:
     """Highest committed ``txn.version`` for ``app_id`` — the
     exactly-once handshake a streaming sink reads before applying a
-    micro-batch (the protocol's SetTransaction action).  Driver-side
-    on small logs (every micro-batch pays this lookup; a Spark job
-    here is pure scheduling overhead), distributed past the replay
-    byte budget."""
-    import json as _json
-
-    log_dir = os.path.join(table_dir, "_delta_log")
-    if not os.path.isdir(log_dir):
-        return None
-    jsons = [
-        os.path.join(log_dir, f"{v:020d}.json")
-        for v in _commit_versions(log_dir)
-    ]
-    ck = _checkpoint_version(table_dir)
-    ck_paths: list[str] = []
-    if ck is not None:
-        src = _checkpoint_sources(log_dir, ck)
-        ck_paths = src["parquet"] + src["json"]
-    total = sum(os.path.getsize(p) for p in ck_paths + jsons)
-    if total <= DRIVER_REPLAY_MAX_BYTES:
-        best = None
-        if ck is not None:
-            for r in _iter_checkpoint_actions(
-                log_dir, ck, columns=["txn"]
-            ):
-                t = r.get("txn")
-                if t and t.get("appId") == app_id:
-                    v = int(t["version"])
-                    best = v if best is None else max(best, v)
-        for f in jsons:
-            with open(f) as fh:
-                for line in fh:
-                    t = _json.loads(line).get("txn")
-                    if t and t.get("appId") == app_id:
-                        v = int(t["version"])
-                        best = v if best is None else max(best, v)
-        return best
-    row = (
-        read_log_actions(spark, table_dir)
-        .filter(F.col("txn.appId") == app_id)
-        .agg(F.max("txn.version").alias("v"))
-        .first()
-    )
-    return None if row is None or row["v"] is None else int(row["v"])
+    micro-batch (the protocol's SetTransaction action).  A field of the
+    table's :func:`snapshot`, so a micro-batch pays no Spark job and,
+    with nothing committed since the last lookup, no log read."""
+    return snapshot(table_dir).txn.get(app_id)
 
 
 def txn_append(
@@ -4140,7 +4176,7 @@ def candidate_files(
     if partition_filter:
         for k, v in partition_filter.items():
             lf = lf.filter(F.col("partitionValues").getItem(k) == v)
-    mapping = _mapping_from(_current_schema_string(table_dir))
+    mapping = _mapping_from(snapshot(table_dir).schema_string)
     return lf.filter(_skipping_keep(skipping, mapping))
 
 
@@ -4190,7 +4226,8 @@ def _assert_writer_supported(table_dir: str, actions: list[dict]) -> None:
     data-changing ``remove`` on an append-only table is refused
     (OPTIMIZE's dataChange=false rewrites stay legal).  Driver-side
     metadata reads only."""
-    proto = _current_protocol(table_dir)
+    table = snapshot(table_dir)
+    proto = table.protocol
     if not proto:
         return
     w = int(proto.get("minWriterVersion") or 1)
@@ -4206,7 +4243,7 @@ def _assert_writer_supported(table_dir: str, actions: list[dict]) -> None:
             f"this writer does not implement — refusing to commit "
             f"rather than corrupting the feature's contract"
         )
-    if _current_table_config(table_dir).get("delta.appendOnly") == "true":
+    if table.configuration.get("delta.appendOnly") == "true":
         for a in actions:
             rm = a.get("remove")
             if rm and rm.get("dataChange"):
@@ -4217,19 +4254,17 @@ def _assert_writer_supported(table_dir: str, actions: list[dict]) -> None:
                 )
 
 
-def _assert_reader_supported(proto) -> None:
+def _assert_reader_supported(proto: dict) -> None:
     """Raise when the snapshot's protocol gates the table on a reader
     version or table feature this implementation does not have —
     per-spec, reading anyway could silently produce wrong answers."""
-    if proto is None:
-        return
-    r = int(proto["minReaderVersion"] or 1)
+    r = int(proto.get("minReaderVersion") or 1)
     if r > MAX_READER_VERSION:
         raise ValueError(
             f"table requires minReaderVersion {r}; this reader "
             f"implements up to {MAX_READER_VERSION}"
         )
-    unknown = set(proto["readerFeatures"] or []) - SUPPORTED_READER_FEATURES
+    unknown = set(proto.get("readerFeatures") or []) - SUPPORTED_READER_FEATURES
     if r >= 3 and unknown:
         raise ValueError(
             f"table requires reader features {sorted(unknown)} that "
@@ -4337,7 +4372,7 @@ def resolve_timestamp(
             f"{table_dir}: no surviving JSON commits to resolve a "
             f"timestamp against"
         )
-    cfg = _current_table_config(table_dir)
+    cfg = snapshot(table_dir).configuration
     if cfg.get("delta.enableInCommitTimestamps") == "true":
         enable_v = int(
             cfg.get("delta.inCommitTimestampEnablementVersion", "0")
@@ -4365,117 +4400,6 @@ def resolve_timestamp(
     if v is not None:
         return v
     _raise_ts_out_of_range(table_dir, ts)
-
-
-#: total log bytes (checkpoint parts + JSON tail) up to which state
-#: reconstruction happens DRIVER-SIDE with zero Spark jobs; past it
-#: the distributed replay takes over
-DRIVER_REPLAY_MAX_BYTES = 8 << 20
-
-
-def _replay_log_driver(
-    table_dir: str,
-    *,
-    version_as_of: int | None = None,
-    max_bytes: int = DRIVER_REPLAY_MAX_BYTES,
-) -> dict | None:
-    """DRIVER-SIDE state reconstruction for SMALL logs — the shape a
-    production Delta reader has: log replay is a metadata operation,
-    so below :data:`DRIVER_REPLAY_MAX_BYTES` of checkpoint + JSON
-    tail it runs as plain file reads with ZERO Spark jobs (measured:
-    each metadata job on a vanilla session costs 0.3-0.7 s of pure
-    scheduling — the dominant cost of reading a small table, and the
-    root of the r12 steady-read regression).  Returns ``{"adds":
-    [add dicts], "meta": metaData dict | None, "proto": protocol
-    dict | None}`` replayed with the same last-action-wins
-    ``(version, is_add)`` rule as :func:`live_files`, or ``None``
-    when the log exceeds the byte budget (callers fall back to the
-    distributed replay, which scales to 10⁶ actions).
-
-    Time travel matches :func:`read_snapshot_actions`: versions at or
-    past the checkpoint reconstruct from checkpoint + filtered tail;
-    below it the raw JSON must survive or this raises the same
-    log-cleanup error."""
-    import json as _json
-
-    log_dir = os.path.join(table_dir, "_delta_log")
-    if not os.path.isdir(log_dir):
-        return None
-    versions = _commit_versions(log_dir)
-    ck = _checkpoint_version(table_dir)
-    use_ck = ck is not None and (
-        version_as_of is None or version_as_of >= ck
-    )
-    if ck is not None and not use_ck:
-        if not versions or versions[0] != 0:
-            raise ValueError(
-                f"version {version_as_of} of {table_dir} is no longer "
-                f"reconstructable: log cleanup removed the JSON commits "
-                f"before checkpoint {ck}"
-            )
-    total = 0
-    ck_paths: list[str] = []
-    if use_ck:
-        src = _checkpoint_sources(log_dir, ck)
-        ck_paths = src["parquet"] + src["json"]
-        total += sum(os.path.getsize(p) for p in ck_paths)
-        tail = [v for v in versions if v > ck]
-    else:
-        tail = versions
-    if version_as_of is not None:
-        tail = [v for v in tail if v <= version_as_of]
-    tail_paths = [os.path.join(log_dir, f"{v:020d}.json") for v in tail]
-    total += sum(os.path.getsize(p) for p in tail_paths)
-    if total > max_bytes:
-        return None
-    if not ck_paths and not tail:
-        return None  # nothing to replay — let callers raise their way
-    best: dict[str, tuple] = {}
-    meta: dict | None = None
-    proto: dict | None = None
-    meta_v = proto_v = -1
-
-    def _apply(act: dict, v: int) -> None:
-        nonlocal meta, proto, meta_v, proto_v
-        md = act.get("metaData")
-        if md is not None and v >= meta_v:
-            meta, meta_v = md, v
-        pr = act.get("protocol")
-        if pr is not None and v >= proto_v:
-            proto, proto_v = pr, v
-        a = act.get("add")
-        if a is not None:
-            key = (v, True)
-            p = a["path"]
-            if p not in best or key > best[p][0]:
-                best[p] = (key, a)
-            return
-        r = act.get("remove")
-        if r is not None:
-            key = (v, False)
-            p = r["path"]
-            if p not in best or key > best[p][0]:
-                best[p] = (key, None)
-
-    if ck_paths:
-        for rec in _iter_checkpoint_actions(log_dir, ck):
-            act = {k: v for k, v in rec.items() if v is not None}
-            a = act.get("add")
-            if a is not None:
-                # pyarrow renders parquet MAP columns as
-                # [(key, value), ...] lists — normalize to the
-                # dict shape the JSON branch produces
-                for mk in ("partitionValues",):
-                    if isinstance(a.get(mk), list):
-                        a[mk] = dict(a[mk])
-            _apply(act, ck)
-    for v, path in zip(tail, tail_paths):
-        with open(path) as fh:
-            for line in fh:
-                if line.strip():
-                    _apply(_json.loads(line), v)
-    adds = [a for (_k, a) in best.values() if a is not None]
-    return {"adds": adds, "meta": meta, "proto": proto}
 
 
 def _skipping_keep_py(
@@ -4576,6 +4500,11 @@ def read_snapshot(
     (:mod:`cdc_pipe_line_spark.manifest_scan`) — driver memory and
     plan size stay bounded however many add-actions the table has
     (VERDICT r11 what's-wrong 3).
+
+    The declared schema, the protocol's reader gate and (below
+    :data:`DRIVER_REPLAY_MAX_BYTES`) the live files all come from the
+    table's :func:`snapshot` at the version read, so planning the read
+    of a small log runs no Spark job.
     """
     if timestamp_as_of is not None:
         if version_as_of is not None:
@@ -4585,33 +4514,25 @@ def read_snapshot(
         version_as_of = resolve_timestamp(
             spark, table_dir, timestamp_as_of
         )
-    # SMALL-LOG FAST PATH: state reconstruction driver-side and a scan
-    # in the declared schema, so planning the read runs no Spark job
-    # and a point lookup over it runs exactly one — the dominant cost
-    # of reading a small table is otherwise pure job scheduling
-    # (0.1-0.7 s per metadata job on a vanilla session).  An explicit
-    # manifest_threshold override (tests exercising the manifest
-    # route) bypasses it, as does any log past the byte budget.
-    state = (
-        _replay_log_driver(table_dir, version_as_of=version_as_of)
-        if manifest_threshold is None
-        else None
-    )
-    if state is not None:
-        meta = state["meta"]
-        proto = state["proto"]
-        _assert_reader_supported(
-            {
-                "minReaderVersion": proto.get("minReaderVersion"),
-                "readerFeatures": proto.get("readerFeatures"),
-            }
-            if proto
-            else None
-        )
-        dv_possible = proto is not None and "deletionVectors" in (
-            proto.get("readerFeatures") or []
-        )
-        adds = state["adds"]
+    # the state AS OF the resolved version: time travel reads the
+    # then-declared schema, not today's, and the protocol gate of that
+    # version
+    table = snapshot(table_dir, version_as_of=version_as_of)
+    # the spec's reader gate: refuse tables requiring features this
+    # implementation lacks — never silently mis-reconstruct
+    _assert_reader_supported(table.protocol)
+    meta = table.metaData
+    schema_string = table.schema_string
+    # SMALL-LOG FAST PATH: the live files come from the snapshot and
+    # the scan reads in the declared schema, so planning the read runs
+    # no Spark job and a point lookup over it runs exactly one — the
+    # dominant cost of reading a small table is otherwise pure job
+    # scheduling (0.1-0.7 s per metadata job on a vanilla session).
+    # An explicit manifest_threshold override (tests exercising the
+    # manifest route) bypasses it, as does any log past the byte
+    # budget.
+    if table.adds is not None and manifest_threshold is None:
+        adds = table.adds
         if partition_filter:
             adds = [
                 a
@@ -4621,7 +4542,6 @@ def read_snapshot(
                     for k, v in partition_filter.items()
                 )
             ]
-        schema_string = meta["schemaString"] if meta else None
         if skipping:
             mapping = _mapping_from(schema_string)
             adds = [
@@ -4629,104 +4549,58 @@ def read_snapshot(
                 for a in adds
                 if _skipping_keep_py(a.get("stats"), skipping, mapping)
             ]
-        if not adds:
-            if skipping:
-                import json as _json
-
-                from pyspark.sql.types import StructType
-
-                return spark.createDataFrame(
-                    [], StructType.fromJson(_json.loads(schema_string))
+        out = None
+        if adds:
+            items = [
+                (
+                    a["path"],
+                    a.get("deletionVector") if table.dv_feature else None,
+                    a.get("stats") if table.dv_feature else None,
                 )
-            raise ValueError(
-                f"delta log at {table_dir} has no live files"
-            )
-        items = [
-            (
-                a["path"],
-                a.get("deletionVector") if dv_possible else None,
-                a.get("stats") if dv_possible else None,
-            )
-            for a in adds
-        ]
-        out = _plan_native_scan(spark, table_dir, items, schema_string)
-        if skipping:
-            out = _skipping_row_filter(out, skipping)
-        return out
-    if version_as_of is not None:
-        actions = read_snapshot_actions(
-            spark, table_dir, version_as_of=version_as_of
-        )
+                for a in adds
+            ]
+            out = _plan_native_scan(spark, table_dir, items, schema_string)
     else:
-        actions = read_log_actions(spark, table_dir)
-    lf = live_files(actions)
-    if partition_filter:
-        # PARTITION PRUNING from the log's partitionValues — files of
-        # non-matching partitions never reach the scan plan at all
-        for k, v in partition_filter.items():
-            lf = lf.filter(F.col("partitionValues").getItem(k) == v)
-    if skipping:
-        # DATA SKIPPING: drop files whose stat envelope refutes the
-        # predicate — a metadata-only decision per file (stats keys
-        # are physical names under column mapping)
-        lf = lf.filter(
-            _skipping_keep(
-                skipping,
-                _mapping_from(_current_schema_string(table_dir)),
+        if version_as_of is not None:
+            actions = read_snapshot_actions(
+                spark, table_dir, version_as_of=version_as_of
             )
+        else:
+            actions = read_log_actions(spark, table_dir)
+        lf = live_files(actions)
+        if partition_filter:
+            # PARTITION PRUNING from the log's partitionValues — files
+            # of non-matching partitions never reach the scan plan
+            for k, v in partition_filter.items():
+                lf = lf.filter(F.col("partitionValues").getItem(k) == v)
+        if skipping:
+            # DATA SKIPPING: drop files whose stat envelope refutes the
+            # predicate — a metadata-only decision per file (stats keys
+            # are physical names under column mapping)
+            lf = lf.filter(
+                _skipping_keep(skipping, _mapping_from(schema_string))
+            )
+        # census strategy, provenance, and deletion-vector masking all
+        # live in _scan_live: driver path list + native pushdown below
+        # the threshold, distributed manifest + executor-side reads
+        # past it — the bounded 100 TB shape either way.  The protocol
+        # AS OF the resolved version decides whether mask scaffolding
+        # is even possible (the non-DV fast path).
+        out, _rel = _scan_live(
+            spark,
+            table_dir,
+            lf,
+            meta,
+            manifest_threshold=manifest_threshold,
+            dv_possible=table.dv_feature,
         )
-    # the metaData AS OF the resolved version (time travel reads the
-    # then-declared schema, not today's) and the protocol gate in ONE
-    # aggregate job — the log would otherwise be re-scanned per
-    # lookup, a measured fixed cost on every snapshot read (the r12
-    # bench regression on cdc_delta_merge_native's steady read)
-    top = actions.agg(
-        F.max_by(
-            F.struct(
-                "metaData.schemaString", "metaData.partitionColumns"
-            ),
-            F.when(F.col("metaData").isNotNull(), F.col("version")),
-        ).alias("meta"),
-        F.max_by(
-            F.struct(
-                "protocol.minReaderVersion", "protocol.readerFeatures"
-            ),
-            F.when(F.col("protocol").isNotNull(), F.col("version")),
-        ).alias("proto"),
-    ).first()
-    meta = top["meta"]
-    proto_row = top["proto"]
-    # the spec's reader gate: refuse tables requiring features this
-    # implementation lacks — never silently mis-reconstruct
-    _assert_reader_supported(proto_row)
-    # census strategy, provenance, and deletion-vector masking all
-    # live in _scan_live: driver path list + native pushdown below
-    # the threshold, distributed manifest + executor-side reads past
-    # it — the bounded 100 TB shape either way.  The protocol AS OF
-    # the resolved version decides whether mask scaffolding is even
-    # possible (the non-DV fast path).
-    out, _rel = _scan_live(
-        spark,
-        table_dir,
-        lf,
-        meta,
-        manifest_threshold=manifest_threshold,
-        dv_possible=(
-            proto_row is not None
-            and "deletionVectors" in (proto_row["readerFeatures"] or [])
-        ),
-    )
     if out is None:
         if skipping:
             # every file's envelope refuted the predicate — a correct
             # EMPTY result (in the declared schema), not an error
-            import json as _json
-
             from pyspark.sql.types import StructType
 
-            declared = StructType.fromJson(
-                _json.loads(meta["schemaString"])
-            )
+            declared = StructType.fromJson(json.loads(schema_string))
             return spark.createDataFrame([], declared)
         raise ValueError(f"delta log at {table_dir} has no live files")
     if skipping:
@@ -4979,36 +4853,23 @@ def read_changes(
     double-reported.
 
     One bounded metadata pass plans the per-(version, type) file
-    lists — the commits in the range read on the driver, or one
-    distributed log scan past :data:`DRIVER_REPLAY_MAX_BYTES`
+    lists: the commits in the range, read on the driver
     (:func:`_span_actions`); the data reads are plain parquet scans
     unioned per commit — plan legs bounded by the version range, never
     by data size.  Every leg reads in the declared schema of the
-    ending version, so a range that crosses a schema evolution
-    null-fills the new columns in the older legs, and planning the
-    feed runs no Spark job below the byte budget."""
-    first_needed = os.path.join(
-        table_dir, "_delta_log", f"{starting_version + 1:020d}.json"
-    )
-    ck = _checkpoint_version(table_dir)
-    if (
-        ck is not None
-        and starting_version + 1 <= ck
-        and not os.path.exists(first_needed)
-    ):
-        raise ValueError(
-            f"changes after version {starting_version} of {table_dir} "
-            f"are no longer reconstructable: log cleanup removed the "
-            f"JSON commits before checkpoint {ck}"
-        )
+    ending version (its :func:`snapshot`), so a range that crosses a
+    schema evolution null-fills the new columns in the older legs, and
+    planning the feed runs no Spark job."""
+    table = snapshot(table_dir)
+    _assert_changes_readable(table_dir, table, starting_version)
     hi = ending_version
     if hi is None:
-        log_dir = os.path.join(table_dir, "_delta_log")
-        versions = _commit_versions(log_dir)
-        if not versions:
-            raise FileNotFoundError(f"no JSON commits under {log_dir}")
-        hi = versions[-1]
-    span = _span_actions(spark, table_dir, starting_version, hi)
+        if table.version < 0:
+            raise FileNotFoundError(
+                f"no JSON commits under {os.path.join(table_dir, '_delta_log')}"
+            )
+        hi = table.version
+    span = _span_actions(table_dir, starting_version, hi)
     cdc_rows = [
         (v, a["cdc"]["path"])
         for v, a in span
@@ -5051,9 +4912,8 @@ def read_changes(
     rm_file_level = [
         (v, p) for v, p in removes_changed if v not in cdc_versions
     ]
-    if rm_file_level and _dv_feature_present(table_dir):
+    if rm_file_level and table.dv_feature:
         prior = _span_actions(
-            spark,
             table_dir,
             -1,
             max(v for v, _p in rm_file_level) - 1,
@@ -5077,8 +4937,7 @@ def read_changes(
     # so the legs union cleanly, and planning runs no inference job
     from pyspark.sql.types import StringType, StructField
 
-    meta = _latest_meta(spark, table_dir, version_as_of=hi)
-    schema_string = meta["schemaString"] if meta else None
+    schema_string = snapshot(table_dir, version_as_of=hi).schema_string
     mapping = _mapping_from(schema_string)
     data_schema = _read_schema(schema_string)
     cdc_schema = _read_schema(
@@ -5136,8 +4995,24 @@ def read_changes(
     return out
 
 
+def _assert_changes_readable(
+    table_dir: str, table: Snapshot, starting_version: int
+) -> None:
+    """Raise when the JSON commits after ``starting_version`` were
+    removed by log cleanup: the checkpoint holds their state but not
+    their changes, so a change read from there would silently skip
+    them."""
+    ck = table.checkpoint_version
+    first = _commit_path(os.path.join(table_dir, "_delta_log"), starting_version + 1)
+    if ck is not None and starting_version + 1 <= ck and not os.path.exists(first):
+        raise ValueError(
+            f"changes after version {starting_version} of {table_dir} "
+            f"are no longer reconstructable: log cleanup removed the "
+            f"JSON commits before checkpoint {ck}"
+        )
+
+
 def _span_actions(
-    spark: SparkSession,
     table_dir: str,
     lo: int,
     hi: int,
@@ -5146,54 +5021,27 @@ def _span_actions(
 ) -> list[tuple[int, dict]]:
     """``(version, action)`` for the file actions (add / remove /
     cdc) of the JSON commits in ``(lo, hi]`` — with ``add_paths``,
-    only the adds of those paths.  The change feed's metadata pass:
-    while the commits' total size stays within
-    :data:`DRIVER_REPLAY_MAX_BYTES` they are read on the driver with
-    no Spark job; past it one distributed scan collects the same
-    actions."""
-    import json as _json
-
+    only the adds of those paths — read on the driver with no Spark
+    job.  The change feed's metadata pass, and the ``delta_stream``
+    source's."""
     log_dir = os.path.join(table_dir, "_delta_log")
-    versions = [v for v in _commit_versions(log_dir) if lo < v <= hi]
-    files = [os.path.join(log_dir, f"{v:020d}.json") for v in versions]
     keep = set(add_paths) if add_paths is not None else None
-    if sum(os.path.getsize(f) for f in files) <= DRIVER_REPLAY_MAX_BYTES:
-        out = []
-        for v, f in zip(versions, files):
-            with open(f) as fh:
-                for line in fh:
-                    if not line.strip():
-                        continue
-                    act = _json.loads(line)
-                    if keep is not None:
-                        hit = (act.get("add") or {}).get("path") in keep
-                    else:
-                        hit = any(k in act for k in ("add", "remove", "cdc"))
-                    if hit:
-                        out.append((v, act))
-        return out
-    acts = read_log_actions(spark, table_dir, json_only=True).filter(
-        (F.col("version") > lo) & (F.col("version") <= hi)
-    )
-    if keep is not None:
-        acts = acts.filter(F.col("add.path").isin(sorted(keep)))
-    else:
-        acts = acts.filter(
-            F.col("add").isNotNull()
-            | F.col("remove").isNotNull()
-            | F.col("cdc").isNotNull()
-        )
-    return [
-        (
-            int(r.version),
-            {
-                k: r[k].asDict(recursive=True)
-                for k in ("add", "remove", "cdc")
-                if r[k] is not None
-            },
-        )
-        for r in acts.select("version", "add", "remove", "cdc").collect()
-    ]
+    out = []
+    for v in _commit_versions(log_dir):
+        if not lo < v <= hi:
+            continue
+        with open(_commit_path(log_dir, v)) as fh:
+            for line in fh:
+                if not line.strip():
+                    continue
+                act = json.loads(line)
+                if keep is not None:
+                    hit = (act.get("add") or {}).get("path") in keep
+                else:
+                    hit = any(k in act for k in ("add", "remove", "cdc"))
+                if hit:
+                    out.append((v, act))
+    return out
 
 
 def table_history(spark: SparkSession, table_dir: str) -> DataFrame:
@@ -5270,7 +5118,7 @@ def table_detail(spark: SparkSession, table_dir: str) -> DataFrame:
             F.sum("deletionVector.cardinality"), F.lit(0)
         ).cast("bigint").alias("dv_deleted_rows"),
     )
-    meta = _latest_meta(spark, table_dir)
+    meta = snapshot(table_dir).metaData
     cfg = (meta["configuration"] or {}) if meta else {}
     n_cons = sum(1 for k in cfg if k.startswith(_CONSTRAINT_PREFIX))
     n_gen = 0

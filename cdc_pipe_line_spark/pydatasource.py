@@ -379,24 +379,20 @@ def read_stream_ledger(spark, path: str, schema: str):
 
 
 def _delta_schema_and_names(table_dir: str) -> tuple[str, list[str]]:
-    """Driver-side read of the latest metaData.schemaString straight
-    from the JSON log (no Spark session — DataSource.schema() runs
-    before the scan is planned).  Returns (DDL, column names)."""
+    """The latest metaData.schemaString, from the table's
+    :func:`deltalog.snapshot` (checkpoint included; no Spark session —
+    DataSource.schema() runs before the scan is planned).  Returns
+    (DDL, column names)."""
     import json
     import os
 
-    log_dir = os.path.join(table_dir, "_delta_log")
-    meta = None
-    for f in sorted(os.listdir(log_dir)):
-        if not f.endswith(".json"):
-            continue
-        with open(os.path.join(log_dir, f)) as fh:
-            for line in fh:
-                act = json.loads(line)
-                if "metaData" in act:
-                    meta = act["metaData"]
+    from cdc_pipe_line_spark import deltalog
+
+    meta = deltalog.snapshot(table_dir).metaData
     if meta is None:
-        raise ValueError(f"no metaData action in {log_dir}")
+        raise ValueError(
+            f"no metaData action in {os.path.join(table_dir, '_delta_log')}"
+        )
     if meta.get("partitionColumns"):
         raise ValueError(
             "delta_stream source supports unpartitioned tables (the "
@@ -461,44 +457,31 @@ class _DeltaStreamReader(DataSourceStreamReader):
         _ddl, self.col_names = _delta_schema_and_names(self.table_dir)
 
     def _log_actions(self, lo: int, hi: int) -> list[tuple]:
-        import json
-        import os
+        """The data-changing file actions of the commits in
+        ``(lo, hi]``; raises when log cleanup removed them (the
+        checkpoint holds their state, not their changes)."""
+        from cdc_pipe_line_spark import deltalog
 
+        deltalog._assert_changes_readable(
+            self.table_dir, deltalog.snapshot(self.table_dir), lo
+        )
         out = []
-        log_dir = os.path.join(self.table_dir, "_delta_log")
-        for f in sorted(os.listdir(log_dir)):
-            if not f.endswith(".json"):
-                continue
-            v = int(f.split(".")[0])
-            if v <= lo or v > hi:
-                continue
-            with open(os.path.join(log_dir, f)) as fh:
-                for line in fh:
-                    act = json.loads(line)
-                    if "add" in act and act["add"].get("dataChange"):
-                        out.append(("add", act["add"]["path"], v))
-                    elif (
-                        "remove" in act
-                        and act["remove"].get("dataChange")
-                    ):
-                        out.append(("remove", act["remove"]["path"], v))
-                    elif "cdc" in act:
-                        out.append(("cdc", act["cdc"]["path"], v))
+        for v, act in deltalog._span_actions(self.table_dir, lo, hi):
+            if "add" in act and act["add"].get("dataChange"):
+                out.append(("add", act["add"]["path"], v))
+            elif "remove" in act and act["remove"].get("dataChange"):
+                out.append(("remove", act["remove"]["path"], v))
+            elif "cdc" in act:
+                out.append(("cdc", act["cdc"]["path"], v))
         return out
 
     def initialOffset(self) -> dict:
         return {"version": self.start_version}
 
     def latestOffset(self) -> dict:
-        import os
+        from cdc_pipe_line_spark import deltalog
 
-        log_dir = os.path.join(self.table_dir, "_delta_log")
-        versions = [
-            int(f.split(".")[0])
-            for f in os.listdir(log_dir)
-            if f.endswith(".json")
-        ]
-        return {"version": max(versions) if versions else -1}
+        return {"version": deltalog.snapshot(self.table_dir).version}
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
         acts = self._log_actions(start["version"], end["version"])

@@ -2298,14 +2298,14 @@ def q_delta_ict_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         ci_first = ci_first and "commitInfo" in first and (
             first["commitInfo"].get("inCommitTimestamp") is not None
         )
-    cfg = deltalog._current_table_config(base)
+    cfg = deltalog.snapshot(base).configuration
     props_ok = (
         cfg.get("delta.enableInCommitTimestamps") == "true"
         and cfg.get("delta.inCommitTimestampEnablementVersion") == "2"
         and cfg.get("delta.inCommitTimestampEnablementTimestamp")
         == str(icts[2])
     )
-    proto = deltalog._current_protocol(base)
+    proto = deltalog.snapshot(base).protocol
     feature_gated = int(proto.get("minWriterVersion") or 0) == 7 and (
         "inCommitTimestamp" in (proto.get("writerFeatures") or [])
     )

@@ -734,23 +734,15 @@ def run_scd2_stream(
             .filter(F.col("__bucket").isin(heavy))
             .repartition(len(heavy), "__bucket")
         )
-        out = (
-            resolve_scd2_segments(segments)
-            .withColumn("__seq", F.lit(batch_id).cast("bigint"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        try:
-            # materialize fully BEFORE the overwrite touches the
-            # directory being compacted: staged output is invisible
-            # to a recompute, but the replaced partitions are not
-            out.count()
-            # a write option, not the session conf: the caller's own
-            # overwrites keep their partitionOverwriteMode
-            out.write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy("__bucket").parquet(data_dir)
-        finally:
-            out.unpersist()
+        # Straight from the plan: dynamic partition overwrite replaces
+        # the bucket directories only at job commit, after every task
+        # has read its input.  A write option, not the session conf:
+        # the caller's own overwrites keep their partitionOverwriteMode.
+        resolve_scd2_segments(segments).withColumn(
+            "__seq", F.lit(batch_id).cast("bigint")
+        ).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("__bucket").parquet(data_dir)
 
     deduped = dedup_within_watermark(
         events_stream, ts_col=ts_col, watermark=watermark

@@ -1,14 +1,19 @@
 """Driver-side planning of the native Delta log: job budgets for reads
 and the SCD2 MERGE, codegen classes reused across steady rounds, the
 MERGE's single target-source join, declared-schema scans against
-footer-inferred ones, change feeds across a schema evolution, and the
-log listing behind ``read_log_actions``."""
+footer-inferred ones, change feeds across a schema evolution, the log
+listing behind ``read_log_actions``, and the cached table snapshot."""
 
 from __future__ import annotations
 
+import builtins
 import glob
 import json
 import os
+import shutil
+import subprocess
+import sys
+import threading
 import uuid
 from contextlib import contextmanager
 from types import SimpleNamespace
@@ -248,7 +253,7 @@ def test_declared_scan_deletion_vectors(spark, tmp_path, monkeypatch):
     _table(spark, path)
     deltalog.enable_deletion_vectors(spark, path)
     deltalog.delete_where(spark, path, "k = 2")
-    live = deltalog._replay_log_driver(path)["adds"]
+    live = deltalog.snapshot(path).adds
     assert any(a.get("deletionVector") for a in live)
     assert rows(deltalog.read_snapshot(spark, path).select("k")) == [(1,), (3,)]
     same_as_inferred(monkeypatch, lambda: deltalog.read_snapshot(spark, path))
@@ -291,9 +296,10 @@ def test_read_changes_partitioned_legs_carry_partition_columns(spark, tmp_path):
     ]
 
 
-def test_change_feed_routes_agree(spark, tmp_path, monkeypatch):
-    """The driver-side log walk and the distributed log scan past the
-    byte budget plan the same feed, deletion-vector masking included."""
+def test_change_feed_routes_agree(spark, tmp_path):
+    """The driver-side log walk plans the feed with deletion-vector
+    masking: the overwrite's delete leg skips the row a DV delete
+    already reported."""
     path = str(tmp_path / "t")
     _table(spark, path)
     deltalog.enable_deletion_vectors(spark, path)
@@ -309,14 +315,10 @@ def test_change_feed_routes_agree(spark, tmp_path, monkeypatch):
             )
         )
 
-    driver = feed()
     # the overwrite's delete leg masks the row the DV delete reported
-    assert [r for r in driver if r[0] == "delete"] == [
+    assert [r for r in feed() if r[0] == "delete"] == [
         ("delete", 1, 3), ("delete", 2, 2), ("delete", 3, 3)
     ]
-    with monkeypatch.context() as m:
-        m.setattr(deltalog, "DRIVER_REPLAY_MAX_BYTES", 0)
-        assert feed() == driver
 
 
 def test_writes_land_the_declared_types(spark, tmp_path):
@@ -554,3 +556,185 @@ def test_dv_merge_matches_copy_on_write(spark, tmp_path):
         (8, "up", 16.0, "update_postimage"),
     }
     assert metrics == {"numUpdatedRows": "3"}
+
+
+# -- the cached table snapshot ---------------------------------------------
+
+
+@contextmanager
+def count_log_reads(monkeypatch):
+    """Yields a list that collects every ``_delta_log`` file the block
+    opens for reading."""
+    opened: list[str] = []
+    real_open = builtins.open
+
+    def counting_open(file, mode="r", *args, **kwargs):
+        if "_delta_log" in str(file) and not set(str(mode)) & set("wxa+"):
+            opened.append(str(file))
+        return real_open(file, mode, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(builtins, "open", counting_open)
+        yield opened
+
+
+def test_steady_round_log_reads_stay_flat(spark, tmp_path, monkeypatch):
+    """A steady SCD2 apply plus a current point read opens no more log
+    files at 12 versions than at 4: each lookup parses only the commits
+    written since the cached one, not the whole log."""
+    table = str(tmp_path / "scd2")
+    data = [(i, "O", float(i)) for i in range(200)]
+    prev, _ = _land(spark, table, data, None)
+
+    def steady_round(r):
+        nonlocal prev, data
+        data = [(i, s, p + 1.0 if i % 40 == r % 40 else p) for i, s, p in data]
+        prev, _ = _land(spark, table, data, prev)
+        got = (
+            deltalog.read_snapshot(spark, table)
+            .filter((F.col("key_value") == "7") & F.col("is_current"))
+            .collect()
+        )
+        assert len(got) == 1
+
+    reads = {}
+    r = 0
+    for versions in (4, 12):
+        while deltalog._next_version(table) < versions:
+            r += 1
+            steady_round(r)
+        r += 1
+        with count_log_reads(monkeypatch) as opened:
+            steady_round(r)
+        reads[versions] = len(opened)
+    assert reads[12] <= reads[4], reads
+
+
+def test_snapshot_sees_another_writers_commit(spark, tmp_path):
+    """A commit another process writes is in the next lookup of a warm
+    cache: its version, its metaData and its removed file."""
+    path = str(tmp_path / "t")
+    _table(spark, path)
+    deltalog.append(
+        spark, spark.createDataFrame([(4, "d", 40.0)], "k int, s string, v double"), path
+    )
+    before = deltalog.snapshot(path)
+    assert rows(deltalog.read_snapshot(spark, path).select("k")) == [(1,), (2,), (3,), (4,)]
+    gone = next(a["path"] for a in before.adds if a["path"] != before.adds[0]["path"])
+    gone_rows = rows(spark.read.parquet(os.path.join(path, gone)).select("k"))
+    script = (
+        "import sys; from cdc_pipe_line_spark import deltalog; "
+        "deltalog.set_table_properties(None, sys.argv[1], {'owner': 'other'}); "
+        "deltalog.commit(sys.argv[1], [{'remove': {'path': sys.argv[2], 'dataChange': True}}])"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run([sys.executable, "-c", script, path, gone], check=True, cwd=root)
+    after = deltalog.snapshot(path)
+    assert after.version == before.version + 2
+    assert after.configuration["owner"] == "other"
+    assert gone not in {a["path"] for a in after.adds}
+    want = sorted(set(rows(deltalog.read_snapshot(spark, path, version_as_of=1).select("k")))
+                  - set(gone_rows))
+    assert rows(deltalog.read_snapshot(spark, path).select("k")) == want
+
+
+def test_table_recreated_at_the_same_path(spark, tmp_path):
+    """A table deleted and re-created at the same path reads its new
+    schema and rows, whether the new log has as many versions as the
+    cached one or more."""
+    path = str(tmp_path / "t")
+    _table(spark, path)
+    deltalog.append(
+        spark, spark.createDataFrame([(4, "d", 40.0)], "k int, s string, v double"), path
+    )
+    assert deltalog.read_snapshot(spark, path).count() == 4
+    for n_appends in (1, 3):
+        shutil.rmtree(path)
+        deltalog.create_table(
+            spark, spark.createDataFrame([(10, "x")], "id long, name string"), path
+        )
+        for i in range(n_appends):
+            deltalog.append(
+                spark, spark.createDataFrame([(11 + i, "y")], "id long, name string"), path
+            )
+        snap = deltalog.read_snapshot(spark, path)
+        assert snap.columns == ["id", "name"]
+        assert rows(snap) == [(10 + i, "x" if i == 0 else "y") for i in range(n_appends + 1)]
+        assert deltalog.snapshot(path).version == n_appends
+
+
+def test_snapshot_lookups_race_commits(tmp_path):
+    """Threads looking a table up while commits land each see whole
+    commits in order: as many live files and as high a ``txn`` mark as
+    the version says, and a version that never goes back."""
+    path = str(tmp_path / "t")
+
+    def land(i):
+        deltalog.commit(
+            path,
+            [
+                {"add": {"path": f"f{i}.parquet", "size": 1, "dataChange": True}},
+                {"txn": {"appId": "w", "version": i}},
+            ],
+        )
+
+    land(0)
+    bad: list = []
+    stop = threading.Event()
+
+    def look():
+        last = -1
+        while not stop.is_set():
+            s = deltalog.snapshot(path)
+            if s.version < last or len(s.adds) != s.version + 1 or s.txn["w"] != s.version:
+                bad.append((s.version, len(s.adds), dict(s.txn)))
+            last = s.version
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    readers = [threading.Thread(target=look) for _ in range(8)]
+    try:
+        for t in readers:
+            t.start()
+        for i in range(1, 100):
+            land(i)
+    finally:
+        stop.set()
+        for t in readers:
+            t.join(timeout=60)
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in readers)
+    assert not bad, bad[:3]
+    assert deltalog.snapshot(path).version == 99
+    assert sorted(os.listdir(os.path.join(path, "_delta_log"))) == [
+        f"{v:020d}.json" for v in range(100)
+    ]
+
+
+def test_snapshot_past_the_byte_budget(spark, tmp_path, monkeypatch):
+    """Past ``DRIVER_REPLAY_MAX_BYTES`` a snapshot keeps the metadata,
+    protocol and ``txn`` marks (the checkpoint's too) but not the live
+    adds, and the census replays distributed; back within the budget
+    the adds return."""
+    path = str(tmp_path / "t")
+    _table(spark, path)
+    new_row = spark.createDataFrame([(4, "d", 40.0)], "k int, s string, v double")
+    deltalog.txn_append(spark, new_row, path, app_id="app", version=7)
+    deltalog.write_checkpoint(spark, path)
+    deltalog.cleanup_log_before_checkpoint(path)
+    within = deltalog.snapshot(path)
+    assert within.adds is not None and within.checkpoint_version == 1
+    with monkeypatch.context() as m:
+        m.setattr(deltalog, "DRIVER_REPLAY_MAX_BYTES", 0)
+        past = deltalog.snapshot(path)
+        assert past.adds is None
+        assert (past.version, past.metaData, past.protocol, past.txn) == (
+            within.version, within.metaData, within.protocol, {"app": 7}
+        )
+        deltalog.delete_where(spark, path, "k = 1")
+        assert deltalog.snapshot(path).adds is None
+        assert rows(deltalog.read_snapshot(spark, path).select("k")) == [(2,), (3,), (4,)]
+    back = deltalog.snapshot(path)
+    live = deltalog.live_files(deltalog.read_log_actions(spark, path)).collect()
+    assert sorted(a["path"] for a in back.adds) == sorted(r.path for r in live)
+    assert back.txn == {"app": 7}

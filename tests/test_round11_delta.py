@@ -114,7 +114,7 @@ def test_partitioning_survives_compact_overwrite_evolve(spark, table_dir):
     # schema evolution keeps the declared partitionColumns AND the layout
     wide = _mk(spark, 120, 128).withColumn("extra", F.col("id") * 2)
     deltalog.append_evolve(spark, wide, table_dir)
-    meta = deltalog._latest_meta(spark, table_dir)
+    meta = deltalog.snapshot(table_dir).metaData
     assert list(meta["partitionColumns"]) == ["k"]
     pruned = deltalog.read_snapshot(
         spark, table_dir, partition_filter={"k": "0"}
@@ -546,3 +546,43 @@ def test_delta_stream_source_rejects_overwrite(spark, table_dir):
     )
     with pytest.raises(Exception, match="append-only|remove"):
         q.awaitTermination()
+
+
+def test_delta_stream_source_on_a_cleaned_up_log(spark, table_dir):
+    """With the metaData only in the checkpoint (log cleanup removed
+    JSON v0-v1), the source still reads the schema; a stream starting
+    before the checkpoint raises, as ``read_changes`` does, instead of
+    silently skipping the rows the checkpoint holds, and one starting
+    at the checkpoint streams the later commits."""
+    from cdc_pipe_line_spark.pydatasource import DeltaStreamDataSource
+
+    deltalog.create_table(spark, _mk(spark, 0, 5), table_dir)      # v0
+    deltalog.append(spark, _mk(spark, 5, 10), table_dir)           # v1
+    deltalog.write_checkpoint(spark, table_dir)
+    assert deltalog.cleanup_log_before_checkpoint(table_dir) == 2
+    deltalog.append(spark, _mk(spark, 10, 13), table_dir)          # v2
+    try:
+        spark.dataSource.register(DeltaStreamDataSource)
+    except Exception:
+        pass
+
+    def run(name, **options):
+        reader = spark.readStream.format("delta_stream").option("path", table_dir)
+        for k, v in options.items():
+            reader = reader.option(k, v)
+        q = (
+            reader.load()
+            .writeStream.format("memory")
+            .queryName(name)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return sorted(
+            (int(r["id"]), int(r["_commit_version"]))
+            for r in spark.sql(f"select * from {name}").collect()
+        )
+
+    with pytest.raises(Exception, match="no longer reconstructable"):
+        run("t_dsrc_cleaned")
+    assert run("t_dsrc_tail", startingVersion="1") == [(i, 2) for i in range(10, 13)]

@@ -98,13 +98,13 @@ def test_add_constraint_keeps_column_mapping_protocol(spark):
     _mk(spark, path)
     deltalog.enable_column_mapping(spark, path)
     deltalog.add_constraint(spark, path, "v_pos", "v > 0")
-    proto = deltalog._current_protocol(path)
+    proto = deltalog.snapshot(path).protocol
     assert proto["minReaderVersion"] == 2
     assert proto["minWriterVersion"] == 5
     # and the checkpointed state persists the kept gate
     deltalog.write_checkpoint(spark, path)
     deltalog.cleanup_log_before_checkpoint(path)
-    proto2 = deltalog._current_protocol(path)
+    proto2 = deltalog.snapshot(path).protocol
     assert (proto2["minReaderVersion"], proto2["minWriterVersion"]) == (2, 5)
 
 
@@ -112,7 +112,7 @@ def test_add_constraint_upgrades_from_base(spark):
     path = _fresh("proto_upgrade")
     _mk(spark, path)
     deltalog.add_constraint(spark, path, "v_pos", "v > 0")
-    proto = deltalog._current_protocol(path)
+    proto = deltalog.snapshot(path).protocol
     assert proto["minWriterVersion"] == 3
 
 
@@ -304,7 +304,6 @@ def test_compact_partitioned_honors_target_bytes(spark):
 # -------------------------------------------------- multi-part checkpoint
 
 
-@pytest.mark.slow
 def test_multipart_checkpoint_roundtrip(spark):
     path = _fresh("ckpt_multi")
     _mk(spark, path)
@@ -337,8 +336,8 @@ def test_multipart_checkpoint_roundtrip(spark):
     snap = deltalog.read_snapshot(spark, path)
     assert snap.count() == 7
     # driver-side metadata lookups also serve from the parts
-    assert deltalog._current_schema_string(path) is not None
-    assert deltalog._current_protocol(path)["minWriterVersion"] >= 2
+    assert deltalog.snapshot(path).schema_string is not None
+    assert deltalog.snapshot(path).protocol["minWriterVersion"] >= 2
     # and the table keeps writing/reading past the checkpoint
     deltalog.append(
         spark,

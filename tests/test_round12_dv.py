@@ -55,7 +55,7 @@ def _copy_on_write(spark, path):
 def test_enable_sets_feature_protocol(spark):
     path = _fresh("gate")
     _stage(spark, path)
-    proto = deltalog._current_protocol(path)
+    proto = deltalog.snapshot(path).protocol
     assert proto["minReaderVersion"] == 3
     assert proto["minWriterVersion"] == 7
     assert "deletionVectors" in proto["readerFeatures"]

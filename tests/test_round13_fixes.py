@@ -168,7 +168,7 @@ def test_legacy_versions_imply_features_on_upgrade(spark):
     )
     deltalog.create_table(spark, df, path)
     deltalog.enable_column_mapping(spark, path)
-    proto = deltalog._current_protocol(path)
+    proto = deltalog.snapshot(path).protocol
     # below table-features versions the pair encodes the capability;
     # feature lists must NOT appear
     assert proto["minReaderVersion"] == 2
@@ -177,7 +177,7 @@ def test_legacy_versions_imply_features_on_upgrade(spark):
     assert "writerFeatures" not in proto
     # crossing into (3,7) for DVs must carry the legacy implications
     deltalog.enable_deletion_vectors(spark, path)
-    proto = deltalog._current_protocol(path)
+    proto = deltalog.snapshot(path).protocol
     assert set(proto["readerFeatures"]) >= {
         "columnMapping",
         "deletionVectors",
@@ -200,16 +200,16 @@ def test_feature_ops_on_table_features_protocol_record_names(spark):
     )
     deltalog.create_table(spark, df, path)
     deltalog.enable_deletion_vectors(spark, path)
-    base = deltalog._current_protocol(path)
+    base = deltalog.snapshot(path).protocol
     assert base["minReaderVersion"] == 3 and base["minWriterVersion"] == 7
     # enable_column_mapping on an already-(3,7) table: the version bump
     # is a no-op, so the FEATURE NAME is the whole upgrade
     deltalog.enable_column_mapping(spark, path)
-    proto = deltalog._current_protocol(path)
+    proto = deltalog.snapshot(path).protocol
     assert "columnMapping" in proto["readerFeatures"]
     assert "columnMapping" in proto["writerFeatures"]
     deltalog.add_constraint(spark, path, "k_pos", "k >= 0")
-    proto = deltalog._current_protocol(path)
+    proto = deltalog.snapshot(path).protocol
     assert "checkConstraints" in proto["writerFeatures"]
     # the table still reads and writes fine under our own gates
     assert deltalog.read_snapshot(spark, path).count() == 10

@@ -140,7 +140,7 @@ def test_lost_race_raises_on_concurrent_metadata_change(
     deltalog.create_table(
         spark, spark.createDataFrame([(0, 0.0)], "k bigint, v double"), path
     )
-    meta = deltalog._latest_meta(spark, path)
+    meta = deltalog.snapshot(path).metaData
     racer_meta = {
         "metaData": {
             "id": meta["id"],

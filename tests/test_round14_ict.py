@@ -56,13 +56,13 @@ def test_enable_mid_history_boundary(spark):
     assert v == 2
     deltalog.append(spark, spark.range(8, 10), path)         # v3
 
-    cfg = deltalog._current_table_config(path)
+    cfg = deltalog.snapshot(path).configuration
     assert cfg["delta.enableInCommitTimestamps"] == "true"
     assert cfg["delta.inCommitTimestampEnablementVersion"] == "2"
     ict2 = deltalog._read_commit_ict(path, 2)
     assert cfg["delta.inCommitTimestampEnablementTimestamp"] == str(ict2)
 
-    proto = deltalog._current_protocol(path)
+    proto = deltalog.snapshot(path).protocol
     assert proto["minWriterVersion"] == 7
     assert "inCommitTimestamp" in proto["writerFeatures"]
     # legacy-implied features carried across the upgrade
@@ -115,11 +115,11 @@ def test_ict_from_birth(spark):
     first0 = _first_action(path, 0)
     assert "commitInfo" in first0
     assert first0["commitInfo"]["inCommitTimestamp"] is not None
-    cfg = deltalog._current_table_config(path)
+    cfg = deltalog.snapshot(path).configuration
     # enabled at version 0: the spec omits the enablement-boundary
     # properties (the whole history is ICT)
     assert "delta.inCommitTimestampEnablementVersion" not in cfg
-    proto = deltalog._current_protocol(path)
+    proto = deltalog.snapshot(path).protocol
     assert proto["minWriterVersion"] == 7
     assert "inCommitTimestamp" in proto["writerFeatures"]
     i0 = deltalog._read_commit_ict(path, 0)
@@ -211,7 +211,6 @@ def test_history_surfaces_ict(spark):
     assert rows[2].timestamp == rows[2].inCommitTimestamp
 
 
-@pytest.mark.slow
 def test_dml_on_ict_table(spark):
     # the whole DML surface keeps stamping through the ICT path
     path = _fresh("dml")

@@ -48,7 +48,6 @@ def _stage(spark, path):
 
 
 @pytest.mark.parametrize("fmt", ["parquet", "json"])
-@pytest.mark.slow
 def test_v2_checkpoint_reads_identical_to_classic(spark, fmt):
     path = _fresh(f"roundtrip_{fmt}")
     _stage(spark, path)
@@ -56,7 +55,7 @@ def test_v2_checkpoint_reads_identical_to_classic(spark, fmt):
         (r.k, r.s, r.v)
         for r in deltalog.read_snapshot(spark, path).collect()
     )
-    schema_before = deltalog._current_schema_string(path)
+    schema_before = deltalog.snapshot(path).schema_string
     ck = deltalog._checkpoint_version(path)
     deltalog.convert_checkpoint_to_v2(path, fmt=fmt)
     # the classic checkpoint is GONE and pre-checkpoint JSON was
@@ -71,11 +70,11 @@ def test_v2_checkpoint_reads_identical_to_classic(spark, fmt):
     )
     assert after == before
     # driver-side metadata walks ride the same route
-    assert deltalog._current_schema_string(path) == schema_before
-    assert deltalog._latest_meta(spark, path)["schemaString"] == (
+    assert deltalog.snapshot(path).schema_string == schema_before
+    assert deltalog.snapshot(path).metaData["schemaString"] == (
         schema_before
     )
-    assert deltalog._current_protocol(path)["minWriterVersion"] >= 2
+    assert deltalog.snapshot(path).protocol["minWriterVersion"] >= 2
     # distributed replay too (bypass the driver fast path)
     n = deltalog.read_snapshot(spark, path, manifest_threshold=1).count()
     assert n == len(before)

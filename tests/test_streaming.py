@@ -559,10 +559,13 @@ def test_scd2_stream_batch_job_budget_and_key_pushdown(spark, tmp_path):
     """A steady, plain micro-batch (history present, no compaction)
     runs its apply as one shuffle: at most 8 jobs inside foreachBatch
     (census, key broadcast, the shuffle, the append), and no empty
-    micro-batch follows it.  A key lookup through read_scd2_history
+    micro-batch follows it.  A compacting batch adds only the
+    overwrite of its buckets: at most 6 jobs.  A key lookup through read_scd2_history
     reads in the marker's schema (no inference job) and pushes the key
     into the parquet scan, so it takes at most 2 jobs; a truncated
     marker still reads, by inference."""
+    import glob
+    import os
     import re
 
     from cdc_pipe_line_spark import streaming as st
@@ -590,6 +593,26 @@ def test_scd2_stream_batch_job_budget_and_key_pushdown(spark, tmp_path):
     assert max(jobs[1:]) <= 8, jobs
     assert batches == [1, 1, 1, 1]
     assert spark.conf.get(no_data) == callers
+
+    # a compacting batch: every bucket it touches holds more than
+    # max_segments segments, and the compaction overwrites those
+    # buckets straight from its plan (no persist and count first)
+    _write_event_file(
+        src / "b4.json",
+        [(f"e4-{i}", "update", f"k{i}", f"2024-01-01 04:{i:02d}:00", f"4.{i}")
+         for i in range(20, 40)],
+        1_700_000_004,
+    )
+    q = st.run_scd2_stream(
+        spark.readStream.schema(st.EVENT_SCHEMA).json(str(src)),
+        hist, checkpoint_dir=str(tmp_path / "ckpt"),
+        n_buckets=4, max_segments=1,
+    )
+    q.awaitTermination()
+    compacting = len(spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId)))
+    assert compacting <= 6, compacting
+    for bucket in glob.glob(os.path.join(hist, "data", "__bucket=*")):
+        assert len(glob.glob(os.path.join(bucket, "*.parquet"))) == 1, bucket
 
     def lookup():
         return (

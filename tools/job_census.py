@@ -1,16 +1,18 @@
 """Spark jobs, codegen compiles and wall time per native-Delta call site.
 
-    python tools/job_census.py [--seed 1]
+    python tools/job_census.py [--seed 1] [--uploads N]
 
 Run from the repository root.  The tool replays one steady operation of
 the ``snapshot_sync`` benchmark workload (``perfbench/``) with the same
 input generator (``perfbench/gen.py`` ``OrdersSnapshots``), the same
 warm-up and the same reads: the seeded orders uploads land on a native
 Delta SCD2 table through the public functions (``snapshot_diff`` →
-``to_cdc_events`` → ``apply_scd2_delta``), first the full load, then the
-workload's warm-up uploads, then one censused round of an upload, the
-current point reads, one as-of point read, the commit's one-version
-``read_changes`` and the anomaly refresh over the whole change feed.
+``to_cdc_events`` → ``apply_scd2_delta``), first the full load, then
+``--uploads`` warm-up uploads (the workload's warm-up count by default;
+the table has one version per upload), then one censused round of an
+upload, the current point reads, one as-of point read, the commit's
+one-version ``read_changes`` and the anomaly refresh over the whole
+change feed.
 
 The census wraps the pyspark entry points that can launch jobs (actions,
 writes, schema-inferring reads, ``createDataFrame``) from outside the
@@ -23,13 +25,16 @@ and call site shows its codegen compiles: the classes Spark's code
 generator compiled meanwhile (the count of ``CodegenMetrics``'
 compilation-time histogram), which shows whether the codegen cache
 (``spark.sql.codegen.cache.maxEntries``) holds the round's classes or
-recompiles them.  The engine itself is not modified; the scratch table
-lives in a temporary directory that is removed at exit.
+recompiles them.  Each phase also shows the ``_delta_log`` files it
+read: JSON files opened with ``open`` and checkpoint parts read with
+``pyarrow.parquet.read_table``.  The engine itself is not modified; the
+scratch table lives in a temporary directory that is removed at exit.
 """
 
 from __future__ import annotations
 
 import argparse
+import builtins
 import functools
 import os
 import shutil
@@ -64,6 +69,8 @@ class Census:
         self.sites: dict = defaultdict(lambda: defaultdict(lambda: [0, 0, 0, 0.0]))
         self.phase_s: dict[str, float] = {}
         self.phase_c: dict[str, int] = {}
+        # phase -> [JSON opens, checkpoint part reads] under _delta_log
+        self.log_reads: dict = defaultdict(lambda: [0, 0])
         # local mode: the executors compile in the driver JVM too
         self._codegen = (
             spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
@@ -155,15 +162,37 @@ class Census:
         for n in ("load", "parquet", "json", "csv", "table"):
             self.wrap(type(spark.read), n)
         self.wrap(type(spark), "createDataFrame")
+        self._count_log_reads()
+
+    def _count_log_reads(self) -> None:
+        real_open, real_read_table = builtins.open, pq.read_table
+
+        def log_read(source, kind: int) -> None:
+            if self.phase is not None and "_delta_log" in str(source):
+                self.log_reads[self.phase][kind] += 1
+
+        def counting_open(file, mode="r", *args, **kwargs):
+            if not set(str(mode)) & set("wxa+"):
+                log_read(file, 0)
+            return real_open(file, mode, *args, **kwargs)
+
+        def counting_read_table(source, *args, **kwargs):
+            log_read(source, 1)
+            return real_read_table(source, *args, **kwargs)
+
+        builtins.open = counting_open
+        pq.read_table = counting_read_table
 
     def report(self) -> None:
         total_jobs = 0
         for phase, sites in self.sites.items():
             jobs = sum(r[1] for r in sites.values())
             total_jobs += jobs
+            json_reads, ckpt_reads = self.log_reads[phase]
             print(
                 f"\n== {phase}: {jobs} jobs, {self.phase_c[phase]} compiles, "
-                f"{self.phase_s[phase]:.3f} s"
+                f"{self.phase_s[phase]:.3f} s, _delta_log reads: "
+                f"{json_reads} JSON, {ckpt_reads} checkpoint"
             )
             print(f"{'calls':>5} {'jobs':>5} {'compiles':>8} {'seconds':>8}  call")
             for site, (calls, j, c, s) in sorted(
@@ -178,6 +207,13 @@ class Census:
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     p.add_argument("--seed", type=int, default=1)
+    p.add_argument(
+        "--uploads",
+        type=int,
+        default=None,
+        help="warm-up uploads before the censused round "
+        "(default: the workload's warm-up count)",
+    )
     args = p.parse_args(argv)
 
     from pyspark.sql import functions as F
@@ -235,7 +271,8 @@ def main(argv=None) -> int:
 
     try:
         land()
-        for _ in range(SnapshotSync.warmup_ops):
+        uploads = SnapshotSync.warmup_ops if args.uploads is None else args.uploads
+        for _ in range(uploads):
             gen.next_upload()
             land()
         census = Census(spark)
