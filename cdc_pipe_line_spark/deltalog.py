@@ -1992,7 +1992,8 @@ def append_evolve(
     from pyspark.sql.types import StructType
 
     started = _time.time()
-    for attempt in range(5):
+
+    def _attempt() -> int:
         meta = snapshot(table_dir).metaData
         partition_by = (
             list(meta["partitionColumns"])
@@ -2053,9 +2054,9 @@ def append_evolve(
             # partitioning) we merged against may be stale — unstage
             # and re-derive from the new table state
             _remove_staged(table_dir, adds)
-            if attempt == 4:
-                raise
-    raise AssertionError("unreachable")
+            raise
+
+    return _retry_lost_race(_attempt)
 
 
 def overwrite(
@@ -2182,7 +2183,8 @@ def compact(
     import time as _time
 
     started = _time.time()
-    for attempt in range(5):
+
+    def _attempt() -> int:
         table = snapshot(table_dir)
         meta = table.metaData
         partition_by = table.partition_columns or None
@@ -2284,9 +2286,9 @@ def compact(
             )
         except FileExistsError:
             _remove_staged(table_dir, adds)
-            if attempt == 4:
-                raise
-    raise AssertionError("unreachable")
+            raise
+
+    return _retry_lost_race(_attempt)
 
 
 def _rel_path(uri: str, table_dir: str) -> str:
@@ -2323,8 +2325,10 @@ def _align_declared(
             out = out.withColumn(f.name, F.lit(None).cast(f.dataType))
         elif out.schema[f.name].dataType != f.dataType:
             out = out.withColumn(f.name, F.col(f.name).cast(f.dataType))
-    extras = [c for c in keep if c in out.columns]
-    return out.select(*[f.name for f in declared.fields], *extras)
+    cols = [f.name for f in declared.fields]
+    cols += [c for c in keep if c in out.columns]
+    # a scan in the declared schema is aligned already
+    return out if out.columns == cols else out.select(*cols)
 
 
 def _read_schema(schema_string: str | None, *extra):
@@ -2364,13 +2368,13 @@ def _scan_live(
     *,
     with_src: bool = False,
     with_row_idx: bool = False,
-    manifest_threshold: int | None = None,
     dv_possible: bool,
 ):
     """Scan the files of a live-file frame, choosing the census
-    strategy by size: up to the manifest threshold, a driver path
-    list feeding Spark's native parquet scan (full pushdown); past
-    it, the distributed manifest route
+    strategy by size: up to :data:`manifest_scan.DEFAULT_THRESHOLD`
+    files (read when the call is made), a driver path list feeding
+    Spark's native parquet scan (full pushdown); past it, the
+    distributed manifest route
     (:mod:`cdc_pipe_line_spark.manifest_scan`) — the DML/MERGE
     candidate censuses share the same bounded shape as
     :func:`read_snapshot` (VERDICT r11 what's-wrong 3).  Returns
@@ -2393,11 +2397,7 @@ def _scan_live(
     (VERDICT r12 what's-wrong 1)."""
     from cdc_pipe_line_spark import manifest_scan as _ms
 
-    threshold = (
-        manifest_threshold
-        if manifest_threshold is not None
-        else _ms.DEFAULT_THRESHOLD
-    )
+    threshold = _ms.DEFAULT_THRESHOLD
     schema_string = meta["schemaString"] if meta else None
     probe_cols = (
         ["path", F.col("deletionVector").alias("dv"), "stats"]
@@ -2451,19 +2451,23 @@ def _plan_native_scan(
     *,
     with_src: bool = False,
     with_row_idx: bool = False,
+    extra: tuple = (),
 ) -> DataFrame:
     """Plan ONE native parquet scan over ``items`` — (relative path,
     deletionVector descriptor or None, add-stats JSON or None) — with
     DV anti-join masking, provenance columns, and declared-schema
     alignment.  Shared by :func:`_scan_live` (items from the
-    live-file frame probe) and :func:`read_snapshot` (items from the
-    snapshot's ``add`` actions).  The scan reads with the declared
-    schema (:func:`_read_schema`), so planning it runs no Spark job;
-    only a log without a schema falls back to footer inference."""
+    live-file frame probe), :func:`read_snapshot` (items from the
+    snapshot's ``add`` actions) and :func:`read_changes` (one commit's
+    legs of one kind; ``extra`` StructFields, the change-data files'
+    ``_change_type``, read and kept after the declared columns).  The
+    scan reads with the declared schema (:func:`_read_schema`), so
+    planning it runs no Spark job; only a log without a schema falls
+    back to footer inference."""
     dv_files = [it for it in items if it[1] is not None]
     need_meta_cols = bool(dv_files) or with_row_idx
     reader = spark.read.option("basePath", table_dir)
-    schema = _read_schema(schema_string)
+    schema = _read_schema(schema_string, *extra)
     reader = (
         reader.schema(schema)
         if schema is not None
@@ -2492,11 +2496,12 @@ def _plan_native_scan(
     if with_src and not need_meta_cols:
         scan = scan.withColumn("__src", F.input_file_name())
         keep.append("__src")
-    scan = _align_declared(scan, schema_string, keep=tuple(keep))
-    if not with_row_idx and "__ridx" in scan.columns:
-        scan = scan.drop("__ridx", "__fname")
-    elif "__fname" in scan.columns:
-        scan = scan.drop("__fname")
+    scan = _align_declared(
+        scan, schema_string, keep=(*[f.name for f in extra], *keep)
+    )
+    if need_meta_cols:
+        # the mask coordinates leave; __ridx stays when asked for
+        scan = scan.drop("__fname", *([] if with_row_idx else ["__ridx"]))
     return scan
 
 
@@ -2880,11 +2885,14 @@ def _remove_dv_staged(table_dir: str, descriptors: dict[str, dict]) -> None:
 
 
 def _retry_lost_race(attempt):
-    """Run one row-level statement ``attempt`` (locate, write, commit),
-    re-entering from fresh table state when its commit loses the
-    version race: stale tombstones must never be re-committed (the
-    compact/overwrite re-entry discipline).  Five attempts; any other
-    failure propagates at once."""
+    """Run one ``attempt`` of a statement that reads table state
+    (locate or re-derive, write, commit), re-entering from fresh
+    table state when its commit loses the version race: stale
+    tombstones or a stale schema must never be re-committed.  An
+    attempt unstages its own files before it re-raises.  Five
+    attempts; any other failure propagates at once.  Used by the
+    row-level statements, ``append_evolve``, ``compact`` and
+    ``optimize_zorder``."""
     for _ in range(4):
         try:
             return attempt()
@@ -3117,7 +3125,6 @@ def _dml_where(
     *,
     skipping: list[tuple] | None,
     n_files: int,
-    manifest_threshold: int | None,
 ) -> int:
     """Locate half of :func:`delete_where` (``set_exprs`` None) and
     :func:`update_where`: prune the live files by ``skipping``, scan
@@ -3159,7 +3166,6 @@ def _dml_where(
             meta,
             with_src=True,
             with_row_idx=dv,
-            manifest_threshold=manifest_threshold,
             dv_possible=dv_possible,
         )
         if scan is None:
@@ -3235,7 +3241,6 @@ def delete_where(
     *,
     skipping: list[tuple] | None = None,
     n_files: int = 1,
-    manifest_threshold: int | None = None,
 ) -> int:
     """DELETE FROM table WHERE ``condition`` (a SQL boolean
     expression) — row-level delete on the native log (reference
@@ -3265,7 +3270,6 @@ def delete_where(
         None,
         skipping=skipping,
         n_files=n_files,
-        manifest_threshold=manifest_threshold,
     )
 
 
@@ -3277,7 +3281,6 @@ def update_where(
     *,
     skipping: list[tuple] | None = None,
     n_files: int = 1,
-    manifest_threshold: int | None = None,
 ) -> int:
     """UPDATE table SET col = expr, ... WHERE ``condition`` —
     row-level update on the native log (the single-row SCD2 UPDATE the
@@ -3302,7 +3305,6 @@ def update_where(
         dict(set_exprs),
         skipping=skipping,
         n_files=n_files,
-        manifest_threshold=manifest_threshold,
     )
 
 
@@ -3323,7 +3325,6 @@ def merge_into(
     target_alias: str = "t",
     source_alias: str = "s",
     schema_evolution: bool = False,
-    manifest_threshold: int | None = None,
 ) -> int:
     """MERGE INTO the native Delta table — the statement the
     reference runs through delta-spark for SCD2
@@ -3448,7 +3449,6 @@ def merge_into(
             meta,
             with_src=has_matched_clause,
             with_row_idx=has_matched_clause,
-            manifest_threshold=manifest_threshold,
             dv_possible=dv_possible,
         )
         t_types = (
@@ -3569,7 +3569,6 @@ def merge_into(
                 meta,
                 with_src=dv,
                 with_row_idx=dv,
-                manifest_threshold=manifest_threshold,
                 dv_possible=dv_possible,
             )
             fused = tscan.withColumn("__m_t", F.lit(True)).alias(
@@ -3729,7 +3728,8 @@ def optimize_zorder(
     if not cols:
         raise ValueError("optimize_zorder needs at least one column")
     started = _time.time()
-    for attempt in range(5):
+
+    def _attempt() -> int:
         meta = snapshot(table_dir).metaData
         if meta and meta["partitionColumns"]:
             raise ValueError(
@@ -3818,9 +3818,9 @@ def optimize_zorder(
             )
         except FileExistsError:
             _remove_staged(table_dir, adds)
-            if attempt == 4:
-                raise
-    raise AssertionError("unreachable")
+            raise
+
+    return _retry_lost_race(_attempt)
 
 
 def last_txn_version(
@@ -4461,7 +4461,6 @@ def read_snapshot(
     timestamp_as_of=None,
     partition_filter: dict[str, str] | None = None,
     skipping: list[tuple] | None = None,
-    manifest_threshold: int | None = None,
 ) -> DataFrame:
     """The table snapshot: parquet union of live files — current by
     default, or TIME TRAVEL to any historical version with
@@ -4490,13 +4489,12 @@ def read_snapshot(
     level so the result is exact whether or not any file carries
     stats.
 
-    The file list is collected driver-side up to
-    ``manifest_threshold`` (default
-    :data:`manifest_scan.DEFAULT_THRESHOLD`) and handed to ONE
-    parquet scan so Spark plans splits/pushdown across all live
-    files together.  PAST the threshold the census is never
-    collected: the live-file frame writes a distributed parquet
-    manifest and a Python DataSource scans from it executor-side
+    Up to :data:`manifest_scan.DEFAULT_THRESHOLD` files (read when
+    the call is made) the file list is handed to ONE parquet scan so
+    Spark plans splits/pushdown across all live files together.  PAST
+    the threshold the census is never collected: the live-file frame
+    writes a distributed parquet manifest and a Python DataSource
+    scans from it executor-side
     (:mod:`cdc_pipe_line_spark.manifest_scan`) — driver memory and
     plan size stay bounded however many add-actions the table has
     (VERDICT r11 what's-wrong 3).
@@ -4528,27 +4526,28 @@ def read_snapshot(
     # no Spark job and a point lookup over it runs exactly one — the
     # dominant cost of reading a small table is otherwise pure job
     # scheduling (0.1-0.7 s per metadata job on a vanilla session).
-    # An explicit manifest_threshold override (tests exercising the
-    # manifest route) bypasses it, as does any log past the byte
-    # budget.
-    if table.adds is not None and manifest_threshold is None:
-        adds = table.adds
-        if partition_filter:
-            adds = [
-                a
-                for a in adds
-                if all(
-                    (a.get("partitionValues") or {}).get(k) == str(v)
-                    for k, v in partition_filter.items()
-                )
-            ]
-        if skipping:
-            mapping = _mapping_from(schema_string)
-            adds = [
-                a
-                for a in adds
-                if _skipping_keep_py(a.get("stats"), skipping, mapping)
-            ]
+    # A log past the byte budget, or a read of more files than the
+    # manifest threshold, takes the distributed census instead.
+    from cdc_pipe_line_spark import manifest_scan as _ms
+
+    adds = table.adds
+    if adds is not None and partition_filter:
+        adds = [
+            a
+            for a in adds
+            if all(
+                (a.get("partitionValues") or {}).get(k) == str(v)
+                for k, v in partition_filter.items()
+            )
+        ]
+    if adds is not None and skipping:
+        mapping = _mapping_from(schema_string)
+        adds = [
+            a
+            for a in adds
+            if _skipping_keep_py(a.get("stats"), skipping, mapping)
+        ]
+    if adds is not None and len(adds) <= _ms.DEFAULT_THRESHOLD:
         out = None
         if adds:
             items = [
@@ -4591,7 +4590,6 @@ def read_snapshot(
             table_dir,
             lf,
             meta,
-            manifest_threshold=manifest_threshold,
             dv_possible=table.dv_feature,
         )
     if out is None:
@@ -4829,170 +4827,140 @@ def read_changes(
     ending_version: int | None = None,
 ) -> DataFrame:
     """CHANGE DATA FEED between two versions — the ``table_changes``
-    read the protocol supports for append/overwrite workloads: every
-    ``add`` with ``dataChange=true`` in ``(starting_version,
-    ending_version]`` surfaces its file's rows as ``_change_type =
-    'insert'``, every data-changing ``remove`` surfaces the removed
-    file's rows as ``'delete'`` (tombstoned files stay on disk until
-    vacuum, so the rows are still readable — the same property time
-    travel relies on), each tagged ``_commit_version``.  OPTIMIZE
-    commits (``dataChange=false``) are invisible, exactly as CDF
-    semantics require.  A commit carrying ``cdc`` actions (the
-    row-level DML writers — DELETE/UPDATE/MERGE — write the spec's
-    change-data files under ``_change_data/``) is served from THOSE
-    instead: the reader reports exactly the mutated rows
-    (insert / delete / update_preimage / update_postimage), never
-    the touched files' unchanged passthrough churn — the spec's own
-    "use cdc actions when present" rule.
+    read: the rows each commit in ``(starting_version,
+    ending_version]`` changed, with ``_change_type`` (insert / delete
+    / update_preimage / update_postimage) and ``_commit_version``.
+    Which files serve which rows is decided once, by the leg census
+    :func:`_change_legs` (the ``delta_stream`` source streams the same
+    legs): a row-level DML commit is served from its ``cdc`` change
+    files, any other data-changing add or remove from its data file,
+    deletion-vector masked; OPTIMIZE commits (``dataChange=false``)
+    are invisible, exactly as CDF semantics require.
 
-    File-level legs are DELETION-VECTOR aware (ADVICE r12 medium):
-    an add carrying a vector (RESTORE of a DV'd file) masks its
-    insert leg, and a remove of a file that was live with a vector
-    (OVERWRITE over DV'd files) masks its delete leg by the
-    PREDECESSOR version's descriptor — already-deleted rows are never
-    double-reported.
-
-    One bounded metadata pass plans the per-(version, type) file
-    lists: the commits in the range, read on the driver
-    (:func:`_span_actions`); the data reads are plain parquet scans
-    unioned per commit — plan legs bounded by the version range, never
-    by data size.  Every leg reads in the declared schema of the
-    ending version (its :func:`snapshot`), so a range that crosses a
-    schema evolution null-fills the new columns in the older legs, and
+    The legs of one commit and one kind read in ONE native parquet
+    scan (:func:`_plan_native_scan`, which applies their vectors), so
+    the plan is bounded by the commits in the range, never by data
+    size.  Every scan reads in the declared schema of the ending
+    version (its :func:`snapshot`), so a range that crosses a schema
+    evolution null-fills the new columns in the older legs, and
     planning the feed runs no Spark job."""
-    table = snapshot(table_dir)
-    _assert_changes_readable(table_dir, table, starting_version)
+    import itertools
+
+    from pyspark.sql.types import StringType, StructField
+
     hi = ending_version
     if hi is None:
-        if table.version < 0:
+        hi = snapshot(table_dir).version
+        if hi < 0:
             raise FileNotFoundError(
                 f"no JSON commits under {os.path.join(table_dir, '_delta_log')}"
             )
-        hi = table.version
-    span = _span_actions(table_dir, starting_version, hi)
-    cdc_rows = [
-        (v, a["cdc"]["path"])
-        for v, a in span
-        if a.get("cdc") and a["cdc"].get("path")
-    ]
-    cdc_versions = {v for v, _p in cdc_rows}
-    adds_changed = [
-        (
-            v,
-            a["add"]["path"],
-            a["add"].get("deletionVector"),
-            a["add"].get("stats"),
-        )
-        for v, a in span
-        if a.get("add") and a["add"].get("path") and a["add"].get("dataChange")
-    ]
-    removes_changed = [
-        (v, a["remove"]["path"])
-        for v, a in span
-        if a.get("remove")
-        and a["remove"].get("path")
-        and a["remove"].get("dataChange")
-    ]
-    if not adds_changed and not removes_changed and not cdc_rows:
+    legs = _change_legs(table_dir, starting_version, hi)
+    if not legs:
         raise ValueError(
             f"no data-changing commits in ({starting_version}, {hi}] "
             f"of {table_dir}"
         )
-    # DELETION-VECTOR awareness on the FILE-LEVEL legs (ADVICE r12
-    # medium): an add carrying a vector (RESTORE re-adding a DV'd
-    # file) must not re-emit its masked rows as inserts, and a remove
-    # tombstoning a file that was live WITH a vector (OVERWRITE over
-    # DV'd files) must not re-emit the already-deleted rows — those
-    # deletions were surfaced by the DV-DML commit's own cdc file.
-    # The predecessor state of each removed path is its latest add
-    # BELOW the remove's version; the lookup runs only when the
-    # protocol has ever allowed vectors and only over the removed
-    # paths (bounded by the feed's own file census).
-    rm_prior: dict[tuple[str, int], tuple] = {}
-    rm_file_level = [
-        (v, p) for v, p in removes_changed if v not in cdc_versions
-    ]
-    if rm_file_level and table.dv_feature:
-        prior = _span_actions(
+    schema_string = snapshot(table_dir, version_as_of=hi).schema_string
+    change_type = StructField("_change_type", StringType(), True)
+    scans = []
+    for (v, kind), group in itertools.groupby(legs, key=lambda g: g[:2]):
+        items = [(path, dv, stats) for _v, _k, path, dv, stats in group]
+        if kind == "cdc":
+            # a change-data file carries _change_type per row
+            scan = _plan_native_scan(
+                spark, table_dir, items, schema_string, extra=(change_type,)
+            )
+        else:
+            scan = _plan_native_scan(
+                spark, table_dir, items, schema_string
+            ).withColumn("_change_type", F.lit(kind))
+        scans.append(
+            scan.withColumn("_commit_version", F.lit(v).cast("bigint"))
+        )
+    out = scans[0]
+    for scan in scans[1:]:
+        out = out.unionByName(scan)
+    return out
+
+
+def _change_legs(table_dir: str, lo: int, hi: int) -> list[tuple]:
+    """The change-feed census of the commits in ``(lo, hi]``: one
+    ``(version, kind, path, deletionVector, stats)`` leg per file that
+    serves changed rows, grouped by version and kind, read on the
+    driver with no Spark job.  ``kind`` is ``cdc`` (a change-data file
+    whose rows carry their own ``_change_type``), ``insert`` or
+    ``delete`` (every row of the data file, masked by the vector).
+
+    The rules, the spec's:
+
+    - only ``dataChange`` actions count, so OPTIMIZE is no event;
+    - a commit's ``cdc`` files win over its file-level actions (the
+      row-level DML writers report exactly the mutated rows, never the
+      rewritten files' passthrough rows);
+    - an add carrying a vector (RESTORE re-adding a DV'd file) masks
+      its insert leg by it, and a remove masks its delete leg by the
+      vector its PREDECESSOR add carried (OVERWRITE over DV'd files
+      never re-reports rows a DV DELETE already reported).  That
+      lookup runs only when the protocol has ever allowed vectors, and
+      only over the removed paths.
+
+    Raises when log cleanup removed the commits after ``lo``
+    (:func:`_assert_changes_readable`).  Shared by :func:`read_changes`
+    and the ``delta_stream`` source, so the batch and the streaming
+    feed cannot drift."""
+    table = snapshot(table_dir)
+    _assert_changes_readable(table_dir, table, lo)
+    cdc, adds, removes = [], [], []
+    for v, a in _span_actions(table_dir, lo, hi):
+        act = a.get("cdc") or a.get("add") or a.get("remove")
+        if not act.get("path"):
+            continue
+        if "cdc" in a:
+            cdc.append((v, "cdc", act["path"], None, None))
+        elif not act.get("dataChange"):
+            continue
+        elif "add" in a:
+            adds.append(
+                (
+                    v,
+                    "insert",
+                    act["path"],
+                    act.get("deletionVector"),
+                    act.get("stats"),
+                )
+            )
+        else:
+            removes.append((v, act["path"]))
+    served = {leg[0] for leg in cdc}
+    adds = [leg for leg in adds if leg[0] not in served]
+    removes = [(v, p) for v, p in removes if v not in served]
+    prior: dict[tuple[str, int], tuple] = {}
+    if removes and table.dv_feature:
+        below = _span_actions(
             table_dir,
             -1,
-            max(v for v, _p in rm_file_level) - 1,
-            add_paths=sorted({p for _v, p in rm_file_level}),
+            max(v for v, _p in removes) - 1,
+            add_paths=sorted({p for _v, p in removes}),
         )
-        for v, path in rm_file_level:
-            below = [
+        for v, path in removes:
+            hits = [
                 (pv, a["add"])
-                for pv, a in prior
+                for pv, a in below
                 if a["add"]["path"] == path and pv < v
             ]
-            if below:
-                _pv, add = max(below, key=lambda t: t[0])
-                rm_prior[(path, v)] = (
+            if hits:
+                add = max(hits, key=lambda t: t[0])[1]
+                prior[(path, v)] = (
                     add.get("deletionVector"),
                     add.get("stats"),
                 )
-
-    # every leg reads in the END version's declared schema: files
-    # written before a schema evolution null-fill the newer columns,
-    # so the legs union cleanly, and planning runs no inference job
-    from pyspark.sql.types import StringType, StructField
-
-    schema_string = snapshot(table_dir, version_as_of=hi).schema_string
-    mapping = _mapping_from(schema_string)
-    data_schema = _read_schema(schema_string)
-    cdc_schema = _read_schema(
-        schema_string, StructField("_change_type", StringType(), True)
-    )
-
-    def _scan(path: str, schema, **options) -> DataFrame:
-        reader = spark.read.options(**options)
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.parquet(os.path.join(table_dir, path))
-
-    def _file_leg(path: str, dv, stats) -> DataFrame:
-        # basePath: partition columns come from the file's Hive
-        # directories, as in a snapshot scan
-        scan = _scan(path, data_schema, basePath=table_dir)
-        if dv is not None:
-            scan = (
-                scan.withColumn(
-                    "__fname",
-                    F.substring_index(
-                        F.col("_metadata.file_path"), "/", -1
-                    ),
-                )
-                .withColumn("__ridx", F.col("_metadata.row_index"))
-                .join(
-                    F.broadcast(
-                        _dv_rows(spark, table_dir, [(path, dv, stats)])
-                    ),
-                    ["__fname", "__ridx"],
-                    "left_anti",
-                )
-                .drop("__fname", "__ridx")
-            )
-        return scan
-
-    def _tag(leg: DataFrame, v: int, change_type: str | None = None):
-        leg = _to_logical(leg, mapping)
-        if change_type is not None:
-            leg = leg.withColumn("_change_type", F.lit(change_type))
-        return leg.withColumn("_commit_version", F.lit(v).cast("bigint"))
-
-    # row-level feed first: a change-data file already carries
-    # _change_type for exactly the mutated rows
-    legs = [_tag(_scan(path, cdc_schema), v) for v, path in cdc_rows]
-    for v, path, dv, stats in adds_changed:
-        if v not in cdc_versions:  # else served row-level above
-            legs.append(_tag(_file_leg(path, dv, stats), v, "insert"))
-    for v, path in rm_file_level:
-        dv, stats = rm_prior.get((path, v), (None, None))
-        legs.append(_tag(_file_leg(path, dv, stats), v, "delete"))
-    out = legs[0]
-    for leg in legs[1:]:
-        out = out.unionByName(leg)
-    return out
+    deletes = [
+        (v, "delete", p, *prior.get((p, v), (None, None)))
+        for v, p in removes
+    ]
+    order = {"cdc": 0, "insert": 1, "delete": 2}
+    return sorted(cdc + adds + deletes, key=lambda g: (g[0], order[g[1]]))
 
 
 def _assert_changes_readable(
@@ -5022,8 +4990,8 @@ def _span_actions(
     """``(version, action)`` for the file actions (add / remove /
     cdc) of the JSON commits in ``(lo, hi]`` — with ``add_paths``,
     only the adds of those paths — read on the driver with no Spark
-    job.  The change feed's metadata pass, and the ``delta_stream``
-    source's."""
+    job.  The metadata pass of the change-feed census
+    :func:`_change_legs`."""
     log_dir = os.path.join(table_dir, "_delta_log")
     keep = set(add_paths) if add_paths is not None else None
     out = []

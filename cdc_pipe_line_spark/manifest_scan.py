@@ -38,9 +38,10 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-#: live-file count above which read_snapshot switches to the manifest
-#: scan (overridable per call); below it the driver-list parquet scan
-#: with native pushdown wins
+#: file count above which a snapshot read or a DML census switches to
+#: the manifest scan; below it the driver-list parquet scan with native
+#: pushdown wins.  Read when each scan is planned, so assigning it
+#: (tests, soaks) moves every caller at once
 DEFAULT_THRESHOLD = 50_000
 
 #: data files per manifest fragment — one fragment = one scan task
@@ -156,8 +157,6 @@ class _ManifestReader(DataSourceReader):
         self.manifest = options["manifest"]
         self.table_dir = options["tabledir"]
         self.schema_json = options["schemajson"]
-        self.with_src = options.get("withsrc", "false") == "true"
-        self.with_row_idx = options.get("withrowidx", "false") == "true"
 
     def partitions(self) -> list[InputPartition]:
         # driver-side footprint: ONE fragment name per scan task —
@@ -170,69 +169,92 @@ class _ManifestReader(DataSourceReader):
         ]
 
     def read(self, partition: _ManifestPartition) -> Iterator:
-        import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
         from pyspark.sql.types import StructType
 
-        out_schema = StructType.fromJson(json.loads(self.schema_json))
-        target = to_arrow_schema(out_schema)
-        entries = pq.read_table(partition.fragment).to_pylist()
-        import numpy as np
-
-        from cdc_pipe_line_spark import dvbitmap
-
-        for e in entries:
-            full = os.path.join(self.table_dir, e["path"])
-            tbl = pq.read_table(full)
-            n = tbl.num_rows
-            pvals = json.loads(e["pvals"]) if e.get("pvals") else {}
-            # original absolute row positions — survive the DV mask
-            # so DML writers can reference surviving rows by index
-            ridx = np.arange(n, dtype=np.int64)
-            # DELETION-VECTOR mask: drop the rows whose absolute
-            # index the descriptor's vector lists (merge-on-read).
-            # read_dv VALIDATES (CRC / sizeInBytes / cardinality) and
-            # out-of-range indexes RAISE — a corrupt vector must
-            # never silently under-delete (VERDICT r12 wrong-item 3).
-            if e.get("dv"):
-                idx = dvbitmap.read_dv(self.table_dir, json.loads(e["dv"]))
-                if idx.size and int(idx.max()) >= n:
-                    raise ValueError(
-                        f"deletion vector of {e['path']}: row index "
-                        f"{int(idx.max())} out of range (file has "
-                        f"{n} rows) — the vector or its descriptor "
-                        f"is corrupt"
-                    )
-                keep = np.ones(n, dtype=bool)
-                keep[idx.astype(np.int64)] = False
-                tbl = tbl.filter(pa.array(keep))
-                ridx = ridx[keep]
-                n = tbl.num_rows
-            arrays = []
-            for field in target:
-                if field.name == "__src":
-                    arrays.append(
-                        pa.array([e["path"]] * n, type=field.type)
-                    )
-                elif field.name == "__ridx":
-                    arrays.append(pa.array(ridx, type=field.type))
-                elif field.name in tbl.column_names:
-                    col = tbl[field.name].combine_chunks()
-                    if col.type != field.type:
-                        col = col.cast(field.type)
-                    arrays.append(col)
-                elif field.name in pvals:
-                    arrays.append(
-                        pa.array([pvals[field.name]] * n, type=pa.string())
-                        .cast(field.type)
-                    )
-                else:
-                    # mergeSchema: pre-evolution files null-fill the
-                    # later columns
-                    arrays.append(pa.nulls(n, field.type))
-            out = pa.Table.from_arrays(arrays, schema=target)
+        target = to_arrow_schema(
+            StructType.fromJson(json.loads(self.schema_json))
+        )
+        for e in pq.read_table(partition.fragment).to_pylist():
+            consts = json.loads(e["pvals"]) if e.get("pvals") else {}
+            consts["__src"] = e["path"]
+            out = read_file(
+                self.table_dir,
+                e["path"],
+                target,
+                dv=json.loads(e["dv"]) if e.get("dv") else None,
+                consts=consts,
+            )
             yield from out.to_batches(max_chunksize=1 << 16)
+
+
+def read_file(
+    table_dir: str,
+    path: str,
+    target,
+    *,
+    dv: dict | None = None,
+    consts: dict | None = None,
+):
+    """One file of the table (``path`` relative to ``table_dir``) as an
+    Arrow table in the ``target`` schema, read executor-side with
+    pyarrow.  Shared by the manifest scan and the ``delta_stream``
+    source (:mod:`cdc_pipe_line_spark.pydatasource`).
+
+    - ``dv``, a deletionVector descriptor, drops the rows whose
+      absolute index the vector lists (merge-on-read).
+      :func:`dvbitmap.read_dv` VALIDATES it (CRC / sizeInBytes /
+      cardinality), and an index past the file's rows raises: a
+      corrupt vector must never silently under-delete.
+    - A ``target`` field the file stores is cast to its declared
+      type; one named in ``consts`` (Hive partition values, the
+      ``__src`` provenance path, a change feed's ``_change_type`` and
+      ``_commit_version``) repeats that value; ``__ridx`` is the row's
+      ORIGINAL position in the file, which survives the mask so DML
+      writers can reference surviving rows by index; any other field
+      is a column added by a later schema evolution and null-fills.
+    """
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cdc_pipe_line_spark import dvbitmap
+
+    consts = consts or {}
+    tbl = pq.read_table(os.path.join(table_dir, path))
+    n = tbl.num_rows
+    ridx = np.arange(n, dtype=np.int64)
+    if dv:
+        idx = dvbitmap.read_dv(table_dir, dv)
+        if idx.size and int(idx.max()) >= n:
+            raise ValueError(
+                f"deletion vector of {path}: row index "
+                f"{int(idx.max())} out of range (file has "
+                f"{n} rows) — the vector or its descriptor "
+                f"is corrupt"
+            )
+        keep = np.ones(n, dtype=bool)
+        keep[idx.astype(np.int64)] = False
+        tbl = tbl.filter(pa.array(keep))
+        ridx = ridx[keep]
+        n = tbl.num_rows
+    arrays = []
+    for field in target:
+        if field.name == "__ridx":
+            arrays.append(pa.array(ridx, type=field.type))
+        elif field.name in tbl.column_names:
+            col = tbl[field.name].combine_chunks()
+            if col.type != field.type:
+                col = col.cast(field.type)
+            arrays.append(col)
+        elif field.name in consts:
+            arrays.append(
+                pa.array([consts[field.name]] * n).cast(field.type)
+            )
+        else:
+            arrays.append(pa.nulls(n, field.type))
+    return pa.Table.from_arrays(arrays, schema=target)
 
 
 class DeltaManifestDataSource(DataSource):
@@ -355,7 +377,5 @@ def scan_live_files(
         .option("manifest", man_dir)
         .option("tabledir", os.path.abspath(table_dir))
         .option("schemajson", schema_json)
-        .option("withsrc", "true" if with_src else "false")
-        .option("withrowidx", "true" if with_row_idx else "false")
         .load()
     )

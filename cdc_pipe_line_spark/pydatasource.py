@@ -378,102 +378,74 @@ def read_stream_ledger(spark, path: str, schema: str):
 # --------------------------------------------------------------------------
 
 
-def _delta_schema_and_names(table_dir: str) -> tuple[str, list[str]]:
-    """The latest metaData.schemaString, from the table's
-    :func:`deltalog.snapshot` (checkpoint included; no Spark session —
-    DataSource.schema() runs before the scan is planned).  Returns
-    (DDL, column names)."""
-    import json
-    import os
+def _delta_schema(table_dir: str, cdf: bool):
+    """The source's output schema: the table's declared columns, from
+    its :func:`deltalog.snapshot` (checkpoint included; no Spark
+    session — DataSource.schema() runs before the scan is planned),
+    then ``_change_type`` in change-feed mode and ``_commit_version``.
+    Partitioned and column-mapped tables are refused: their data files
+    lack the partition values, or store physical names."""
+    from pyspark.sql.types import LongType, StringType, StructField
 
     from cdc_pipe_line_spark import deltalog
 
     meta = deltalog.snapshot(table_dir).metaData
     if meta is None:
-        raise ValueError(
-            f"no metaData action in {os.path.join(table_dir, '_delta_log')}"
-        )
+        raise ValueError(f"no metaData action in {table_dir}/_delta_log")
     if meta.get("partitionColumns"):
         raise ValueError(
             "delta_stream source supports unpartitioned tables (the "
             "Hive-dir partition values are not in the data files)"
         )
-    if (meta.get("configuration") or {}).get(
-        "delta.columnMapping.mode"
-    ) == "name":
+    mapping = (meta.get("configuration") or {}).get("delta.columnMapping.mode")
+    if mapping == "name":
         raise ValueError(
             "delta_stream source does not support column-mapped "
             "tables (physical-name remap); read via "
             "deltalog.read_snapshot / read_changes"
         )
-    fields = json.loads(meta["schemaString"])["fields"]
-    _SPARK_TO_DDL = {
-        "long": "bigint", "integer": "int", "short": "smallint",
-        "byte": "tinyint", "string": "string", "double": "double",
-        "float": "float", "boolean": "boolean", "binary": "binary",
-        "date": "date", "timestamp": "timestamp",
-    }
-    cols, names = [], []
-    for fld in fields:
-        t = fld["type"]
-        if not isinstance(t, str) or t not in _SPARK_TO_DDL:
-            raise ValueError(
-                f"delta_stream: unsupported column type {t!r}"
-            )
-        cols.append(f"{fld['name']} {_SPARK_TO_DDL[t]}")
-        names.append(fld["name"])
-    return ", ".join(cols), names
+    extra = [StructField("_change_type", StringType())] if cdf else []
+    return deltalog._read_schema(
+        meta["schemaString"],
+        *extra,
+        StructField("_commit_version", LongType()),
+    )
 
 
-class _DeltaAddFile(InputPartition):
-    def __init__(
-        self, path: str, version: int, ctype: str | None = None
-    ) -> None:
-        self.path = path
-        self.version = version
-        # change-feed mode: 'insert' / 'delete' legs carry a constant
-        # type; 'cdc' legs read _change_type from the change file
-        self.ctype = ctype
+def _append_only_broken(version: int) -> ValueError:
+    return ValueError(
+        f"delta_stream: data-changing remove at version {version} — "
+        f"the append-only streaming contract is broken (overwrite, "
+        f"restore or DML in range; consume mutations with "
+        f"readChangeFeed=true instead)"
+    )
 
 
 class _DeltaStreamReader(DataSourceStreamReader):
     """The native Delta table as a STREAMING SOURCE — the jar-free
-    equivalent of delta-spark's streaming read: offsets are log
-    VERSIONS (checkpointed by Spark exactly like Kafka offsets), each
-    micro-batch is the set of data-changing ``add`` files committed in
-    ``(start, end]``, one InputPartition per file so the batch scans
-    with file-level parallelism, rows read executor-side via pyarrow.
-    Append-only contract: a data-changing ``remove`` (overwrite /
-    restore) in the batch range raises — the same guard delta-spark's
-    source applies without ignoreChanges.  OPTIMIZE commits
-    (dataChange=false) are skipped as non-events."""
+    equivalent of delta-spark's streaming read.  Offsets are log
+    VERSIONS (checkpointed by Spark exactly like Kafka offsets).  A
+    micro-batch over ``(start, end]`` takes one InputPartition per leg
+    of :func:`deltalog._change_legs`, the census ``read_changes``
+    plans from; executors read each file with
+    :func:`manifest_scan.read_file`, the manifest scan's reader (the
+    validated DV mask, null-fill of columns a later schema evolution
+    added, the declared types), and ship Arrow batches.
 
-    def __init__(self, options: dict) -> None:
+    ``readChangeFeed=true`` streams the change feed, so the drained
+    stream equals ``read_changes`` over the same range.  The plain
+    mode streams inserted rows under the append-only contract: a
+    data-changing ``remove`` (overwrite / restore) or a row-level
+    delete or update in the range raises, the guard delta-spark's
+    source applies without ignoreChanges.  OPTIMIZE commits are
+    non-events."""
+
+    def __init__(self, options: dict, schema) -> None:
         self.table_dir = options["path"]
         self.start_version = int(options.get("startingVersion", "-1"))
-        self.cdf = (
-            str(options.get("readChangeFeed", "false")).lower() == "true"
-        )
-        _ddl, self.col_names = _delta_schema_and_names(self.table_dir)
-
-    def _log_actions(self, lo: int, hi: int) -> list[tuple]:
-        """The data-changing file actions of the commits in
-        ``(lo, hi]``; raises when log cleanup removed them (the
-        checkpoint holds their state, not their changes)."""
-        from cdc_pipe_line_spark import deltalog
-
-        deltalog._assert_changes_readable(
-            self.table_dir, deltalog.snapshot(self.table_dir), lo
-        )
-        out = []
-        for v, act in deltalog._span_actions(self.table_dir, lo, hi):
-            if "add" in act and act["add"].get("dataChange"):
-                out.append(("add", act["add"]["path"], v))
-            elif "remove" in act and act["remove"].get("dataChange"):
-                out.append(("remove", act["remove"]["path"], v))
-            elif "cdc" in act:
-                out.append(("cdc", act["cdc"]["path"], v))
-        return out
+        self.schema = schema
+        # the change-feed schema declares the change type
+        self.cdf = "_change_type" in schema.fieldNames()
 
     def initialOffset(self) -> dict:
         return {"version": self.start_version}
@@ -484,76 +456,48 @@ class _DeltaStreamReader(DataSourceStreamReader):
         return {"version": deltalog.snapshot(self.table_dir).version}
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        acts = self._log_actions(start["version"], end["version"])
-        if self.cdf:
-            # CHANGE FEED mode: versions carrying cdc actions serve
-            # their change files (row-level — exactly the mutated
-            # rows); versions without serve adds as inserts and
-            # data-changing removes as deletes (the tombstoned file
-            # stays readable until vacuum) — the streaming twin of
-            # deltalog.read_changes.
-            cdc_versions = {v for (t, _p, v) in acts if t == "cdc"}
-            parts = []
-            for t, p, v in acts:
-                if t == "cdc":
-                    parts.append(_DeltaAddFile(p, v, "cdc"))
-                elif v in cdc_versions:
-                    continue  # served row-level
-                elif t == "add":
-                    parts.append(_DeltaAddFile(p, v, "insert"))
-                else:
-                    parts.append(_DeltaAddFile(p, v, "delete"))
-            return parts or [_DeltaAddFile("", -1)]
-        removes = [a for a in acts if a[0] == "remove"]
-        if removes:
-            raise ValueError(
-                f"delta_stream: data-changing remove at version "
-                f"{removes[0][2]} — the append-only streaming "
-                f"contract is broken (overwrite/restore in range; "
-                f"consume mutations with readChangeFeed=true instead)"
-            )
-        parts = [
-            _DeltaAddFile(p, v) for (_t, p, v) in acts if _t == "add"
-        ]
+        from cdc_pipe_line_spark import deltalog
+
+        legs = deltalog._change_legs(
+            self.table_dir, start["version"], end["version"]
+        )
+        for v, kind, *_ in legs:
+            if kind == "delete" and not self.cdf:
+                raise _append_only_broken(v)
         # Spark requires >= 1 partition per batch; an empty range
         # yields one empty marker partition
-        return parts or [_DeltaAddFile("", -1)]
+        return [InputPartition(leg[:4]) for leg in legs] or [
+            InputPartition(None)
+        ]
 
-    def read(self, partition: _DeltaAddFile) -> Iterator[tuple]:
-        if not partition.path:
+    def read(self, partition: InputPartition) -> Iterator:
+        if partition.value is None:
             return
-        import os
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        import pyarrow.parquet as _pq
+        from cdc_pipe_line_spark import manifest_scan
 
-        if partition.ctype is None:
-            tbl = _pq.read_table(
-                os.path.join(self.table_dir, partition.path),
-                columns=self.col_names,
-            )
-            cols = [tbl.column(n).to_pylist() for n in self.col_names]
-            for row in zip(*cols):
-                yield (*row, partition.version)
-            return
-        if partition.ctype == "cdc":
-            tbl = _pq.read_table(
-                os.path.join(self.table_dir, partition.path),
-                columns=[*self.col_names, "_change_type"],
-            )
-            cols = [
-                tbl.column(n).to_pylist()
-                for n in [*self.col_names, "_change_type"]
-            ]
-            for row in zip(*cols):
-                yield (*row, partition.version)
-            return
-        tbl = _pq.read_table(
-            os.path.join(self.table_dir, partition.path),
-            columns=self.col_names,
+        version, kind, path, dv = partition.value
+        target = to_arrow_schema(self.schema)
+        if not self.cdf:
+            target = target.append(pa.field("_change_type", pa.string()))
+        # a change-data file's own _change_type wins over the constant
+        tbl = manifest_scan.read_file(
+            self.table_dir,
+            path,
+            target,
+            dv=dv,
+            consts={"_change_type": kind, "_commit_version": version},
         )
-        cols = [tbl.column(n).to_pylist() for n in self.col_names]
-        for row in zip(*cols):
-            yield (*row, partition.ctype, partition.version)
+        if not self.cdf:
+            # a row-level DML commit streams in plain mode only if it
+            # just inserted
+            if pc.any(pc.not_equal(tbl["_change_type"], "insert")).as_py():
+                raise _append_only_broken(version)
+            tbl = tbl.drop_columns(["_change_type"])
+        yield from tbl.to_batches(max_chunksize=1 << 16)
 
     def commit(self, end: dict) -> None:
         pass
@@ -572,14 +516,9 @@ class DeltaStreamDataSource(DataSource):
     def name(cls) -> str:
         return "delta_stream"
 
-    def schema(self) -> str:
-        ddl, _names = _delta_schema_and_names(self.options["path"])
-        if (
-            str(self.options.get("readChangeFeed", "false")).lower()
-            == "true"
-        ):
-            return f"{ddl}, _change_type string, _commit_version bigint"
-        return f"{ddl}, _commit_version bigint"
+    def schema(self):
+        cdf = self.options.get("readChangeFeed", "false").lower() == "true"
+        return _delta_schema(self.options["path"], cdf)
 
     def streamReader(self, schema) -> _DeltaStreamReader:
-        return _DeltaStreamReader(self.options)
+        return _DeltaStreamReader(self.options, schema)

@@ -1606,8 +1606,8 @@ GROUP BY 1"""
 
 def q_stream_delta_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING CHANGE FEED of a native Delta table
-    (``readChangeFeed=true`` on the delta_stream source — the
-    streaming twin of ``deltalog.read_changes``): DML commits stream
+    (``readChangeFeed=true`` on the delta_stream source, planned from
+    the same leg census as ``deltalog.read_changes``): DML commits stream
     their ``_change_data`` files ROW-LEVEL (exactly the mutated rows,
     tagged insert / delete / update_preimage / update_postimage),
     append commits stream as inserts, and the plain mode's

@@ -214,6 +214,45 @@ def test_delta_stream_plain_mode_guard_still_raises(spark, table_dir):
         q.awaitTermination()
 
 
+def test_delta_stream_plain_mode_streams_an_insert_only_merge(
+    spark, table_dir
+):
+    """An insert-only MERGE removes nothing, so a plain stream carries
+    its rows (served from the commit's change file, all inserts)."""
+    from cdc_pipe_line_spark.pydatasource import DeltaStreamDataSource
+
+    deltalog.create_table(spark, spark.range(3), table_dir)         # v0
+    deltalog.merge_into(
+        spark,
+        table_dir,
+        spark.range(2, 5),
+        "t.id = s.id",
+        when_not_matched_insert={"id": "s.id"},
+    )                                                               # v1
+    assert [
+        leg[1] for leg in deltalog._change_legs(table_dir, 0, 1)
+    ] == ["cdc"]
+    try:
+        spark.dataSource.register(DeltaStreamDataSource)
+    except Exception:
+        pass
+    q = (
+        spark.readStream.format("delta_stream")
+        .option("path", table_dir)
+        .load()
+        .writeStream.format("memory")
+        .queryName("t_merge_src")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    got = sorted(
+        (int(r["id"]), int(r["_commit_version"]))
+        for r in spark.sql("select * from t_merge_src").collect()
+    )
+    assert got == [(0, 0), (1, 0), (2, 0), (3, 1), (4, 1)]
+
+
 # ------------------------------------------------- CHECK constraints
 
 

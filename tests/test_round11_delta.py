@@ -524,6 +524,39 @@ def test_delta_stream_source_versions_as_offsets(spark, table_dir):
     assert got == {0: (5, 10), 1: (5, 35), 3: (5, 60)}
 
 
+def test_delta_stream_source_over_an_evolved_table(spark, table_dir):
+    """A plain stream over a table ``append_evolve`` widened reads
+    every file in the declared schema: the older file's rows stream
+    with the new column null, as ``read_snapshot`` reads them."""
+    from cdc_pipe_line_spark.pydatasource import DeltaStreamDataSource
+
+    deltalog.create_table(spark, _mk(spark, 0, 3), table_dir)      # v0
+    deltalog.append_evolve(
+        spark,
+        _mk(spark, 3, 5).withColumn("w", F.col("id") * 10),
+        table_dir,
+    )                                                              # v1
+    try:
+        spark.dataSource.register(DeltaStreamDataSource)
+    except Exception:
+        pass
+    q = (
+        spark.readStream.format("delta_stream")
+        .option("path", table_dir)
+        .load()
+        .writeStream.format("memory")
+        .queryName("t_dsrc_evolved")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    got = sorted(
+        (r["id"], r["w"], r["_commit_version"])
+        for r in spark.sql("select * from t_dsrc_evolved").collect()
+    )
+    assert got == [(i, None, 0) for i in range(3)] + [(3, 30, 1), (4, 40, 1)]
+
+
 def test_delta_stream_source_rejects_overwrite(spark, table_dir):
     from cdc_pipe_line_spark.pydatasource import DeltaStreamDataSource
 

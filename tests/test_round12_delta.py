@@ -14,7 +14,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from cdc_pipe_line_spark import deltalog
+from cdc_pipe_line_spark import deltalog, manifest_scan
 
 BASE = "/tmp/cdc_r12_delta"
 
@@ -361,7 +361,7 @@ def test_explicit_parts_override(spark):
 
 
 @pytest.mark.slow
-def test_manifest_scan_matches_native(spark):
+def test_manifest_scan_matches_native(spark, monkeypatch):
     path = _fresh("manifest_eq")
     df = spark.createDataFrame(
         [(i, "s%d" % i, float(i)) for i in range(60)],
@@ -373,14 +373,13 @@ def test_manifest_scan_matches_native(spark):
             spark, df.filter(f"k >= {lo} and k < {lo + 10}"), path
         )
     native = deltalog.read_snapshot(spark, path).orderBy("k").collect()
-    man = deltalog.read_snapshot(
-        spark, path, manifest_threshold=2
-    ).orderBy("k").collect()
+    monkeypatch.setattr(manifest_scan, "DEFAULT_THRESHOLD", 2)
+    man = deltalog.read_snapshot(spark, path).orderBy("k").collect()
     assert native == man
     assert len(man) == 60
 
 
-def test_manifest_scan_partitioned_evolved(spark):
+def test_manifest_scan_partitioned_evolved(spark, monkeypatch):
     path = _fresh("manifest_part")
     df = spark.createDataFrame(
         [(i, i % 3, float(i)) for i in range(30)],
@@ -398,17 +397,16 @@ def test_manifest_scan_partitioned_evolved(spark):
         path,
     )
     native = deltalog.read_snapshot(spark, path).orderBy("k").collect()
-    man = deltalog.read_snapshot(
-        spark, path, manifest_threshold=1
-    ).orderBy("k").collect()
+    monkeypatch.setattr(manifest_scan, "DEFAULT_THRESHOLD", 1)
+    man = deltalog.read_snapshot(spark, path).orderBy("k").collect()
     assert native == man
-    got = deltalog.read_snapshot(spark, path, manifest_threshold=1)
+    got = deltalog.read_snapshot(spark, path)
     # declared types survive the manifest route (partition col re-typed)
     assert dict(got.dtypes)["part"] == "int"
 
 
 @pytest.mark.slow
-def test_dml_through_manifest_census(spark):
+def test_dml_through_manifest_census(spark, monkeypatch):
     """DELETE/UPDATE/MERGE locate their touched files through the
     manifest route when the candidate census passes the threshold —
     results identical to the driver-list path."""
@@ -421,20 +419,18 @@ def test_dml_through_manifest_census(spark):
         deltalog.append(
             spark, df.filter(f"k >= {lo} and k < {lo + 10}"), path
         )
-    deltalog.delete_where(
-        spark, path, "k % 10 = 3", manifest_threshold=1
-    )
-    deltalog.update_where(
-        spark, path, "k % 10 = 5", {"v": "v + 1000.0"},
-        manifest_threshold=1,
-    )
     src = spark.createDataFrame([(7, 7.7), (99, 9.9)], "k int, nv double")
-    deltalog.merge_into(
-        spark, path, src, "t.k = s.k",
-        when_matched_update={"v": "s.nv"},
-        when_not_matched_insert={"k": "s.k", "s": "'new'", "v": "s.nv"},
-        manifest_threshold=1,
-    )
+    with monkeypatch.context() as m:
+        m.setattr(manifest_scan, "DEFAULT_THRESHOLD", 1)
+        deltalog.delete_where(spark, path, "k % 10 = 3")
+        deltalog.update_where(
+            spark, path, "k % 10 = 5", {"v": "v + 1000.0"}
+        )
+        deltalog.merge_into(
+            spark, path, src, "t.k = s.k",
+            when_matched_update={"v": "s.nv"},
+            when_not_matched_insert={"k": "s.k", "s": "'new'", "v": "s.nv"},
+        )
     got = {r.k: r.v for r in deltalog.read_snapshot(spark, path).collect()}
     assert set(got) == (set(range(40)) - {3, 13, 23, 33}) | {99}
     assert got[5] == 1005.0 and got[15] == 1015.0

@@ -12,7 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from cdc_pipe_line_spark import deltalog
+from cdc_pipe_line_spark import deltalog, manifest_scan
 
 BASE = "/tmp/cdc_r12_dv"
 
@@ -236,21 +236,18 @@ def test_restore_carries_dv_descriptors(spark):
     assert deltalog.read_snapshot(spark, path).count() == 20
 
 
-@pytest.mark.slow
-def test_dv_via_manifest_route(spark):
+def test_dv_via_manifest_route(spark, monkeypatch):
     path = _fresh("manifest")
     _stage(spark, path, n=40, files=4)
-    deltalog.delete_where(
-        spark, path, "k % 3 = 0", manifest_threshold=1
-    )
+    with monkeypatch.context() as m:
+        m.setattr(manifest_scan, "DEFAULT_THRESHOLD", 1)
+        deltalog.delete_where(spark, path, "k % 3 = 0")
     native = sorted(
         r.k for r in deltalog.read_snapshot(spark, path).collect()
     )
+    monkeypatch.setattr(manifest_scan, "DEFAULT_THRESHOLD", 1)
     man = sorted(
-        r.k
-        for r in deltalog.read_snapshot(
-            spark, path, manifest_threshold=1
-        ).collect()
+        r.k for r in deltalog.read_snapshot(spark, path).collect()
     )
     assert native == man == [k for k in range(40) if k % 3]
 
@@ -436,7 +433,7 @@ def test_append_only_property_enforced(spark):
     assert deltalog.read_snapshot(spark, path).count() == 21
 
 
-def test_dv_with_skipping_and_partition_filter(spark):
+def test_dv_with_skipping_and_partition_filter(spark, monkeypatch):
     """Stats skipping, partition pruning, and DV masking compose on
     one read: pruning narrows candidate files, the DV mask drops
     deleted positions, the row filter keeps exactness."""
@@ -459,6 +456,7 @@ def test_dv_with_skipping_and_partition_filter(spark):
     )
     assert got == [k for k in range(20) if k % 2 == 0 and k % 4 != 0]
     # same through the manifest route
+    monkeypatch.setattr(manifest_scan, "DEFAULT_THRESHOLD", 0)
     got2 = sorted(
         r.k
         for r in deltalog.read_snapshot(
@@ -466,7 +464,6 @@ def test_dv_with_skipping_and_partition_filter(spark):
             path,
             partition_filter={"part": "0"},
             skipping=[("k", "<", 20)],
-            manifest_threshold=0,
         ).collect()
     )
     assert got2 == got
@@ -475,12 +472,17 @@ def test_dv_with_skipping_and_partition_filter(spark):
 def test_streaming_cdf_over_dv_table(spark):
     """The streaming change feed serves DV-mode DML row-level: a DV
     DELETE commit streams exactly the deleted rows (from its cdc
-    file), never the re-added file's surviving rows."""
+    file), never the re-added file's surviving rows.  An OVERWRITE
+    over the DV'd files and a RESTORE back to the DV'd state stream
+    the same rows ``read_changes`` reports: the delete legs and the
+    restored inserts stay masked by the vectors."""
     from cdc_pipe_line_spark.pydatasource import DeltaStreamDataSource
 
     path = _fresh("stream_cdf")
-    _stage(spark, path)
+    df = _stage(spark, path)
     deltalog.delete_where(spark, path, "k % 7 = 0")  # v3, DV + cdc
+    deltalog.overwrite(spark, df.filter("k >= 15"), path)  # v4
+    deltalog.restore(spark, path, 3)  # v5
     try:
         spark.dataSource.register(DeltaStreamDataSource)
     except Exception:
@@ -500,12 +502,18 @@ def test_streaming_cdf_over_dv_table(spark):
     )
     q.awaitTermination()
     rows = spark.sql(
-        "SELECT k, _change_type, _commit_version FROM r12_dv_cdf "
-        "WHERE _commit_version = 3"
+        "SELECT k, _change_type, _commit_version FROM r12_dv_cdf"
     ).collect()
-    assert sorted((r.k, r._change_type) for r in rows) == [
-        (0, "delete"), (7, "delete"), (14, "delete"),
-    ]
+    assert sorted(
+        (r.k, r._change_type) for r in rows if r._commit_version == 3
+    ) == [(0, "delete"), (7, "delete"), (14, "delete")]
+    batch = deltalog.read_changes(spark, path, starting_version=-1)
+    key = lambda r: (r.k, r._change_type, r._commit_version)  # noqa: E731
+    assert sorted(map(key, rows)) == sorted(map(key, batch.collect()))
+    # the masked keys are reported once, by the DV delete
+    assert sorted(r.k for r in rows if r._commit_version >= 4) == sorted(
+        ([k for k in range(20) if k % 7] + list(range(15, 20))) * 2
+    )
 
 
 def test_dv_merge_with_schema_evolution(spark):

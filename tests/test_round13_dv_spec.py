@@ -13,7 +13,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from cdc_pipe_line_spark import deltalog, dvbitmap
+from cdc_pipe_line_spark import deltalog, dvbitmap, manifest_scan
 
 BASE = "/tmp/cdc_r13_dvspec"
 
@@ -132,7 +132,7 @@ def test_inline_grows_into_bin_on_merge(spark):
     ]
 
 
-def test_corrupt_bin_raises_on_both_routes(spark):
+def test_corrupt_bin_raises_on_both_routes(spark, monkeypatch):
     path = _fresh("corrupt")
     _stage(spark, path, n=4000, files=2)
     deltalog.delete_where(spark, path, "k % 3 = 0")
@@ -144,11 +144,12 @@ def test_corrupt_bin_raises_on_both_routes(spark):
     open(full, "wb").write(bytes(raw))
     with pytest.raises(Exception, match="CRC|corrupt"):
         deltalog.read_snapshot(spark, path).count()
+    monkeypatch.setattr(manifest_scan, "DEFAULT_THRESHOLD", 1)
     with pytest.raises(Exception, match="CRC|corrupt"):
-        deltalog.read_snapshot(spark, path, manifest_threshold=1).count()
+        deltalog.read_snapshot(spark, path).count()
 
 
-def test_out_of_range_index_raises_on_both_routes(spark):
+def test_out_of_range_index_raises_on_both_routes(spark, monkeypatch):
     path = _fresh("oob")
     _stage(spark, path, n=20, files=1)
     # hand-commit a descriptor whose vector points past the file's end
@@ -175,8 +176,9 @@ def test_out_of_range_index_raises_on_both_routes(spark):
     )
     with pytest.raises(Exception, match="out of range"):
         deltalog.read_snapshot(spark, path).count()
+    monkeypatch.setattr(manifest_scan, "DEFAULT_THRESHOLD", 0)
     with pytest.raises(Exception, match="out of range"):
-        deltalog.read_snapshot(spark, path, manifest_threshold=0).count()
+        deltalog.read_snapshot(spark, path).count()
 
 
 def test_wrong_cardinality_raises(spark):
@@ -304,7 +306,6 @@ def test_cdf_masks_restored_dv_file_insert_leg(spark):
     assert deltalog.read_snapshot(spark, path).count() == 15
 
 
-@pytest.mark.slow
 def test_cdf_masks_overwrite_delete_leg_over_dv_file(spark):
     # OVERWRITE tombstones a file that was live WITH a vector: the
     # delete leg reports only the rows live at the predecessor
@@ -329,7 +330,7 @@ def test_cdf_masks_overwrite_delete_leg_over_dv_file(spark):
 
 
 @pytest.mark.slow
-def test_manifest_lifecycle_no_orphans_after_dml(spark):
+def test_manifest_lifecycle_no_orphans_after_dml(spark, monkeypatch):
     # over-threshold DML censuses plan manifests; the statement must
     # release them on return — success AND failure (VERDICT r12
     # what's-wrong 4)
@@ -344,7 +345,9 @@ def test_manifest_lifecycle_no_orphans_after_dml(spark):
     before = set(os.listdir(ms.MANIFEST_ROOT)) if os.path.isdir(
         ms.MANIFEST_ROOT
     ) else set()
-    deltalog.delete_where(spark, path, "k % 4 = 0", manifest_threshold=1)
+    with monkeypatch.context() as m:
+        m.setattr(ms, "DEFAULT_THRESHOLD", 1)
+        deltalog.delete_where(spark, path, "k % 4 = 0")
     after = set(os.listdir(ms.MANIFEST_ROOT)) if os.path.isdir(
         ms.MANIFEST_ROOT
     ) else set()
@@ -353,10 +356,9 @@ def test_manifest_lifecycle_no_orphans_after_dml(spark):
     # failure path: a constraint violation aborts the statement
     # mid-flight; the finally still releases its manifests
     deltalog.add_constraint(spark, path, "v_cap", "v < 1000")
+    monkeypatch.setattr(ms, "DEFAULT_THRESHOLD", 1)
     with pytest.raises(ValueError, match="v_cap"):
-        deltalog.update_where(
-            spark, path, "k = 1", {"v": "9999.0"}, manifest_threshold=1
-        )
+        deltalog.update_where(spark, path, "k = 1", {"v": "9999.0"})
     after2 = set(os.listdir(ms.MANIFEST_ROOT)) if os.path.isdir(
         ms.MANIFEST_ROOT
     ) else set()
@@ -364,7 +366,7 @@ def test_manifest_lifecycle_no_orphans_after_dml(spark):
 
 
 @pytest.mark.slow
-def test_manifest_ttl_sweep_and_session_cleanup(spark):
+def test_manifest_ttl_sweep_and_session_cleanup(spark, monkeypatch):
     from cdc_pipe_line_spark import manifest_scan as ms
 
     path = _fresh("man_ttl")
@@ -374,7 +376,8 @@ def test_manifest_ttl_sweep_and_session_cleanup(spark):
     deltalog.create_table(spark, df.filter("k < 20"), path)
     deltalog.append(spark, df.filter("k >= 20"), path)
     mark = ms.manifest_mark()
-    snap = deltalog.read_snapshot(spark, path, manifest_threshold=1)
+    monkeypatch.setattr(ms, "DEFAULT_THRESHOLD", 1)
+    snap = deltalog.read_snapshot(spark, path)
     assert snap.count() == 40
     created = ms._SESSION_MANIFESTS[mark:]
     assert created and all(os.path.isdir(d) for d in created)
@@ -382,7 +385,7 @@ def test_manifest_ttl_sweep_and_session_cleanup(spark):
     old = os.path.join(ms.MANIFEST_ROOT, "aged-fixture")
     os.makedirs(old, exist_ok=True)
     os.utime(old, (1, 1))
-    deltalog.read_snapshot(spark, path, manifest_threshold=1).count()
+    deltalog.read_snapshot(spark, path).count()
     assert not os.path.isdir(old)
     # session cleanup removes everything this process registered
     ms._cleanup_session()

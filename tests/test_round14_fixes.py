@@ -79,7 +79,7 @@ def test_sweep_keeps_fresh_dirs_regardless_of_owner():
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_scan_writes_owner_pid(spark):
+def test_scan_writes_owner_pid(spark, monkeypatch):
     import shutil
 
     from cdc_pipe_line_spark import deltalog
@@ -92,7 +92,8 @@ def test_scan_writes_owner_pid(spark):
     deltalog.create_table(spark, df.filter("k < 5"), path)
     deltalog.append(spark, df.filter("k >= 5"), path)
     mark = ms.manifest_mark()
-    snap = deltalog.read_snapshot(spark, path, manifest_threshold=1)
+    monkeypatch.setattr(ms, "DEFAULT_THRESHOLD", 1)
+    snap = deltalog.read_snapshot(spark, path)
     assert snap.count() == 10
     created = ms._SESSION_MANIFESTS[mark:]
     assert created

@@ -20,7 +20,7 @@ import shutil
 
 import pytest
 
-from cdc_pipe_line_spark import deltalog
+from cdc_pipe_line_spark import deltalog, manifest_scan
 
 BASE = "/tmp/cdc_r14_v2ckpt"
 
@@ -48,7 +48,7 @@ def _stage(spark, path):
 
 
 @pytest.mark.parametrize("fmt", ["parquet", "json"])
-def test_v2_checkpoint_reads_identical_to_classic(spark, fmt):
+def test_v2_checkpoint_reads_identical_to_classic(spark, fmt, monkeypatch):
     path = _fresh(f"roundtrip_{fmt}")
     _stage(spark, path)
     before = sorted(
@@ -76,7 +76,8 @@ def test_v2_checkpoint_reads_identical_to_classic(spark, fmt):
     )
     assert deltalog.snapshot(path).protocol["minWriterVersion"] >= 2
     # distributed replay too (bypass the driver fast path)
-    n = deltalog.read_snapshot(spark, path, manifest_threshold=1).count()
+    monkeypatch.setattr(manifest_scan, "DEFAULT_THRESHOLD", 1)
+    n = deltalog.read_snapshot(spark, path).count()
     assert n == len(before)
 
 

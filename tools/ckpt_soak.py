@@ -26,7 +26,7 @@ N_FILES = int(sys.argv[2]) if len(sys.argv) > 2 else 2_000
 def main() -> None:
     from pyspark.sql import SparkSession
 
-    from cdc_pipe_line_spark import deltalog
+    from cdc_pipe_line_spark import deltalog, manifest_scan
 
     spark = (
         SparkSession.builder.master(
@@ -125,9 +125,10 @@ def main() -> None:
     ).first()
     t_native = time.time() - t0
     t0 = time.time()
-    man = deltalog.read_snapshot(
-        spark, base2, manifest_threshold=100
-    ).agg(F.count("*").alias("n"), F.sum("k").alias("s")).first()
+    manifest_scan.DEFAULT_THRESHOLD = 100
+    man = deltalog.read_snapshot(spark, base2).agg(
+        F.count("*").alias("n"), F.sum("k").alias("s")
+    ).first()
     t_manifest = time.time() - t0
     print(json.dumps({
         "leg": "manifest_scan",

@@ -79,14 +79,15 @@ def main() -> None:
     )
     # at/over 50k files the DEFAULT gate crosses into the manifest
     # route; a smaller smoke run forces the gate down instead
-    over = N_FILES > manifest_scan.DEFAULT_THRESHOLD
-    thr = None if over else N_FILES // 2
+    default = manifest_scan.DEFAULT_THRESHOLD
+    thr = default if N_FILES > default else N_FILES // 2
 
     # (a) snapshot read: manifest route
     rss_before = rss_mb()
     t0 = time.time()
+    manifest_scan.DEFAULT_THRESHOLD = thr
     man = (
-        deltalog.read_snapshot(spark, base, manifest_threshold=thr)
+        deltalog.read_snapshot(spark, base)
         .agg(F.count("*").alias("n"), F.sum("k").alias("s"))
         .first()
     )
@@ -94,8 +95,9 @@ def main() -> None:
     rss_man = rss_mb()
     # forced driver-list path for comparison
     t0 = time.time()
+    manifest_scan.DEFAULT_THRESHOLD = 10**9
     nat = (
-        deltalog.read_snapshot(spark, base, manifest_threshold=10**9)
+        deltalog.read_snapshot(spark, base)
         .agg(F.count("*").alias("n"), F.sum("k").alias("s"))
         .first()
     )
@@ -126,9 +128,9 @@ def main() -> None:
 
     dirs_before = _man_dirs()
     t0 = time.time()
-    deltalog.delete_where(
-        spark, base, f"k < {ROWS_PER_FILE * 20}", manifest_threshold=thr
-    )
+    manifest_scan.DEFAULT_THRESHOLD = thr
+    deltalog.delete_where(spark, base, f"k < {ROWS_PER_FILE * 20}")
+    manifest_scan.DEFAULT_THRESHOLD = default
     t_dml = time.time() - t0
     n_after = deltalog.read_snapshot(spark, base).count()
     orphans = len(_man_dirs() - dirs_before)
