@@ -29,10 +29,13 @@ the JSON tail yields the version, metaData, protocol, ``txn`` marks,
 the newest commit's timestamp and (below
 :data:`DRIVER_REPLAY_MAX_BYTES`) the live ``add`` actions.  A small
 per-process cache keeps each table's current snapshot; a lookup lists
-``_delta_log`` once and parses only the commits written since.  Past
-the byte budget the live-file census is the distributed replay
-(:func:`read_log_actions` + :func:`live_files`), which keeps driver
-memory bounded.
+``_delta_log`` once and parses only the commits written since.  The
+live files of a snapshot, at any version, come out of ONE function,
+:func:`_live_frame`: the snapshot's adds as a driver-local frame below
+the byte budget, the distributed replay bounded to the snapshot's
+version past it (:func:`read_log_actions` + :func:`live_files`), which
+keeps driver memory bounded.  Readers, DML, checkpoint, vacuum,
+restore and DESCRIBE DETAIL all take their census from it.
 
 Data skipping (round 11): every data file the writer emits carries
 the protocol's per-file column statistics on its ``add`` action
@@ -79,19 +82,21 @@ LOG_SCHEMA = (
 
 
 def read_log_actions(
-    spark: SparkSession, table_dir: str, *, json_only: bool = False
+    spark: SparkSession, table_dir: str, *, snap: "Snapshot | None" = None
 ) -> DataFrame:
-    """All log actions with their commit version, one row per action.
+    """The log actions that reconstruct ``snap`` (by default the
+    table's current :func:`snapshot`), one row per action with its
+    commit version.
 
-    With a checkpoint present (``_last_checkpoint`` pointer), the scan
-    reads the checkpoint parquet PLUS only the JSON commits after it —
-    the protocol's bounded-log contract: state reconstruction cost is
+    A snapshot at or past a checkpoint reads the checkpoint files PLUS
+    only the JSON commits after it, up to the snapshot's version — the
+    protocol's bounded-log contract: state reconstruction costs
     O(checkpoint + tail), however long the table's history, and log
     cleanup may delete the pre-checkpoint JSON entirely.  Checkpoint
     rows carry the checkpoint's version (they ARE the state as of that
-    commit).  ``json_only=True`` bypasses the checkpoint — the time
-    travel path, which needs per-commit granularity and therefore the
-    raw JSON (readable until log cleanup).
+    commit).  A snapshot without one (no checkpoint, or a version
+    below it, which :func:`snapshot` replays from the raw JSON) reads
+    the JSON commits from version 0.
 
     Distributed JSON/parquet scans; the JSON version is parsed from
     each action's source file name, so ordering survives however many
@@ -100,36 +105,32 @@ def read_log_actions(
     path makes Spark probe it for a streaming-sink log first, which
     logs a FileNotFoundException stack trace on every read.
     """
+    snap = snapshot(table_dir) if snap is None else snap
     log_dir = os.path.join(table_dir, "_delta_log")
-    lc = os.path.join(log_dir, "_last_checkpoint")
-    if not json_only and os.path.exists(lc):
-        import json as _json
-
-        with open(lc) as fh:
-            ck_ver = int(_json.load(fh)["version"])
-        src = _checkpoint_sources(log_dir, ck_ver)
-        legs = []
+    ck = snap.checkpoint_version
+    tail = [
+        v
+        for v in _commit_versions(log_dir)
+        if (ck is None or v > ck) and v <= snap.version
+    ]
+    scans = []
+    if ck is not None:
+        src = _checkpoint_sources(log_dir, ck)
+        reader = spark.read.schema(LOG_SCHEMA)
         if src["parquet"]:
-            legs.append(
-                spark.read.schema(LOG_SCHEMA).parquet(*src["parquet"])
-            )
+            scans.append(reader.parquet(*src["parquet"]))
         if src["json"]:
             # a V2 checkpoint manifest may itself be JSON lines
-            legs.append(
-                spark.read.schema(LOG_SCHEMA).json(src["json"])
-            )
-        ck = legs[0]
-        for leg in legs[1:]:
-            ck = ck.unionByName(leg)
-        ck = ck.withColumn("version", F.lit(ck_ver).cast("bigint"))
-        tail = [v for v in _commit_versions(log_dir) if v > ck_ver]
-        if not tail:
-            return ck
-        return ck.unionByName(_read_commits(spark, log_dir, tail))
-    versions = _commit_versions(log_dir)
-    if not versions:
+            scans.append(reader.json(src["json"]))
+        scans = [s.withColumn("version", F.lit(ck).cast("bigint")) for s in scans]
+    elif not tail:
         raise FileNotFoundError(f"no JSON commits under {log_dir}")
-    return _read_commits(spark, log_dir, versions)
+    if tail:
+        scans.append(_read_commits(spark, log_dir, tail))
+    out = scans[0]
+    for scan in scans[1:]:
+        out = out.unionByName(scan)
+    return out
 
 
 def _commit_versions(log_dir: str, names: list[str] | None = None) -> list[int]:
@@ -214,51 +215,72 @@ _DV_FIELDS = (
 
 
 def _live_frame(
-    spark: SparkSession, table_dir: str, snap: "Snapshot"
+    spark: SparkSession,
+    table_dir: str,
+    snap: "Snapshot",
+    *,
+    partition_filter: dict | None = None,
+    skipping: list[tuple] | None = None,
 ) -> DataFrame:
-    """The live-file frame (the columns :func:`live_files` produces)
-    of ``snap`` — from its ``add`` actions when the log fits the byte
-    budget, the distributed replay otherwise.  Same columns either
-    way, so all Column logic (skipping filters, ``isin`` censuses,
-    payload collects) is route-agnostic.
+    """The live files of ``snap`` (the columns :func:`live_files`
+    produces), at whatever version it holds: the one place library
+    code turns the log into live files.  Same columns on both routes,
+    so all Column logic over it (``isin`` censuses, payload collects,
+    aggregates) is route-agnostic.
 
-    The driver route builds the frame from an Arrow table, which
-    Spark plans as a ``LocalRelation``: projections, filters, limits
-    and collects over it are folded on the driver and run NO Spark
-    job.  (A frame from a list of row tuples would be a ``LogicalRDD``
-    costing two jobs per collect.)"""
+    Below :data:`DRIVER_REPLAY_MAX_BYTES` the frame is the snapshot's
+    ``add`` actions as an Arrow table, which Spark plans as a
+    ``LocalRelation``: projections, filters, limits and collects over
+    it are folded on the driver and run NO Spark job.  (A frame from a
+    list of row tuples would be a ``LogicalRDD`` costing two jobs per
+    collect.)  Past the budget it is the distributed replay bounded to
+    ``snap.version`` (:func:`read_log_actions` + :func:`live_files`).
+
+    ``partition_filter`` keeps the files of one partition (values
+    compare as the strings the log records) and ``skipping`` drops
+    files whose stat envelopes prove no row can match
+    (:func:`_skipping_keep`): the same filters on both routes, which
+    over the local relation fold on the driver too."""
     if snap.adds is None:
-        return live_files(read_log_actions(spark, table_dir))
-    import pyarrow as pa
+        lf = live_files(read_log_actions(spark, table_dir, snap=snap))
+    else:
+        import pyarrow as pa
 
-    adds = snap.adds
-    dv_type = pa.struct([(n, t) for n, t in _DV_FIELDS])
-    table = pa.table(
-        {
-            "path": pa.array([a["path"] for a in adds], pa.string()),
-            "size": pa.array([a.get("size") for a in adds], pa.int64()),
-            "partitionValues": pa.array(
-                [
-                    list(a["partitionValues"].items())
-                    if a.get("partitionValues") is not None
-                    else None
-                    for a in adds
-                ],
-                pa.map_(pa.string(), pa.string()),
-            ),
-            "stats": pa.array([a.get("stats") for a in adds], pa.string()),
-            "deletionVector": pa.array(
-                [
-                    {n: a["deletionVector"].get(n) for n, _t in _DV_FIELDS}
-                    if a.get("deletionVector")
-                    else None
-                    for a in adds
-                ],
-                dv_type,
-            ),
-        }
-    )
-    return spark.createDataFrame(table)
+        adds = snap.adds
+        dv_type = pa.struct([(n, t) for n, t in _DV_FIELDS])
+        table = pa.table(
+            {
+                "path": pa.array([a["path"] for a in adds], pa.string()),
+                "size": pa.array([a.get("size") for a in adds], pa.int64()),
+                "partitionValues": pa.array(
+                    [
+                        list(a["partitionValues"].items())
+                        if a.get("partitionValues") is not None
+                        else None
+                        for a in adds
+                    ],
+                    pa.map_(pa.string(), pa.string()),
+                ),
+                "stats": pa.array([a.get("stats") for a in adds], pa.string()),
+                "deletionVector": pa.array(
+                    [
+                        {n: a["deletionVector"].get(n) for n, _t in _DV_FIELDS}
+                        if a.get("deletionVector")
+                        else None
+                        for a in adds
+                    ],
+                    dv_type,
+                ),
+            }
+        )
+        lf = spark.createDataFrame(table)
+    for k, v in (partition_filter or {}).items():
+        lf = lf.filter(F.col("partitionValues").getItem(k) == str(v))
+    if skipping:
+        lf = lf.filter(
+            _skipping_keep(skipping, _mapping_from(snap.schema_string))
+        )
+    return lf
 
 
 def _checkpoint_version(table_dir: str) -> int | None:
@@ -345,8 +367,6 @@ def _parse_v2_manifest(
     per spec; a missing sidecar RAISES — silently dropping one would
     mis-reconstruct the table the same way a corrupt deletion vector
     would."""
-    import json as _json
-
     sidecars: list[str] = []
     ck_ver: int | None = None
     if manifest.endswith(".json"):
@@ -354,7 +374,7 @@ def _parse_v2_manifest(
             for line in fh:
                 if not line.strip():
                     continue
-                a = _json.loads(line)
+                a = json.loads(line)
                 sc = a.get("sidecar")
                 if sc and sc.get("path"):
                     sidecars.append(sc["path"])
@@ -441,7 +461,6 @@ def convert_checkpoint_to_v2(
     offline — fixtures, interop drills, and the migration path for
     the day an external v2-writing engine shares a table.  Pure
     pyarrow + file I/O, no Spark session."""
-    import json as _json
     import uuid as _uuid
 
     import pyarrow as _pa
@@ -497,19 +516,22 @@ def convert_checkpoint_to_v2(
         return v
 
     if fmt == "json":
-        with open(manifest, "w") as fh:
-            fh.write(
-                _json.dumps({"checkpointMetadata": {"version": ver}})
-                + "\n"
-            )
-            for r in other.to_pylist():
-                act = {
-                    k: _norm(v) for k, v in r.items() if v is not None
-                }
-                if act:
-                    fh.write(_json.dumps(act) + "\n")
-            for e in entries:
-                fh.write(_json.dumps({"sidecar": e}) + "\n")
+
+        def write(path):
+            with open(path, "w") as fh:
+                fh.write(
+                    json.dumps({"checkpointMetadata": {"version": ver}})
+                    + "\n"
+                )
+                for r in other.to_pylist():
+                    act = {
+                        k: _norm(v) for k, v in r.items() if v is not None
+                    }
+                    if act:
+                        fh.write(json.dumps(act) + "\n")
+                for e in entries:
+                    fh.write(json.dumps({"sidecar": e}) + "\n")
+
     elif fmt == "parquet":
         extra = len(entries) + 1
         cols, names = [], []
@@ -540,9 +562,15 @@ def convert_checkpoint_to_v2(
             )
         )
         names.append("checkpointMetadata")
-        _pq.write_table(_pa.table(dict(zip(names, cols))), manifest)
+        table = _pa.table(dict(zip(names, cols)))
+
+        def write(path):
+            _pq.write_table(table, path)
+
     else:
         raise ValueError(f"unsupported v2 manifest format: {fmt!r}")
+    # the manifest lands whole before the classic parts go
+    _replace_whole(manifest, write)
     for p in classic:
         os.remove(p)
     return manifest
@@ -556,8 +584,6 @@ def _iter_checkpoint_actions(log_dir: str, ver: int, columns=None):
     only non-file actions).  Yields rows manifest-first; the
     :func:`snapshot` replay turns them into actions
     (:func:`_from_checkpoint`)."""
-    import json as _json
-
     import pyarrow.parquet as _pq
 
     src = _checkpoint_sources(log_dir, ver)
@@ -566,7 +592,7 @@ def _iter_checkpoint_actions(log_dir: str, ver: int, columns=None):
             for line in fh:
                 if not line.strip():
                     continue
-                a = _json.loads(line)
+                a = json.loads(line)
                 if columns is None or any(c in a for c in columns):
                     yield a
     for p in src["parquet"]:
@@ -918,7 +944,6 @@ def commit(
     conflict the caller must see.  A production object store needs
     its LogStore equivalent (S3 conditional put); local/HDFS
     semantics hold here."""
-    import json as _json
     import time as _time
     import uuid as _uuid
 
@@ -980,7 +1005,7 @@ def commit(
         staged = f"{name}.{_uuid.uuid4().hex}.tmp"
         with open(staged, "x") as fh:
             for a in stamped:
-                fh.write(_json.dumps(a) + "\n")
+                fh.write(json.dumps(a) + "\n")
         try:
             os.link(staged, name)  # put-if-absent
             return v
@@ -1008,8 +1033,6 @@ def _assert_no_concurrent_metadata_change(
     a ``metaData`` or ``protocol`` action — the conflicts a blind
     append may NOT retry through.  Bounded driver-side reads: only
     the race window's commits (typically one or two files)."""
-    import json as _json
-
     log_dir = os.path.join(table_dir, "_delta_log")
     if not os.path.isdir(log_dir):
         return
@@ -1019,7 +1042,7 @@ def _assert_no_concurrent_metadata_change(
         try:
             with open(os.path.join(log_dir, f"{v:020d}.json")) as fh:
                 for line in fh:
-                    act = _json.loads(line)
+                    act = json.loads(line)
                     if "metaData" in act or "protocol" in act:
                         raise ValueError(
                             f"concurrent metadata/protocol change at "
@@ -1066,7 +1089,6 @@ def _stats_json(full_path: str) -> str | None:
     which :func:`_skipping_keep` does."""
     import datetime as _dt
     import decimal as _decimal
-    import json as _json
 
     import pyarrow.parquet as _pq
 
@@ -1130,7 +1152,7 @@ def _stats_json(full_path: str) -> str | None:
             k: v for k, v in nulls.items() if k not in no_nulls
         },
     }
-    return _json.dumps(stats, sort_keys=True)
+    return json.dumps(stats, sort_keys=True)
 
 
 #: legacy protocol versions → the table features they imply (the
@@ -1221,10 +1243,8 @@ def _mapping_from(schema_string: str | None) -> dict[str, str]:
     Empty when mapping is not enabled (physical == logical)."""
     if not schema_string or schema_string == "{}":
         return {}
-    import json as _json
-
     out = {}
-    for f in _json.loads(schema_string).get("fields", []):
+    for f in json.loads(schema_string).get("fields", []):
         phys = (f.get("metadata") or {}).get(
             "delta.columnMapping.physicalName"
         )
@@ -1257,11 +1277,9 @@ def _cast_declared(df: DataFrame, schema_string: str | None) -> DataFrame:
     nullability is not compared."""
     if not schema_string or schema_string == "{}":
         return df
-    import json as _json
-
     from pyspark.sql.types import StructType
 
-    declared = StructType.fromJson(_json.loads(schema_string))
+    declared = StructType.fromJson(json.loads(schema_string))
     have = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     for f in declared.fields:
         if f.name in have and have[f.name] != f.dataType.simpleString():
@@ -1418,9 +1436,7 @@ def _write_change_data(df: DataFrame, table_dir: str) -> dict | None:
         full = os.path.join(table_dir, rel)
         os.replace(os.path.join(tmp, parts[0]), full)
         st = _stats_json(full)
-        import json as _json
-
-        if st and _json.loads(st)["numRecords"] == 0:
+        if st and json.loads(st)["numRecords"] == 0:
             os.remove(full)
         else:
             action = {
@@ -1451,7 +1467,6 @@ def _op_metrics(
     reference's own ``_delta_log`` exposes, e.g.
     ``data/delta/123/balance/delta_table/_delta_log/
     00000000000000000005.json:1``)."""
-    import json as _json
     import time as _time
 
     rows = 0
@@ -1461,7 +1476,7 @@ def _op_metrics(
         if not st:
             have_rows = False
             break
-        rows += int(_json.loads(st).get("numRecords", 0))
+        rows += int(json.loads(st).get("numRecords", 0))
     out = {
         "numAddedFiles": str(len(adds)),
         "numRemovedFiles": str(len(removes)),
@@ -1582,8 +1597,6 @@ def enable_column_mapping(spark: SparkSession, table_dir: str) -> int:
     — the operation that renames a column on a 100 TB table without
     rewriting a byte.  Unpartitioned tables only (physical partition
     directory names are out of this implementation's scope)."""
-    import json as _json
-
     meta = snapshot(table_dir).metaData
     if meta is None:
         raise ValueError(f"no delta table at {table_dir}")
@@ -1595,7 +1608,7 @@ def enable_column_mapping(spark: SparkSession, table_dir: str) -> int:
     cfg = dict(meta["configuration"] or {})
     if cfg.get("delta.columnMapping.mode") == "name":
         raise ValueError("column mapping already enabled")
-    schema = _json.loads(meta["schemaString"])
+    schema = json.loads(meta["schemaString"])
     for i, f in enumerate(schema.get("fields", []), start=1):
         md = f.setdefault("metadata", {})
         md["delta.columnMapping.id"] = i
@@ -1605,7 +1618,7 @@ def enable_column_mapping(spark: SparkSession, table_dir: str) -> int:
         len(schema.get("fields", []))
     )
     action = _meta_action_from(meta, cfg)
-    action["metaData"]["schemaString"] = _json.dumps(schema)
+    action["metaData"]["schemaString"] = json.dumps(schema)
     return commit(
         table_dir,
         [
@@ -1636,8 +1649,6 @@ def rename_column(
     constraint / generation expression references the old name (the
     expressions are SQL text over logical names; real Delta refuses
     the same way)."""
-    import json as _json
-
     meta = snapshot(table_dir).metaData
     if meta is None:
         raise ValueError(f"no delta table at {table_dir}")
@@ -1656,7 +1667,7 @@ def rename_column(
                 f"cannot rename {old!r}: CHECK constraint "
                 f"{k[len(_CONSTRAINT_PREFIX):]!r} references it"
             )
-    schema = _json.loads(meta["schemaString"])
+    schema = json.loads(meta["schemaString"])
     names = [f["name"] for f in schema.get("fields", [])]
     if old not in names:
         raise ValueError(f"no such column: {old!r}")
@@ -1674,7 +1685,7 @@ def rename_column(
         if f["name"] == old:
             f["name"] = new
     action = _meta_action_from(meta, cfg)
-    action["metaData"]["schemaString"] = _json.dumps(schema)
+    action["metaData"]["schemaString"] = json.dumps(schema)
     return commit(
         table_dir,
         [
@@ -1756,13 +1767,11 @@ def generation_expressions(spark: SparkSession, table_dir: str) -> dict:
     """GENERATED COLUMNS registry: column -> SQL expression, from
     each schema field's ``delta.generationExpression`` metadata (the
     protocol's generated-columns feature)."""
-    import json as _json
-
     meta = snapshot(table_dir).metaData
     if not meta or not meta["schemaString"]:
         return {}
     out = {}
-    for f in _json.loads(meta["schemaString"]).get("fields", []):
+    for f in json.loads(meta["schemaString"]).get("fields", []):
         expr = (f.get("metadata") or {}).get("delta.generationExpression")
         if expr:
             out[f["name"]] = expr
@@ -1839,7 +1848,6 @@ def create_table(
     canonical use is a generated DATE partition column derived from
     an event timestamp, which keeps partition pruning trustworthy
     because the writer, not the caller, owns the derivation."""
-    import json as _json
     import time as _time
     import uuid as _uuid
 
@@ -1848,7 +1856,7 @@ def create_table(
     for col, expr in (generated or {}).items():
         if col not in df.columns:
             df = df.withColumn(col, F.expr(expr))
-    schema_json = _json.loads(df.schema.json())
+    schema_json = json.loads(df.schema.json())
     if generated:
         for f in schema_json["fields"]:
             if f["name"] in generated:
@@ -1878,7 +1886,7 @@ def create_table(
         "metaData": {
             "id": _uuid.uuid4().hex,
             "format": {"provider": "parquet"},
-            "schemaString": _json.dumps(schema_json),
+            "schemaString": json.dumps(schema_json),
             "partitionColumns": list(partition_by or []),
         }
     }
@@ -1986,7 +1994,6 @@ def append_evolve(
     mixed unpartitioned files into a partitioned table).  The commit
     never blind-retries a lost version race — the schema merge read
     table state, so the loop re-reads it before trying again."""
-    import json as _json
     import time as _time
 
     from pyspark.sql.types import StructType
@@ -2001,7 +2008,7 @@ def append_evolve(
             else None
         )
         df_gen = _apply_generated(spark, table_dir, df)
-        declared = StructType.fromJson(_json.loads(meta["schemaString"]))
+        declared = StructType.fromJson(json.loads(meta["schemaString"]))
         merged = list(declared.fields)
         names = {f.name for f in merged}
         for f in df_gen.schema.fields:
@@ -2188,12 +2195,9 @@ def compact(
         table = snapshot(table_dir)
         meta = table.metaData
         partition_by = table.partition_columns or None
-        lf = _live_frame(spark, table_dir, table)
-        if partition_filter:
-            for k, v in partition_filter.items():
-                lf = lf.filter(
-                    F.col("partitionValues").getItem(k) == v
-                )
+        lf = _live_frame(
+            spark, table_dir, table, partition_filter=partition_filter
+        )
         if min_file_bytes is not None:
             lf = lf.filter(F.col("size") < min_file_bytes)
         if dv_only:
@@ -2314,12 +2318,10 @@ def _align_declared(
     provenance columns (``__src``) that survive the aligning select."""
     if not schema_string or schema_string == "{}":
         return out
-    import json as _json
-
     from pyspark.sql.types import StructType
 
     out = _to_logical(out, _mapping_from(schema_string))
-    declared = StructType.fromJson(_json.loads(schema_string))
+    declared = StructType.fromJson(json.loads(schema_string))
     for f in declared.fields:
         if f.name not in out.columns:
             out = out.withColumn(f.name, F.lit(None).cast(f.dataType))
@@ -2345,12 +2347,10 @@ def _read_schema(schema_string: str | None, *extra):
     declares no schema (callers infer then)."""
     if not schema_string or schema_string == "{}":
         return None
-    import json as _json
-
     from pyspark.sql.types import StructField, StructType
 
     mapping = _mapping_from(schema_string)
-    declared = StructType.fromJson(_json.loads(schema_string))
+    declared = StructType.fromJson(json.loads(schema_string))
     return StructType(
         [
             StructField(mapping.get(f.name, f.name), f.dataType, True)
@@ -2522,8 +2522,6 @@ def _dv_rows(
     what's-wrong 3).  The caller's census is threshold-bounded, and
     heavily-DV'd tables cross into the manifest route where masking
     is in-reader."""
-    import json as _json
-
     abs_table = os.path.abspath(table_dir)
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     rows = []
@@ -2532,7 +2530,7 @@ def _dv_rows(
     for data, dv, stats in dv_files:
         n_rec = None
         if stats:
-            n_rec = _json.loads(stats).get("numRecords")
+            n_rec = json.loads(stats).get("numRecords")
         as_dict = dv.asDict() if hasattr(dv, "asDict") else dict(dv)
         desc = {k: v for k, v in as_dict.items() if v is not None}
         total_bytes += int(desc.get("sizeInBytes") or 0)
@@ -2540,7 +2538,7 @@ def _dv_rows(
         rows.append(
             (
                 os.path.basename(data),
-                _json.dumps(desc),
+                json.dumps(desc),
                 int(n_rec) if n_rec is not None else None,
             )
         )
@@ -2788,7 +2786,6 @@ def _write_dv_sidecars(
     or retried task's duplicate lands in staging and is swept, never
     committed.  Returns ``{data-file relative path: deletionVector
     descriptor}`` for the files that gained rows."""
-    import json as _json
     import shutil as _shutil
     import uuid as _uuid
 
@@ -2945,7 +2942,6 @@ def _commit_dml(
     change-data and vector files this call staged.  A statement that
     changes nothing commits nothing and returns the current version."""
     import functools
-    import json as _json
 
     partition_by = (
         list(meta["partitionColumns"])
@@ -2981,7 +2977,7 @@ def _commit_dml(
             a
             for a in adds
             if a["add"].get("stats")
-            and _json.loads(a["add"]["stats"])["numRecords"] == 0
+            and json.loads(a["add"]["stats"])["numRecords"] == 0
         ]
         if empty:
             _remove_staged(table_dir, empty)
@@ -3066,7 +3062,7 @@ def _commit_dml(
             ch.get(k, 0) for k in ("insert", "update_postimage", "delete")
         )
         out_rows = sum(
-            int(_json.loads(a["add"]["stats"])["numRecords"])
+            int(json.loads(a["add"]["stats"])["numRecords"])
             for a in adds
             if a["add"].get("stats")
         )
@@ -3154,11 +3150,7 @@ def _dml_where(
         # must still mask, or its rewrite would resurrect the deleted
         # rows; a never-DV table skips all mask scaffolding
         dv_possible = dv or table.dv_feature
-        lf = _live_frame(spark, table_dir, table)
-        if skipping:
-            lf = lf.filter(
-                _skipping_keep(skipping, _mapping_from(table.schema_string))
-            )
+        lf = _live_frame(spark, table_dir, table, skipping=skipping)
         scan, src_rel = _scan_live(
             spark,
             table_dir,
@@ -3435,11 +3427,7 @@ def merge_into(
         # the write mode: a COW merge over files that carry vectors
         # must still mask; a never-DV table skips all mask scaffolding
         dv_possible = dv or table.dv_feature
-        lf = _live_frame(spark, table_dir, table)
-        if skipping:
-            lf = lf.filter(
-                _skipping_keep(skipping, _mapping_from(table.schema_string))
-            )
+        lf = _live_frame(spark, table_dir, table, skipping=skipping)
         # the locate join also checks cardinality, so it groups the
         # matches by target row: (__src, __ridx)
         scan, src_rel = _scan_live(
@@ -3461,12 +3449,10 @@ def merge_into(
             else {}
         )
         tcols = list(t_types)
-        import json as _json
-
         from pyspark.sql.types import StructType
 
         declared = (
-            StructType.fromJson(_json.loads(meta["schemaString"]))
+            StructType.fromJson(json.loads(meta["schemaString"]))
             if meta and meta["schemaString"]
             else None
         )
@@ -3652,12 +3638,12 @@ def merge_into(
             # name as physicalName (the same upgrade rule
             # enable_column_mapping applies), so the central write
             # mapping stays consistent.
-            schema_json = _json.loads(meta["schemaString"])
+            schema_json = json.loads(meta["schemaString"])
             cfg = dict(meta["configuration"] or {})
             mapped = cfg.get("delta.columnMapping.mode") == "name"
             next_id = int(cfg.get("delta.columnMapping.maxColumnId", 0))
             for c in evolved:
-                fld = _json.loads(
+                fld = json.loads(
                     StructType([]).add(c, evolved_types[c]).json()
                 )["fields"][0]
                 if mapped:
@@ -3672,7 +3658,7 @@ def merge_into(
             if mapped:
                 cfg["delta.columnMapping.maxColumnId"] = str(next_id)
             act = _meta_action_from(meta, cfg)
-            act["metaData"]["schemaString"] = _json.dumps(schema_json)
+            act["metaData"]["schemaString"] = json.dumps(schema_json)
             meta_actions.append(act)
         return _commit_dml(
             spark,
@@ -3922,11 +3908,13 @@ def write_checkpoint(
     parts: int | None = None,
     actions_per_part: int = 100_000,
 ) -> int:
-    """Write a protocol CHECKPOINT: the full reconstructed state —
-    protocol, metaData, every live ``add``, and the per-app ``txn``
-    high-water marks — as parquet plus the ``_last_checkpoint``
-    pointer.  From then on readers pay O(checkpoint + JSON tail)
-    instead of replaying the whole history, and
+    """Write a protocol CHECKPOINT of the table's current
+    :func:`snapshot`: its protocol, metaData, per-app ``txn``
+    high-water marks and every live ``add`` (its :func:`_live_frame`),
+    as parquet plus the ``_last_checkpoint`` pointer.  Version and
+    state come from that one replay, so a commit landing meanwhile
+    cannot split them.  From then on readers pay O(checkpoint + JSON
+    tail) instead of replaying the whole history, and
     :func:`cleanup_log_before_checkpoint` may delete the superseded
     JSON commits (metadata retention).  Returns the checkpointed
     version.
@@ -3936,95 +3924,69 @@ def write_checkpoint(
     DISTRIBUTED across ``max(1, ceil(n_actions / actions_per_part))``
     part files (override with ``parts``) — never funneled through one
     task, so checkpointing a 10⁶-add-action table costs a normal
-    parallel parquet write instead of a single-task spill.  One part
-    keeps the spec's single-file name; ``_last_checkpoint`` records
-    the ``parts`` field readers use to list the fragments."""
-    import json as _json
-
-    acts = read_log_actions(spark, table_dir)
-    ver_row = acts.agg(F.max("version").alias("v")).first()
-    ver = int(ver_row["v"])
-    pdf_parts = []
-    # latest protocol + metaData win
-    for field in ("protocol", "metaData"):
-        top = (
-            acts.filter(F.col(field).isNotNull())
-            .orderBy(F.col("version").desc())
-            .limit(1)
-            .select(field)
-        )
-        pdf_parts.append(
-            top.select(
-                *[
-                    F.col(field) if c == field else F.lit(None).alias(c)
-                    for c in ("metaData", "protocol", "add", "remove", "txn",
-                              "commitInfo")
-                ]
-            )
-        )
-    live = live_files(acts).select(
-        F.lit(None).alias("metaData"),
-        F.lit(None).alias("protocol"),
-        F.struct(
-            F.col("path"),
-            F.col("size"),
-            F.lit(True).alias("dataChange"),
-            F.col("partitionValues"),
-            F.col("stats"),
-            F.col("deletionVector"),
-        ).alias("add"),
-        F.lit(None).alias("remove"),
-        F.lit(None).alias("txn"),
-        F.lit(None).alias("commitInfo"),
-    )
-    pdf_parts.append(live)
-    txns = (
-        acts.filter(F.col("txn").isNotNull())
-        .groupBy("txn.appId")
-        .agg(F.max("txn.version").alias("v"))
-        .select(
-            F.lit(None).alias("metaData"),
-            F.lit(None).alias("protocol"),
-            F.lit(None).alias("add"),
-            F.lit(None).alias("remove"),
-            F.struct(
-                F.col("appId"), F.col("v").alias("version")
-            ).alias("txn"),
-            F.lit(None).alias("commitInfo"),
-        )
-    )
-    pdf_parts.append(txns)
-    state = pdf_parts[0]
-    for p in pdf_parts[1:]:
-        state = state.unionByName(p)
-    # normalize to the canonical action schema so readers see the
-    # same struct shapes JSON commits produce — a schema-aligned
-    # SELECT, never a driver round-trip: the state frame stays
-    # distributed however many add-actions the table has (VERDICT
-    # r10 item 6: the old collect() + createDataFrame was a driver
-    # memory ceiling at large live-file counts)
-    from pyspark.sql.types import StructType as _StructType
-
-    canon = _StructType.fromDDL(LOG_SCHEMA)
-    # spec: checkpoints carry STATE actions only — per-commit cdc
-    # actions are never part of reconstructed state, so the column
-    # null-fills here
-    for f in canon.fields:
-        if f.name not in state.columns:
-            state = state.withColumn(f.name, F.lit(None).cast(f.dataType))
-    state = state.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in canon.fields]
-    )
+    parallel parquet write instead of a single-task spill.  Below
+    :data:`DRIVER_REPLAY_MAX_BYTES` the action count is the
+    snapshot's; past it the state is pinned and counted first.  One
+    part keeps the spec's single-file name; ``_last_checkpoint``
+    records the ``parts`` field readers use to list the fragments, and
+    lands whole (a temp file replaced into place), so a reader never
+    parses a half-written pointer."""
     import math as _math
+    import pathlib
     import shutil as _shutil
     import uuid as _uuid
 
-    state = state.localCheckpoint(eager=True)
-    n = state.count()
+    import pyarrow as _pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType as _StructType
+
+    snap = snapshot(table_dir)
+    log_dir = os.path.join(table_dir, "_delta_log")
+    if snap.version < 0:
+        raise FileNotFoundError(f"no JSON commits under {log_dir}")
+    ver = snap.version
+    # checkpoints carry STATE actions only — per-commit cdc and
+    # commitInfo actions are never part of reconstructed state, so
+    # those columns stay null
+    canon = _StructType.fromDDL(LOG_SCHEMA)
+    head = [{"protocol": snap.protocol}] if snap.protocol else []
+    if snap.metaData is not None:
+        head.append(
+            {"metaData": {**snap.metaData, "format": {"provider": "parquet"}}}
+        )
+    head += [
+        {"txn": {"appId": app, "version": tv}}
+        for app, tv in sorted(snap.txn.items())
+    ]
+    adds = _live_frame(spark, table_dir, snap).select(
+        *[
+            F.struct(
+                "path",
+                "size",
+                F.lit(True).alias("dataChange"),
+                "partitionValues",
+                "stats",
+                "deletionVector",
+            )
+            .cast(f.dataType)
+            .alias(f.name)
+            if f.name == "add"
+            else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in canon.fields
+        ]
+    )
+    state = spark.createDataFrame(
+        _pa.Table.from_pylist(head, schema=to_arrow_schema(canon))
+    ).unionByName(adds)
+    if snap.adds is not None:
+        n = len(head) + len(snap.adds)
+    else:
+        # the distributed replay runs once for the count and the write
+        state = state.localCheckpoint(eager=True)
+        n = state.count()
     n_parts = parts if parts else max(
         1, _math.ceil(n / max(1, actions_per_part))
     )
-    log_dir = os.path.join(table_dir, "_delta_log")
     tmp = os.path.join(table_dir, f"__ckpt-{_uuid.uuid4().hex}")
     if n_parts == 1:
         state.coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -4060,9 +4022,27 @@ def write_checkpoint(
             os.replace(os.path.join(tmp, f), final)
         pointer["parts"] = total
     _shutil.rmtree(tmp, ignore_errors=True)
-    with open(os.path.join(log_dir, "_last_checkpoint"), "w") as fh:
-        fh.write(_json.dumps(pointer))
+    _replace_whole(
+        os.path.join(log_dir, "_last_checkpoint"),
+        lambda path: pathlib.Path(path).write_text(json.dumps(pointer)),
+    )
     return ver
+
+
+def _replace_whole(final: str, write) -> None:
+    """Land a log file whole: ``write(path)`` fills a private temp file
+    beside ``final``, which then replaces ``final`` in one rename, so a
+    reader sees the old content or the new, never a partial file."""
+    import uuid as _uuid
+
+    head, name = os.path.split(final)
+    tmp = os.path.join(head, f".{name}.{_uuid.uuid4().hex}.tmp")
+    try:
+        write(tmp)
+        os.replace(tmp, final)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
 
 
 def cleanup_log_before_checkpoint(table_dir: str) -> int:
@@ -4071,11 +4051,10 @@ def cleanup_log_before_checkpoint(table_dir: str) -> int:
     state.  Time travel to those versions is gone after this, exactly
     as the protocol's retention contract says.  Returns how many
     commit files were removed."""
-    import json as _json
-
     log_dir = os.path.join(table_dir, "_delta_log")
-    with open(os.path.join(log_dir, "_last_checkpoint")) as fh:
-        ck_ver = int(_json.load(fh)["version"])
+    ck_ver = snapshot(table_dir).checkpoint_version
+    if ck_ver is None:
+        raise FileNotFoundError(f"{table_dir} has no checkpoint")
     victims = [v for v in _commit_versions(log_dir) if v <= ck_ver]
     for v in victims:
         os.remove(os.path.join(log_dir, f"{v:020d}.json"))
@@ -4171,13 +4150,16 @@ def candidate_files(
     skipping for ``skipping`` — the planner-visible census
     :func:`read_snapshot` scans; exposed so tests and the
     effectiveness queries can pin HOW MANY files a predicate touches
-    without reading any of them."""
-    lf = live_files(read_log_actions(spark, table_dir))
-    if partition_filter:
-        for k, v in partition_filter.items():
-            lf = lf.filter(F.col("partitionValues").getItem(k) == v)
-    mapping = _mapping_from(snapshot(table_dir).schema_string)
-    return lf.filter(_skipping_keep(skipping, mapping))
+    without reading any of them.  The :func:`_live_frame` of the
+    current snapshot, so below :data:`DRIVER_REPLAY_MAX_BYTES` the
+    census is pruned on the driver."""
+    return _live_frame(
+        spark,
+        table_dir,
+        snapshot(table_dir),
+        partition_filter=partition_filter,
+        skipping=skipping,
+    )
 
 
 #: what this reader IMPLEMENTS: protocol versions up to 3 and, at
@@ -4295,13 +4277,11 @@ def _read_commit_ict(table_dir: str, v: int) -> int | None:
     the commitInfo is the FIRST action of an ICT commit, so this is
     a one-line read for conformant logs (the loop tolerates foreign
     writers that ordered differently)."""
-    import json as _json
-
     p = os.path.join(table_dir, "_delta_log", f"{v:020d}.json")
     try:
         with open(p) as fh:
             for line in fh:
-                ci = _json.loads(line).get("commitInfo")
+                ci = json.loads(line).get("commitInfo")
                 if ci is not None:
                     ict = ci.get("inCommitTimestamp")
                     return None if ict is None else int(ict)
@@ -4412,10 +4392,8 @@ def _skipping_keep_py(
     column entry, or an unparsable bound always KEEP the file."""
     if not stats:
         return True
-    import json as _json
-
     try:
-        st = _json.loads(stats)
+        st = json.loads(stats)
     except ValueError:
         return True
     mins, maxs = st.get("minValues") or {}, st.get("maxValues") or {}
@@ -4470,15 +4448,14 @@ def read_snapshot(
     versioned-read contract).
 
     Time travel AFTER log cleanup (ADVICE r9 / VERDICT r10 item 1):
-    a version at or past the last checkpoint reconstructs from the
-    CHECKPOINT plus the version-filtered JSON tail (checkpoint rows
-    carry the checkpoint's version, so the ``<= version_as_of``
-    filter keeps them) — this is how the real protocol keeps recent
-    versions readable once :func:`cleanup_log_before_checkpoint` has
-    deleted the superseded commits.  A version BELOW the checkpoint
-    needs the raw pre-checkpoint JSON; if cleanup has removed it the
-    read raises instead of silently reconstructing a partial state
-    from the surviving tail.
+    the version read is one :func:`snapshot`, which replays the
+    CHECKPOINT plus the JSON tail up to that version when it is at or
+    past the last checkpoint — this is how the real protocol keeps
+    recent versions readable once :func:`cleanup_log_before_checkpoint`
+    has deleted the superseded commits.  A version BELOW the
+    checkpoint needs the raw pre-checkpoint JSON; if cleanup has
+    removed it the read raises instead of silently reconstructing a
+    partial state from the surviving tail.
 
     ``skipping`` — a list of ``(column, op, literal)`` conjuncts —
     activates STATS-BASED DATA SKIPPING: files whose ``add.stats``
@@ -4490,19 +4467,19 @@ def read_snapshot(
     stats.
 
     Up to :data:`manifest_scan.DEFAULT_THRESHOLD` files (read when
-    the call is made) the file list is handed to ONE parquet scan so
-    Spark plans splits/pushdown across all live files together.  PAST
-    the threshold the census is never collected: the live-file frame
-    writes a distributed parquet manifest and a Python DataSource
-    scans from it executor-side
-    (:mod:`cdc_pipe_line_spark.manifest_scan`) — driver memory and
-    plan size stay bounded however many add-actions the table has
-    (VERDICT r11 what's-wrong 3).
+    the call is made) the snapshot's pruned ``add`` actions are handed
+    to ONE parquet scan so Spark plans splits/pushdown across all live
+    files together, and planning runs no Spark job.  PAST the
+    threshold, or past :data:`DRIVER_REPLAY_MAX_BYTES` (where the
+    snapshot holds no adds), the census is the pruned
+    :func:`_live_frame` of that snapshot, never collected: it writes a
+    distributed parquet manifest and a Python DataSource scans from it
+    executor-side (:mod:`cdc_pipe_line_spark.manifest_scan`) — driver
+    memory and plan size stay bounded however many add-actions the
+    table has (VERDICT r11 what's-wrong 3).
 
-    The declared schema, the protocol's reader gate and (below
-    :data:`DRIVER_REPLAY_MAX_BYTES`) the live files all come from the
-    table's :func:`snapshot` at the version read, so planning the read
-    of a small log runs no Spark job.
+    The declared schema and the protocol's reader gate come from the
+    same snapshot.
     """
     if timestamp_as_of is not None:
         if version_as_of is not None:
@@ -4527,7 +4504,7 @@ def read_snapshot(
     # dominant cost of reading a small table is otherwise pure job
     # scheduling (0.1-0.7 s per metadata job on a vanilla session).
     # A log past the byte budget, or a read of more files than the
-    # manifest threshold, takes the distributed census instead.
+    # manifest threshold, takes the live-file frame instead.
     from cdc_pipe_line_spark import manifest_scan as _ms
 
     adds = table.adds
@@ -4560,31 +4537,19 @@ def read_snapshot(
             ]
             out = _plan_native_scan(spark, table_dir, items, schema_string)
     else:
-        if version_as_of is not None:
-            actions = read_snapshot_actions(
-                spark, table_dir, version_as_of=version_as_of
-            )
-        else:
-            actions = read_log_actions(spark, table_dir)
-        lf = live_files(actions)
-        if partition_filter:
-            # PARTITION PRUNING from the log's partitionValues — files
-            # of non-matching partitions never reach the scan plan
-            for k, v in partition_filter.items():
-                lf = lf.filter(F.col("partitionValues").getItem(k) == v)
-        if skipping:
-            # DATA SKIPPING: drop files whose stat envelope refutes the
-            # predicate — a metadata-only decision per file (stats keys
-            # are physical names under column mapping)
-            lf = lf.filter(
-                _skipping_keep(skipping, _mapping_from(schema_string))
-            )
         # census strategy, provenance, and deletion-vector masking all
         # live in _scan_live: driver path list + native pushdown below
         # the threshold, distributed manifest + executor-side reads
         # past it — the bounded 100 TB shape either way.  The protocol
         # AS OF the resolved version decides whether mask scaffolding
         # is even possible (the non-DV fast path).
+        lf = _live_frame(
+            spark,
+            table_dir,
+            table,
+            partition_filter=partition_filter,
+            skipping=skipping,
+        )
         out, _rel = _scan_live(
             spark,
             table_dir,
@@ -4626,64 +4591,46 @@ def vacuum(
     Time travel to a version whose files were vacuumed then fails at
     scan time, exactly as the protocol documents.
 
-    Returns the table-relative paths it deleted.  The keep-set is
-    computed with the same distributed replay the readers use; only
-    the bounded path census is driver-side."""
-    actions = read_log_actions(spark, table_dir).localCheckpoint(
-        eager=True
-    )
-    ver_row = actions.agg(F.max("version").alias("v")).first()
-    if ver_row is None or ver_row["v"] is None:
+    The keep-set is the live files of the oldest retained version
+    (the floor: its :func:`_live_frame`, a checkpoint or not below
+    it), every file added after the floor, the change-data files of
+    the retained commits, and the deletion-vector files any of those
+    adds reference.  A floor below what log cleanup left
+    reconstructable is raised to the checkpoint.  Returns the
+    table-relative paths it deleted."""
+    from cdc_pipe_line_spark import dvbitmap as _dvb
+
+    table = snapshot(table_dir)
+    if table.version < 0:
         raise ValueError(f"no delta log at {table_dir}")
-    vmax = int(ver_row["v"])
-    floor_ver = max(0, vmax - retain_versions)
-    keep = (
-        live_files(actions.filter(F.col("version") <= floor_ver))
-        .select("path")
-        .unionByName(
-            # files ADDED after the floor are live in (or needed by)
-            # some retained version even if later tombstoned
-            actions.filter(
-                (F.col("version") > floor_ver)
-                & F.col("add").isNotNull()
-            ).select(F.col("add.path").alias("path"))
-        )
-        .unionByName(
+    floor = max(0, table.version - retain_versions)
+    ck = table.checkpoint_version
+    log_dir = os.path.join(table_dir, "_delta_log")
+    if ck is not None and not os.path.exists(_commit_path(log_dir, 0)):
+        floor = max(floor, ck)
+    lf = _live_frame(spark, table_dir, snapshot(table_dir, version_as_of=floor))
+    needed = [
+        (r.path, r.dv.asDict() if r.dv is not None else None)
+        for r in lf.select("path", F.col("deletionVector").alias("dv")).collect()
+    ]
+    kept = set()
+    for v, a in _span_actions(table_dir, floor - 1, table.version):
+        if "add" in a and v > floor:
+            # live in (or needed by) some retained version even if
+            # later tombstoned
+            needed.append((a["add"]["path"], a["add"].get("deletionVector")))
+        elif "cdc" in a:
             # change-data files of retained versions stay readable
             # (read_changes serves those commits row-level); older
             # ones age out with their commits
-            actions.filter(
-                (F.col("version") >= floor_ver)
-                & F.col("cdc").isNotNull()
-            ).select(F.col("cdc.path").alias("path"))
-        )
-        .distinct()
-    )
-    kept = {r.path for r in keep.collect()}
-    # DELETION-VECTOR files referenced by any retained add stay
-    # readable — vacuuming one would silently UNDELETE its rows in
-    # every retained snapshot.  File paths derive from the
-    # descriptors (z85 UUID naming; inline vectors have no file;
-    # legacy parquet sidecars pass through) — a bounded census, one
-    # row per DV-carrying add.
-    from cdc_pipe_line_spark import dvbitmap as _dvb
-
-    dv_refs = (
-        live_files(actions.filter(F.col("version") <= floor_ver))
-        .filter(F.col("deletionVector").isNotNull())
-        .select(F.col("deletionVector").alias("dv"))
-        .unionByName(
-            actions.filter(
-                (F.col("version") > floor_ver)
-                & F.col("add.deletionVector").isNotNull()
-            ).select(F.col("add.deletionVector").alias("dv"))
-        )
-        .distinct()
-        .collect()
-    )
-    for r in dv_refs:
-        rel = _dvb.dv_file_relpath(
-            {k: v for k, v in r.dv.asDict().items() if v is not None}
+            kept.add(a["cdc"]["path"])
+    for path, dv in needed:
+        kept.add(path)
+        # a retained add's DELETION-VECTOR file stays readable —
+        # vacuuming one would silently UNDELETE its rows (inline
+        # vectors have no file)
+        rel = dv and _dvb.dv_file_relpath(
+            {k: x for k, x in dv.items() if x is not None}
         )
         if rel:
             kept.add(rel)
@@ -4720,32 +4667,29 @@ def restore(spark: SparkSession, table_dir: str, version: int) -> int:
     now (data files are never rewritten; restore is pure metadata,
     which is why vacuumed history cannot be restored — the spec's own
     caveat).  History stays append-only: the restored-past versions
-    remain readable and DESCRIBE HISTORY shows the RESTORE commit."""
-    # re-adds need size/partitionValues, so collect full add payloads
-    # (both sets are bounded by live-file counts, the planner-sized
-    # footprint every reader here already has)
-    def _key(r):
-        dv = r.deletionVector
-        return (
-            r.path,
-            r.size,
-            tuple(sorted((r.partitionValues or {}).items())),
-            r.stats,
-            tuple(dv.asDict().items()) if dv is not None else None,
-        )
+    remain readable and DESCRIBE HISTORY shows the RESTORE commit.
 
-    hist = {
-        _key(r)
-        for r in live_files(
-            read_snapshot_actions(spark, table_dir, version_as_of=version)
-        ).collect()
-    }
-    current = {
-        _key(r)
-        for r in live_files(read_log_actions(spark, table_dir)).collect()
-    }
+    The diff is over the :func:`_live_frame` rows of the two
+    snapshots — collected, since re-adds need the full payloads, and
+    bounded by live-file counts like every census here; a version that
+    log cleanup left unreconstructable raises in :func:`snapshot`."""
+    def _live(snap):
+        return {
+            (
+                r.path,
+                r.size,
+                tuple(sorted((r.partitionValues or {}).items())),
+                r.stats,
+                tuple(r.deletionVector.asDict().items())
+                if r.deletionVector is not None
+                else None,
+            )
+            for r in _live_frame(spark, table_dir, snap).collect()
+        }
+
+    hist = _live(snapshot(table_dir, version_as_of=version))
+    current = _live(snapshot(table_dir))
     target = {t[0] for t in hist}
-    cur_keys = {t for t in current}
     acts: list[dict] = []
     for t in sorted(current, key=lambda t: t[0]):
         if t[0] not in target or t not in hist:
@@ -4753,33 +4697,32 @@ def restore(spark: SparkSession, table_dir: str, version: int) -> int:
             # / payload at the target version — tombstone; the re-add
             # below restores the historical descriptor
             acts.append({"remove": {"path": t[0], "dataChange": True}})
-    for p, s, pv, st, dv in sorted(hist, key=lambda t: t[0]):
-        if (p, s, pv, st, dv) not in cur_keys:
-            if not os.path.exists(os.path.join(table_dir, p)):
-                raise ValueError(
-                    f"cannot restore {table_dir} to version {version}: "
-                    f"data file {p} was vacuumed"
-                )
-            add = {"path": p, "size": s, "dataChange": True}
-            if pv:
-                add["partitionValues"] = dict(pv)
-            if st:
-                add["stats"] = st
-            if dv:
-                from cdc_pipe_line_spark import dvbitmap as _dvb
+    for p, s, pv, st, dv in sorted(hist - current, key=lambda t: t[0]):
+        if not os.path.exists(os.path.join(table_dir, p)):
+            raise ValueError(
+                f"cannot restore {table_dir} to version {version}: "
+                f"data file {p} was vacuumed"
+            )
+        add = {"path": p, "size": s, "dataChange": True}
+        if pv:
+            add["partitionValues"] = dict(pv)
+        if st:
+            add["stats"] = st
+        if dv:
+            from cdc_pipe_line_spark import dvbitmap as _dvb
 
-                d = {k: v for k, v in dict(dv).items() if v is not None}
-                dv_rel = _dvb.dv_file_relpath(d)
-                if dv_rel and not os.path.exists(
-                    os.path.join(table_dir, dv_rel)
-                ):
-                    raise ValueError(
-                        f"cannot restore {table_dir} to version "
-                        f"{version}: deletion vector "
-                        f"{dv_rel} was vacuumed"
-                    )
-                add["deletionVector"] = d
-            acts.append({"add": add})
+            d = {k: v for k, v in dict(dv).items() if v is not None}
+            dv_rel = _dvb.dv_file_relpath(d)
+            if dv_rel and not os.path.exists(
+                os.path.join(table_dir, dv_rel)
+            ):
+                raise ValueError(
+                    f"cannot restore {table_dir} to version "
+                    f"{version}: deletion vector "
+                    f"{dv_rel} was vacuumed"
+                )
+            add["deletionVector"] = d
+        acts.append({"add": add})
     n_re_adds = sum(1 for a in acts if "add" in a)
     n_rm = sum(1 for a in acts if "remove" in a)
     acts.append(
@@ -4794,29 +4737,6 @@ def restore(spark: SparkSession, table_dir: str, version: int) -> int:
         }
     )
     return commit(table_dir, acts)
-
-
-def read_snapshot_actions(
-    spark: SparkSession, table_dir: str, *, version_as_of: int
-) -> DataFrame:
-    """The action set that reconstructs ``version_as_of`` — the same
-    checkpoint-aware resolution :func:`read_snapshot` uses (shared so
-    RESTORE and readers cannot drift): checkpoint + tail when the
-    version is at/after the checkpoint, raw JSON below it, and a
-    clear error once log cleanup has removed that history."""
-    ck = _checkpoint_version(table_dir)
-    if ck is not None and version_as_of >= ck:
-        actions = read_log_actions(spark, table_dir)
-    else:
-        v0 = os.path.join(table_dir, "_delta_log", f"{0:020d}.json")
-        if ck is not None and not os.path.exists(v0):
-            raise ValueError(
-                f"version {version_as_of} of {table_dir} is no longer "
-                f"reconstructable: log cleanup removed the JSON commits "
-                f"before checkpoint {ck}"
-            )
-        actions = read_log_actions(spark, table_dir, json_only=True)
-    return actions.filter(F.col("version") <= version_as_of)
 
 
 def read_changes(
@@ -5067,14 +4987,21 @@ def table_detail(spark: SparkSession, table_dir: str) -> DataFrame:
     logged byte total), partition columns, the feature registries
     (constraints, generated columns, column-mapping mode), protocol
     gate, and commit count — the operator's one-stop table summary,
-    computed ENTIRELY from log metadata (no data file is opened)."""
-    import json as _json
-
-    acts = read_log_actions(spark, table_dir).localCheckpoint(
-        eager=True
-    )
-    lf = live_files(acts)
-    census = lf.agg(
+    computed ENTIRELY from log metadata (no data file is opened): the
+    current :func:`snapshot` and an aggregate over its
+    :func:`_live_frame`."""
+    table = snapshot(table_dir)
+    meta, cfg = table.metaData, table.configuration
+    n_cons = sum(1 for k in cfg if k.startswith(_CONSTRAINT_PREFIX))
+    n_gen = 0
+    if table.schema_string:
+        n_gen = sum(
+            1
+            for f in json.loads(table.schema_string).get("fields", [])
+            if (f.get("metadata") or {}).get("delta.generationExpression")
+        )
+    return _live_frame(spark, table_dir, table).agg(
+        F.lit("parquet").alias("format"),
         F.count("*").cast("bigint").alias("num_files"),
         F.coalesce(F.sum("size"), F.lit(0)).cast("bigint").alias(
             "size_in_bytes"
@@ -5085,32 +5012,6 @@ def table_detail(spark: SparkSession, table_dir: str) -> DataFrame:
         F.coalesce(
             F.sum("deletionVector.cardinality"), F.lit(0)
         ).cast("bigint").alias("dv_deleted_rows"),
-    )
-    meta = snapshot(table_dir).metaData
-    cfg = (meta["configuration"] or {}) if meta else {}
-    n_cons = sum(1 for k in cfg if k.startswith(_CONSTRAINT_PREFIX))
-    n_gen = 0
-    if meta and meta["schemaString"]:
-        n_gen = sum(
-            1
-            for f in _json.loads(meta["schemaString"]).get("fields", [])
-            if (f.get("metadata") or {}).get("delta.generationExpression")
-        )
-    proto = (
-        acts.filter(F.col("protocol").isNotNull())
-        .agg(
-            F.max("protocol.minReaderVersion").alias("r"),
-            F.max("protocol.minWriterVersion").alias("w"),
-        )
-        .first()
-    )
-    n_commits = acts.agg(F.count_distinct("version")).first()[0]
-    return census.select(
-        F.lit("parquet").alias("format"),
-        "num_files",
-        "size_in_bytes",
-        "num_deletion_vectors",
-        "dv_deleted_rows",
         F.lit(
             ",".join(meta["partitionColumns"] or []) if meta else ""
         ).alias("partition_columns"),
@@ -5119,9 +5020,13 @@ def table_detail(spark: SparkSession, table_dir: str) -> DataFrame:
         F.lit(
             cfg.get("delta.columnMapping.mode", "none")
         ).alias("column_mapping_mode"),
-        F.lit(int(proto["r"])).cast("bigint").alias("min_reader_version"),
-        F.lit(int(proto["w"])).cast("bigint").alias("min_writer_version"),
-        F.lit(int(n_commits)).cast("bigint").alias("num_commits"),
+        F.lit(table.protocol.get("minReaderVersion")).cast("bigint").alias(
+            "min_reader_version"
+        ),
+        F.lit(table.protocol.get("minWriterVersion")).cast("bigint").alias(
+            "min_writer_version"
+        ),
+        F.lit(table.version + 1).cast("bigint").alias("num_commits"),
     )
 
 

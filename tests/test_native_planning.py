@@ -21,7 +21,7 @@ from types import SimpleNamespace
 import pytest
 from pyspark.sql import functions as F
 
-from cdc_pipe_line_spark import deltalog, session
+from cdc_pipe_line_spark import deltalog, manifest_scan, session
 from cdc_pipe_line_spark.cdc.diff import snapshot_diff, to_cdc_events
 from cdc_pipe_line_spark.delta_merge import apply_scd2_delta
 from cdc_pipe_line_spark.timeseries import daily_counts, gap_fill_daily, rolling_zscore
@@ -738,3 +738,89 @@ def test_snapshot_past_the_byte_budget(spark, tmp_path, monkeypatch):
     live = deltalog.live_files(deltalog.read_log_actions(spark, path)).collect()
     assert sorted(a["path"] for a in back.adds) == sorted(r.path for r in live)
     assert back.txn == {"app": 7}
+
+
+# -- one live-file census ------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def census_table(spark, tmp_path_factory):
+    """v0 create, v1 a copy-on-write delete (tombstones v0's file), v2
+    an append, a checkpoint at v2, v3 an append."""
+    path = str(tmp_path_factory.mktemp("census") / "t")
+    _table(spark, path)
+    deltalog.delete_where(spark, path, "k = 1")
+    row = "k int, s string, v double"
+    deltalog.append(spark, spark.createDataFrame([(4, "d", 40.0)], row), path)
+    deltalog.write_checkpoint(spark, path)
+    deltalog.append(spark, spark.createDataFrame([(5, "e", 50.0)], row), path)
+    return path
+
+
+def _census_read(spark, path, m):
+    m.setattr(manifest_scan, "DEFAULT_THRESHOLD", 1)
+    return [
+        rows(deltalog.read_snapshot(spark, path, **kw).select("k", "s"))
+        for kw in ({}, {"version_as_of": 0}, {"skipping": [("k", ">", 3)]})
+    ]
+
+
+def _census_restore(spark, path, m):
+    v = deltalog.restore(spark, path, 0)
+    acts = _commit_actions(path, v)
+    return sorted(json.dumps(a, sort_keys=True) for a in acts if "commitInfo" not in a)
+
+
+def _census_checkpoint(spark, path, m):
+    import pyarrow.parquet as pq
+
+    v = deltalog.write_checkpoint(spark, path)
+    log_dir = os.path.join(path, "_delta_log")
+    with open(os.path.join(log_dir, "_last_checkpoint")) as fh:
+        pointer = json.load(fh)
+    acts = [
+        json.dumps(r, sort_keys=True, default=str)
+        for f in glob.glob(os.path.join(log_dir, f"{v:020d}.checkpoint*.parquet"))
+        for r in pq.read_table(f).to_pylist()
+    ]
+    return v, pointer, sorted(acts)
+
+
+CENSUS_OPS = {
+    "read_snapshot": _census_read,
+    "candidate_files": lambda spark, path, m: sorted(
+        r.path for r in deltalog.candidate_files(spark, path, [("k", ">", 3)]).collect()
+    ),
+    "table_detail": lambda spark, path, m: deltalog.table_detail(spark, path).first().asDict(),
+    "restore": _census_restore,
+    "vacuum": lambda spark, path, m: deltalog.vacuum(spark, path, retain_versions=2),
+    "write_checkpoint": _census_checkpoint,
+}
+
+
+@pytest.mark.parametrize("op", sorted(CENSUS_OPS))
+def test_census_reads_the_snapshot_on_both_routes(spark, census_table, tmp_path, monkeypatch, op):
+    """Below ``DRIVER_REPLAY_MAX_BYTES`` the live-file census comes from
+    the snapshot, with no distributed log replay (and no Spark job for
+    ``restore`` and ``vacuum``); past it the replay bounded to the
+    snapshot's version gives the same rows, victims and checkpoint,
+    below the checkpoint too (the as-of read, the restore to v0, the
+    vacuum floor at v1)."""
+    driver, replay = str(tmp_path / "driver"), str(tmp_path / "replay")
+    shutil.copytree(census_table, driver)
+    shutil.copytree(census_table, replay)
+
+    def no_replay(*a, **k):
+        raise AssertionError("read_log_actions called below the byte budget")
+
+    with monkeypatch.context() as m:
+        m.setattr(deltalog, "read_log_actions", no_replay)
+        with count_jobs(spark) as jobs:
+            got = CENSUS_OPS[op](spark, driver, m)
+    if op in ("restore", "vacuum"):
+        assert jobs == [0]
+    with monkeypatch.context() as m:
+        m.setattr(deltalog, "DRIVER_REPLAY_MAX_BYTES", 0)
+        assert deltalog.snapshot(replay).adds is None
+        want = CENSUS_OPS[op](spark, replay, m)
+    assert got and got == want

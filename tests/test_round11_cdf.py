@@ -97,7 +97,6 @@ def test_append_and_overwrite_still_file_level(spark, table_dir):
     assert counts[(2, "insert")] == 2
 
 
-@pytest.mark.slow
 def test_vacuum_keeps_retained_change_files_drops_aged(
     spark, table_dir
 ):

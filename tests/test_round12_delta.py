@@ -435,3 +435,41 @@ def test_dml_through_manifest_census(spark, monkeypatch):
     assert set(got) == (set(range(40)) - {3, 13, 23, 33}) | {99}
     assert got[5] == 1005.0 and got[15] == 1015.0
     assert got[7] == 7.7 and got[99] == 9.9
+
+
+# ------------------------------------------------- vacuum retention
+
+
+def test_vacuum_keeps_versions_retained_below_a_checkpoint(spark):
+    """Every version ``retain_versions`` retains keeps its files when a
+    checkpoint sits above the oldest of them; once log cleanup removed
+    the JSON below the checkpoint, the retained floor is the
+    checkpoint."""
+    path = _fresh("vacuum_below_ckpt")
+
+    def one(k):
+        return spark.createDataFrame([(k, "x", float(k))], "k int, s string, v double")
+
+    _mk(spark, path)  # v0: k 1, 2, 3
+    deltalog.overwrite(spark, one(10), path)  # v1
+    deltalog.append(spark, one(11), path)  # v2
+    assert deltalog.write_checkpoint(spark, path) == 2
+    deltalog.append(spark, one(12), path)  # v3
+
+    def keys(v):
+        return sorted(
+            r.k for r in deltalog.read_snapshot(spark, path, version_as_of=v).collect()
+        )
+
+    want = {v: keys(v) for v in range(4)}
+    v0_files = sorted(a["path"] for a in deltalog.snapshot(path, version_as_of=0).adds)
+    assert deltalog.vacuum(spark, path, retain_versions=3) == []
+    assert {v: keys(v) for v in range(4)} == want
+    feed = deltalog.read_changes(spark, path, starting_version=-1)
+    counts = {r[0]: r[1] for r in feed.groupBy("_change_type").count().collect()}
+    assert counts == {"insert": 6, "delete": 3}
+
+    deltalog.cleanup_log_before_checkpoint(path)
+    assert deltalog.vacuum(spark, path, retain_versions=3) == v0_files
+    assert keys(2) == want[2] and keys(3) == want[3]
+    assert deltalog.vacuum(spark, path, retain_versions=3) == []

@@ -135,7 +135,6 @@ def test_dv_cdf_row_exact(spark):
     ]
 
 
-@pytest.mark.slow
 def test_dv_time_travel_and_checkpoint(spark):
     path = _fresh("tt_ckpt")
     _stage(spark, path)                                    # v0,v1,v2
@@ -191,7 +190,6 @@ def test_lone_dv_file_still_compacts(spark):
     assert v == 3
 
 
-@pytest.mark.slow
 def test_vacuum_keeps_referenced_dv_files(spark):
     # big enough that the vector exceeds the inline budget and lands
     # as an on-disk deletion_vector_*.bin (the spec's "u" storage)
@@ -217,7 +215,6 @@ def test_vacuum_keeps_referenced_dv_files(spark):
     )
 
 
-@pytest.mark.slow
 def test_restore_carries_dv_descriptors(spark):
     path = _fresh("restore")
     _stage(spark, path)                                    # v2 = clean

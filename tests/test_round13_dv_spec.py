@@ -260,7 +260,6 @@ def test_legacy_parquet_sidecar_table_reads(spark):
     assert deltalog.read_snapshot(spark, path).count() == 17
 
 
-@pytest.mark.slow
 def test_checkpoint_and_restore_carry_spec_descriptors(spark):
     path = _fresh("ckpt")
     _stage(spark, path, n=4000, files=2)
